@@ -12,16 +12,15 @@ adapter.
 
 from __future__ import annotations
 
-import glob
-import json
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from datalake_breweries_two_spark import entry_queries
+from datalake_breweries_two_spark import entry_queries, evidence
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -31,174 +30,20 @@ def entry(spark: SparkSession) -> DataFrame:
     return entry_queries.q_gold_agg(spark, "/root/testdata/sf0.001")
 
 
-def _driver_status() -> dict[str, dict]:
-    """Latest CORRECTNESS record per query across all prior driver rounds
-    (the driver snapshots a bounded prefix of ``queries()`` per round, so
-    rotation is how the whole registry gets hard-verified). Later rounds
-    override earlier ones — a pass that later regressed counts as failed.
-    Each record carries a synthetic ``_round`` key (parsed from the
-    snapshot filename) so rotation can front the STALEST evidence once
-    the whole registry is covered."""
-    latest: dict[str, dict] = {}
-    snapshots: list[tuple[int, str]] = []
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        try:
-            rnd = int(path.rsplit("CORRECTNESS_r", 1)[1].split(".")[0])
-        except ValueError:
-            rnd = 0
-        snapshots.append((rnd, path))
-    # Sort by the PARSED round number, not the filename: lexicographic
-    # order puts r100 between r10 and r11, which would let a stale r10
-    # record override a newer r100 one under later-round-wins.
-    for rnd, path in sorted(snapshots):
-        try:
-            with open(path) as f:
-                snapshot = json.load(f)
-            if isinstance(snapshot, dict):
-                for k, v in snapshot.items():
-                    if isinstance(k, str) and isinstance(v, dict):
-                        latest[k] = {**v, "_round": rnd}
-        except (OSError, ValueError):
-            continue
-    return latest
-
-
-def _is_fail(rec: dict) -> bool:
-    """A driver record that needs a RE-check: any hard-compare miss or a
-    real error (`no_oracle` is the expected result for rows-only queries)."""
-    if rec.get("err") not in (None, "no_oracle"):
-        return True
-    return any(
-        rec.get(k) is False for k in ("rows_match", "schema_match", "hash_match")
-    )
-
-
-def _driver_checked() -> set[str]:
-    return set(_driver_status())
-
-
-# Rows-only queries (no DuckDB-expressible oracle by contract) that must
-# reach the driver's bounded per-round prefix: with >50 oracle-backed
-# entries still unchecked, a plain oracle-first sort would starve these
-# forever. They are interleaved INSIDE the first ~50 so each finally gets
-# a recorded `spark_rows` run (`err: no_oracle` is the expected result).
-_ROWS_ONLY_INTERLEAVE = [
-    # q_hll_partitioned left this list in r14: the declared query now
-    # surfaces the bounded accuracy contract (deterministic n_parts +
-    # exact counts + self-diagnosing tolerance flag), giving it a full
-    # oracle; its physical merge-on-read twin q_hll_rollup_merge makes
-    # even the estimate hash-checkable via portable md5 registers
-    # (the guard below would drop it anyway)
-    # q_ivf_assign left this list in r7: it gained a full oracle (the
-    # md5-portable centroid seeding made the whole IVF tier
-    # DuckDB-recomputable; the guard below would drop it anyway)
-    # q_kll_quantiles left this list in r12: the declared query now
-    # surfaces the sketch's bounded rank contract (exact counts +
-    # within-tolerance flags), giving it a full oracle
-    # q_media_frame_sample left this list in r7: it gained a full
-    # golden-VALUES oracle (the guard below would drop it anyway)
-    # q_rolling_fingerprint left this list in r7: the declared query now
-    # runs the portable md5-60bit variant, giving it a full oracle
-    "q_sample_seeded",
-    # q_theta_overlap left this list in r12: bounded accuracy contract
-    # (exact set cardinalities + within-tolerance flags) — full oracle
-    # r6 additions (tokenizer-aware dedup tier; q_ann_recall left this
-    # list in r7 — the portable md5 query/seed draws made the whole
-    # recall harness DuckDB-recomputable, so it now has a full oracle)
-    # q_token_dedup_near left this list late in r7: the whole MinHash+LSH
-    # near-dup tier (with q_dedup_near / q_dedup_near_verified) moved to
-    # the portable Carter-Wegman minhash family and gained full oracles
-    # (the guard below would drop it anyway)
-]
-
-_DRIVER_PREFIX = 50  # the driver snapshots roughly this many per round
-
-def _is_upgrade(name: str, rec: dict, oracles) -> bool:
-    """A checked query whose verification contract since STRENGTHENED:
-    its latest driver record was rows-only (`err: no_oracle`) but the
-    registry now declares a DuckDB oracle for it (e.g. r6 upgraded
-    q_embedding_near_dup from rows-only to a full hash oracle over a
-    planted-duplicate corpus). Self-expiring: once the driver records an
-    oracle-checked result, the condition is false."""
-    return name in oracles and rec.get("err") == "no_oracle"
-
-# Oracle-backed queries the round-5 verdict calls out by name as the
-# round-6 verification bar (the last never-driver-checked oracle-backed
-# entries) — fronted within the unchecked-oracle bucket so they land in
-# the prefix even if the driver snapshots fewer than _DRIVER_PREFIX
-# entries this round.
-_ORACLE_PRIORITY = [
-    "q_balanced_sample", "q_skew_report",  # latent HUGEINT oracles, now cast
-    "q_asof_join_forward", "q_dedup_keep_latest", "q_group_by_all",
-    "q_group_split", "q_histogram_2d", "q_incremental_join", "q_listagg",
-    "q_nulls_ordering", "q_partition_plan", "q_sequence_gaps",
-    "q_top_percent", "q_window_ignore_nulls",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
+    """Every registered query, in the order it should be verified.
 
-    Ordered so not-yet-driver-verified queries come first — oracle-backed
-    ones ahead, with a bounded set of priority rows-only entries
-    interleaved inside the ~50-query driver prefix so they are not
-    starved — then queries whose LATEST driver record is a failure
-    (fixed-oracle re-checks), then previously-verified ones in registry
-    order. A stable rotation that converges to full driver coverage
-    across rounds without dropping any entry.
+    Each verification round checks a bounded prefix, so queries without
+    passing evidence (failed or never checked) come first; the rest follow
+    by the round of their latest record, oldest first.
     """
-    registry = dict(entry_queries.QUERIES)
-    try:
-        status = _driver_status()
-        checked = set(status)
-        oracles = entry_queries.ORACLE_SQL
-
-        unchecked_oracle = [
-            q for q in registry if q not in checked and q in oracles
-        ]
-        rank = {q: i for i, q in enumerate(_ORACLE_PRIORITY)}
-        unchecked_oracle.sort(key=lambda q: rank.get(q, len(rank)))  # stable
-        rows_priority = [
-            q
-            for q in _ROWS_ONLY_INTERLEAVE
-            if q in registry and q not in checked and q not in oracles
-        ]
-        head = unchecked_oracle[: max(0, _DRIVER_PREFIX - len(rows_priority))]
-        placed = set(head) | set(rows_priority)
-        tail_unchecked = sorted(
-            (q for q in registry if q not in checked and q not in placed),
-            key=lambda q: 0 if q in oracles else 1,
-        )  # stable: oracle-backed leftovers first, rows-only after
-        # Fixed-oracle re-checks: latest driver record failed — pin them
-        # right after the unchecked block so the driver re-verifies the
-        # fix while keeping every never-checked query ahead of them.
-        # Contract upgrades (rows-only → full oracle) ride the same
-        # re-check slot and self-expire once oracle-checked.
-        rechecks = sorted(
-            (
-                q
-                for q in registry
-                if q in checked
-                and q not in placed
-                and (_is_fail(status[q]) or _is_upgrade(q, status[q], oracles))
-            ),
-            key=lambda q: 0 if _is_fail(status[q]) else 1,
-        )  # stable: true failures ahead of contract upgrades
-        placed |= set(tail_unchecked) | set(rechecks)
-        # Checked-and-passing queries: STALEST driver evidence first.
-        # With the registry fully covered (r6), rotation's job flips from
-        # first-contact to regression re-verification — the ~50-query
-        # driver prefix should re-test the queries whose latest green is
-        # oldest (r2/r3 core) against each round's regenerated testdata.
-        tail_checked = sorted(
-            (q for q in registry if q in checked and q not in placed),
-            key=lambda q: status[q].get("_round", 0),
-        )  # stable: registry order within a round
-        ordered = head + rows_priority + tail_unchecked + rechecks + tail_checked
-        assert set(ordered) == set(registry) and len(ordered) == len(registry)
-        return {name: registry[name] for name in ordered}
-    except Exception:
-        return registry
+    # the latest record per query wins; no passing evidence sorts as round -1
+    passed_round = {
+        name: -1 if status == evidence.FAIL else rnd
+        for rnd, name, status in evidence.correctness_records()
+    }
+    order = sorted(entry_queries.QUERIES, key=lambda q: passed_round.get(q, -1))
+    return {name: entry_queries.QUERIES[name] for name in order}
 
 
 def oracle_sql() -> dict[str, str]:

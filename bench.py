@@ -26,360 +26,162 @@ from datalake_breweries_two_spark.session import build_session
 # Hard budget for the final stdout JSON line (driver tail buffer is 2000).
 _MAX_LINE = 1800
 
-HEADLINE = [
-    "q_gold_agg",
-    "q_scan_parquet",
-    "q_silver_projection",
-    "q_quality_summary",
-    "q_join_inner",
-    "q_star_join",
-    "q_topk",
-    "q_window_rank",
-    "q_window_running_sum",
-    "q_rollup",
-    "q_date_trunc_agg",
-    "q_tumbling_window",
-    "q_json_extract",
-    "q_array_ops",
-    "q_sql_tpch_q1",
-    "q_sql_tpch_q3",
-    "q_sql_tpch_q5",
-    "q_sql_tpch_q6",
-    "q_sql_tpch_q14",
-    "q_sql_tpch_q18",
-    "q_sql_tpch_q10",
-    "q_sql_tpch_q22",
-    "q_sql_tpch_q7",
-    "q_sql_tpch_q19",
-    "q_sql_tpch_q8",
-    "q_sql_tpch_q13",
-    "q_sql_tpch_q15",
-    "q_sql_tpch_q17",
-    "q_resample_ffill",
-    "q_exists_subquery",
-    "q_join_full",
-    "q_window_lead_ntile",
-    "q_asof_join",
-    "q_range_join",
-    "q_interval_join",
-    "q_skew_join_salted",
-    "q_grouping_sets",
-    "q_sliding_window",
-    "q_stats_agg",
-    "q_percentiles",
-    "q_merge_upsert",
-    "q_versioned_compact_e2e",
-    "q_dedup_exact",
-    "q_dedup_clusters",
-    "q_scd2",
-    "q_dedup_near_verified",
-    "q_dedup_near",
-    "q_ngram_jaccard",
-    "q_token_jaccard",
-    "q_token_dedup_near",
-    "q_token_dup_clusters",
-    "q_quality_funnel",
-    "q_bigram_logprob",
-    "q_dedup_rate_report",
-    "q_corpus_mix",
-    "q_class_weights",
-    "q_token_shards",
-    "q_dup_ngram_fraction",
-    "q_pmi_collocations",
-    "q_asof_join_nearest",
-    "q_incremental_ingest_dedup",
-    "q_shared_span_pairs",
-    "q_knn_join",
-    "q_label_centroids",
-    "q_ann_recall",
-    "q_cosine_topk",
-    "q_cosine_pairs",
-    "q_ivf_search",
-    "q_embedding_near_dup",
-    "q_data_profile",
-    "q_outliers_zscore",
-    "q_incremental_agg",
-    "q_text_stats",
-    "q_text_quality",
-    "q_tfidf",
-    "q_word_count",
-    "q_sessionize",
-    "q_hash_split",
-    "q_stratified_sample",
-    "q_decontaminate",
-    "q_pack_sequences",
-    "q_repetition_stats",
-    "q_boilerplate_ngrams",
-    "q_pii_redact",
-    "q_temperature_mix",
-    "q_shard_order",
-    "q_funnel",
-    "q_cohort_retention",
-    "q_pagerank",
-    "q_moving_avg_time",
-    "q_zorder_scan",
-    "q_quantize_embeddings",
-    "q_kmeans_1d",
-    "q_chunk_documents",
-    "q_hll_partitioned",
-    "q_hll_union_portable",
-    "q_kmv_overlap",
-    "q_vocab_coverage",
-    "q_rerank_topk",
-    "q_contamination_by_source",
-    "q_data_card",
-    "q_shard_data_card",
-    "q_streaming_contamination",
-    "q_streaming_dq_gate",
-    "q_kll_rollup_merge",
-    "q_hll_rollup_merge",
-    "q_wav_decode",
-    "q_streaming_shard_progress",
-    "q_bm25",
-    "q_token_entropy",
-    "q_weighted_sample",
-    "q_partition_overwrite_dynamic",
-    "q_streaming_upsert",
-    "q_streaming_hll_upsert",
-    "q_bmp_decode",
-    "q_wav_decode_float",
-    "q_png_decode",
-    "q_gif_decode",
-    "q_media_checksum",
-    "q_media_features",
-    "q_media_frame_sample",
-    "q_bloom_filter",
-    "q_minhash_signature",
-    "q_equi_depth_bins",
-    "q_winsorize",
-    "q_impute_group_mean",
-    "q_fuzzy_pairs",
-    "q_training_pipeline_e2e",
-    "q_lateral_topk_join",
-    "q_map_ops",
-    "q_weighted_sample_per_group",
-    "q_gdpr_delete",
-    "q_cdc_apply",
-    "q_shuffle_hash_join",
-    "q_time_travel",
-    "q_exchange_reuse",
-    "q_python_datasource",
-    "q_python_datasource_stream",
-    "q_nested_rollup",
-    "q_interval_coalesce",
-    "q_mode_agg",
-    "q_variant_extract",
-    "q_udtf_chunk",
-    "q_mergeschema_scan",
-    "q_session_window",
-    "q_recursive_cte",
-    "q_collated_distinct",
-    "q_scan_xml",
-    "q_pandas_api",
-    "q_pit_lookup",
-    "q_sql_tpch_q4",
-    "q_sql_tpch_q12",
-    "q_sql_tpch_q21",
-    "q_corr_matrix",
-    "q_linreg_by_group",
-    "q_dq_audit",
-    "q_spearman_corr",
-    "q_event_transitions",
-    "q_percent_of_total",
-    "q_offset_pagination",
-    "q_nulls_ordering",
-    "q_group_by_all",
-    "q_group_split",
-    "q_balanced_sample",
-    "q_rolling_active_users",
-    "q_geo_radius_pairs",
-    "q_skew_report",
-    "q_partition_plan",
-    "q_asof_join_forward",
-    "q_window_ignore_nulls",
-    "q_sql_tpch_q2",
-    "q_sql_tpch_q9",
-    "q_sql_tpch_q11",
-    "q_sql_tpch_q16",
-    "q_sql_tpch_q20",
-    "q_mad",
-    "q_gini",
-    "q_benford",
-    "q_zipf_slope",
-    "q_ks_test",
-    "q_chi_square",
-    "q_psi",
-    "q_incremental_join",
-    "q_dedup_keep_latest",
-    "q_top_percent",
-    "q_sequence_gaps",
-    "q_listagg",
-    "q_histogram_2d",
-]
-
-# Best time ever observed per query on a QUIET host (r03 driver bench +
-# local min-of-runs, sf0.1/local[32]). Used only as the stall-detection
-# threshold (2x + 0.4 s) in the timing loop below -- NOT as a reported
-# number. New queries default to the 0.3 s floor until measured.
-#
-# POLICY (mechanically enforced by test_bench_reference_covers_headline):
-# entries here are PROTOCOL-CONTEXT numbers — sized from in-suite protocol
-# sessions, never from a cold standalone floor. A brand-new query whose
-# only evidence is a standalone min-of-N floor goes into
-# PROVISIONAL_REF_SEC below and is PROMOTED here (a deliberate, greppable
-# move, ledgered in BASELINE.md) once a protocol session has read it in
-# context. The two dicts are disjoint and together must cover HEADLINE.
-QUIET_HOST_REF_SEC = {
+# Headline queries in run order, each with its quiet-host reference time:
+# the best time observed per query on a quiet host (sf0.1/local[32]),
+# read inside a full bench session rather than from a cold standalone run.
+# Used only as the stall-detection threshold in the timing loop below,
+# never as a reported number. Re-bases are ledgered in BASELINE.md.
+HEADLINE = {
+    "q_gold_agg": 0.22,
+    "q_scan_parquet": 0.15,
+    "q_silver_projection": 0.14,
+    "q_quality_summary": 0.18,
+    "q_join_inner": 0.23,
+    "q_star_join": 0.83,
+    "q_topk": 0.15,
+    "q_window_rank": 0.13,
+    "q_window_running_sum": 0.14,
+    "q_rollup": 0.24,
+    "q_date_trunc_agg": 0.23,
+    "q_tumbling_window": 0.21,
+    "q_json_extract": 0.15,
     "q_array_ops": 0.15,
+    "q_sql_tpch_q1": 0.25,
+    "q_sql_tpch_q3": 0.64,
+    "q_sql_tpch_q5": 0.78,
+    "q_sql_tpch_q6": 0.16,
+    "q_sql_tpch_q14": 0.23,
+    "q_sql_tpch_q18": 0.85,
+    "q_sql_tpch_q10": 0.6,
+    "q_sql_tpch_q22": 0.35,
+    "q_sql_tpch_q7": 0.57,
+    "q_sql_tpch_q19": 0.26,
+    "q_sql_tpch_q8": 0.51,
+    "q_sql_tpch_q13": 0.42,
+    "q_sql_tpch_q15": 0.53,
+    "q_sql_tpch_q17": 0.45,
+    "q_resample_ffill": 0.28,
+    "q_exists_subquery": 0.4,
+    "q_join_full": 0.33,
+    "q_window_lead_ntile": 0.16,
     "q_asof_join": 0.2,
-    "q_bm25": 0.94,
-    "q_boilerplate_ngrams": 0.92,
-    "q_cdc_apply": 1.21,
-    "q_chunk_documents": 0.21,
-    "q_class_weights": 0.32,
+    "q_range_join": 0.49,
+    "q_interval_join": 0.61,
+    "q_skew_join_salted": 1.51,
+    "q_grouping_sets": 0.26,
+    "q_sliding_window": 0.27,
+    "q_stats_agg": 0.26,
+    "q_percentiles": 0.14,
+    "q_merge_upsert": 0.43,
+    "q_versioned_compact_e2e": 0.73,
+    "q_dedup_exact": 0.22,
+    "q_dedup_clusters": 4.05,
+    "q_scd2": 0.12,
+    "q_dedup_near_verified": 3.10,
+    "q_dedup_near": 2.25,
+    "q_ngram_jaccard": 0.71,
+    "q_token_jaccard": 1.0,
+    "q_token_dedup_near": 3.19,
+    "q_token_dup_clusters": 1.0,
+    "q_quality_funnel": 0.55,
+    "q_bigram_logprob": 1.3,
+    "q_dedup_rate_report": 1.0,
     "q_corpus_mix": 0.37,
+    "q_class_weights": 0.32,
+    "q_token_shards": 0.99,
     "q_dup_ngram_fraction": 1.04,
     "q_pmi_collocations": 0.86,
-    "q_token_shards": 0.99,
-    "q_cohort_retention": 0.43,
-    "q_collated_distinct": 0.11,
-    "q_cosine_pairs": 0.28,
-    "q_cosine_topk": 0.34,
-    "q_data_profile": 0.18,
-    "q_date_trunc_agg": 0.23,
-    "q_decontaminate": 1.46,
-    "q_dedup_clusters": 4.05,
-    "q_dedup_exact": 0.22,
-    "q_dedup_near": 2.25,
-    "q_dedup_near_verified": 3.10,  # r14 PLAN-CHANGE re-base 2.38 -> 3.10: the sf10 broadcast fix (shuffle_hash attach + candidate pruning, SCALING.md r14 part 3) costs ~1.08x standalone (floor 2.565 min-of-4) and read 3.67 (1.54x of the old bar) at first protocol contact; entry = floor x the tier's typical ~1.2x protocol uplift, the never-broadcast-a-corpus-table price
-    "q_embedding_near_dup": 2.4,
-    "q_equi_depth_bins": 0.22,
+    "q_asof_join_nearest": 0.39,
+    "q_incremental_ingest_dedup": 0.18,
+    "q_shared_span_pairs": 1.9,
+    "q_knn_join": 0.7,
+    "q_label_centroids": 0.5,
     "q_ann_recall": 3.7,
-    "q_exchange_reuse": 0.22,
-    "q_exists_subquery": 0.4,
-    "q_funnel": 0.25,
-    "q_fuzzy_pairs": 0.29,
-    "q_gdpr_delete": 0.82,
-    "q_gold_agg": 0.22,
-    "q_grouping_sets": 0.26,
-    "q_hash_split": 0.11,
-    "q_hll_partitioned": 0.34,  # r14 plan-change re-base 0.18 -> 0.34: the rows-only -> oracle contract upgrade added the exact count_distinct probe (standalone min-of-4 0.341)
-    "q_hll_union_portable": 0.57,  # r8 protocol-context reading
-    "q_kmv_overlap": 0.6,  # r8 quiet protocol reading
-    "q_vocab_coverage": 1.04,  # r9: corpus token agg + prefix-rank + checkpointed milestone aggs
-    "q_rerank_topk": 0.90,  # r10: knn retrieval + candidate-only rerank (protocol 0.904/1.149)
-    "q_contamination_by_source": 1.22,  # r10: decontaminate + source rollup (protocol 1.224/1.262)
-    "q_data_card": 0.43,  # r11: protocol 0.434 (0.98x-median quiet session) / 0.58 (1.10x session)
-    "q_shard_data_card": 1.70,  # r16 RE-BASE 1.15 -> 1.70, the r15-pre-built standing protocol: quiet r15-s4 read 1.54x, r16 protocol reads 1.52x/1.45x/2.23x, and the FRESH min-of-4 standalone floor is 1.532 (1.33x of the old bar — unreachable even standalone on today's host); the same-day physical-plan audit proves the designed shape executes (every exchange shard-keyed, map-side partials), so this is host-band drift, not plan work; entry = floor x ~1.1 in-suite uplift = the observed 1.67-1.75 quiet-ish band  # r12 first entry: prefix-sum shard assign (eager ckpt) + distinct-agg + mix window
-    "q_streaming_contamination": 3.90,  # r11: re-entered after the static-side checkpoint (protocol 3.895 on a 1.00x-median session; pre-change 4.721/5.11)
-    "q_streaming_dq_gate": 3.05,  # r12 first entry: 4-trigger drive, per-orderkey state quad + broadcast cust probe (standalone min-of-4 3.047)
-    "q_hll_rollup_merge": 1.88,  # r14 first entry: day-partitioned gold register write + merge-on-read + exact probe (standalone min-of-4 1.876)
-    "q_wav_decode": 0.90,  # r14 first entry at the protocol-context band center (0.72/0.82/1.02 quiet + 1.19 noisy across the four entry-round sessions; standalone min-of-4 floor 0.659) — table entries must be protocol-context numbers per the q_ann_recall precedent; mapInPandas class, same host-phase spread as q_udtf_chunk
-    "q_wav_decode_float": 0.90,  # r15 growth entry at the mapInPandas-decode class band center (standalone min-of-4 floor 0.758; siblings q_wav_decode/q_bmp_decode both 0.90); protocol contacts read 0.65 (noisy 1.27x-median session) and 0.59 = 0.66x (QUIET 1.10x-median) — entry CONFIRMED at the class band center
-    "q_gif_decode": 0.85,  # r16 growth #2, PROMOTED from PROVISIONAL_REF_SEC (cold floor 0.914 -> provisional 1.0) on a QUIET in-context contact (0.59 s = 0.59x, s5 median 1.09x); entry at the image-codec class band center (q_png_decode/q_bmp_decode precedent) so the warm host phase doesn't cry wolf — the codec pair is bimodal across phases like its siblings
-    "q_png_decode": 0.85,  # r16 growth, PROMOTED from PROVISIONAL_REF_SEC (cold floor 0.939 -> provisional 1.05) on two in-context protocol contacts: 0.886 (s2, 1.125x-median) and 0.650 (s3, noisy 1.22x-median — inflation-only, so the true quiet read is <=0.65); entry at the contact midpoint, just under the 0.90 sibling class center — the zlib inflate rides the same mapInPandas batch
-    "q_bmp_decode": 0.90,  # r15 entry CONFIRMED at protocol: first-contact sessions read 0.86 (1.22x-median session) / 0.91 (1.09x-median) — dead on the band center (standalone min-of-4 floor 0.792; same bounded-corpus mapInPandas class as q_wav_decode)
-    "q_kll_rollup_merge": 1.60,  # r13 first entry: day-partitioned gold sketch write + merge-on-read + bounded-rank probe (standalone min-of-4 1.607)
-    "q_streaming_shard_progress": 3.60,  # r13 first entry: 4-trigger drive, broadcast shard plan (eager ckpt) + per-shard state quad (standalone min-of-4 3.589)
-    "q_impute_group_mean": 0.19,
-    "q_incremental_agg": 0.37,
-    "q_interval_coalesce": 0.6,
-    "q_interval_join": 0.61,
+    "q_cosine_topk": 0.34,
+    "q_cosine_pairs": 0.28,
     "q_ivf_search": 0.45,
-    "q_join_full": 0.33,
-    "q_join_inner": 0.23,
-    "q_json_extract": 0.15,
+    "q_embedding_near_dup": 2.4,
+    "q_data_profile": 0.18,
+    "q_outliers_zscore": 0.46,
+    "q_incremental_agg": 0.37,
+    "q_text_stats": 0.19,
+    "q_text_quality": 0.17,
+    "q_tfidf": 0.98,
+    "q_word_count": 0.23,
+    "q_sessionize": 0.56,
+    "q_hash_split": 0.11,
+    "q_stratified_sample": 0.14,
+    "q_decontaminate": 1.46,
+    "q_pack_sequences": 0.32,
+    "q_repetition_stats": 0.35,
+    "q_boilerplate_ngrams": 0.92,
+    "q_pii_redact": 0.15,
+    "q_temperature_mix": 0.36,
+    "q_shard_order": 0.18,
+    "q_funnel": 0.25,
+    "q_cohort_retention": 0.43,
+    "q_pagerank": 3.75,
+    "q_moving_avg_time": 0.27,
+    "q_zorder_scan": 1.47,
+    "q_quantize_embeddings": 0.35,
     "q_kmeans_1d": 1.17,
-    "q_lateral_topk_join": 1.15,
-    "q_map_ops": 0.33,  # r10 re-base: protocol sessions 0.319/0.330, fresh-session min-of-12 floor 0.354 (BASELINE.md r10)
+    "q_chunk_documents": 0.21,
+    "q_hll_partitioned": 0.34,
+    "q_hll_union_portable": 0.57,
+    "q_kmv_overlap": 0.6,
+    "q_vocab_coverage": 1.04,
+    "q_rerank_topk": 0.90,
+    "q_contamination_by_source": 1.22,
+    "q_data_card": 0.43,
+    "q_shard_data_card": 1.70,
+    "q_streaming_contamination": 3.90,
+    "q_streaming_dq_gate": 3.05,
+    "q_kll_rollup_merge": 1.60,
+    "q_hll_rollup_merge": 1.88,
+    "q_wav_decode": 0.90,
+    "q_streaming_shard_progress": 3.60,
+    "q_bm25": 0.94,
+    "q_token_entropy": 0.25,
+    "q_weighted_sample": 0.19,
+    "q_partition_overwrite_dynamic": 0.9,
+    "q_streaming_upsert": 4.01,
+    "q_streaming_hll_upsert": 4.15,
+    "q_bmp_decode": 0.90,
+    "q_wav_decode_float": 0.90,
+    "q_png_decode": 0.85,
+    "q_gif_decode": 0.85,
     "q_media_checksum": 0.3,
     "q_media_features": 0.5,
     "q_media_frame_sample": 0.45,
     "q_bloom_filter": 0.65,
     "q_minhash_signature": 0.36,
-    "q_merge_upsert": 0.43,
-    "q_mergeschema_scan": 0.59,
-    "q_mode_agg": 0.33,
-    "q_moving_avg_time": 0.27,
-    "q_nested_rollup": 0.42,
-    "q_ngram_jaccard": 0.71,
-    "q_token_jaccard": 1.0,
-    "q_token_dedup_near": 3.19,  # r11: aligned to BASELINE.md's r7 portable re-base (3.186) — the 2.3 ref predated the portable-hash switch; r11 protocol reads 3.85/3.60 = 1.21x/1.13x against it
-    "q_token_dup_clusters": 1.0,
-    "q_quality_funnel": 0.55,
-    "q_bigram_logprob": 1.3,
-    "q_dedup_rate_report": 1.0,
-    "q_asof_join_nearest": 0.39,  # r10 re-base: protocol 0.392/0.386, fresh-session min-of-12 floor 0.407 ABOVE protocol (BASELINE.md r10)
-    "q_incremental_ingest_dedup": 0.18,
-    "q_shared_span_pairs": 1.9,
-    "q_knn_join": 0.7,
-    "q_label_centroids": 0.5,
-    "q_outliers_zscore": 0.46,
-    "q_pack_sequences": 0.32,  # r8: construction-pressure fixes dropped the protocol floor
-    "q_pagerank": 3.75,
-    "q_pandas_api": 0.22,
-    "q_partition_overwrite_dynamic": 0.9,
-    "q_percentiles": 0.14,
-    "q_pii_redact": 0.15,
-    "q_pit_lookup": 0.23,
+    "q_equi_depth_bins": 0.22,
+    "q_winsorize": 0.26,
+    "q_impute_group_mean": 0.19,
+    "q_fuzzy_pairs": 0.29,
+    "q_training_pipeline_e2e": 0.4,
+    "q_lateral_topk_join": 1.15,
+    "q_map_ops": 0.33,
+    "q_weighted_sample_per_group": 0.24,
+    "q_gdpr_delete": 0.82,
+    "q_cdc_apply": 1.21,
+    "q_shuffle_hash_join": 0.64,
+    "q_time_travel": 0.74,
+    "q_exchange_reuse": 0.22,
     "q_python_datasource": 0.73,
     "q_python_datasource_stream": 2.81,
-    "q_quality_summary": 0.18,
-    "q_quantize_embeddings": 0.35,
-    "q_range_join": 0.49,
-    "q_recursive_cte": 0.67,
-    "q_repetition_stats": 0.35,
-    "q_resample_ffill": 0.28,
-    "q_rollup": 0.24,
-    "q_scan_parquet": 0.15,
-    "q_scan_xml": 0.5,
-    "q_scd2": 0.12,
-    "q_session_window": 0.64,
-    "q_sessionize": 0.56,
-    "q_shard_order": 0.18,
-    "q_shuffle_hash_join": 0.64,
-    "q_silver_projection": 0.14,
-    "q_skew_join_salted": 1.51,
-    "q_sliding_window": 0.27,
-    "q_sql_tpch_q1": 0.25,
-    "q_sql_tpch_q10": 0.6,
-    "q_sql_tpch_q13": 0.42,
-    "q_sql_tpch_q14": 0.23,
-    "q_sql_tpch_q15": 0.53,
-    "q_sql_tpch_q17": 0.45,
-    "q_sql_tpch_q18": 0.85,
-    "q_sql_tpch_q19": 0.26,
-    "q_sql_tpch_q22": 0.35,
-    "q_sql_tpch_q3": 0.64,
-    "q_sql_tpch_q5": 0.78,
-    "q_sql_tpch_q6": 0.16,
-    "q_sql_tpch_q7": 0.57,
-    "q_sql_tpch_q8": 0.51,
-    "q_star_join": 0.83,
-    "q_stats_agg": 0.26,
-    "q_stratified_sample": 0.14,
-    "q_streaming_upsert": 4.01,
-    "q_streaming_hll_upsert": 4.15,  # r15 RE-TIGHTEN 5.30 -> 4.15 at first protocol contact: in-context sessions read 4.14 (1.22x-median) / 4.00 (1.09x-median) — the 4-trigger register drive rides the suite's already-warm state-store/JVM, well under the cold standalone floor (5.08 min-of-4) the provisional entry was sized from; entries must be protocol-context numbers (q_ann_recall precedent), and the tighter bar means a real 1.5x regression trips at 6.2 s instead of 8 s
-    "q_temperature_mix": 0.36,
-    "q_text_quality": 0.17,
-    "q_text_stats": 0.19,
-    "q_tfidf": 0.98,
-    "q_time_travel": 0.74,
-    "q_token_entropy": 0.25,
-    "q_topk": 0.15,
-    "q_training_pipeline_e2e": 0.4,
-    "q_tumbling_window": 0.21,
-    "q_udtf_chunk": 1.20,  # r14 RE-TIGHTEN 1.30 -> 1.20: the per-row-Python host-phase band is BIMODAL across seven protocol sessions (r13: 1.32/1.26/1.46; r14 quiet: 1.00/1.05/1.04; r14 noisy s4: 1.50) — 1.20 sits at the band center, so a real 2x regression (bar 2.4 s) clears the 1.5 s phase ceiling while quiet-phase reads stop crying wolf; plan unchanged throughout (single stage, no shuffle, the deliberate extension-point twin of text.chunk_documents; original 0.83 entry kept for the audit trail)
+    "q_nested_rollup": 0.42,
+    "q_interval_coalesce": 0.6,
+    "q_mode_agg": 0.33,
     "q_variant_extract": 0.16,
-    "q_versioned_compact_e2e": 0.73,
-    "q_weighted_sample": 0.19,
-    "q_weighted_sample_per_group": 0.24,
-    "q_window_lead_ntile": 0.16,
-    "q_window_rank": 0.13,
-    "q_window_running_sum": 0.14,
-    "q_winsorize": 0.26,
-    "q_word_count": 0.23,
-    "q_zorder_scan": 1.47,
+    "q_udtf_chunk": 1.20,
+    "q_mergeschema_scan": 0.59,
+    "q_session_window": 0.64,
+    "q_recursive_cte": 0.67,
+    "q_collated_distinct": 0.11,
+    "q_scan_xml": 0.5,
+    "q_pandas_api": 0.22,
+    "q_pit_lookup": 0.23,
     "q_sql_tpch_q4": 0.9,
     "q_sql_tpch_q12": 0.56,
     "q_sql_tpch_q21": 1.56,
@@ -408,27 +210,17 @@ QUIET_HOST_REF_SEC = {
     "q_mad": 0.67,
     "q_gini": 0.5,
     "q_benford": 0.38,
-    "q_zipf_slope": 0.93,  # r5: distributed vocabulary rank (structural)
-    "q_ks_test": 1.29,  # r5: distributed prefix-sum CDF (structural)
+    "q_zipf_slope": 0.93,
+    "q_ks_test": 1.29,
     "q_chi_square": 0.3,
     "q_psi": 1.72,
     "q_incremental_join": 0.4,
     "q_dedup_keep_latest": 0.32,
     "q_top_percent": 0.75,
-    "q_sequence_gaps": 1.05,  # r5: partitioned lag + boundary pass (structural)
+    "q_sequence_gaps": 1.05,
     "q_listagg": 0.23,
     "q_histogram_2d": 0.32,
 }
-
-# First-contact entries whose ONLY sizing evidence is a cold standalone
-# floor (min-of-N outside the suite). They serve the stall detector like
-# confirmed entries but are excluded from re-base/regression judgments
-# until a protocol session reads them in context, at which point they move
-# into QUIET_HOST_REF_SEC (ledgered in BASELINE.md). Keeping them apart is
-# the mechanical guard the r15 ADVICE asked for: a cold-floor number can
-# no longer masquerade as a protocol-context bar (see
-# q_streaming_hll_upsert's 5.30 -> 4.15 re-tighten for why that matters).
-PROVISIONAL_REF_SEC: "dict[str, float]" = {}
 
 # Quiet-host references for the noise canary below, measured r16 with the
 # opening-gate pytest JVMs exited. The canary job keeps JIT-warming well
@@ -505,8 +297,9 @@ def main() -> None:
         for name in HEADLINE:
             try:
                 entry_queries.QUERIES[name](spark, warm_dir).count()
-            except Exception:
-                pass
+            except Exception as exc:
+                print(f"{name}: warm-up failed at {warm_dir}: {exc!r}",
+                      file=sys.stderr)
     entry_queries.q_gold_agg(spark, sf_dir).count()
     # One un-timed pass of the index-backed query at the TARGET sf so its
     # one-time staging step (ivf_build_index) is amortized out of the
@@ -538,7 +331,7 @@ def main() -> None:
     retry_budget = 90  # total extra runs allowed across the suite
 
     def _stalled(name: str, sec: float) -> bool:
-        ref = QUIET_HOST_REF_SEC.get(name, PROVISIONAL_REF_SEC.get(name, 0.3))
+        ref = HEADLINE[name]
         if ref < 1.0:
             # Sub-second entries: a 0.2 s host stall already doubles the
             # reading (r4: a 0.19 s query reported 0.39 s = 2.05x its

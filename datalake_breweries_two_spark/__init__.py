@@ -16,9 +16,15 @@ Design stance (SURVEY.md §7):
     dims, partial aggregation, partition pruning, salting/AQE for skew).
 """
 
+import os
+
 from datalake_breweries_two_spark.session import build_session, stop_session
 from datalake_breweries_two_spark.catalog import TABLES, load_table, register_views
 
 __all__ = ["build_session", "stop_session", "TABLES", "load_table", "register_views"]
 
 __version__ = "0.1.0"
+
+# The checkout this package runs from: verification records and scratch
+# live here.
+CHECKOUT_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -25,6 +25,8 @@ import argparse
 import json
 import sys
 
+from datalake_breweries_two_spark import CHECKOUT_DIR
+
 
 def _build_session(app_name: str):
     """Returns (session, owns_it): the CLI must stop only sessions IT
@@ -113,49 +115,17 @@ def cmd_audit(args: argparse.Namespace) -> int:
     every registry query, its oracle kind and its hard driver-verification
     status derived from the CORRECTNESS_r{N}.json snapshots on disk —
     never hand-kept, so the table cannot drift from the evidence."""
-    import glob
     import os
-    import re
 
-    from datalake_breweries_two_spark import entry_queries
+    from datalake_breweries_two_spark import entry_queries, evidence
 
-    def _rank(res: dict) -> int:
-        # status ranks: 2 = full oracle pass, 1 = rows-only run, 0 = failure
-        if res.get("err") == "no_oracle":
-            return 1
-        if res.get("err"):
-            return 0
-        if (
-            res.get("rows_match")
-            and res.get("schema_match")
-            and res.get("hash_match")
-        ):
-            return 2
-        return 0
-
-    best: dict[str, tuple[int, int]] = {}  # name -> (status_rank, round)
-    latest: dict[str, tuple[int, int]] = {}  # name -> (status_rank, round)
-    for path in sorted(glob.glob(os.path.join(args.repo_dir, "CORRECTNESS_r*.json"))):
-        m = re.search(r"r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else -1
-        try:
-            with open(path) as f:
-                snap = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(snap, dict):
-            continue
-        for name, res in snap.items():
-            if not isinstance(res, dict):
-                continue
-            rank = _rank(res)
-            prev = best.get(name)
-            # keep the FIRST round a status was earned; upgrade on better rank
-            if prev is None or rank > prev[0]:
-                best[name] = (rank, rnd)
-            lprev = latest.get(name)
-            if lprev is None or rnd >= lprev[1]:
-                latest[name] = (rank, rnd)
+    best: dict[str, tuple[int, int]] = {}  # name -> (status, round)
+    latest: dict[str, tuple[int, int]] = {}  # name -> (status, round)
+    for rnd, name, status in evidence.correctness_records(args.repo_dir):
+        # keep the FIRST round a status was earned; upgrade on better status
+        if name not in best or status > best[name][0]:
+            best[name] = (status, rnd)
+        latest[name] = (status, rnd)
 
     # Waivers: a driver FAIL whose fix already landed but awaits its
     # re-check round stays visible in the table yet does not flip the
@@ -172,7 +142,7 @@ def cmd_audit(args: argparse.Namespace) -> int:
         pass
 
     oracles = set(entry_queries.ORACLE_SQL)
-    label = {2: "pass", 1: "ran", 0: "FAIL"}
+    label = {evidence.PASS: "pass", evidence.RAN: "ran", evidence.FAIL: "FAIL"}
     counts = {"pass": 0, "ran": 0, "FAIL": 0, "local": 0}
     regressed: list[str] = []
     unwaived_fail: list[str] = []
@@ -188,11 +158,11 @@ def cmd_audit(args: argparse.Namespace) -> int:
             lstatus = f"{label[lrank]}-r{lrnd}"
             # the LATEST evidence decides health: a query that passed in
             # r3 but failed in r5 is a regression, not a pass
-            if lrank == 0 and rank > 0:
+            if lrank == evidence.FAIL and rank > evidence.FAIL:
                 regressed.append(name)
                 lstatus += " REGRESSED"
-            counts[label[0 if lrank == 0 else rank]] += 1
-            if lrank == 0:
+            counts[label[lrank if lrank == evidence.FAIL else rank]] += 1
+            if lrank == evidence.FAIL:
                 if name in waivers:
                     lstatus += " (waived)"
                 else:
@@ -278,7 +248,7 @@ def main(argv: list[str] | None = None) -> int:
     aq.set_defaults(fn=cmd_audit_query)
 
     au = sub.add_parser("audit")
-    au.add_argument("--repo-dir", default="/root/repo")
+    au.add_argument("--repo-dir", default=CHECKOUT_DIR)
     au.set_defaults(fn=cmd_audit)
 
     rm = sub.add_parser("run-medallion")

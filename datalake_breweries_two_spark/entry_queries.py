@@ -1,6 +1,7 @@
 """Declared-query registry: every operator from SURVEY.md §2 as a
 ``(spark, sf_dir) -> DataFrame`` callable plus (where SQL-expressible) its
-DuckDB oracle SQL.
+DuckDB oracle SQL. Defining a module-level ``q_*`` function registers it
+in ``QUERIES``.
 
 Hash-match hygiene applied throughout (SURVEY.md §5):
   * every computed column aliased identically in Spark and SQL;
@@ -20,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datalake_breweries_two_spark import CHECKOUT_DIR
 from datalake_breweries_two_spark.catalog import TABLES, load_table
 from datalake_breweries_two_spark.operators import (
     aggregates,
@@ -53,7 +55,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # other's staged parquet mid-stream — observed r6 as a streaming query
 # reading the OTHER process's lake. Same-process queries still share and
 # overwrite their own stage dirs by design (each query re-stages).
-_SCRATCH_ROOT = "/root/repo/.scratch"
+_SCRATCH_ROOT = os.path.join(CHECKOUT_DIR, ".scratch")
 _SCRATCH = os.path.join(_SCRATCH_ROOT, f"pid{os.getpid()}")
 
 
@@ -2540,179 +2542,8 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ==========================================================================
-# Registry + oracles
+# DuckDB oracles
 # ==========================================================================
-
-QUERIES: dict[str, QueryFn] = {
-    # reference parity
-    "q_ingest_rows": q_ingest_rows,
-    "q_scan_json": q_scan_json,
-    "q_scan_csv": q_scan_csv,
-    "q_scan_orc": q_scan_orc,
-    "q_scan_parquet": q_scan_parquet,
-    "q_silver_projection": q_silver_projection,
-    "q_str_trim": q_str_trim,
-    "q_str_lower": q_str_lower,
-    "q_str_concat_ws": q_str_concat_ws,
-    "q_cast_double": q_cast_double,
-    "q_filter_null_or_empty": q_filter_null_or_empty,
-    "q_exists_probe": q_exists_probe,
-    "q_is_empty": q_is_empty,
-    "q_limit_count": q_limit_count,
-    "q_gold_agg": q_gold_agg,
-    "q_quality_summary": q_quality_summary,
-    # relational completion
-    "q_join_inner": q_join_inner,
-    "q_join_left": q_join_left,
-    "q_join_semi": q_join_semi,
-    "q_join_anti": q_join_anti,
-    "q_star_join": q_star_join,
-    "q_topk": q_topk,
-    "q_topk_per_group": q_topk_per_group,
-    "q_window_rank": q_window_rank,
-    "q_window_running_sum": q_window_running_sum,
-    "q_window_lag": q_window_lag,
-    "q_rollup": q_rollup,
-    "q_cube": q_cube,
-    "q_pivot": q_pivot,
-    "q_distinct": q_distinct,
-    "q_count_distinct": q_count_distinct,
-    "q_approx_count_distinct": q_approx_count_distinct,
-    "q_union": q_union,
-    "q_intersect": q_intersect,
-    "q_except": q_except,
-    "q_date_trunc_agg": q_date_trunc_agg,
-    "q_tumbling_window": q_tumbling_window,
-    "q_sliding_window": q_sliding_window,
-    "q_json_extract": q_json_extract,
-    "q_array_ops": q_array_ops,
-    "q_explode_tokens": q_explode_tokens,
-    "q_stats_agg": q_stats_agg,
-    "q_percentiles": q_percentiles,
-    "q_minmax_by": q_minmax_by,
-    "q_conditional_funcs": q_conditional_funcs,
-    "q_regex_extract": q_regex_extract,
-    "q_histogram": q_histogram,
-    "q_sql_tpch_q1": q_sql_tpch_q1,
-    "q_asof_join": q_asof_join,
-    "q_asof_join_nearest": q_asof_join_nearest,
-    "q_range_join": q_range_join,
-    "q_skew_join_salted": q_skew_join_salted,
-    "q_grouping_sets": q_grouping_sets,
-    "q_sql_tpch_q3": q_sql_tpch_q3,
-    "q_sql_tpch_q5": q_sql_tpch_q5,
-    "q_join_full": q_join_full,
-    "q_cross_join": q_cross_join,
-    "q_window_lead_ntile": q_window_lead_ntile,
-    "q_window_first_last": q_window_first_last,
-    "q_window_range_frame": q_window_range_frame,
-    "q_exists_subquery": q_exists_subquery,
-    "q_in_subquery": q_in_subquery,
-    "q_scalar_subquery": q_scalar_subquery,
-    "q_sql_tpch_q6": q_sql_tpch_q6,
-    "q_sql_tpch_q14": q_sql_tpch_q14,
-    "q_having": q_having,
-    "q_string_funcs": q_string_funcs,
-    "q_datetime_funcs": q_datetime_funcs,
-    "q_from_json_struct": q_from_json_struct,
-    "q_sample_seeded": q_sample_seeded,
-    "q_tfidf": q_tfidf,
-    "q_word_count": q_word_count,
-    "q_collect_list_sorted": q_collect_list_sorted,
-    "q_streaming_dedup": q_streaming_dedup,
-    "q_dedup_clusters": q_dedup_clusters,
-    "q_scd2": q_scd2,
-    "q_cosine_pairs": q_cosine_pairs,
-    "q_ivf_search": q_ivf_search,
-    "q_sql_tpch_q10": q_sql_tpch_q10,
-    "q_sql_tpch_q22": q_sql_tpch_q22,
-    "q_sql_tpch_q7": q_sql_tpch_q7,
-    "q_range_sorted_scan": q_range_sorted_scan,
-    "q_snapshot_diff": q_snapshot_diff,
-    "q_sql_tpch_q19": q_sql_tpch_q19,
-    "q_sql_tpch_q8": q_sql_tpch_q8,
-    "q_sql_tpch_q13": q_sql_tpch_q13,
-    "q_sql_tpch_q15": q_sql_tpch_q15,
-    "q_sql_tpch_q17": q_sql_tpch_q17,
-    "q_interval_join": q_interval_join,
-    "q_streaming_sliding": q_streaming_sliding,
-    "q_array_higher_order": q_array_higher_order,
-    "q_bitwise_agg": q_bitwise_agg,
-    "q_unpivot": q_unpivot,
-    "q_grouping_id": q_grouping_id,
-    "q_medallion_e2e": q_medallion_e2e,
-    "q_versioned_compact_e2e": q_versioned_compact_e2e,
-    "q_union_by_name": q_union_by_name,
-    "q_null_safe_join": q_null_safe_join,
-    "q_skew_agg_two_level": q_skew_agg_two_level,
-    "q_dedup_canonical": q_dedup_canonical,
-    "q_resample_ffill": q_resample_ffill,
-    "q_media_frame_sample": q_media_frame_sample,
-    "q_streaming_enrich": q_streaming_enrich,
-    "q_streaming_interval_join": q_streaming_interval_join,
-    "q_sql_tpch_q18": q_sql_tpch_q18,
-    "q_data_profile": q_data_profile,
-    "q_outliers_zscore": q_outliers_zscore,
-    "q_incremental_agg": q_incremental_agg,
-    # LLM-pipeline extensions
-    "q_dedup_exact": q_dedup_exact,
-    "q_dedup_near": q_dedup_near,
-    "q_dedup_near_verified": q_dedup_near_verified,
-    "q_simhash": q_simhash,
-    "q_ngram_jaccard": q_ngram_jaccard,
-    "q_token_jaccard": q_token_jaccard,
-    "q_token_dup_clusters": q_token_dup_clusters,
-    "q_incremental_ingest_dedup": q_incremental_ingest_dedup,
-    "q_dedup_rate_report": q_dedup_rate_report,
-    "q_corpus_mix": q_corpus_mix,
-    "q_dup_ngram_fraction": q_dup_ngram_fraction,
-    "q_pmi_collocations": q_pmi_collocations,
-    "q_class_weights": q_class_weights,
-    "q_token_shards": q_token_shards,
-    "q_knn_join": q_knn_join,
-    "q_shared_span_pairs": q_shared_span_pairs,
-    "q_label_centroids": q_label_centroids,
-    "q_token_dedup_near": q_token_dedup_near,
-    "q_cosine_topk": q_cosine_topk,
-    "q_cosine_topk_lsh": q_cosine_topk_lsh,
-    "q_embedding_near_dup": q_embedding_near_dup,
-    "q_ivf_assign": q_ivf_assign,
-    "q_ann_recall": q_ann_recall,
-    "q_text_stats": q_text_stats,
-    "q_quality_funnel": q_quality_funnel,
-    "q_bigram_logprob": q_bigram_logprob,
-    "q_text_quality": q_text_quality,
-    "q_token_count": q_token_count,
-    "q_lang_id": q_lang_id,
-    "q_fingerprint": q_fingerprint,
-    "q_rolling_fingerprint": q_rolling_fingerprint,
-    "q_sessionize": q_sessionize,
-    "q_media_features": q_media_features,
-    "q_streaming_tumbling": q_streaming_tumbling,
-    "q_streaming_sessionize": q_streaming_sessionize,
-    "q_bucketed_join": q_bucketed_join,
-    "q_merge_upsert": q_merge_upsert,
-    "q_hash_split": q_hash_split,
-    "q_stratified_sample": q_stratified_sample,
-    "q_decontaminate": q_decontaminate,
-    "q_pack_sequences": q_pack_sequences,
-    "q_repetition_stats": q_repetition_stats,
-    "q_boilerplate_ngrams": q_boilerplate_ngrams,
-    "q_pii_redact": q_pii_redact,
-    "q_temperature_mix": q_temperature_mix,
-    "q_shard_order": q_shard_order,
-    "q_quantize_embeddings": q_quantize_embeddings,
-    "q_moving_avg_time": q_moving_avg_time,
-    "q_zorder_scan": q_zorder_scan,
-    "q_kmeans_1d": q_kmeans_1d,
-    "q_chunk_documents": q_chunk_documents,
-    "q_hll_partitioned": q_hll_partitioned,
-    "q_hll_union_portable": q_hll_union_portable,
-    "q_funnel": q_funnel,
-    "q_cohort_retention": q_cohort_retention,
-    "q_pagerank": q_pagerank,
-}
-
 
 ORACLE_SQL: dict[str, str] = {
     "q_scan_json": "SELECT n_nationkey, n_name, n_regionkey FROM nation",
@@ -4621,12 +4452,6 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_bm25"] = q_bm25
-QUERIES["q_token_entropy"] = q_token_entropy
-QUERIES["q_weighted_sample"] = q_weighted_sample
-QUERIES["q_partition_overwrite_dynamic"] = q_partition_overwrite_dynamic
-QUERIES["q_streaming_upsert"] = q_streaming_upsert
-
 ORACLE_SQL["q_bm25"] = """
     WITH tokens AS (
         SELECT doc_id, t.token AS term
@@ -4714,8 +4539,6 @@ def q_media_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (repeat(unhex(sha256(i)), 32)) and verifies every checksum."""
     return multimodal.media_checksums(multimodal.synthetic_media(spark, n=48))
 
-
-QUERIES["q_media_checksum"] = q_media_checksum
 
 ORACLE_SQL["q_media_checksum"] = """
     WITH m AS (
@@ -4832,11 +4655,6 @@ def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_equi_depth_bins"] = q_equi_depth_bins
-QUERIES["q_winsorize"] = q_winsorize
-QUERIES["q_impute_group_mean"] = q_impute_group_mean
-QUERIES["q_fuzzy_pairs"] = q_fuzzy_pairs
-
 ORACLE_SQL["q_equi_depth_bins"] = """
     WITH e AS (
         SELECT """ + ", ".join(
@@ -4941,8 +4759,6 @@ def q_training_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_training_pipeline_e2e"] = q_training_pipeline_e2e
-
 ORACLE_SQL["q_training_pipeline_e2e"] = """
     WITH quality AS (
         SELECT * FROM documents
@@ -4983,8 +4799,6 @@ def q_weighted_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"), "lang", "n_chars", 10
     )
 
-
-QUERIES["q_weighted_sample_per_group"] = q_weighted_sample_per_group
 
 ORACLE_SQL["q_weighted_sample_per_group"] = """
     WITH keyed AS (
@@ -5109,9 +4923,6 @@ def q_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_lateral_topk_join"] = q_lateral_topk_join
-QUERIES["q_map_ops"] = q_map_ops
-
 ORACLE_SQL["q_lateral_topk_join"] = """
     SELECT o_orderkey, l.l_linenumber, l.l_extendedprice
     FROM orders, LATERAL (
@@ -5175,8 +4986,6 @@ def q_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_gdpr_delete"] = q_gdpr_delete
-
 ORACLE_SQL["q_gdpr_delete"] = """
     SELECT user_id,
            count(event_id) AS n_events,
@@ -5220,8 +5029,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lake.apply_changes(v1, feed, ["o_orderkey"])
 
 
-QUERIES["q_cdc_apply"] = q_cdc_apply
-
 ORACLE_SQL["q_cdc_apply"] = """
     SELECT o_orderkey,
            CASE WHEN o_orderkey % 100 = 0 THEN 'U' ELSE o_orderstatus END
@@ -5259,8 +5066,6 @@ def q_shuffle_hash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("total_price"),
     )
 
-
-QUERIES["q_shuffle_hash_join"] = q_shuffle_hash_join
 
 ORACLE_SQL["q_shuffle_hash_join"] = """
     SELECT o_orderdate,
@@ -5319,9 +5124,6 @@ def q_exchange_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_time_travel"] = q_time_travel
-QUERIES["q_exchange_reuse"] = q_exchange_reuse
-
 ORACLE_SQL["q_time_travel"] = """
     SELECT o_orderstatus,
            count(o_orderkey) AS n_orders,
@@ -5369,8 +5171,6 @@ def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_python_datasource"] = q_python_datasource
-
 ORACLE_SQL["q_python_datasource"] = """
     SELECT i AS item_id,
            CAST(i // 25 AS INT) AS page,
@@ -5416,8 +5216,6 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, stream, "q_pyds_stream_sink", output_mode="append"
     )
 
-
-QUERIES["q_python_datasource_stream"] = q_python_datasource_stream
 
 ORACLE_SQL["q_python_datasource_stream"] = ORACLE_SQL["q_python_datasource"]
 
@@ -5621,8 +5419,6 @@ def q_nested_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_nested_rollup"] = q_nested_rollup
-
 ORACLE_SQL["q_nested_rollup"] = """
     SELECT l_orderkey,
            CAST(count(*) AS INT) AS n_items,
@@ -5779,10 +5575,6 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_kll_quantiles"] = q_kll_quantiles
-QUERIES["q_theta_overlap"] = q_theta_overlap
-QUERIES["q_kmv_overlap"] = q_kmv_overlap
-
 # The sketch-accuracy contracts (r12 upgrades): the oracle recomputes the
 # EXACT portable scalars and asserts the ok flags are TRUE — a hash match
 # means the engine's sketch estimates landed inside the documented
@@ -5844,9 +5636,6 @@ def q_mode_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "orders"), "o_orderstatus", "o_orderpriority"
     )
 
-
-QUERIES["q_interval_coalesce"] = q_interval_coalesce
-QUERIES["q_mode_agg"] = q_mode_agg
 
 ORACLE_SQL["q_interval_coalesce"] = """
     WITH iv AS (
@@ -5919,9 +5708,6 @@ def q_udtf_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_variant_extract"] = q_variant_extract
-QUERIES["q_udtf_chunk"] = q_udtf_chunk
-
 ORACLE_SQL["q_variant_extract"] = """
     SELECT event_type,
            count(CAST(props->>'$.k' AS BIGINT)) AS n_with_k,
@@ -5972,8 +5758,6 @@ def q_mergeschema_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_mergeschema_scan"] = q_mergeschema_scan
-
 ORACLE_SQL["q_mergeschema_scan"] = """
     SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END AS o_orderpriority,
            count(o_orderkey) AS n_orders,
@@ -6012,8 +5796,6 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-QUERIES["q_session_window"] = q_session_window
 
 ORACLE_SQL["q_session_window"] = """
     WITH ordered AS (
@@ -6092,9 +5874,6 @@ def q_collated_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_recursive_cte"] = q_recursive_cte
-QUERIES["q_collated_distinct"] = q_collated_distinct
-
 ORACLE_SQL["q_recursive_cte"] = _RECURSIVE_CTE_SQL.format(table="customer")
 
 ORACLE_SQL["q_collated_distinct"] = """
@@ -6144,8 +5923,6 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_scan_xml"] = q_scan_xml
-
 ORACLE_SQL["q_scan_xml"] = """
     SELECT o_orderstatus,
            count(o_orderkey) AS n_orders,
@@ -6185,8 +5962,6 @@ def q_pandas_api(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("total_dec").cast("double").alias("total_price"),
     )
 
-
-QUERIES["q_pandas_api"] = q_pandas_api
 
 ORACLE_SQL["q_pandas_api"] = """
     SELECT o_orderstatus,
@@ -6228,8 +6003,6 @@ def q_pit_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("asof_dim_value").alias("dim_value"),
     )
 
-
-QUERIES["q_pit_lookup"] = q_pit_lookup
 
 ORACLE_SQL["q_pit_lookup"] = """
     -- ts comparisons and outputs truncated to microseconds: Spark decodes
@@ -6288,8 +6061,6 @@ def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
         F.sum(F.col("click_id").isNull().cast("long")).alias("n_expired_unmatched"),
     )
 
-
-QUERIES["q_streaming_interval_join_outer"] = q_streaming_interval_join_outer
 
 ORACLE_SQL["q_streaming_interval_join_outer"] = """
     WITH v AS (
@@ -6540,13 +6311,6 @@ def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dq_audit(checks).unionByName(orders_row_checks)
 
 
-QUERIES["q_sql_tpch_q4"] = q_sql_tpch_q4
-QUERIES["q_sql_tpch_q12"] = q_sql_tpch_q12
-QUERIES["q_sql_tpch_q21"] = q_sql_tpch_q21
-QUERIES["q_corr_matrix"] = q_corr_matrix
-QUERIES["q_linreg_by_group"] = q_linreg_by_group
-QUERIES["q_dq_audit"] = q_dq_audit
-
 ORACLE_SQL["q_sql_tpch_q4"] = """
     SELECT o_orderpriority,
            count(*) AS order_count
@@ -6766,10 +6530,6 @@ def q_percent_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_spearman_corr"] = q_spearman_corr
-QUERIES["q_event_transitions"] = q_event_transitions
-QUERIES["q_percent_of_total"] = q_percent_of_total
-
 ORACLE_SQL["q_spearman_corr"] = """
     WITH ranked AS (
         SELECT l_returnflag,
@@ -6883,10 +6643,6 @@ def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_offset_pagination"] = q_offset_pagination
-QUERIES["q_nulls_ordering"] = q_nulls_ordering
-QUERIES["q_group_by_all"] = q_group_by_all
-
 ORACLE_SQL["q_offset_pagination"] = """
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders
@@ -6948,9 +6704,6 @@ def q_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("vec_id").cast("long").alias("id_checksum"),
     )
 
-
-QUERIES["q_group_split"] = q_group_split
-QUERIES["q_balanced_sample"] = q_balanced_sample
 
 ORACLE_SQL["q_group_split"] = """
     WITH assigned AS (
@@ -7084,9 +6837,6 @@ def q_geo_radius_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_rolling_active_users"] = q_rolling_active_users
-QUERIES["q_geo_radius_pairs"] = q_geo_radius_pairs
-
 ORACLE_SQL["q_rolling_active_users"] = """
     WITH user_days AS (
         SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS d
@@ -7204,9 +6954,6 @@ def q_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_skew_report"] = q_skew_report
-QUERIES["q_partition_plan"] = q_partition_plan
-
 ORACLE_SQL["q_skew_report"] = """
     WITH k1 AS (SELECT count(*) AS _n FROM lineitem GROUP BY l_orderkey),
          k2 AS (SELECT count(*) AS _n FROM lineitem GROUP BY l_suppkey),
@@ -7302,8 +7049,6 @@ def q_streaming_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("day").agg(F.max("dau").cast("long").alias("dau"))
 
 
-QUERIES["q_streaming_dau"] = q_streaming_dau
-
 ORACLE_SQL["q_streaming_dau"] = """
     SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
            count(DISTINCT user_id) AS dau
@@ -7370,9 +7115,6 @@ def q_window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
 
-
-QUERIES["q_asof_join_forward"] = q_asof_join_forward
-QUERIES["q_window_ignore_nulls"] = q_window_ignore_nulls
 
 ORACLE_SQL["q_asof_join_forward"] = """
     WITH clicks AS (
@@ -7671,12 +7413,6 @@ def q_sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_tpch_ps(spark, sf_dir, _TPCH_Q20_BODY)
 
 
-QUERIES["q_sql_tpch_q2"] = q_sql_tpch_q2
-QUERIES["q_sql_tpch_q9"] = q_sql_tpch_q9
-QUERIES["q_sql_tpch_q11"] = q_sql_tpch_q11
-QUERIES["q_sql_tpch_q16"] = q_sql_tpch_q16
-QUERIES["q_sql_tpch_q20"] = q_sql_tpch_q20
-
 ORACLE_SQL["q_sql_tpch_q2"] = _tpch_ps_sql("duck", _TPCH_Q2_BODY)
 ORACLE_SQL["q_sql_tpch_q9"] = _tpch_q9_sql("duck")
 ORACLE_SQL["q_sql_tpch_q11"] = _tpch_ps_sql("duck", _TPCH_Q11_BODY)
@@ -7788,10 +7524,6 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-QUERIES["q_mad"] = q_mad
-QUERIES["q_gini"] = q_gini
-QUERIES["q_benford"] = q_benford
 
 ORACLE_SQL["q_mad"] = """
     WITH med AS (
@@ -7952,9 +7684,6 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_zipf_slope"] = q_zipf_slope
-QUERIES["q_ks_test"] = q_ks_test
-
 ORACLE_SQL["q_zipf_slope"] = """
     WITH vocab AS (
         SELECT token, count(*) AS n FROM (
@@ -8102,9 +7831,6 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_chi_square"] = q_chi_square
-QUERIES["q_psi"] = q_psi
-
 ORACLE_SQL["q_chi_square"] = """
     WITH m AS (SELECT quantile_disc(event_id, 0.5) AS m FROM events),
     tagged AS (
@@ -8203,8 +7929,6 @@ def q_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_price"),
     )
 
-
-QUERIES["q_incremental_join"] = q_incremental_join
 
 # full-recompute oracle: the maintained view must equal joining ALL orders
 ORACLE_SQL["q_incremental_join"] = """
@@ -8318,10 +8042,6 @@ def q_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_dedup_keep_latest"] = q_dedup_keep_latest
-QUERIES["q_top_percent"] = q_top_percent
-QUERIES["q_sequence_gaps"] = q_sequence_gaps
-
 ORACLE_SQL["q_dedup_keep_latest"] = """
     SELECT user_id, event_type, event_id, ts, value FROM (
         SELECT user_id, event_type, event_id, ts, value,
@@ -8406,9 +8126,6 @@ def q_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_listagg"] = q_listagg
-QUERIES["q_histogram_2d"] = q_histogram_2d
-
 ORACLE_SQL["q_listagg"] = """
     SELECT n_name,
            string_agg(c_mktsegment, ',' ORDER BY c_mktsegment) AS segments,
@@ -8474,9 +8191,6 @@ def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = dedup.shingle_docs_exploded(docs, n=3, tokenizer="bpe")
     return dedup.minhash_signatures_portable(shingled, num_hashes=8)
 
-
-QUERIES["q_bloom_filter"] = q_bloom_filter
-QUERIES["q_minhash_signature"] = q_minhash_signature
 
 ORACLE_SQL["q_bloom_filter"] = """
     WITH keys AS (
@@ -9123,8 +8837,6 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_vocab_coverage"] = q_vocab_coverage
-
 # Every milestone is integer-exact: counts and cumulative sums are
 # BIGINTs on both engines, the ">= pct%" tests are integer
 # cross-products, and the only division is the final coverage share
@@ -9192,8 +8904,6 @@ def q_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         alpha=0.5,
     )
 
-
-QUERIES["q_rerank_topk"] = q_rerank_topk
 
 # Stage 1 reuses the q_knn_join oracle shape (4dp cosine, neighbor-id
 # tie-break, NULLS LAST); stage 2's token-set cosine is exact-operand
@@ -9269,8 +8979,6 @@ def q_contamination_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_contamination_by_source"] = q_contamination_by_source
-
 # The flagged-doc tier is byte-identical to the proven q_decontaminate
 # oracle (token COUNTS are İ-insensitive under whitespace splitting —
 # comparisons stay engine-side); the report tier is two bigint counts
@@ -9328,8 +9036,6 @@ def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"), min_tokens=16, max_punct_ratio=0.3
     )
 
-
-QUERIES["q_data_card"] = q_data_card
 
 # Every scalar is either integer-exact (counts, BIGINT-cast sums,
 # percentile_disc elements, distinct fingerprints) or a single IEEE
@@ -9408,7 +9114,7 @@ def q_streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared staging scaffold (streaming/windows.py): synthetic bounded-day
     # ingest_ts folded from doc_id (int64-extreme ids would overflow the
     # timestamp µs range — the r11 extremes-profile find), 4 round-robin
-    # slices replayed one file per trigger
+    # slices replayed 2 files per trigger
     stream = stream_windows.stage_keyed_micro_batches(
         spark,
         docs.filter(F.col("doc_id") % 20 != 0).select("doc_id", "text"),
@@ -9475,8 +9181,6 @@ def q_streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_streaming_contamination"] = q_streaming_contamination
-
 # The drained stream must reproduce the batch sweep bit-for-bit, so the
 # oracle IS q_decontaminate's proven SQL: the stream-side HOF shingler
 # and the batch window shingler share slice-truncation semantics, the
@@ -9500,8 +9204,6 @@ def q_shard_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_punct_ratio=0.3,
     )
 
-
-QUERIES["q_shard_data_card"] = q_shard_data_card
 
 # Every scalar is integer-exact (counts, BIGINT sums, id min/max,
 # distinct fingerprints) or a single IEEE divide of exact operands
@@ -9592,7 +9294,8 @@ def q_streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared staging scaffold (streaming/windows.py): synthetic bounded-day
     # ingest_ts (NULL orderkeys coalesced so their rows survive the
     # epoch-0 initial watermark — the batch oracle counts them), 4
-    # round-robin slices so duplicate keys cross trigger boundaries
+    # round-robin slices replayed 2 files per trigger, so duplicate keys
+    # cross trigger boundaries
     stream = stream_windows.stage_keyed_micro_batches(
         spark,
         orders.select("o_orderkey", "o_custkey", "o_totalprice"),
@@ -9665,8 +9368,6 @@ def q_streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_violations") == 0).alias("passed"),
     )
 
-
-QUERIES["q_streaming_dq_gate"] = q_streaming_dq_gate
 
 # The drained stream must reproduce the batch audit bit-for-bit, so the
 # oracle IS q_dq_audit's proven SQL restricted to the four orders checks:
@@ -9778,8 +9479,6 @@ def q_kll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_kll_rollup_merge"] = q_kll_rollup_merge
-
 # Deterministic scalars are integer-exact: n_rows / sketch_n both equal
 # the non-NULL value count (sketch_n coming from the merged sketch is the
 # coverage proof), n_parts counts day cells with ≥1 value; the
@@ -9875,8 +9574,6 @@ def q_streaming_shard_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_streaming_shard_progress"] = q_streaming_shard_progress
-
 # The drained stream must reproduce the batch shard plan bit-for-bit, so
 # the oracle IS q_token_shards' proven SQL at the same budget.
 ORACLE_SQL["q_streaming_shard_progress"] = """
@@ -9935,8 +9632,6 @@ def q_hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(_SCRATCH, "hll_gold"),
     )
 
-
-QUERIES["q_hll_rollup_merge"] = q_hll_rollup_merge
 
 # The register/estimate CTEs are the SHARED fragment above (the merge of
 # per-day register maxes equals the global per-group max), plus the two
@@ -10049,8 +9744,6 @@ def q_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_wav_decode"] = q_wav_decode
-
 # Computed golden: q(width) = round(amp*(2^(8w-1)-1)) / 2^(8w-1) per
 # channel (numpy's half-even vs SQL's half-away rounding agree at every
 # tie this spec can hit — ties land on odd floors), stereo downmix =
@@ -10157,8 +9850,6 @@ def q_wav_decode_float(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_wav_decode_float"] = q_wav_decode_float
-
 # Exact golden (no quantization): mono magnitude = amp = (i+1)/32,
 # stereo downmix = (amp + amp/2)/2 = 3*(i+1)/128 — dyadic rationals with
 # at most 7 decimal digits, so round(·, 7) is the identity on both
@@ -10258,8 +9949,6 @@ def q_streaming_hll_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-QUERIES["q_streaming_hll_upsert"] = q_streaming_hll_upsert
-
 # Verbatim the q_hll_rollup_merge oracle (the streaming register store
 # must converge to the batch register build — that IS the check).
 ORACLE_SQL["q_streaming_hll_upsert"] = ORACLE_SQL["q_hll_rollup_merge"]
@@ -10332,8 +10021,6 @@ def q_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         *tiles,
     )
 
-
-QUERIES["q_bmp_decode"] = q_bmp_decode
 
 # Computed golden: channel means are integer half-sums, luma is the
 # Rec. 601 dot product of integers (exactly 3 decimals — never at a 4dp
@@ -10453,8 +10140,6 @@ def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         *tiles,
     )
 
-
-QUERIES["q_png_decode"] = q_png_decode
 
 # Computed golden, same arithmetic argument as q_bmp_decode's oracle:
 # channel means are integer half-sums, luma is the Rec. 601 dot product
@@ -10577,8 +10262,6 @@ def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_gif_decode"] = q_gif_decode
-
 # Computed golden, same arithmetic argument as the BMP/PNG oracles:
 # channel means are integer half-sums, luma is the Rec. 601 dot product
 # of integers (exactly 3 decimals — never at a 4dp rounding boundary, so
@@ -10626,3 +10309,11 @@ ORACLE_SQL["q_gif_decode"] = """
            round(luma2, 4) AS tile3
     FROM l
 """
+
+
+# Every module-level ``q_*`` function is a registered query.
+QUERIES: dict[str, QueryFn] = {
+    name: fn
+    for name, fn in globals().items()
+    if name.startswith("q_") and callable(fn)
+}

@@ -51,12 +51,6 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def dedup_exact_keep_first(docs: DataFrame, subset: list[str]) -> DataFrame:
-    """``dropDuplicates`` semantics (arbitrary survivor) — the Spark-native
-    one-liner; use :func:`dedup_exact` when the survivor must be stable."""
-    return docs.dropDuplicates(subset)
-
-
 # --------------------------------------------------------------------------
 # Intermediate materialization (shared by the LSH / Jaccard tiers)
 # --------------------------------------------------------------------------
@@ -309,13 +303,6 @@ def shingle_sets_with_size(
 # bit-identical in any engine with md5 + 64-bit integer arithmetic.
 _MINHASH_P = (1 << 61) - 1
 _MINHASH_H2_FOLD = 1 << 55
-
-
-def _portable_h60(col: Column) -> Column:
-    """First 15 md5 hex chars as an exact 60-bit integer — the repo's
-    cross-engine hash primitive (DuckDB: CAST(('0x' || substr(md5(x),1,15))
-    AS BIGINT))."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def minhash_signatures(

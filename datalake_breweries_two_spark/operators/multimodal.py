@@ -2,8 +2,8 @@
 
 Model: media is an opaque ``binary`` column plus a typed metadata struct —
 the lake never parses media inside the JVM. Decode / feature-extract /
-resize / frame-sample run as Arrow-batched Pandas UDFs over ``mapInPandas``
-so bytes cross the JVM↔Python boundary once per batch, not per row.
+frame-sample run as Arrow-batched Pandas UDFs over ``mapInPandas`` so
+bytes cross the JVM↔Python boundary once per batch, not per row.
 
 The generic decode step is STUBBED (image/video codecs are not in this
 container): ``decode_stub`` produces a deterministic fake feature vector
@@ -1016,33 +1016,6 @@ def frame_sample(media: DataFrame, n_frames: int = 4, dim: int = 8) -> DataFrame
                 yield pd.DataFrame(out)
 
     return media.mapInPandas(batches, FRAME_SCHEMA)
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize plumbing: payload → payload' (stub: digest-derived
-    bytes sized ∝ width×height) with metadata updated in the slim columns.
-    1:1 ``mapInPandas`` over image rows only; non-images pass through
-    untouched. Production swaps the body for PIL thumbnail encode — schema
-    and partition behavior identical."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            is_img = pdf["media_type"] == "image"
-            new_payloads = []
-            for img, payload in zip(is_img, pdf["payload"]):
-                if img:
-                    seed = hashlib.sha256(bytes(payload)).digest()
-                    n = max(1, width * height // 256)
-                    new_payloads.append(seed * n)
-                else:
-                    new_payloads.append(payload)
-            pdf = pdf.copy()
-            pdf["payload"] = new_payloads
-            pdf.loc[is_img, "width"] = width
-            pdf.loc[is_img, "height"] = height
-            yield pdf
-
-    return media.mapInPandas(batches, MEDIA_SCHEMA)
 
 
 def media_checksums(media: DataFrame) -> DataFrame:

@@ -40,11 +40,6 @@ def curate_silver_breweries(df: DataFrame) -> DataFrame:
     )
 
 
-def project_rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Generic projection+rename: ``{src_col: dst_name}`` (P1)."""
-    return df.select(*[F.col(src).alias(dst) for src, dst in mapping.items()])
-
-
 def null_or_empty(col: str) -> Column:
     """Predicate ``col IS NULL OR col = ''`` — the reference's critical-column
     check (reference ``plugins/data_quality_operator.py:69-70``; F1)."""

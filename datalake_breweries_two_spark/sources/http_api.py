@@ -18,7 +18,6 @@ tests run without network.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -104,11 +103,3 @@ def check_api_health(
         return get(url, timeout) == 200
     except Exception:
         return False
-
-
-def to_bronze_json_lines(rows: list[dict]) -> str:
-    """Serialize an ingest batch as JSON-lines (one object per line) — the
-    distributed-friendly bronze format (vs the reference's single JSON array
-    blob at ``plugins/brewery_operators.py:117-123``, which only one reader
-    task can split)."""
-    return "\n".join(json.dumps(r, sort_keys=True) for r in rows)

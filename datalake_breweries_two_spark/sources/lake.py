@@ -87,12 +87,6 @@ def write_partitioned_dynamic(df: DataFrame, path: str, partition_by: list[str])
     )
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Raw JSON-lines sink (reference K1 bronze shape, distributed instead
-    of a driver-side ``put_object``)."""
-    df.write.mode(mode).json(path)
-
-
 def write_bucketed(
     df: DataFrame, table_name: str, bucket_col: str, n_buckets: int, path: str
 ) -> None:

@@ -105,6 +105,10 @@ if HAVE_PYTHON_DATASOURCE:
             self.n_pages = int(options.get("n_pages", 8))
             self.per_page = int(options.get("per_page", 25))
             self.pages_per_trigger = int(options.get("pages_per_trigger", 1))
+            if self.pages_per_trigger < 1:
+                raise ValueError(
+                    f"pages_per_trigger must be >= 1, got {self.pages_per_trigger}"
+                )
 
         def initialOffset(self) -> dict:
             return {"page": 0}

@@ -3,7 +3,7 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datalake_breweries_two_spark.session import build_session
 

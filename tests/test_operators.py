@@ -2765,6 +2765,16 @@ def test_paged_api_stream_pages_per_trigger_batches_invariantly(spark):
     assert got["1"] == got["3"] and len(got["1"]) == 40
 
 
+@pytest.mark.parametrize("ppt", ["0", "-1"])
+def test_paged_api_stream_rejects_non_positive_pages_per_trigger(ppt):
+    """A micro-batch of fewer than one page never advances the offset, so
+    the reader refuses it up front instead of stalling the stream."""
+    from datalake_breweries_two_spark.sources.paged_api import PagedApiStreamReader
+
+    with pytest.raises(ValueError, match="pages_per_trigger"):
+        PagedApiStreamReader({"pages_per_trigger": ppt})
+
+
 def test_coalesce_intervals_merges_touching_and_overlapping(spark):
     from datetime import datetime
 

@@ -113,19 +113,27 @@ def test_readme_counts_match_registry():
     assert m and int(m.group(1)) == n_o, (m, n_o)
 
 
-def test_spark_entry_adapter_contract(spark):
+def test_spark_entry_adapter_contract(spark, tmp_path, monkeypatch):
     """The driver-facing adapter must (a) smoke-run entry(), (b) expose
-    every registry query exactly once through the rotation (no drops, no
-    dups), and (c) only declare oracles for registered queries."""
+    every registry query exactly once (no drops, no dups), (c) only
+    declare oracles for registered queries, and (d) order queries for the
+    bounded prefix each verification round checks: no passing evidence
+    (never checked, or failed in the latest record) first, then by the
+    round of the latest record, oldest first, registry order breaking
+    ties."""
+    import functools
     import importlib.util
+    import json
+
+    from datalake_breweries_two_spark import evidence
+    from datalake_breweries_two_spark.entry_queries import ORACLE_SQL, QUERIES
 
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_contract", "/root/repo/__spark_entry__.py"
+        "spark_entry_contract",
+        os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-
-    from datalake_breweries_two_spark.entry_queries import ORACLE_SQL, QUERIES
 
     q = mod.queries()
     assert set(q) == set(QUERIES), "rotation dropped or invented queries"
@@ -134,59 +142,22 @@ def test_spark_entry_adapter_contract(spark):
     assert set(o) == set(ORACLE_SQL)
     assert set(o) <= set(q), "oracle declared for unregistered query"
 
-    # rotation ORDER: the driver snapshots a bounded prefix, so every
-    # not-yet-driver-checked query must sort before anything already
-    # checked, and the priority rows-only interleave must land INSIDE
-    # the prefix (so rows-only entries are not starved forever behind a
-    # >prefix-sized oracle-backed backlog)
-    import glob
-    import json
-
-    checked: set = set()
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        checked.update(json.load(open(path)))
-
-    names = list(q)
-    unchecked_flags = [n not in checked for n in names]
-    assert unchecked_flags == sorted(unchecked_flags, reverse=True), (
-        "rotation must front-load ALL not-yet-driver-checked queries"
+    ok = {"err": None, "rows_match": True, "schema_match": True,
+          "hash_match": True}
+    a, b, c, d, f, r = list(QUERIES)[:6]
+    snapshots = {
+        1: {a: ok, b: ok, f: ok},
+        2: {c: ok, r: {"err": "no_oracle"}},
+        3: {b: ok, f: {**ok, "hash_match": False}},
+    }
+    for rnd, snap in snapshots.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(snap))
+    monkeypatch.setattr(
+        evidence,
+        "correctness_records",
+        functools.partial(evidence.correctness_records, str(tmp_path)),
     )
-    prefix = names[: mod._DRIVER_PREFIX]
-    for rows_only_name in mod._ROWS_ONLY_INTERLEAVE:
-        if rows_only_name in checked or rows_only_name not in set(names):
-            continue
-        assert rows_only_name in prefix, (
-            f"{rows_only_name}: priority rows-only entry fell out of the "
-            "driver prefix"
-        )
-    # and the prefix never wastes a slot on an already-checked query
-    # while unchecked ones remain
-    n_unchecked = sum(unchecked_flags)
-    for name in prefix[: min(len(prefix), n_unchecked)]:
-        assert name not in checked
-
-    # failed-then-fixed queries (latest driver record is a FAIL) must be
-    # pinned for RE-check: inside the prefix (when it has room after the
-    # unchecked block) and ahead of every passing checked query
-    status = mod._driver_status()
-    rechecks = [n for n in names if n in checked and mod._is_fail(status[n])]
-    if rechecks and n_unchecked + len(rechecks) <= mod._DRIVER_PREFIX:
-        for name in rechecks:
-            assert name in prefix, (
-                f"{name}: failed query fell out of the re-check prefix"
-            )
-    first_pass_idx = next(
-        (
-            i
-            for i, n in enumerate(names)
-            if n in checked and not mod._is_fail(status[n])
-        ),
-        len(names),
-    )
-    for name in rechecks:
-        assert names.index(name) < first_pass_idx, (
-            f"{name}: failed query sorted behind a passing one"
-        )
+    assert list(mod.queries()) == [d, f, *list(QUERIES)[6:], a, c, r, b]
 
     flagship = mod.entry(spark)
     assert flagship.count() >= 0
@@ -331,29 +302,29 @@ def test_bench_noise_canary_shape(spark):
 
 
 def test_bench_reference_covers_headline():
-    """Every bench HEADLINE query needs a ref entry — a missing entry
-    silently falls back to the 0.3 s floor, making the stall detector
-    retry slow-by-design queries on every run. r16 (r15 ADVICE): the ref
-    lives in exactly ONE of QUIET_HOST_REF_SEC (protocol-context numbers)
-    or PROVISIONAL_REF_SEC (cold standalone floors awaiting protocol
-    contact) — disjointness makes 'sized off a cold floor' a visible,
-    greppable state instead of a comment-only convention, and promotion
-    a deliberate move."""
+    """Every bench headline query is a registered query with a positive
+    quiet-host reference time (the stall detector's threshold)."""
     import bench
 
-    confirmed, provisional = bench.QUIET_HOST_REF_SEC, bench.PROVISIONAL_REF_SEC
-    both = sorted(set(confirmed) & set(provisional))
-    assert not both, f"refs present in BOTH confirmed and provisional: {both}"
-    missing = [
-        n for n in bench.HEADLINE if n not in confirmed and n not in provisional
-    ]
-    assert not missing, f"headline queries without a quiet-host ref: {missing}"
-    stale = [
-        n
-        for n in list(confirmed) + list(provisional)
-        if n not in bench.HEADLINE
-    ]
-    assert not stale, f"refs for queries no longer in headline: {stale}"
+    from datalake_breweries_two_spark.entry_queries import QUERIES
+
+    unknown = [n for n in bench.HEADLINE if n not in QUERIES]
+    assert not unknown, f"headline queries not in the registry: {unknown}"
+    unsized = [n for n, ref in bench.HEADLINE.items() if not ref > 0]
+    assert not unsized, f"headline queries without a positive ref: {unsized}"
+
+
+def test_no_hard_coded_checkout_path():
+    """Nothing may assume where the checkout lives: paths derive from
+    ``__file__``."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    needle = os.path.join(os.sep, "root", "repo")
+    paths = [os.path.join(root, f) for f in ("__spark_entry__.py", "bench.py")]
+    for sub in ("datalake_breweries_two_spark", "tests"):
+        for dirpath, _, files in os.walk(os.path.join(root, sub)):
+            paths += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
+    offenders = [p for p in paths if needle in open(p, encoding="utf-8").read()]
+    assert not offenders, offenders
 
 
 def test_cli_audit_accounting_matches_artifacts(capsys):
