@@ -283,19 +283,17 @@ def events_ts_layout(path: str, sample: int | None = None) -> str:
     return distinct.pop()
 
 
-def events_ts_is_nanos(path: str) -> bool:
-    """Back-compat wrapper: does this path need the epoch-nanos long-decode
-    path? (Kept for callers that only distinguish nanos vs native.)"""
-    return events_ts_layout(path) in ("nanos", "int64-nanos")
-
-
-def _decode_raw_events_ts(raw: DataFrame, layout: str) -> DataFrame:
-    """Project an ``_EVENTS_RAW`` (ts = int64) frame to the portable
-    ``_EVENTS`` schema, converting the sniffed unit to microseconds with
-    exact integer arithmetic (a double division would lose precision at
-    1e18 magnitudes)."""
+def _read_events_via(reader, path: str) -> DataFrame:
+    """Read an events parquet path through ``reader`` (``spark.read``, or a
+    ``spark.readStream`` with its trigger options set) into the portable
+    ``_EVENTS`` schema: the ts layout is sniffed once, and an int64 layout
+    is converted to microseconds with exact integer arithmetic (a double
+    division would lose precision at 1e18 magnitudes)."""
     from pyspark.sql import functions as F
 
+    layout = events_ts_layout(path)
+    if layout == "native":
+        return reader.schema(_EVENTS).parquet(path)
     to_micros = {
         "nanos": "ts DIV 1000",
         "int64-nanos": "ts DIV 1000",
@@ -303,7 +301,7 @@ def _decode_raw_events_ts(raw: DataFrame, layout: str) -> DataFrame:
         "int64-millis": "ts * 1000",
         "int64-seconds": "ts * 1000000",
     }[layout]
-    return raw.select(
+    return reader.schema(_EVENTS_RAW).parquet(path).select(
         F.col("event_id"),
         F.timestamp_micros(F.expr(to_micros)).alias("ts"),
         F.col("user_id"),
@@ -316,11 +314,7 @@ def _decode_raw_events_ts(raw: DataFrame, layout: str) -> DataFrame:
 def read_events(spark: SparkSession, path: str) -> DataFrame:
     """Batch events reader: any sniffed on-disk ts layout → the `_EVENTS`
     portable schema (microsecond timestamps)."""
-    layout = events_ts_layout(path)
-    if layout == "native":
-        return spark.read.schema(_EVENTS).parquet(path)
-    raw = spark.read.schema(_EVENTS_RAW).parquet(path)
-    return _decode_raw_events_ts(raw, layout)
+    return _read_events_via(spark.read, path)
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:

@@ -1032,14 +1032,10 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     final per-tier snapshot equals the batch join+count recompute."""
     from datalake_breweries_two_spark.catalog import read_events
 
-    stage_dir = os.path.join(_SCRATCH, "events_enrich_stream")
-    (
-        read_events(spark, os.path.join(sf_dir, "events.parquet"))
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(stage_dir)
+    stream = stream_windows.stage_events_stream(
+        read_events(spark, os.path.join(sf_dir, "events.parquet")),
+        os.path.join(_SCRATCH, "events_enrich_stream"),
     )
-    stream = stream_windows.read_events_stream(spark, stage_dir)
     tiers = (
         _t(spark, sf_dir, "events")
         .select("user_id")
@@ -1069,14 +1065,10 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_breweries_two_spark.catalog import read_events
     from datalake_breweries_two_spark.streaming import joins as stream_joins
 
-    stage_dir = os.path.join(_SCRATCH, "events_ssjoin_stream")
-    (
-        read_events(spark, os.path.join(sf_dir, "events.parquet"))
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(stage_dir)
+    stream = stream_windows.stage_events_stream(
+        read_events(spark, os.path.join(sf_dir, "events.parquet")),
+        os.path.join(_SCRATCH, "events_ssjoin_stream"),
     )
-    stream = stream_windows.read_events_stream(spark, stage_dir)
     views = stream.filter(F.col("event_type") == "view")
     clicks = stream.filter(F.col("event_type") == "click")
     pairs = stream_joins.view_click_attribution(views, clicks, max_lag_minutes=30)
@@ -1125,14 +1117,10 @@ def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the batch generate_series expansion exactly."""
     from datalake_breweries_two_spark.catalog import read_events
 
-    stage_dir = os.path.join(_SCRATCH, "events_sliding_stream")
-    (
-        read_events(spark, os.path.join(sf_dir, "events.parquet"))
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(stage_dir)
+    stream = stream_windows.stage_events_stream(
+        read_events(spark, os.path.join(sf_dir, "events.parquet")),
+        os.path.join(_SCRATCH, "events_sliding_stream"),
     )
-    stream = stream_windows.read_events_stream(spark, stage_dir)
     agg = stream_windows.windowed_event_counts(
         stream, "1 hour", "3650 days", slide="30 minutes"
     )
@@ -4418,32 +4406,23 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datalake_breweries_two_spark.catalog import read_events
     from datalake_breweries_two_spark.streaming.sinks import stream_upsert_versioned
 
-    stage_dir = os.path.join(_SCRATCH, "events_stream_upsert")
     root = os.path.join(_SCRATCH, "stream_upsert_table")
     shutil.rmtree(root, ignore_errors=True)
-    (
-        read_events(spark, os.path.join(sf_dir, "events.parquet"))
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(stage_dir)
+    # 2 files per trigger: halves the fixed per-trigger cost (incremental
+    # re-plan, state-store open/commit per partition, one full
+    # read->MERGE->publish->vacuum cycle in the foreachBatch sink) while
+    # the drive still MERGEs across a trigger boundary — the published
+    # converged state the oracle checks is batching-invariant.
+    stream = stream_windows.stage_events_stream(
+        read_events(spark, os.path.join(sf_dir, "events.parquet")),
+        os.path.join(_SCRATCH, "events_stream_upsert"),
+        files_per_trigger=2,
     )
-    # 2 files per trigger (r17, guide §5): halves the fixed per-trigger
-    # cost (incremental re-plan, state-store open/commit per partition,
-    # one full read->MERGE->publish->vacuum cycle in the foreachBatch
-    # sink) while the drive still MERGEs across a trigger boundary — the
-    # published converged state the oracle checks is batching-invariant.
-    stream = stream_windows.read_events_stream(spark, stage_dir, files_per_trigger=2)
     agg = stream.groupBy("user_id").agg(
         F.count(F.col("event_id")).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,4)")).alias("dec_total"),
     )
-    # no_data_batches=False: the trailing watermark-advance batch is an
-    # empty delta for this update-mode aggregate — skipping it avoids one
-    # redundant byte-identical MERGE publish (r16 optimization, made an
-    # explicit call-site opt-out r17 per the r16 ADVICE).
-    stream_upsert_versioned(
-        spark, agg, root, ["user_id"], "q_streaming_upsert", no_data_batches=False
-    )
+    stream_upsert_versioned(spark, agg, root, ["user_id"], "q_streaming_upsert")
     final = lake.read_versioned(spark, root)
     return final.select(
         "user_id",
@@ -7021,8 +7000,6 @@ def q_streaming_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     emissions, and the final snapshot (max per day) must equal the batch
     COUNT(DISTINCT user) — streaming correctness is hash-checked against
     the batch recompute."""
-    from datalake_breweries_two_spark.catalog import read_events  # noqa: F401
-
     stage_dir = os.path.join(_SCRATCH, "events_stream_dau")
     stream_windows.stage_time_ordered_stream(
         spark, os.path.join(sf_dir, "events.parquet"), stage_dir
@@ -9927,16 +9904,16 @@ def q_streaming_hll_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from datalake_breweries_two_spark.catalog import read_events
 
-    stage_dir = os.path.join(_SCRATCH, "events_stream_hll")
     root = os.path.join(_SCRATCH, "stream_hll_register_table")
     shutil.rmtree(root, ignore_errors=True)
     ev = read_events(spark, os.path.join(sf_dir, "events.parquet"))
-    ev.repartition(4).write.mode("overwrite").parquet(stage_dir)
-    # 2 files per trigger (r17, guide §5): same rationale as
-    # q_streaming_upsert — halves the fixed per-trigger cycle (replan +
-    # register-state store commits + a full MERGE publish per batch)
-    # while register maxes still accumulate across a trigger boundary.
-    stream = stream_windows.read_events_stream(spark, stage_dir, files_per_trigger=2)
+    # 2 files per trigger: same rationale as q_streaming_upsert — halves
+    # the fixed per-trigger cycle (replan + register-state store commits +
+    # a full MERGE publish per batch) while register maxes still
+    # accumulate across a trigger boundary.
+    stream = stream_windows.stage_events_stream(
+        ev, os.path.join(_SCRATCH, "events_stream_hll"), files_per_trigger=2
+    )
     out = setops.hll_streaming_merge_on_read(
         spark,
         stream,

@@ -58,14 +58,16 @@ def kmeans_1d(
     x = F.col(value_col).cast("double")
     # NULL values have no cluster: excluded up front (they would form a
     # NULL-assignment group whose NULL mean crashes the iteration collect).
-    # Materialize the projected point column ONCE before iterating (r17,
-    # guide §5 — the MLlib KMeans pattern: cache the training input, then
-    # iterate): every Lloyd round plus the bounds job re-executes this
-    # subtree, so without the checkpoint the loop re-reads and re-projects
-    # the SOURCE TABLE iters+1 times — at 100 TB that is iters extra full
-    # scans for a single double column. The checkpoint holds 8 bytes/row
-    # and lives only for this invocation (no cross-run reuse). Measured
-    # 1.78 -> 1.43 s min-of-4 at sf0.1/local[32].
+    # Materialize the projected point column ONCE before iterating (the
+    # MLlib KMeans pattern: cache the training input, then iterate): every
+    # Lloyd round plus the bounds job re-executes this subtree, so without
+    # the checkpoint the loop re-reads and re-projects the SOURCE TABLE
+    # iters+1 times — at 100 TB that is iters extra full scans for a single
+    # double column. The checkpoint holds 8 bytes/row in executor block
+    # storage. Nothing reuses it after this call, but its blocks are not
+    # freed when the call returns: they persist until the checkpointed RDD
+    # is garbage-collected on the driver. Measured 1.78 -> 1.43 s min-of-4
+    # at sf0.1/local[32].
     pts = (
         points.select(x.alias("x"))
         .filter(F.col("x").isNotNull())

@@ -603,17 +603,8 @@ def hll_streaming_merge_on_read(
         .groupBy("g", "part_key", "bucket")
         .agg(F.max("rho").alias("reg"), F.count(F.lit(1)).alias("n_rows"))
     )
-    # no_data_batches=False: the trailing watermark-advance batch is an
-    # empty delta for this update-mode register aggregate — skipping it
-    # avoids one redundant byte-identical MERGE publish (r16
-    # optimization, made an explicit call-site opt-out r17 per ADVICE).
     stream_upsert_versioned(
-        spark,
-        updates,
-        root,
-        ["g", "part_key", "bucket"],
-        "hll_register_upsert",
-        no_data_batches=False,
+        spark, updates, root, ["g", "part_key", "bucket"], "hll_register_upsert"
     )
     store = lake.read_versioned(spark, root)
     merged = (

@@ -135,7 +135,7 @@ def build_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Write timestamps as TIMESTAMP(MICROS), not the legacy INT96:
         # readable by every engine (DuckDB, pyarrow) AND keeps
-        # catalog.events_ts_is_nanos' footer sniff unambiguous (pyarrow
+        # catalog.events_ts_layout's footer sniff unambiguous (pyarrow
         # reports INT96 as timestamp[ns], which would misroute staged
         # event files into the nanos-long decode path).
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

@@ -21,6 +21,7 @@ is idempotent because MERGE on the key set converges to the same state).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from datalake_breweries_two_spark.sources.lake import (
     latest_table_version,
@@ -30,6 +31,42 @@ from datalake_breweries_two_spark.sources.lake import (
     write_versioned,
 )
 
+# Stateful parallelism of every stream drive, fixed rather than inherited
+# from the session's CPU-count default: each micro-batch pays one
+# state-store open/commit per partition per stateful operator, which
+# dominates the small states these drives hold (measured 1.8-2.5x at
+# sf0.1). The conf is frozen into a query's checkpoint at first start, so
+# the pin reaches no other (or resumed) query. Sizing it from state volume
+# instead is an open ROADMAP item.
+_STREAM_SHUFFLE_PARTITIONS = 8
+
+# Table versions kept after each upsert batch: the current one plus one
+# for readers mid-swap.
+_KEEP_VERSIONS = 2
+
+
+def _drive(spark: SparkSession, writer: DataStreamWriter, no_data_batches: bool) -> None:
+    """Start ``writer`` and block until every available input is processed,
+    then stop it. For the drive only, shuffle partitions are pinned to
+    ``_STREAM_SHUFFLE_PARTITIONS`` and, with ``no_data_batches=False``, the
+    trailing no-data micro-batch is disabled; both confs are restored even
+    when the stream fails. The no-data flag is read per trigger, so scoping
+    it to this synchronous drive is exact."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+    prev = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], str(_STREAM_SHUFFLE_PARTITIONS))
+    if not no_data_batches:
+        spark.conf.set(keys[1], "false")
+    try:
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
 
 def stream_upsert_versioned(
     spark: SparkSession,
@@ -37,9 +74,6 @@ def stream_upsert_versioned(
     root: str,
     key_cols: list[str],
     query_name: str = "stream_upsert",
-    keep_versions: int = 2,
-    shuffle_partitions: int | None = 8,
-    no_data_batches: bool = True,
 ) -> None:
     """Drive an update-mode streaming aggregate to completion, MERGEing
     each micro-batch's emitted rows into the versioned table at ``root``.
@@ -52,22 +86,12 @@ def stream_upsert_versioned(
 
     Retention: every micro-batch publishes a full new table version, so an
     unbounded run would accumulate O(n_batches) snapshots; each batch
-    therefore vacuums down to ``keep_versions`` (ADVICE r3) — the current
-    version plus enough history for readers mid-swap. Pass
-    ``keep_versions=0`` to disable (e.g. when a time-travel consumer owns
-    retention).
+    therefore vacuums down to ``_KEEP_VERSIONS``.
 
-    ``no_data_batches`` defaults to ``True`` — Spark's own default
-    (restored r17 per the r16 ADVICE: a sink-level default flip silently
-    changed behavior for every existing caller). Passing ``False`` skips
-    the trailing watermark-advance micro-batch, which carries an EMPTY
-    delta by construction here (update-mode aggregates emit only on
+    The trailing watermark-advance micro-batch is skipped: it carries an
+    EMPTY delta by construction here (update-mode aggregates emit only on
     state change, which requires data), yet would still run a full
-    read→merge→write→vacuum cycle — publishing a redundant
-    byte-identical table version. The drive call sites that can prove
-    that no-op (q_streaming_upsert, hll_streaming_merge_on_read) opt out
-    explicitly, mirroring the ``run_stream_to_memory`` call-site
-    pattern.
+    read→merge→write→vacuum cycle and publish a byte-identical version.
     """
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -78,34 +102,11 @@ def stream_upsert_versioned(
         else:
             merged = delta
         write_versioned(merged, root)
-        if keep_versions > 0:
-            vacuum_versions(root, keep=keep_versions)
+        vacuum_versions(root, keep=_KEEP_VERSIONS)
 
-    # Pin the stream's stateful/merge parallelism for the drive (restored
-    # after): state is one row per key and each batch's merge join is
-    # churn-sized, so partition count should track STATE volume, not the
-    # session's CPU default — state-store open/commit overhead per
-    # (partition x operator x batch) otherwise dominates (measured ~1.8x
-    # at sf0.1). Safe: the conf freezes into this query's own checkpoint.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if not no_data_batches:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = (
-            updates.writeStream.outputMode("update")
-            .queryName(query_name)
-            .foreachBatch(apply_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )
+    writer = (
+        updates.writeStream.outputMode("update")
+        .queryName(query_name)
+        .foreachBatch(apply_batch)
+    )
+    _drive(spark, writer, no_data_batches=False)

@@ -15,54 +15,51 @@ gives exactly-once batch-over-stream semantics for backfills at any scale.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datalake_breweries_two_spark.catalog import TABLES
+from datalake_breweries_two_spark.catalog import _read_events_via, read_events
+from datalake_breweries_two_spark.streaming.sinks import _drive
 
 
 def read_events_stream(
     spark: SparkSession, path: str, files_per_trigger: int = 1
 ) -> DataFrame:
     """File-source stream over the events layout (one file per trigger batch
-    in tests; kafka in production — same downstream plan). Sniffs the staged
-    files' ts layout once at stream definition (a stream needs ONE fixed
-    schema) and decodes either layout to microsecond timestamps, mirroring
-    ``catalog.read_events``.
+    in tests; kafka in production — same downstream plan). The staged
+    files' ts layout is sniffed once at stream definition (a stream needs
+    ONE fixed schema) and decoded exactly as ``catalog.read_events`` does.
 
-    ``files_per_trigger`` sizes the micro-batches (r17, guide §5): each
-    trigger pays a fixed cycle — incremental re-plan, state-store
-    open/commit across every stateful partition, WAL/offset commit, sink
-    collect — measured at 0.5-1.5 s per trigger regardless of batch size
-    at sf0.1, so replay harnesses that only need SOME cross-trigger
-    batching should group files. The default stays 1 (one file per
-    trigger) because the time-ordered replay callers
+    ``files_per_trigger`` sizes the micro-batches: each trigger pays a
+    fixed cycle — incremental re-plan, state-store open/commit across
+    every stateful partition, WAL/offset commit, sink collect — measured
+    at 0.5-1.5 s per trigger regardless of batch size at sf0.1, so replay
+    harnesses that only need SOME cross-trigger batching should group
+    files. The default stays 1 because the time-ordered replay callers
     (``stage_time_ordered_stream`` consumers — sessionize and friends)
     rely on strict one-file-at-a-time in-order delivery."""
-    from datalake_breweries_two_spark.catalog import (
-        _EVENTS,
-        _EVENTS_RAW,
-        _decode_raw_events_ts,
-        events_ts_layout,
+    return _read_events_via(
+        spark.readStream.option("maxFilesPerTrigger", files_per_trigger), path
     )
 
-    layout = events_ts_layout(path)
-    if layout == "native":
-        return (
-            spark.readStream.schema(_EVENTS)
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .parquet(path)
-        )
-    raw = (
-        spark.readStream.schema(_EVENTS_RAW)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(path)
-    )
-    return _decode_raw_events_ts(raw, layout)
+
+# Files a batch relation is staged into for replay: enough that duplicate
+# keys can land in different files and so cross a trigger boundary.
+_STAGE_SLICES = 4
+
+
+def stage_events_stream(
+    events: DataFrame, dest_dir: str, files_per_trigger: int = 1
+) -> DataFrame:
+    """Stage a batch events frame as ``_STAGE_SLICES`` round-robin parquet
+    files under ``dest_dir`` and return the stream replaying them,
+    ``files_per_trigger`` files per micro-batch. The slices are not time
+    ordered, so consumers need a watermark wider than the data span (or
+    none); use ``stage_time_ordered_stream`` for in-order replay."""
+    events.repartition(_STAGE_SLICES).write.mode("overwrite").parquet(dest_dir)
+    return read_events_stream(events.sparkSession, dest_dir, files_per_trigger)
 
 
 def windowed_event_counts(
@@ -101,41 +98,33 @@ def stage_keyed_micro_batches(
     df: DataFrame,
     key_col: str,
     dest_dir: str,
-    n_slices: int = 4,
-    files_per_trigger: int = 2,
 ) -> DataFrame:
     """Stage a batch relation as a replayable micro-batch stream (the
     shared scaffold behind the streaming gate queries — contamination,
-    DQ — extracted r12 so its hard-won subtleties live ONCE):
+    DQ, shard progress):
 
     * a synthetic ``ingest_ts`` is appended, folded from ``key_col``
       into one bounded day (``1_600_000_000 + pmod(key, 86_400)`` —
       raw int64-extreme keys as seconds would overflow the timestamp
-      µs range, the r11 extremes-profile find), with NULL keys
-      coalesced to 0 so their rows stay ABOVE the stream's epoch-0
-      initial watermark instead of being silently dropped while the
-      batch oracle counts them;
-    * ``repartition(n_slices)`` round-robin staging, so duplicate keys
-      can land in different files and exercise cross-trigger state;
+      µs range), with NULL keys coalesced to 0 so their rows stay ABOVE
+      the stream's epoch-0 initial watermark instead of being silently
+      dropped while the batch oracle counts them;
+    * ``_STAGE_SLICES`` round-robin files, so duplicate keys can land
+      in different files and exercise cross-trigger state;
     * the returned stream reads the staged parquet with the staged
-      relation's OWN schema (no inference), ``files_per_trigger``
-      files per micro-batch.
+      relation's OWN schema (no inference), 2 files per micro-batch.
 
-    ``files_per_trigger=2`` (r17, guide §5/§1): every micro-batch pays
-    a fixed cycle that is independent of its size — incremental
-    re-plan + static-side re-broadcast, one state-store open/commit
-    per stateful partition, WAL/offset/commit log writes, sink collect
-    — measured at 0.5-1.5 s per trigger at sf0.1 (per-trigger
-    ``durationMs``: addBatch 0.5-0.9 s steady-state on a 37.5k-row
-    slice whose actual aggregation is milliseconds). Grouping the 4
-    staged slices into 2 micro-batches halves that fixed cost while
-    keeping what the replay exists to exercise: ≥2 batches, so keys
-    still accumulate state ACROSS a trigger boundary and update-mode
-    consumers still see per-key re-emission. The drained result is
-    trigger-partitioning-invariant (the gate consumers reduce the
-    sink by per-key monotone extremes), which the oracle re-verifies.
-    At 100 TB the cadence is arrival-driven (kafka), not a harness
-    knob — this only sizes the replay's batches."""
+    Two files per trigger: every micro-batch pays a fixed cycle that is
+    independent of its size — incremental re-plan + static-side
+    re-broadcast, one state-store open/commit per stateful partition,
+    WAL/offset/commit log writes, sink collect — measured at 0.5-1.5 s
+    per trigger at sf0.1 on slices whose actual aggregation takes
+    milliseconds. Two micro-batches halve that fixed cost while keeping
+    what the replay exists to exercise: keys still accumulate state
+    ACROSS a trigger boundary and update-mode consumers still see per-key
+    re-emission. The drained result is trigger-partitioning-invariant
+    (the gate consumers reduce the sink by per-key monotone extremes),
+    which the oracle re-verifies."""
     staged = df.withColumn(
         "ingest_ts",
         F.timestamp_seconds(
@@ -143,10 +132,10 @@ def stage_keyed_micro_batches(
             + F.pmod(F.coalesce(F.col(key_col), F.lit(0)), F.lit(86_400))
         ),
     )
-    staged.repartition(n_slices).write.mode("overwrite").parquet(dest_dir)
+    staged.repartition(_STAGE_SLICES).write.mode("overwrite").parquet(dest_dir)
     return (
         spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
+        .option("maxFilesPerTrigger", 2)
         .parquet(dest_dir)
     )
 
@@ -156,71 +145,31 @@ def run_stream_to_memory(
     stream_df: DataFrame,
     query_name: str,
     output_mode: str = "append",
-    shuffle_partitions: int | None = 8,
     no_data_batches: bool = True,
 ) -> DataFrame:
     """Drive a stream to completion synchronously against the memory sink
-    (test/backfill harness): availableNow semantics via processAllAvailable.
+    (test/backfill harness): availableNow semantics via processAllAvailable,
+    with the drive settings of ``streaming.sinks._drive``.
 
-    ``shuffle_partitions`` pins the stream's stateful parallelism for the
-    duration of the drive (restored after): stateful-task overhead — one
-    state-store open/commit per partition per operator per micro-batch —
-    dominates small-state streams, and a query's partition count is sized
-    to STATE VOLUME, not the session's CPU-count default (measured 2-2.5x
-    on the multi-operator chains at sf0.1). The conf is fixed into a
-    streaming query's checkpoint at first start, so pinning here cannot
-    affect any other (or resumed) query. Pass ``None`` to inherit the
-    session setting.
-
-    ``no_data_batches=False`` (r16 optimization) disables the trailing
-    empty micro-batch Spark runs after the last data batch to advance the
-    watermark. That batch exists so APPEND-mode stateful operators can
-    emit rows whose window/session closed (``sessionize_stream``'s
-    EventTimeTimeout, outer stream-stream joins, append windowed aggs) —
-    those callers MUST keep the default. An UPDATE-mode drive whose
-    consumer reads the sink's per-key emission extremes (the
-    contamination / DQ / shard-progress gate pattern: every component of
-    the state is monotone, the final data batch already emitted each
-    touched key's final value, and a no-data batch emits nothing in
-    update mode) gets identical results without it — saving one full
-    state-store open/commit cycle across every partition per drive (at
-    scale: thousands of stores), ~0.4-0.5 s per drive here and, worse,
-    the trailing batch fires nondeterministically (watermark-advance
-    timing), so skipping it also removes run-to-run variance. Restored
-    after the drive like the partition pin; the flag is runtime-read per
-    trigger, so scoping it to the synchronous drive is exact."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if not no_data_batches:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )
+    ``no_data_batches=False`` disables the trailing empty micro-batch Spark
+    runs after the last data batch to advance the watermark. That batch
+    exists so APPEND-mode stateful operators can emit rows whose
+    window/session closed (``sessionize_stream``'s EventTimeTimeout, outer
+    stream-stream joins, append windowed aggs) — those callers MUST keep
+    the default. An UPDATE-mode drive whose consumer reads the sink's
+    per-key emission extremes (the contamination / DQ / shard-progress
+    gate pattern: every component of the state is monotone, the final
+    data batch already emitted each touched key's final value, and a
+    no-data batch emits nothing in update mode) gets identical results
+    without it — saving one full state-store open/commit cycle across
+    every partition per drive (~0.4-0.5 s per drive here) and, since the
+    trailing batch fires nondeterministically (watermark-advance timing),
+    removing run-to-run variance."""
+    writer = (
+        stream_df.writeStream.outputMode(output_mode).format("memory").queryName(query_name)
+    )
+    _drive(spark, writer, no_data_batches)
     return spark.sql(f"SELECT * FROM {query_name}")
-
-
-SESSION_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
 
 
 def stage_time_ordered_stream(
@@ -237,8 +186,6 @@ def stage_time_ordered_stream(
     ntile buckets: an unpartitioned ``ntile`` window would funnel the whole
     table through one partition; range predicates instead push down to the
     parquet scan and each slice write stays fully parallel."""
-    from datalake_breweries_two_spark.catalog import read_events
-
     ev = read_events(spark, src_parquet)
     # decoded µs timestamps (catalog.read_events); slice arithmetic in
     # integer epoch-micros, boundaries pushed down as timestamp literals

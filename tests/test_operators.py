@@ -1930,10 +1930,58 @@ def test_versioned_table_atomic_swap(spark, tmp_path):
     assert read_versioned(spark, root).count() == 200
 
 
+@pytest.mark.parametrize("raises", [False, True], ids=["clean", "raising"])
+@pytest.mark.parametrize("driver", ["memory", "upsert"])
+def test_stream_drivers_restore_session_confs(spark, tmp_path, driver, raises):
+    """Both stream drivers pin shuffle partitions and disable the no-data
+    batch for the drive only: the session's values come back after a
+    clean drive and after a drive whose stream raises."""
+    from pyspark.errors import StreamingQueryException
+
+    from datalake_breweries_two_spark.sources.lake import read_versioned
+    from datalake_breweries_two_spark.streaming.sinks import stream_upsert_versioned
+
+    def reject(k):
+        raise ValueError(f"key {k} rejected")
+
+    src = str(tmp_path / "src")
+    spark.range(20).select((F.col("id") % 4).alias("k")).write.parquet(src)
+    stream = spark.readStream.schema("k long").parquet(src)
+    if raises:
+        stream = stream.select(F.udf(reject, "long")("k").alias("k"))
+    agg = stream.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
+    name = f"conf_restore_{driver}_{int(raises)}"
+    table = str(tmp_path / "tbl")
+
+    def drive():
+        if driver == "memory":
+            return stream_windows.run_stream_to_memory(
+                spark, agg, name, output_mode="update", no_data_batches=False
+            )
+        stream_upsert_versioned(spark, agg, table, ["k"], name)
+        return read_versioned(spark, table)
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    session = {keys[0]: "5", keys[1]: "true"}
+    for k, v in session.items():
+        spark.conf.set(k, v)
+    try:
+        if raises:
+            with pytest.raises(StreamingQueryException):
+                drive()
+        else:
+            assert drive().count() == 4
+        assert {k: spark.conf.get(k) for k in keys} == session
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
 def test_stream_upsert_vacuums_versions(spark, tmp_path):
     """ADVICE r3: stream_upsert_versioned publishes a full table version
     per micro-batch — the per-batch vacuum must bound on-disk snapshots at
-    keep_versions regardless of batch count, while the final published
+    its two kept versions regardless of batch count, while the final published
     state still equals a batch recompute."""
     import re
 
@@ -1955,7 +2003,7 @@ def test_stream_upsert_vacuums_versions(spark, tmp_path):
     stream_upsert_versioned(spark, agg, root, ["user_id"], "vacuum_test")
 
     versions = [d for d in os.listdir(root) if re.fullmatch(r"v\d{5}", d)]
-    assert len(versions) <= 2, versions  # keep_versions default, ≥4 batches ran
+    assert len(versions) <= 2, versions  # two kept versions, ≥4 batches ran
 
     batch = (
         read_events(spark, os.path.join(SF_SMOKE, "events.parquet"))
@@ -3191,6 +3239,29 @@ def test_corr_matrix_and_linreg_degenerate_groups(spark):
     assert lr["lin"]["slope"] == 2.0 and lr["lin"]["intercept"] == 1.0
     assert lr["lin"]["n_obs"] == 10
     assert lr["flat"]["slope"] is None and lr["flat"]["intercept"] is None
+
+
+def test_tpch_q9_q16_rewrites_equal_unrewritten_twins(spark):
+    """The Q9 pair pre-filter and Q16's pairs-only partsupp were applied
+    to the engine SQL and its oracle together, so oracle parity cannot
+    catch a wrong rewrite. Each must return the same row multiset as its
+    unrewritten form over the full distinct partsupp."""
+    from collections import Counter
+
+    from datalake_breweries_two_spark.entry_queries import (
+        _TPCH_Q9_BODY,
+        _TPCH_Q16_BODY,
+        _tpch_ps_sql,
+        q_sql_tpch_q9,
+        q_sql_tpch_q16,
+    )
+
+    for query, body in ((q_sql_tpch_q9, _TPCH_Q9_BODY), (q_sql_tpch_q16, _TPCH_Q16_BODY)):
+        got = Counter(tuple(r) for r in query(spark, SF_SMOKE).collect())
+        # query() registered the views the twin reads
+        twin = Counter(tuple(r) for r in spark.sql(_tpch_ps_sql("spark", body)).collect())
+        assert got, query.__name__
+        assert got == twin, query.__name__
 
 
 def test_tpch_q21_decorrelated_equals_bruteforce(spark):

@@ -320,7 +320,7 @@ def test_no_hard_coded_checkout_path():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     needle = os.path.join(os.sep, "root", "repo")
     paths = [os.path.join(root, f) for f in ("__spark_entry__.py", "bench.py")]
-    for sub in ("datalake_breweries_two_spark", "tests"):
+    for sub in ("datalake_breweries_two_spark", "tests", "tools"):
         for dirpath, _, files in os.walk(os.path.join(root, sub)):
             paths += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
     offenders = [p for p in paths if needle in open(p, encoding="utf-8").read()]

@@ -297,7 +297,7 @@ SHUFFLE_BUDGET = {
     "q_sql_tpch_q21": 4,        # per-order distinct pair + join-back + final agg
     "q_corr_matrix": 1,         # single-pass co-moment agg
     "q_linreg_by_group": 1,     # customer broadcast; one regr agg
-    "q_dq_audit": 10,           # 8 checks in 7 union branches: 2 key aggs x2 + 3 anti-join collapses + 1 fused orders row-invariant agg (positive+finite share one scan since r17)
+    "q_dq_audit": 9,            # 8 checks in 7 union branches: 2 key aggs x2 + 3 anti-join collapses + 1 discount-range agg + 1 fused orders row-invariant agg
     "q_spearman_corr": 1,       # both rank windows + final agg share one group-keyed exchange
     "q_event_transitions": 2,   # user-keyed window + (type,type) count
     "q_percent_of_total": 2,    # fact agg + ~25-row window exchange

@@ -63,7 +63,7 @@ BEFORE decimal aggregation, never a try_cast that would launder the
 corruption into silent NULLs.
 """
 import sys, os, glob, tempfile
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import datetime as dt
 import duckdb
 import pyarrow as pa, pyarrow.parquet as pq

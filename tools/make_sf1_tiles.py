@@ -31,7 +31,7 @@ built as TEN DISJOINT TILES of the real sf0.1 tables:
   symlinked) untouched. 10x facts over fixed dims in a fixed time
   window — day-cell COUNTS constant, cell CONTENTS 10x.
 
-Output: /root/repo/.scaling/sf1/{documents,embeddings,events,orders,
+Output: <checkout>/.scaling/sf1/{documents,embeddings,events,orders,
 lineitem,customer}.parquet (+ symlinked dims). Deterministic — no RNG.
 
 Usage:  python tools/make_sf1_tiles.py [out_root] [n_tiles] [nofacts|streamfacts]
@@ -50,6 +50,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from datalake_breweries_two_spark import CHECKOUT_DIR  # noqa: E402
 from datalake_breweries_two_spark.session import build_session  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
@@ -74,7 +75,7 @@ def caesar_maps(t: int) -> tuple[str, str]:
 
 
 def main(
-    out_root: str = "/root/repo/.scaling/sf1",
+    out_root: str = os.path.join(CHECKOUT_DIR, ".scaling", "sf1"),
     n_tiles: int = N_TILES,
     facts: bool | str = True,
 ) -> None:
