@@ -1931,37 +1931,33 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs. FULL ORACLE since r7: the declared
-    query runs ``hash_fn="portable"`` (two-md5 Carter-Wegman minhash
-    family, band buckets = raw signature-slice strings) with the
-    İ-folded whitespace tokenizer, so DuckDB recomputes every signature
-    value, every band bucket, the over-cap bucket drops, and each
-    pair's agreement fraction — the LSH DECISIONS are pinned
-    cross-engine, not just the surviving pairs' scores. Production
-    default (xxhash64 hashing, plain whitespace tokens) unchanged."""
+    """MinHash+LSH near-dup pairs under a full oracle: the two-md5
+    Carter-Wegman minhash family (band buckets = raw signature-slice
+    strings) with the İ-folded whitespace tokenizer, so DuckDB
+    recomputes every signature value, every band bucket, the over-cap
+    bucket drops, and each pair's agreement fraction — the LSH DECISIONS
+    are pinned cross-engine, not just the surviving pairs' scores."""
     return dedup.minhash_near_duplicates(
         _t(spark, sf_dir, "documents"),
         num_hashes=32,
         bands=8,
         threshold=0.4,
         tokenizer="whitespace_folded",
-        hash_fn="portable",
     )
 
 
 def q_dedup_near_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tiered near-dup: LSH candidates verified by EXACT Jaccard restricted
-    to candidate pairs (the 100 TB pipeline shape). FULL ORACLE since r7
-    via the portable minhash family (see q_dedup_near): the oracle
-    reproduces the candidate set exactly, then scores it with the same
-    exact-Jaccard SQL the q_ngram_jaccard oracle uses."""
+    to candidate pairs (the 100 TB pipeline shape), under a full oracle
+    (see q_dedup_near): the oracle reproduces the candidate set exactly,
+    then scores it with the same exact-Jaccard SQL the q_ngram_jaccard
+    oracle uses."""
     return dedup.near_duplicates_verified(
         _t(spark, sf_dir, "documents"),
         num_hashes=32,
         bands=8,
         threshold=0.2,
         tokenizer="whitespace_folded",
-        hash_fn="portable",
     )
 
 
@@ -2045,18 +2041,14 @@ def q_token_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs. FULL ORACLE since r7: the declared query
-    runs the ``hash_fn="portable"`` 60-bit md5-plane variant with the
-    İ-pre-folded BPE tokenizer, so DuckDB recomputes every signature
+    """SimHash near-dup pairs under a full oracle: 60 md5 bit-planes with
+    the İ-pre-folded BPE tokenizer, so DuckDB recomputes every signature
     bit, the disjoint-block bucketing (shared layout via
     ``simhash_block_layout``), the over-cap bucket drops, and the exact
-    Hamming verify. The production xxhash64/whitespace default is
-    unchanged — this pins the simhash MATH cross-engine the same way
-    q_minhash_signature pins the minhash math."""
+    Hamming verify."""
     pairs = dedup.simhash_near_duplicates(
         _t(spark, sf_dir, "documents"),
         max_hamming=6,
-        hash_fn="portable",
         tokenizer="bpe",
     )
     return pairs.select(
@@ -2084,9 +2076,9 @@ def q_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_token_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-aware tiered near-dup at corpus scale: MinHash+LSH over
     BPE-ish token 2-gram shingles proposes candidates, exact token
-    Jaccard verifies them. FULL ORACLE since r7 via the portable
-    minhash family (see q_dedup_near); the bpe tokenizer was already
-    İ-folded, so the oracle reuses q_token_jaccard's tokenization SQL.
+    Jaccard verifies them, under a full oracle (see q_dedup_near); the
+    bpe tokenizer is İ-folded, so the oracle reuses q_token_jaccard's
+    tokenization SQL.
     Surviving pairs remain unit-pinned as a subset of q_token_jaccard's
     exact ground truth with equal scores."""
     return dedup.near_duplicates_verified(
@@ -2096,7 +2088,6 @@ def q_token_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=8,
         threshold=0.3,
         tokenizer="bpe",
-        hash_fn="portable",
     )
 
 
@@ -2340,13 +2331,11 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprint (min hash over 16-char shingles). FULL
-    ORACLE since r7: the declared query runs the ``hash_fn="portable"``
-    md5-60bit variant over the RAW text (no lowering — no case-fold
-    divergence surface), so DuckDB recomputes every shingle hash and the
-    min. The production xxhash64 default is unchanged."""
+    """Winnowing fingerprint (min md5-60 hash over 16-char shingles of the
+    RAW text — no lowering, so no case-fold divergence surface), under a
+    full oracle: DuckDB recomputes every shingle hash and the min."""
     return text.rolling_hash_fingerprint(
-        _t(spark, sf_dir, "documents"), hash_fn="portable"
+        _t(spark, sf_dir, "documents")
     ).select("doc_id", "robust_fingerprint")
 
 
@@ -5138,10 +5127,7 @@ def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if not HAVE_PYTHON_DATASOURCE:  # pragma: no cover - pyspark < 4
         raise RuntimeError("Python DataSource API requires pyspark >= 4.0")
-    try:
-        spark.dataSource.register(PagedApiDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(PagedApiDataSource)
     return (
         spark.read.format("paged_api")
         .option("n_pages", "8")
@@ -5167,7 +5153,7 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary). Drained stream == batch scan, so this streaming extension
     point carries a FULL oracle.
 
-    pages_per_trigger=2 (r17, guide §5): each micro-batch pays a fixed
+    pages_per_trigger=2: each micro-batch pays a fixed
     WAL/offset-commit + planning + Python-runner cycle (~0.35 s at the
     quiet floor, several× that under host I/O pressure) regardless of
     row count — 8 one-page triggers were pure fixed cost for 25-row
@@ -5180,10 +5166,7 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if not HAVE_PYTHON_DATASOURCE:  # pragma: no cover - pyspark < 4
         raise RuntimeError("Python DataSource API requires pyspark >= 4.0")
-    try:
-        spark.dataSource.register(PagedApiStreamDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(PagedApiStreamDataSource)
     stream = (
         spark.readStream.format("paged_api_stream")
         .option("n_pages", "8")
@@ -8154,12 +8137,11 @@ def q_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine-portable MinHash signature rows (r7): BPE-ish token 3-gram
+    """Engine-portable MinHash signature rows: BPE-ish token 3-gram
     shingles → md5-based 60-bit min-hash per (doc, seed), bounded id
-    subset (doc_id < 400, the token-tier fence). FULL ORACLE over the
-    signature VALUES themselves — the production xxhash64 path
-    (q_dedup_near) is only checkable at the pair-decision level; this
-    pins the signature math itself cross-engine. BPE tokenizer, not
+    subset (doc_id < 400, the token-tier fence), under a full oracle over
+    the signature VALUES themselves, one md5 per (shingle, seed). BPE
+    tokenizer, not
     whitespace: signatures expose the raw shingle STRINGS through md5,
     so the tokenizer must be the İ-pre-folded cross-engine one
     (count/ratio outputs are insensitive to Java-vs-utf8proc lower()
@@ -8578,11 +8560,8 @@ ORACLE_SQL["q_ann_recall"] = """
 
 
 # ---------------------------------------------------------------------------
-# r7 rows-only → full-oracle upgrades, part 2: the fingerprint pair.
-# Both declared queries switch to the portable md5-60bit hash (operators
-# keep their fast xxhash64 production default behind hash_fn="xx"), so
-# DuckDB recomputes every hash decision exactly — the same pattern that
-# upgraded the IVF/LSH/recall tier above.
+# The fingerprint pair: both hash with md5-60 (sampling.md5_60), so DuckDB
+# recomputes every hash decision exactly.
 # ---------------------------------------------------------------------------
 
 ORACLE_SQL["q_rolling_fingerprint"] = """
@@ -8601,7 +8580,7 @@ def _simhash_oracle_sql(max_hamming: int, bucket_cap: int) -> str:
     bit-planes, majority vote per bit, the SAME disjoint-block layout as
     the Spark pair generator (shared via ``simhash_block_layout``),
     over-cap bucket drops BEFORE pairing, exact Hamming verify."""
-    n_bits = dedup.simhash_bits("portable")
+    n_bits = dedup.SIMHASH_BITS
     offsets, widths = dedup.simhash_block_layout(n_bits, max_hamming + 1)
     bit_sums = ",\n               ".join(
         f"sum((h >> {b}) & 1) AS b{b}" for b in range(n_bits)
@@ -8661,13 +8640,12 @@ def _simhash_oracle_sql(max_hamming: int, bucket_cap: int) -> str:
 ORACLE_SQL["q_simhash"] = _simhash_oracle_sql(max_hamming=6, bucket_cap=256)
 
 # ---------------------------------------------------------------------------
-# r7 rows-only → full-oracle upgrades: the MinHash+LSH near-dup tier.
-# The declared queries now run hash_fn="portable" (operators/dedup.py:
-# minhash_signatures — two md5-derived integers per shingle mixed per seed
-# as (h1 + s*h2) mod 2^61-1) with İ-folded tokenizers, so a DuckDB oracle
+# The MinHash+LSH near-dup tier (operators/dedup.py: minhash_signatures —
+# two md5-derived integers per shingle mixed per seed as
+# (h1 + s*h2) mod 2^61-1) with İ-folded tokenizers: a DuckDB oracle
 # recomputes every signature value, every band bucket (the raw joined
 # signature-slice string — no re-hash), the over-cap bucket drops, and the
-# est/exact verify tier. Production xxhash64 paths are unchanged.
+# est/exact verify tier.
 # ---------------------------------------------------------------------------
 
 # Mirrors of _tokens_expr (İ-folded variants only — portable hashing

@@ -11,12 +11,11 @@ shape as Spark's runtime row-level bloom pruning
 engine-portable operator (``bloom_filter_agg`` is not in the public
 function registry).
 
-Determinism: positions come from md5(key ':' seed) — first 15 hex chars →
-exact 60-bit integer, bit-identical in any engine with md5 (the repo's
-cross-engine hash pattern). Words pack 63 bits each: bit 63 is unusable
-because engines disagree on ``1::BIGINT << 63`` (DuckDB raises an overflow
-error, Java wraps) — one bit of capacity is cheap, a signed-overflow
-divergence is not.
+Determinism: positions come from ``sampling.md5_60`` of key ':' seed — a
+60-bit integer, bit-identical in any engine with md5. Words pack 63 bits
+each: bit 63 is unusable because engines disagree on ``1::BIGINT << 63``
+(DuckDB raises an overflow error, Java wraps) — one bit of capacity is
+cheap, a signed-overflow divergence is not.
 
 Reference scope: the reference engine (henrique-af/datalake-breweries-two)
 has no bloom operator; this extends the lake toolkit the same way the
@@ -28,17 +27,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datalake_breweries_two_spark.operators.sampling import md5_60
+
 BITS_PER_WORD = 63  # avoid the sign bit: 1<<63 overflows in DuckDB
 
 
 def _position(key: Column, seed: int, m_bits: int) -> Column:
     """Deterministic bit position in [0, m_bits): 60-bit md5 prefix mod m.
     Non-negative dividend, so ``%`` agrees across engines."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(":", key.cast("string"), F.lit(seed))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = md5_60(F.concat_ws(":", key.cast("string"), F.lit(seed)))
     return h % F.lit(m_bits)
 
 

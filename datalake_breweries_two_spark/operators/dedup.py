@@ -3,7 +3,7 @@
 Four tiers, cheapest-first (the order a 100 TB pipeline applies them):
 
   1. **Exact** — hash-groupBy on a content fingerprint. One shuffle on the
-     md5/xxhash key; at 100 TB shuffle rows are (hash, id) pairs only.
+     md5 key; at 100 TB shuffle rows are (hash, id) pairs only.
   2. **MinHash + LSH banding** — shingle → per-seed min-hash → band →
      groupBy band signature → pair candidates within buckets. All JVM
      higher-order functions; the only shuffle is on band signatures, whose
@@ -16,8 +16,10 @@ Four tiers, cheapest-first (the order a 100 TB pipeline applies them):
      explode + self-join on shingle; quadratic in bucket co-occurrence, used
      as the verification pass over LSH candidates, never the full corpus.
 
-All hashing uses ``xxhash64(col, seed)`` — deterministic across runs and
-executors (no Python ``hash()``, which is salted per process).
+All hashing derives from md5 (:func:`sampling.md5_60`, the first 15 hex
+chars as an exact 60-bit integer) — deterministic across runs, executors
+and engines (no Python ``hash()``, which is salted per process), so a
+DuckDB oracle recomputes every signature, bucket and pair decision.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from datalake_breweries_two_spark.operators.sampling import md5_60
 from datalake_breweries_two_spark.operators.text import WS_RE
 
 
@@ -191,13 +194,6 @@ def word_shingles(text_col: str, n: int, tokenizer: str = "whitespace") -> Colum
     return F.array_distinct(F.get(F.transform(F.array(tokens), _from_t), 0))
 
 
-def shingle_docs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """(id, shingles array) — input to minhash and exact-Jaccard."""
-    return docs.select(F.col(id_col), word_shingles(text_col, n).alias("shingles"))
-
-
 def shingle_docs_exploded(
     docs: DataFrame,
     text_col: str = "text",
@@ -292,92 +288,70 @@ def shingle_sets_with_size(
 # 2. MinHash + LSH
 # --------------------------------------------------------------------------
 
-# Carter-Wegman mixing constants for the portable minhash family:
-# seed s maps a shingle's two independent md5-derived integers (h1 full
-# 60-bit, h2 folded to 55 bits) to (h1 + s*h2) mod P. P = 2^61-1 (prime);
-# the 55-bit fold bounds s*h2 ≤ 63*(2^55-1) < 2^61 so h1 + s*h2 < 2^62
-# never overflows a signed 64-bit long under Spark's ANSI mode. Two md5s
-# per shingle instead of num_hashes of them — at 100 TB the hash is the
-# dominant per-row cost of signature building, so the mixed family is
-# ~num_hashes/2 × cheaper than md5(shingle:seed) per seed while staying
-# bit-identical in any engine with md5 + 64-bit integer arithmetic.
+# Carter-Wegman mixing constants for the minhash family: seed s maps a
+# shingle's two independent md5-derived integers (h1 full 60-bit, h2
+# folded to 55 bits) to (h1 + s*h2) mod P, P = 2^61-1 (prime). The fold
+# keeps h1 + s*h2 < 2^60 + s*2^55 under 2^63-1 for every seed s ≤ 224,
+# so the mix never overflows a signed 64-bit long under Spark's ANSI
+# mode. Two md5s per shingle instead of num_hashes of them — at 100 TB
+# the hash is the dominant per-row cost of signature building, so the
+# mixed family is ~num_hashes/2 × cheaper than md5(shingle:seed) per
+# seed while staying bit-identical in any engine with md5 + 64-bit
+# integer arithmetic.
 _MINHASH_P = (1 << 61) - 1
 _MINHASH_H2_FOLD = 1 << 55
+_MINHASH_MAX_HASHES = 224
 
 
 def minhash_signatures(
     shingled: DataFrame,
     num_hashes: int = 64,
     id_col: str = "doc_id",
-    hash_fn: str = "xx",
 ) -> DataFrame:
-    """MinHash signature per doc: for seed s, min over shingles of hash_s.
-
-    Formulated as explode → hash-aggregate with ``num_hashes`` min columns
-    rather than per-row higher-order array functions: Spark's lambda
-    functions are interpreted, but the agg form is whole-stage-codegen'd
-    (~10× faster measured at sf0.1) and partial aggregation means the
-    shuffle carries one
-    (id, sig) row per doc per partition, not per shingle.
-
-    ``hash_fn="xx"`` (production default): hash_s = xxhash64(shingle, s)
-    — fastest, Spark-only. ``hash_fn="portable"``: the Carter-Wegman
-    md5 family above — every signature value is recomputable by a DuckDB
-    oracle, at two md5s per shingle (measured ~1.2× the xx path at
-    sf0.1; the shingle window + distinct dominates, not the hash). Pair
-    it with an İ-folded tokenizer ("whitespace_folded" / "bpe") so the
+    """MinHash signature per doc from exploded ``(id, shingle)`` rows: for
+    seed s, the min over the doc's shingles of the Carter-Wegman hash
+    above. A DuckDB oracle can recompute every signature value; pair it
+    with an İ-folded tokenizer ("whitespace_folded" / "bpe") so the
     shingle STRINGS entering md5 are cross-engine identical.
 
-    Accepts either array-form (id, shingles) or exploded (id, shingle) input.
+    Formulated as a hash-aggregate with ``num_hashes`` min columns rather
+    than per-row higher-order array functions: Spark's lambda functions
+    are interpreted, but the agg form is whole-stage-codegen'd (~10×
+    faster measured at sf0.1) and partial aggregation means the shuffle
+    carries one (id, sig) row per doc per partition, not per shingle.
     """
-    if "shingle" in shingled.columns:
-        exploded = shingled.select(F.col(id_col), F.col("shingle"))
-    else:
-        exploded = shingled.select(
-            F.col(id_col), F.explode(F.col("shingles")).alias("shingle")
-        )
-    agg = exploded.groupBy(id_col).agg(*_minhash_min_exprs(num_hashes, hash_fn))
+    agg = shingled.groupBy(id_col).agg(*_minhash_min_exprs(num_hashes))
     return agg.select(F.col(id_col), _minhash_signature_expr(num_hashes))
 
 
-def _minhash_min_exprs(num_hashes: int, hash_fn: str) -> list:
-    """The per-seed ``min(hash_s(shingle)) AS _h{s}`` aggregate columns —
-    extracted (r16) so :func:`near_duplicates_verified` can ride them on
-    the SAME ``groupBy(id)`` that builds the shingle-set arrays (one pass
-    over the shingle table instead of two). Each min column is ONE F.expr
-    SQL string, not a Column-algebra chain: the per-seed loop over py4j
-    round-trips was the dominant DataFrame-construction cost of the whole
+def _minhash_min_exprs(num_hashes: int) -> list:
+    """The per-seed ``min(hash_s(shingle)) AS _h{s}`` aggregate columns,
+    shared with :func:`near_duplicates_verified`, which rides them on the
+    same ``groupBy(id)`` that builds its shingle-set arrays. Each min
+    column is ONE F.expr SQL string, not a Column-algebra chain: per-seed
+    py4j round-trips were the dominant DataFrame-construction cost of the
     near-dup tier (~0.4 ms per JVM call × ~15 calls × 64 seeds, measured
-    via cProfile — the same chatter mechanism as
-    similarity._signature_expr). min() is duplicate-insensitive, so the
-    exprs are valid over both distinct and raw (id, shingle) rows."""
-    if hash_fn == "portable":
-        # Overflow bound: h1 + s*h2 < 2^60 + s*2^55 must stay under
-        # 2^63-1, i.e. s ≤ 224. Enforced, not just documented — a
-        # too-large num_hashes would otherwise surface as a runtime
-        # ANSI ARITHMETIC_OVERFLOW only on the unlucky shingle whose
-        # h2 is near the fold ceiling.
-        if not 1 <= num_hashes <= 224:
-            raise ValueError(
-                f"portable minhash supports 1..224 hashes, got {num_hashes}"
-            )
-        h1_sql = "CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT)"
-        h2_sql = (
-            "(CAST(conv(substring(md5(concat('#', shingle)), 1, 15), 16, 10)"
-            f" AS BIGINT) % {_MINHASH_H2_FOLD})"
+    via cProfile). min() is duplicate-insensitive, so the exprs are valid
+    over both distinct and raw (id, shingle) rows.
+
+    The seed bound is enforced, not just documented: a too-large
+    ``num_hashes`` would otherwise surface as a runtime ANSI
+    ARITHMETIC_OVERFLOW only on the unlucky shingle whose h2 is near the
+    fold ceiling."""
+    if not 1 <= num_hashes <= _MINHASH_MAX_HASHES:
+        raise ValueError(
+            f"minhash supports 1..{_MINHASH_MAX_HASHES} hashes, got {num_hashes}"
         )
-        return [
-            F.expr(
-                f"min(({h1_sql} + {s} * {h2_sql}) % {_MINHASH_P}) AS _h{s}"
-            )
-            for s in range(num_hashes)
-        ]
-    if hash_fn == "xx":
-        return [
-            F.expr(f"min(xxhash64(shingle, {s})) AS _h{s}")
-            for s in range(num_hashes)
-        ]
-    raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    # the SQL spelling of sampling.md5_60
+    h1_sql = "CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT)"
+    h2_sql = (
+        "(CAST(conv(substring(md5(concat('#', shingle)), 1, 15), 16, 10)"
+        f" AS BIGINT) % {_MINHASH_H2_FOLD})"
+    )
+    return [
+        F.expr(f"min(({h1_sql} + {s} * {h2_sql}) % {_MINHASH_P}) AS _h{s}")
+        for s in range(num_hashes)
+    ]
 
 
 def _minhash_signature_expr(num_hashes: int) -> Column:
@@ -389,47 +363,28 @@ def _minhash_signature_expr(num_hashes: int) -> Column:
 def minhash_signatures_portable(
     shingled: DataFrame, num_hashes: int = 8, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Engine-portable MinHash signature ROWS (id, seed, minhash).
+    """MinHash signature ROWS (id, seed, minhash) from exploded
+    ``(id, shingle)`` rows, one md5 per (shingle, seed).
 
-    The production path (:func:`minhash_signatures`) hashes with
-    ``xxhash64``, which only Spark can recompute — so the signature
-    itself was never oracle-checkable, only its downstream pair
-    decisions. This variant hashes with the repo's cross-engine md5
-    pattern (first 15 hex chars → exact 60-bit integer, bit-identical
-    in any engine with md5) and emits one scalar row per (doc, seed)
-    instead of an array column, so a DuckDB oracle can recompute every
-    signature value and the driver canonicalizer can sort the output.
-
-    This is the EXPOSITORY portable scheme (one md5 per (shingle, seed)
-    — what q_minhash_signature pins value-by-value). The corpus-scale
-    near-dup tier uses :func:`minhash_signatures` with
-    ``hash_fn="portable"`` instead: the Carter-Wegman family above it
-    derives all seeds from two md5s per shingle, ~num_hashes/2 × less
+    This is the EXPOSITORY scheme that q_minhash_signature pins value by
+    value: one scalar row per (doc, seed) instead of an array column, so
+    a DuckDB oracle recomputes every signature value and the driver
+    canonicalizer can sort the output. The corpus-scale near-dup tier
+    uses :func:`minhash_signatures` instead, whose Carter-Wegman family
+    derives all seeds from two md5s per shingle — ~num_hashes/2 × less
     hash work with the same cross-engine recomputability.
 
-    Same shuffle shape as the production path: explode × seeds, then a
-    partial-aggregated min keyed on (id, seed) — the shuffle carries
-    docs × num_hashes rows, never per-shingle rows."""
-    if "shingle" in shingled.columns:
-        exploded = shingled.select(F.col(id_col), F.col("shingle"))
-    else:
-        exploded = shingled.select(
-            F.col(id_col), F.explode(F.col("shingles")).alias("shingle")
-        )
-    seeded = exploded.select(
+    Same shuffle shape as :func:`minhash_signatures`: explode × seeds,
+    then a partial-aggregated min keyed on (id, seed) — the shuffle
+    carries docs × num_hashes rows, never per-shingle rows."""
+    seeded = shingled.select(
         F.col(id_col),
         F.col("shingle"),
         F.explode(
             F.array(*[F.lit(s) for s in range(num_hashes)])
         ).alias("seed"),
     )
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.col("shingle"), F.col("seed"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_60(F.concat_ws(":", F.col("shingle"), F.col("seed")))
     return seeded.groupBy(id_col, "seed").agg(F.min(h).alias("minhash"))
 
 
@@ -490,8 +445,7 @@ def auto_band_rows(
     hi: int = 12,
 ) -> int:
     """Corpus-sized LSH band width (rows per band) — the minhash twin of
-    :func:`similarity.auto_signature_planes` (r14, wiring the r13 decade
-    finding into this tier's defaults).
+    :func:`similarity.auto_signature_planes`.
 
     A FIXED band width is a scale trap: a pair at similarity j collides
     in a band with probability j^r, so with r constant the candidate
@@ -503,10 +457,11 @@ def auto_band_rows(
     in the worst case where every other document sits exactly at the
     threshold. Clamped to [lo, hi]: below lo the S-curve is too flat to
     discriminate, above hi signature-build cost (num_hashes = bands·r
-    hash evaluations per shingle on the xx path) dominates while the
-    j≤threshold tail is already suppressed ≥ 2^hi/2^lo ≈ 256x, and the
-    ``max_bucket`` cap + dropped-bucket Observation remain the backstop
-    for adversarial buckets.
+    min columns per shingle) dominates while the j≤threshold tail is
+    already suppressed ≥ 2^hi/2^lo ≈ 256x, and the ``max_bucket`` cap +
+    dropped-bucket Observation remain the backstop for adversarial
+    buckets. The hi clamp also keeps bands·r within the minhash family's
+    224-seed bound for both entry points' default ``bands``.
 
     The honest trade (inherent to banded LSH, not this sizing): with
     bands fixed, growing r raises the S-curve midpoint (1/b)^(1/r)
@@ -532,42 +487,36 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     max_bucket: int = 64,
     dropped_obs: "Observation | None" = None,
-    hash_fn: str = "xx",
 ) -> DataFrame:
     """Band the signatures and emit candidate pairs sharing any band bucket.
 
-    Shuffle profile: explode to (band_id, band_hash, id) — bands× row
+    A band's bucket is its joined signature-slice STRING itself — no
+    re-hash, so a DuckDB oracle groups on byte-identical keys (shuffle
+    rows are ~rows_per_band × 20 chars, still tiny next to the documents
+    they stand for).
+
+    Shuffle profile: explode to (band, bucket, id) — bands× row
     amplification but tiny rows — then groupBy bucket and expand pairs
     within buckets only. A bucket-size cap (``max_bucket``, via count
     filter) bounds the quadratic blowup from degenerate buckets (e.g.
     empty docs) — at 100 TB a single hot bucket would otherwise dominate
     the job.
 
-    Recall accounting (ADVICE r3): dropped buckets silently erode recall.
+    Recall accounting: dropped buckets silently erode recall.
     Pass a ``pyspark.sql.Observation`` as ``dropped_obs`` and, after the
     query's action runs, read ``dropped_buckets`` (over-cap bucket count)
     and ``dropped_ids`` (their total member rows) via
     :func:`observed_metrics` — the metrics ride the same job (the bucket
     aggregate's exchange is reused for the sentinel branch), so a
     production run can alert on recall erosion at zero extra passes.
-
-    ``hash_fn="xx"`` buckets on xxhash64 of the band's joined signature
-    slice (8-byte shuffle keys); ``hash_fn="portable"`` buckets on the
-    joined slice STRING itself — no re-hash, so a DuckDB oracle groups on
-    byte-identical keys (wider shuffle rows: ~rows_per_band × 20 chars,
-    still tiny next to the documents they stand for).
     """
     # One F.expr string for the whole banded explode (same py4j-chatter
     # economics as the minhash min columns above)
-    def _band_key_sql(b: int) -> str:
-        joined = (
-            f"array_join(transform(slice(signature, {b * rows_per_band + 1}, "
-            f"{rows_per_band}), x -> CAST(x AS STRING)), ',')"
-        )
-        return joined if hash_fn == "portable" else f"xxhash64({joined})"
-
     structs = ", ".join(
-        f"struct({b} AS band, {_band_key_sql(b)} AS bucket)" for b in range(bands)
+        f"struct({b} AS band, array_join(transform(slice(signature, "
+        f"{b * rows_per_band + 1}, {rows_per_band}), x -> CAST(x AS STRING)), "
+        f"',') AS bucket)"
+        for b in range(bands)
     )
     banded = signatures.select(
         F.col(id_col), F.expr(f"explode(array({structs})) AS bb")
@@ -632,7 +581,6 @@ def minhash_near_duplicates(
     bands: int = 16,
     threshold: float = 0.5,
     tokenizer: str = "whitespace",
-    hash_fn: str = "xx",
     stage_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end near-dup pairs: shingle → minhash → LSH candidates →
@@ -640,18 +588,16 @@ def minhash_near_duplicates(
 
     Returns (id_a, id_b, est_jaccard ≥ threshold). The verify join ships
     signatures (num_hashes × 8 bytes) only for CANDIDATE ids, not the corpus.
+    With an İ-folded tokenizer every stage — signature values, band
+    buckets, agreement fractions — is recomputable by a DuckDB oracle.
 
-    ``num_hashes=None`` (production default since r14) sizes the band
-    width from the corpus — ``bands × auto_band_rows(count, threshold)``
-    (one driver-side ``count()`` job; see :func:`auto_band_rows` for the
+    ``num_hashes=None`` (the default) sizes the band width from the
+    corpus — ``bands × auto_band_rows(count, threshold)`` (one
+    driver-side ``count()`` job; see :func:`auto_band_rows` for the
     quadratic-candidate rationale and the boundary-recall trade). Small
-    corpora (≤ 16·2^4 = 256 docs at t=0.5) resolve to the historical 64
-    (16 bands × 4 rows). Declared registry queries pass explicit widths
-    so their DuckDB oracles recompute identical signatures.
-
-    ``hash_fn="portable"`` (with an İ-folded tokenizer) makes every stage
-    — signature values, band buckets, agreement fractions — recomputable
-    by a DuckDB oracle; production default stays xxhash64.
+    corpora (≤ 16·2^4 = 256 docs at t=0.5) resolve to 64 (16 bands × 4
+    rows). Declared registry queries pass explicit widths so their
+    DuckDB oracles recompute identical signatures.
 
     ``stage_dir`` (or session conf ``STAGE_DIR_CONF``) switches the
     signature/candidate intermediates from in-memory localCheckpoint
@@ -670,18 +616,17 @@ def minhash_near_duplicates(
     # signature/candidate intermediates live in a parquet stage instead of
     # executor heap — same contract, durable, zero heap residency.
     sigs = _stage(
-        minhash_signatures(shingled, num_hashes, id_col, hash_fn),
+        minhash_signatures(shingled, num_hashes, id_col),
         "minhash_sigs", stage_dir,
     )
     cands = _stage(
-        lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col, hash_fn=hash_fn),
+        lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col),
         "lsh_cands", stage_dir,
     )
-    # same candidate-id pruning as near_duplicates_verified (r14
-    # third-decade find): the signature table is num_hashes×8 bytes per
-    # DOC — broadcast-fatal at corpus scale; prune it to candidate ids
-    # (bare-long lists) before the verify attach so only candidate
-    # signatures ever move
+    # same candidate-id pruning as near_duplicates_verified: the
+    # signature table is num_hashes×8 bytes per DOC — broadcast-fatal at
+    # corpus scale; prune it to candidate ids (bare-long lists) before
+    # the verify attach so only candidate signatures ever move
     sa = (
         sigs.join(cands.select(F.col("id_a").alias(id_col)).distinct(),
                   id_col, "leftsemi")
@@ -716,15 +661,8 @@ def minhash_near_duplicates(
 # 3. SimHash
 # --------------------------------------------------------------------------
 
-def simhash_bits(hash_fn: str) -> int:
-    """Signature width per hash backend: xxhash64 keeps 63 usable bits
-    (sign bit skipped to stay in signed-long range); the portable
-    md5-60bit hash has exactly 60."""
-    if hash_fn == "xx":
-        return 63
-    if hash_fn == "portable":
-        return 60
-    raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+# SimHash signature width: one bit plane per bit of the md5-60 token hash
+SIMHASH_BITS = 60
 
 
 def simhash_block_layout(n_bits: int, n_blocks: int) -> tuple[list[int], list[int]]:
@@ -746,45 +684,36 @@ def simhash(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "xx",
     tokenizer: str = "whitespace",
 ) -> DataFrame:
-    """SimHash per doc: per-token hash, sum ±1 per bit position, sign →
-    bit. Pure higher-order expressions (token array → aggregate over a
-    per-bit accumulator is unrolled as independent sums).
+    """SimHash per doc: per-token md5-60 hash, sum ±1 per bit position,
+    sign → bit, over :data:`SIMHASH_BITS` planes.
 
     Near-duplicate docs land within small Hamming distance; pair generation
     buckets on disjoint signature blocks (pigeonhole — see
     :func:`simhash_near_duplicates`).
 
-    ``hash_fn="xx"`` (production default): 63-bit xxhash64 planes — fast,
-    Spark-only. ``hash_fn="portable"``: 60-bit md5 planes (first 15 hex
-    chars as an exact integer) — ~2-3× more hash cost, but every
-    signature bit is recomputable by a DuckDB oracle; pair it with
+    Every signature bit is recomputable by a DuckDB oracle; pair it with
     ``tokenizer="bpe"`` so the token STRINGS entering md5 are the
     İ-pre-folded cross-engine ones (hash-of-string outputs expose Java
     vs utf8proc ``lower()`` divergence that count outputs hide).
     """
     # explode → codegen'd aggregate (same reasoning as minhash_signatures:
     # interpreted lambda functions lose to whole-stage codegen by ~10×)
-    n_bits = simhash_bits(hash_fn)
     exploded = docs.select(
         F.col(id_col),
         F.explode(_tokens_expr(text_col, tokenizer)).alias("token"),
     )
-    if hash_fn == "portable":
-        h = F.conv(F.substring(F.md5(F.col("token")), 1, 15), 16, 10).cast("long")
-    else:
-        h = F.xxhash64(F.col("token"))
+    h = md5_60(F.col("token"))
     bit_sums = [
         F.sum(F.shiftright(h, bit).bitwiseAND(F.lit(1))).alias(f"_b{bit}")
-        for bit in range(n_bits)
+        for bit in range(SIMHASH_BITS)
     ] + [F.count(F.lit(1)).alias("_n")]
     agg = exploded.groupBy(id_col).agg(*bit_sums)
     sim = sum(
         F.when(F.col(f"_b{bit}") * 2 >= F.col("_n"), F.lit(2 ** bit).cast("long"))
         .otherwise(F.lit(0).cast("long"))
-        for bit in range(n_bits)
+        for bit in range(SIMHASH_BITS)
     )
     return agg.select(F.col(id_col), sim.alias("simhash"))
 
@@ -795,13 +724,12 @@ def simhash_near_duplicates(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bucket_cap: int = 256,
-    hash_fn: str = "xx",
     tokenizer: str = "whitespace",
 ) -> DataFrame:
     """Candidate pairs by disjoint-block bucketing, verified by exact
     Hamming distance via bit_count(xor).
 
-    The 63-bit simhash is split into ``max_hamming + 1`` disjoint blocks, so
+    The 60-bit simhash is split into ``max_hamming + 1`` disjoint blocks, so
     by pigeonhole any pair within ``max_hamming`` differing bits agrees
     EXACTLY on at least one whole block — full recall at the requested
     radius (a fixed 4×16-bit split only guarantees distance ≤ 3). The cost
@@ -813,8 +741,8 @@ def simhash_near_duplicates(
     quadratic expansion happens only inside capped buckets.
     """
     n_blocks = max_hamming + 1
-    offsets, widths = simhash_block_layout(simhash_bits(hash_fn), n_blocks)
-    sh = simhash(docs, text_col, id_col, hash_fn=hash_fn, tokenizer=tokenizer)
+    offsets, widths = simhash_block_layout(SIMHASH_BITS, n_blocks)
+    sh = simhash(docs, text_col, id_col, tokenizer=tokenizer)
     blocks = sh.select(
         F.col(id_col),
         F.col("simhash"),
@@ -942,7 +870,6 @@ def near_duplicates_verified(
     bands: int = 8,
     threshold: float = 0.5,
     tokenizer: str = "whitespace",
-    hash_fn: str = "xx",
     stage_dir: str | None = None,
 ) -> DataFrame:
     """The full tiered near-dup pipeline as it runs at 100 TB:
@@ -957,42 +884,36 @@ def near_duplicates_verified(
     recall (pairs LSH never proposes are absent; raise num_hashes/bands for
     higher recall).
 
-    ``num_hashes=None`` (production default since r14) sizes the band
-    width from the corpus as ``bands × auto_band_rows(count, threshold)``
-    — see :func:`minhash_near_duplicates`; corpora ≤ 256 docs at t=0.5
-    resolve to the historical 32 (8 bands × 4 rows).
+    ``num_hashes=None`` (the default) sizes the band width from the
+    corpus as ``bands × auto_band_rows(count, threshold)`` — see
+    :func:`minhash_near_duplicates`; corpora ≤ 256 docs at t=0.5 resolve
+    to 32 (8 bands × 4 rows).
 
     ``stage_dir`` (or session conf ``STAGE_DIR_CONF``) switches the
     shingle/candidate intermediates — the tier's biggest heap residents —
     from in-memory localCheckpoint blocks to durable parquet stages; the
-    r15 sf10 re-run at the DEFAULT 8 GiB heap (SCALING.md) is the measured
-    proof this is the 100 TB medium.
+    sf10 run at the DEFAULT 8 GiB heap (SCALING.md) is the measured proof
+    this is the 100 TB medium.
     """
     if num_hashes is None:
         num_hashes = bands * auto_band_rows(docs.count(), threshold)
-    # ONE pass over the shingle multiset (r16, guide §2.3 "aggregate
-    # before you shuffle"): the shingle-set arrays AND all num_hashes
-    # signature mins ride a single groupBy(id) placed directly on the
-    # shingler window's output, reusing its hashpartitioning(id). The old
-    # shape staged the exploded DISTINCT rows and then ran TWO separate
-    # id-keyed aggregates over that stage (collect_set for the verify
-    # tier, the min battery for signatures) — two full scans + aggregate
-    # passes over the tier's LARGEST intermediate, plus the distinct
-    # aggregate itself. min() is duplicate-insensitive and collect_set
-    # dedups, so skipping the distinct changes nothing. The staged medium
-    # now holds ONE doc-grain row (set + num_hashes longs) instead of the
-    # per-shingle multiset — comparable or smaller (the array still
-    # carries every distinct shingle string plus the num_hashes int64s;
-    # what is saved is the repeated per-shingle id column). Measured −21%
-    # on the end-to-end tier at sf0.1 (3.26 → 2.57 s interleaved A/B);
-    # plan evidence: plans/r16/q_dedup_near_verified_{arrs,sigs}_before
-    # vs _combined_after.txt.
+    # ONE pass over the shingle multiset: the shingle-set arrays AND all
+    # num_hashes signature mins ride a single groupBy(id) placed directly
+    # on the shingler window's output, reusing its hashpartitioning(id),
+    # instead of staging the exploded DISTINCT rows and running two
+    # id-keyed aggregates over that stage. min() is duplicate-insensitive
+    # and collect_set dedups, so skipping the distinct changes nothing.
+    # The staged medium holds ONE doc-grain row (set + num_hashes longs)
+    # per doc. Measured −21% on the end-to-end tier at sf0.1 (3.26 →
+    # 2.57 s interleaved A/B); plan evidence:
+    # plans/r16/q_dedup_near_verified_{arrs,sigs}_before vs
+    # _combined_after.txt.
     combined = _stage(
         _shingled_rows(docs, text_col, id_col, shingle_n, tokenizer)
         .groupBy(id_col)
         .agg(
             F.collect_set(F.col("shingle")).alias("shingles"),
-            *_minhash_min_exprs(num_hashes, hash_fn),
+            *_minhash_min_exprs(num_hashes),
         ),
         "verified_doc_sigs", stage_dir,
     )
@@ -1005,10 +926,10 @@ def near_duplicates_verified(
     # accurate post-materialization stats keep AQE building the verify
     # joins on the candidate side.
     cands = _stage(
-        lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col, hash_fn=hash_fn),
+        lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col),
         "verified_cands", stage_dir,
     )
-    # r14 third-decade find (sf1→sf10 study): without the pruning below,
+    # Found in the sf1→sf10 study: without the pruning below,
     # the second verify join's build side is the FULL (id, shingle-set)
     # table — the planner broadcast it on size-underestimates, which fit
     # at 50k docs and OOM'd the driver at 500k (and would at 100 TB).

@@ -34,6 +34,13 @@ def _hash_bucket_hex(id_col: str, seed: str) -> Column:
     return F.substring(F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed))), 1, 8)
 
 
+def md5_60(col: Column) -> Column:
+    """The cross-engine 60-bit hash: the first 15 hex chars of ``md5(col)``
+    as an exact non-negative BIGINT, bit-identical in any engine with md5.
+    DuckDB mirror: ``CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)``."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def fraction_to_hex_threshold(frac: float) -> str:
     """Map a fraction in [0, 1] to its 8-hex-char bucket boundary.
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datalake_breweries_two_spark.operators.sampling import md5_60
+
 
 def distinct_rows(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.select(*cols).distinct()
@@ -372,13 +374,12 @@ def kmv_set_overlap(
     count_distinct triple is the sf-scale error probe a production
     rollup would drop — estimates never depend on it.
     """
-    h_sql = (
-        f"CAST(conv(substring(md5(CAST(`{key_col}` AS STRING)), 1, 15), 16, 10)"
-        " AS BIGINT)"
-    )
     base = df.filter(
         F.col(key_col).isNotNull() & F.col(type_col).isin(type_a, type_b)
-    ).select(F.col(type_col).alias("_t"), F.expr(h_sql).alias("h"))
+    ).select(
+        F.col(type_col).alias("_t"),
+        md5_60(F.col(key_col).cast("string")).alias("h"),
+    )
     dh = base.distinct()
 
     def _kmv(rel: DataFrame) -> DataFrame:

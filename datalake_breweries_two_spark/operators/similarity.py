@@ -6,8 +6,9 @@ Three tiers:
     one full scan per query vector — fine for batch scoring of a few
     queries, wrong for many queries (use the LSH/IVF tiers).
   * **LSH-bucketed ANN** — random-hyperplane signature (deterministic
-    seeded planes via xxhash64), candidates share a signature prefix; only
-    candidates get exact rescoring. Sub-linear per query.
+    seeded planes from an integer hash chain), candidates share a
+    signature prefix; only candidates get exact rescoring. Sub-linear per
+    query.
   * **IVF (inverted-file) ANN** — k-means-lite centroid assignment (seeded
     deterministic init, few Lloyd iterations via DataFrame joins), queries
     probe the nearest ``nprobe`` centroid partitions only. The scale path:
@@ -23,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalake_breweries_two_spark.operators.sampling import md5_60
 from datalake_breweries_two_spark.operators.semistructured import dot_product, vector_norm
 
 
@@ -316,17 +318,6 @@ def embedding_near_dup_pairs(
 # IVF — inverted-file partitioned ANN (the 100 TB layout)
 # --------------------------------------------------------------------------
 
-def _portable_id_hash(id_col: str) -> Column:
-    """The repo's cross-engine 60-bit id hash (first 15 hex chars of
-    ``md5(id)`` as an exact integer) — used wherever a bounded
-    deterministic draw (centroid seeds, recall-harness query vectors)
-    must be reproducible by a SQL oracle. DuckDB mirror:
-    ``CAST(('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 15)) AS BIGINT)``."""
-    return F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
-
-
 def centroid_seeds(
     embeddings: DataFrame,
     n_centroids: int = 16,
@@ -334,16 +325,14 @@ def centroid_seeds(
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Seeded-deterministic centroid init: the ``n_centroids`` vectors with
-    the smallest md5-derived 60-bit id hash (the repo's cross-engine hash
-    pattern — first 15 hex chars of ``md5(id)`` as an exact integer, so a
-    SQL oracle on any md5-capable engine reproduces the seed pick
-    bit-for-bit), enumerated DRIVER-SIDE after a TakeOrdered collect
-    (bounded: n_centroids rows — the same scale class as the reference's
-    ``limit(1).count()`` probes). Driver-side enumeration replaces the
-    previous unpartitioned ``row_number`` window, which would funnel even
+    the smallest :func:`sampling.md5_60` id hash (so a SQL oracle on any
+    md5-capable engine reproduces the seed pick bit-for-bit), enumerated
+    DRIVER-SIDE after a TakeOrdered collect (bounded: n_centroids rows —
+    the same scale class as the reference's ``limit(1).count()``
+    probes); an unpartitioned ``row_number`` window would funnel even
     the 16-row post-limit frame through a single partition. One md5 per
     corpus ID, only at index-BUILD time — seeding cost, not probe cost."""
-    seed_hash = _portable_id_hash(id_col)
+    seed_hash = md5_60(F.col(id_col).cast("string"))
     rows = (
         embeddings.select(F.col(id_col), F.col(vec_col))
         # a NULL vector can seed nothing (and would crash the driver-side
@@ -536,7 +525,7 @@ def ann_recall_curves(
     qrows = (
         embeddings.select(F.col(id_col), F.col(vec_col))
         .filter(F.col(vec_col).isNotNull())
-        .orderBy(_portable_id_hash(id_col).asc(), F.col(id_col).asc())
+        .orderBy(md5_60(F.col(id_col).cast("string")).asc(), F.col(id_col).asc())
         .limit(n_queries)
         .collect()
     )

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalake_breweries_two_spark.operators.sampling import md5_60
+
 # Whitespace written as an explicit class instead of \s: Java regex \s
 # includes U+000B (vertical tab) while RE2 (DuckDB oracles) does not —
 # 'a\x0bb' tokenizes ['a','b'] vs ['a','\x0b','b']. The explicit class
@@ -176,33 +178,19 @@ def rolling_hash_fingerprint(
     docs: DataFrame,
     text_col: str = "text",
     window: int = 16,
-    hash_fn: str = "xx",
 ) -> DataFrame:
-    """Winnowing-style robust fingerprint: min hash over character shingles
-    of length ``window`` — stable under small edits, unlike md5 of the
-    whole text. JVM-side: sequence → transform(substring) → array_min.
-
-    ``hash_fn="xx"`` (production default) hashes shingles with
-    ``xxhash64`` — the fast path, but only Spark can recompute it.
-    ``hash_fn="portable"`` uses the repo's cross-engine md5 pattern
-    (first 15 hex chars → exact 60-bit integer), ~2-3× more hash cost
-    per shingle, in exchange for a DuckDB-recomputable fingerprint —
-    the declared-query / oracle-verification path. Same plan shape for
-    both: one narrow projection, no shuffle; at 100 TB the cost is the
-    scan plus the chosen hash."""
+    """Winnowing-style robust fingerprint: min :func:`md5_60` hash over
+    character shingles of length ``window`` — stable under small edits,
+    unlike md5 of the whole text, and recomputable by a DuckDB oracle.
+    JVM-side: sequence → transform(substring) → array_min — one narrow
+    projection, no shuffle; at 100 TB the cost is the scan plus the hash."""
     t = F.col(text_col)
     idx = F.sequence(F.lit(1), F.greatest(F.length(t) - window + 1, F.lit(1)))
-    if hash_fn == "portable":
-        hash_one = lambda i: F.conv(  # noqa: E731
-            F.substring(F.md5(t.substr(i, F.lit(window))), 1, 15), 16, 10
-        ).cast("long")
-    elif hash_fn == "xx":
-        hash_one = lambda i: F.xxhash64(t.substr(i, F.lit(window)))  # noqa: E731
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
     return docs.select(
         "*",
-        F.array_min(F.transform(idx, hash_one)).alias("robust_fingerprint"),
+        F.array_min(
+            F.transform(idx, lambda i: md5_60(t.substr(i, F.lit(window))))
+        ).alias("robust_fingerprint"),
     )
 
 

@@ -100,7 +100,7 @@ def build_session(
     One session per process — the reference's 3-cold-JVMs-per-run pattern
     (SURVEY.md §3 "Critical deployment fact") is deliberately not replicated.
 
-    ``quiet_bounded_window_warn`` (r14, ADVICE item): the WindowExec
+    ``quiet_bounded_window_warn``: the WindowExec
     "No Partition Defined" WARN demotion is OPT-IN per caller —
     bench/tests/CLI pass ``True`` (their only unpartitioned window is the
     advisor-proof-gated ≤ n_parts-row offsets frame, so the warning is
@@ -133,11 +133,9 @@ def build_session(
         # of epoch-nanos; catalog.load_table converts to TimestampType via
         # exact integer division (Spark has no native ns timestamp).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Write timestamps as TIMESTAMP(MICROS), not the legacy INT96:
-        # readable by every engine (DuckDB, pyarrow) AND keeps
-        # catalog.events_ts_layout's footer sniff unambiguous (pyarrow
-        # reports INT96 as timestamp[ns], which would misroute staged
-        # event files into the nanos-long decode path).
+        # Write timestamps as TIMESTAMP(MICROS), not the legacy INT96: a
+        # standard parquet logical type every engine (DuckDB, pyarrow)
+        # reads as a timestamp.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
     merged_conf = {**object_store_conf(), **(extra_conf or {})}

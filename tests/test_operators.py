@@ -1439,7 +1439,7 @@ def test_dedup_stage_dir_parquet_medium(spark, tmp_path):
 
 
 def test_portable_minhash_near_dup_family(spark):
-    """The hash_fn="portable" near-dup path (r7 — what the declared
+    """The md5 Carter-Wegman near-dup path (what the declared
     q_dedup_near/q_dedup_near_verified/q_token_dedup_near run): (a) its
     verified pairs are a subset of the exact ground truth with equal
     scores, (b) planted exact twins are recovered at est_jaccard 1.0,
@@ -1456,7 +1456,7 @@ def test_portable_minhash_near_dup_family(spark):
         ).collect()
     }
     tiered = dedup.near_duplicates_verified(
-        docs, threshold=0.2, tokenizer="whitespace_folded", hash_fn="portable"
+        docs, threshold=0.2, tokenizer="whitespace_folded"
     ).collect()
     assert len(tiered) > 0
     for r in tiered:
@@ -1473,7 +1473,6 @@ def test_portable_minhash_near_dup_family(spark):
         bands=16,
         threshold=0.9,
         tokenizer="whitespace_folded",
-        hash_fn="portable",
     ).collect()
     found = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in est}
     planted = {
@@ -1491,8 +1490,17 @@ def test_portable_minhash_near_dup_family(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="1..224"):
-        dedup.minhash_signatures(sh, num_hashes=225, hash_fn="portable")
-    dedup.minhash_signatures(sh, num_hashes=224, hash_fn="portable")
+        dedup.minhash_signatures(sh, num_hashes=225)
+    dedup.minhash_signatures(sh, num_hashes=224)
+
+    # num_hashes=None sizes bands × auto_band_rows(n): even a 10^12-doc
+    # corpus must stay inside the seed bound at both entry points' bands
+    import inspect
+
+    for entry in (dedup.minhash_near_duplicates, dedup.near_duplicates_verified):
+        bands = inspect.signature(entry).parameters["bands"].default
+        for t in (0.1, 0.5, 0.9, 0.99):
+            assert bands * dedup.auto_band_rows(10**12, t) <= 224, (entry, t)
 
 
 def test_sample_seeded_deterministic_and_bounded(spark):
@@ -1536,7 +1544,11 @@ def test_rolling_fingerprint_equivalence_and_stability(spark):
         r["doc_id"]: r["fp"]
         for r in docs.select("doc_id", "text", F.explode(idx).alias("i"))
         .select(
-            "doc_id", F.xxhash64(F.col("text").substr(F.col("i"), F.lit(16))).alias("h")
+            "doc_id",
+            F.expr(
+                "CAST(conv(substring(md5(substring(text, i, 16)), 1, 15), 16, 10)"
+                " AS BIGINT)"
+            ).alias("h"),
         )
         .groupBy("doc_id")
         .agg(F.min("h").alias("fp"))
@@ -1555,10 +1567,9 @@ def test_rolling_fingerprint_equivalence_and_stability(spark):
 
 
 def test_portable_hash_variants_match_reference_semantics(spark):
-    """The r7 portable (md5-60bit) variants behind q_rolling_fingerprint
-    and q_simhash: same dedup semantics as the xxhash production path —
-    identical texts share a fingerprint / land at Hamming 0 — and every
-    portable hash value fits the 60-bit range the oracles recompute."""
+    """The md5-60bit hashing behind q_rolling_fingerprint and q_simhash:
+    identical texts share a fingerprint / land at Hamming 0, and every
+    hash value fits the 60-bit range the oracles recompute."""
     from datalake_breweries_two_spark.operators import dedup
     from datalake_breweries_two_spark.operators.text import rolling_hash_fingerprint
 
@@ -1569,26 +1580,47 @@ def test_portable_hash_variants_match_reference_semantics(spark):
         "doc_id long, text string",
     )
     fp = {r["doc_id"]: r["robust_fingerprint"]
-          for r in rolling_hash_fingerprint(pair, window=8, hash_fn="portable")
-          .collect()}
+          for r in rolling_hash_fingerprint(pair, window=8).collect()}
     assert fp[1] == fp[2] and fp[1] != fp[3]
     assert all(0 <= v < (1 << 60) for v in fp.values())
 
     sh = {r["doc_id"]: r["simhash"]
-          for r in dedup.simhash(pair, hash_fn="portable", tokenizer="bpe")
-          .collect()}
+          for r in dedup.simhash(pair, tokenizer="bpe").collect()}
     assert sh[1] == sh[2] and 0 <= sh[1] < (1 << 60)
     pairs = {(r["id_a"], r["id_b"]): r["hamming"]
              for r in dedup.simhash_near_duplicates(
-                 pair, max_hamming=6, hash_fn="portable", tokenizer="bpe"
+                 pair, max_hamming=6, tokenizer="bpe"
              ).collect()}
     assert pairs.get((1, 2)) == 0 and (1, 3) not in pairs
 
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        dedup.simhash_bits("nope")
-    with _pytest.raises(ValueError):
-        rolling_hash_fingerprint(pair, hash_fn="nope")
+
+def test_md5_60_matches_duckdb(spark):
+    """md5_60, the one Spark spelling of the cross-engine hash, equals
+    DuckDB's ``CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)`` on ASCII,
+    Turkish İ, emoji, empty and NULL input."""
+    import duckdb
+
+    from datalake_breweries_two_spark.operators.sampling import md5_60
+
+    texts = ["brewery 42", "İstanbul", "🍺🍻 cheers", "", None]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, x string")
+    got = {
+        r["i"]: r["h"] for r in df.select("i", md5_60(F.col("x")).alias("h")).collect()
+    }
+    con = duckdb.connect()
+    try:
+        want = {
+            i: con.execute(
+                "SELECT CAST(('0x' || substr(md5(CAST(? AS VARCHAR)), 1, 15)) AS BIGINT)",
+                [t],
+            ).fetchone()[0]
+            for i, t in enumerate(texts)
+        }
+    finally:
+        con.close()
+    assert got == want
+    assert want[4] is None
+    assert all(0 <= v < (1 << 60) for v in list(want.values())[:4])
 
 
 def test_ann_recall_curves_invariants(spark):
@@ -2811,6 +2843,23 @@ def test_paged_api_stream_pages_per_trigger_batches_invariantly(spark):
         out = run_stream_to_memory(spark, stream, sink, output_mode="append")
         got[ppt] = sorted(tuple(row) for row in out.collect())
     assert got["1"] == got["3"] and len(got["1"]) == 40
+
+
+@pytest.mark.parametrize("query", ["q_python_datasource", "q_python_datasource_stream"])
+def test_python_datasource_queries_surface_registration_failure(spark, monkeypatch, query):
+    """A failed DataSource registration must surface as itself, not later
+    as an unrelated unknown-format error (or not at all, when an earlier
+    query in the session registered the source)."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from datalake_breweries_two_spark import entry_queries
+
+    def refuse(self, ds):
+        raise RuntimeError("registration refused")
+
+    monkeypatch.setattr(DataSourceRegistration, "register", refuse)
+    with pytest.raises(RuntimeError, match="registration refused"):
+        entry_queries.QUERIES[query](spark, SF_SMOKE)
 
 
 @pytest.mark.parametrize("ppt", ["0", "-1"])
@@ -4720,13 +4769,13 @@ def test_contamination_by_group_hand_computed(spark):
     }
 
 
-def test_shingle_docs_semantics_and_single_tokenize(spark):
-    """Pin shingle_docs' distinct word-3-gram semantics — including the
+def test_word_shingles_semantics_and_single_tokenize(spark):
+    """Pin word_shingles' distinct word-3-gram semantics — including the
     short-doc slice-truncation contract (<n tokens yield ONE truncated
-    shingle) — on the r10 lambda-bound construction that tokenizes once
-    per row (slicing the raw split expression inside the index lambda
-    re-ran it per shingle)."""
-    from datalake_breweries_two_spark.operators.dedup import shingle_docs
+    shingle) — on the lambda-bound construction that tokenizes once per
+    row (slicing the raw split expression inside the index lambda re-ran
+    it per shingle)."""
+    from datalake_breweries_two_spark.operators.dedup import word_shingles
 
     docs = spark.createDataFrame(
         [
@@ -4736,7 +4785,11 @@ def test_shingle_docs_semantics_and_single_tokenize(spark):
         ],
         "doc_id long, text string",
     )
-    got = {r["doc_id"]: r["shingles"] for r in shingle_docs(docs, n=3).collect()}
+    got = {
+        r["doc_id"]: r["shingles"]
+        for r in docs.select("doc_id", word_shingles("text", 3).alias("shingles"))
+        .collect()
+    }
     assert sorted(got[1]) == ["a b c", "b c d", "c d b", "d b c"]
     assert got[2] == ["one two"]
     assert got[3] == [None]

@@ -327,6 +327,39 @@ def test_no_hard_coded_checkout_path():
     assert not offenders, offenders
 
 
+def test_tools_scripts_compile_and_resolve_package_imports():
+    """Every ``tools/*.py`` compiles, and every name it imports from the
+    package resolves, so deleting a helper cannot leave a broken script
+    behind unnoticed. Parses and imports only; no script runs."""
+    import ast
+    import importlib
+
+    pkg = "datalake_breweries_two_spark"
+    tools = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+    scripts = sorted(f for f in os.listdir(tools) if f.endswith(".py"))
+    assert scripts
+    unresolved = []
+    for script in scripts:
+        path = os.path.join(tools, script)
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        compile(tree, path, "exec")
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.ImportFrom) or node.level:
+                continue
+            if node.module != pkg and not node.module.startswith(pkg + "."):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                if hasattr(mod, alias.name):
+                    continue
+                try:
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ModuleNotFoundError:
+                    unresolved.append((script, node.module, alias.name))
+    assert not unresolved, unresolved
+
+
 def test_cli_audit_accounting_matches_artifacts(capsys):
     """The `audit` verb must enumerate the registry exactly once, derive
     statuses only from CORRECTNESS_r*.json evidence, and exit 0 while no
