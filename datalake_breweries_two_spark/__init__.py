@@ -18,13 +18,14 @@ Design stance (SURVEY.md §7):
 
 import os
 
-from datalake_breweries_two_spark.session import build_session, stop_session
-from datalake_breweries_two_spark.catalog import TABLES, load_table, register_views
+# The checkout this package runs from: verification records and scratch
+# live here, and Python workers import the package from it. Defined before
+# the submodule imports, which read it.
+CHECKOUT_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+from datalake_breweries_two_spark.session import build_session, stop_session  # noqa: E402
+from datalake_breweries_two_spark.catalog import TABLES, load_table, register_views  # noqa: E402
 
 __all__ = ["build_session", "stop_session", "TABLES", "load_table", "register_views"]
 
 __version__ = "0.1.0"
-
-# The checkout this package runs from: verification records and scratch
-# live here.
-CHECKOUT_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

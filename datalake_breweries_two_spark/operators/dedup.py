@@ -90,10 +90,7 @@ def _stage(df: DataFrame, tag: str, stage_dir: str | None) -> DataFrame:
       consumers are done).
     """
     if stage_dir is None:
-        try:
-            stage_dir = df.sparkSession.conf.get(STAGE_DIR_CONF, None) or None
-        except Exception:
-            stage_dir = None
+        stage_dir = df.sparkSession.conf.get(STAGE_DIR_CONF, None)
     if not stage_dir:
         return df.localCheckpoint(eager=True)
     global _stage_counter

@@ -22,6 +22,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+from datalake_breweries_two_spark import CHECKOUT_DIR
+
+# Spark's generated-class cache (a static conf, default 100 entries). Census
+# of 2026-10-19, one session with an unbounded cache, classes counted with
+# CodegenMetrics' compilation timer: one pass of every registry query at
+# sf0.001 compiles 2,723 classes and a following pass at sf0.01 adds 133,
+# 2,856 in all. The cap is the next power of two at or above 1.5x that. A
+# cache smaller than the working set thrashes, and Janino recompiles each
+# class on every run (one llm_corpus benchmark pass needs ~208).
+_CODEGEN_CACHE_ENTRIES = 8192
+
 _DEFAULT_APP = "datalake_breweries_two_spark"
 
 
@@ -137,6 +148,12 @@ def build_session(
         # standard parquet logical type every engine (DuckDB, pyarrow)
         # reads as a timestamp.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        # Python workers import the package from the checkout whatever the
+        # driver's cwd. This reaches local-mode workers and executors that
+        # share the checkout's path; shipping the package to other hosts
+        # (a zip via addPyFile) is not done here.
+        .config("spark.executorEnv.PYTHONPATH", CHECKOUT_DIR)
     )
     merged_conf = {**object_store_conf(), **(extra_conf or {})}
     for k, v in merged_conf.items():

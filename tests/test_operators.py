@@ -2751,10 +2751,7 @@ def test_paged_api_stream_resumes_at_page_offset(spark, tmp_path):
     )
 
     for ds in (PagedApiDataSource, PagedApiStreamDataSource):
-        try:
-            spark.dataSource.register(ds)
-        except Exception:
-            pass
+        spark.dataSource.register(ds)
     ckpt = str(tmp_path / "pyds_ckpt")
     outdir = str(tmp_path / "pyds_out")
 
@@ -2811,10 +2808,7 @@ def test_paged_api_stream_pages_per_trigger_batches_invariantly(spark):
         PagedApiStreamReader,
     )
 
-    try:
-        spark.dataSource.register(PagedApiStreamDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(PagedApiStreamDataSource)
 
     # protocol-level: read() advances by min(pages_per_trigger, remaining)
     r = PagedApiStreamReader({"n_pages": "4", "per_page": "10",

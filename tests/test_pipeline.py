@@ -327,6 +327,33 @@ def test_no_hard_coded_checkout_path():
     assert not offenders, offenders
 
 
+def test_python_workers_import_package_from_any_cwd(tmp_path):
+    """A query whose decode stage runs in Python workers succeeds when the
+    driver's cwd is outside the checkout: the workers import the package
+    from the checkout, not from the cwd they inherit."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from datalake_breweries_two_spark.entry_queries import QUERIES\n"
+        "from datalake_breweries_two_spark.session import build_session\n"
+        "spark = build_session(app_name='cwd', shuffle_partitions=2)\n"
+        f"print('ROWS', len(QUERIES['q_wav_decode'](spark, {SF_SMOKE!r}).collect()))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "ROWS 24" in proc.stdout, proc.stdout
+
+
 def test_tools_scripts_compile_and_resolve_package_imports():
     """Every ``tools/*.py`` compiles, and every name it imports from the
     package resolves, so deleting a helper cannot leave a broken script

@@ -689,6 +689,34 @@ def test_py4j_construction_budget(spark, name):
     )
 
 
+# The ten queries of the perfbench ``llm_corpus`` workload.
+LLM_CORPUS = [
+    "q_dedup_near_verified", "q_minhash_signature", "q_text_quality",
+    "q_tfidf", "q_bm25", "q_cosine_topk", "q_embedding_near_dup",
+    "q_decontaminate", "q_pii_redact", "q_chunk_documents",
+]
+
+
+def test_codegen_cache_holds_llm_corpus_working_set(spark):
+    """A warm session does not recompile its generated classes: one
+    llm_corpus pass needs ~208 of them, which the session's codegen cache
+    must hold, so a second pass over the same inputs compiles only the few
+    classes that differ per run. A cache smaller than the working set
+    (Spark's default of 100) recompiles ~200 classes on every pass."""
+    jvm = spark.sparkContext._jvm
+    timer = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def compiles_per_pass():
+        start = timer.getCount()
+        for name in LLM_CORPUS:
+            entry_queries.QUERIES[name](spark, SF_SMOKE).collect()
+        return timer.getCount() - start
+
+    compiles_per_pass()
+    compiles = compiles_per_pass()
+    assert compiles < 30, f"a warm llm_corpus pass compiled {compiles} classes"
+
+
 def test_py4j_registry_distribution_drift():
     """Registry-WIDE drift guard (r10 advice): the per-query budgets have
     ~2x headroom each, so a uniform creep that stays under every
