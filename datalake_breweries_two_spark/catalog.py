@@ -16,6 +16,7 @@ schemas (bronze/silver/gold) used by the medallion pipeline in
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -332,7 +333,13 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     return spark.read.schema(TABLES[name]).parquet(path)
 
 
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every lake table as a temp view (enables the SQL surface)."""
+def register_views(spark: SparkSession, sql: str, sf_dir: str | None = None) -> None:
+    """Register each lake table that ``sql`` names as a temp view under the
+    table's own name. This is the SQL surface's only view registrar: the
+    DuckDB oracles see the same names, so one SQL text runs in both engines.
+    A word of ``sql`` that only looks like a table name (an alias, a
+    literal) registers a view that goes unused."""
+    words = set(re.findall(r"\w+", sql))
     for name in TABLES:
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
+        if name in words:
+            load_table(spark, name, sf_dir).createOrReplaceTempView(name)

@@ -17,12 +17,13 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datalake_breweries_two_spark import CHECKOUT_DIR
-from datalake_breweries_two_spark.catalog import TABLES, load_table
+from datalake_breweries_two_spark.catalog import TABLES, load_table, register_views
 from datalake_breweries_two_spark.operators import (
     aggregates,
     behavior,
@@ -93,6 +94,18 @@ _clean_stale_scratch()
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, name, sf_dir)
+
+
+# DuckDB oracle SQL per query, over views named after the lake tables. A
+# query whose SQL runs unchanged in both engines passes its own entry to
+# ``_sql``, so the oracle and the engine read one text.
+ORACLE_SQL: dict[str, str] = {}
+
+
+def _sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """Run ``sql`` in Spark over the lake tables it names."""
+    register_views(spark, sql, sf_dir)
+    return spark.sql(sql)
 
 
 # ==========================================================================
@@ -564,20 +577,20 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sql_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL surface: TPC-H Q1 shape via spark.sql over a registered view.
     Decimal-exact sums surfaced as double (order-independent)."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q1"])
+
+
+ORACLE_SQL["q_sql_tpch_q1"] = """
         SELECT l_returnflag, l_linestatus,
                CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
                CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
                round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
                         * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_disc_price,
                count(l_orderkey) AS count_order
-        FROM lineitem_v
-        WHERE l_shipdate <= timestamp '1998-09-02 00:00:00'
+        FROM lineitem
+        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         GROUP BY l_returnflag, l_linestatus
-        """
-    )
+    """
 
 
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -678,30 +691,29 @@ def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS beyond rollup/cube — arbitrary grouping combinations in
     one pass (Catalyst Expand: one scan, one shuffle for all sets)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_grouping_sets"])
+
+
+ORACLE_SQL["q_grouping_sets"] = """
         SELECT o_orderstatus, o_orderpriority, count(o_orderkey) AS n_orders
-        FROM orders_v
+        FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
-    )
+    """
 
 
 def q_sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape (shipping-priority revenue): broadcast customer filter
     into the orders⋈lineitem sort-merge; top-10 via TakeOrderedAndProject."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(
+    return _sql(
+        spark,
+        sf_dir,
         """
         SELECT l_orderkey,
                round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
                         * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue,
                o_orderdate
-        FROM customer_v JOIN orders_v ON c_custkey = o_custkey
-                        JOIN lineitem_v ON l_orderkey = o_orderkey
+        FROM customer JOIN orders ON c_custkey = o_custkey
+                      JOIN lineitem ON l_orderkey = o_orderkey
         WHERE c_mktsegment = 'BUILDING'
           AND o_orderdate < timestamp '1998-06-01 00:00:00'
           AND l_shipdate  > timestamp '1998-06-01 00:00:00'
@@ -712,28 +724,43 @@ def q_sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORACLE_SQL["q_sql_tpch_q3"] = """
+        SELECT l_orderkey,
+               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue,
+               CAST(o_orderdate AS TIMESTAMP) AS o_orderdate
+        FROM customer JOIN orders ON c_custkey = o_custkey
+                      JOIN lineitem ON l_orderkey = o_orderkey
+        WHERE c_mktsegment = 'BUILDING'
+          AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
+          AND l_shipdate  > TIMESTAMP '1998-06-01 00:00:00'
+        GROUP BY l_orderkey, o_orderdate
+        ORDER BY revenue DESC, l_orderkey ASC
+        LIMIT 10
+    """
+
+
 def q_sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape (local-supplier revenue per nation): five-way join,
     dims broadcast, facts sort-merged; revenue in exact decimal."""
-    for t in ["customer", "orders", "lineitem", "supplier", "nation", "region"]:
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q5"])
+
+
+ORACLE_SQL["q_sql_tpch_q5"] = """
         SELECT n_name,
                round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
                         * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM customer_v JOIN orders_v   ON c_custkey = o_custkey
-                        JOIN lineitem_v ON l_orderkey = o_orderkey
-                        JOIN supplier_v ON l_suppkey = s_suppkey
-                                       AND c_nationkey = s_nationkey
-                        JOIN nation_v   ON s_nationkey = n_nationkey
-                        JOIN region_v   ON n_regionkey = r_regionkey
+        FROM customer JOIN orders   ON c_custkey = o_custkey
+                      JOIN lineitem ON l_orderkey = o_orderkey
+                      JOIN supplier ON l_suppkey = s_suppkey
+                                   AND c_nationkey = s_nationkey
+                      JOIN nation   ON s_nationkey = n_nationkey
+                      JOIN region   ON n_regionkey = r_regionkey
         WHERE r_name = 'ASIA'
-          AND o_orderdate >= timestamp '1996-01-01 00:00:00'
-          AND o_orderdate <  timestamp '1998-01-01 00:00:00'
+          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+          AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
         GROUP BY n_name
-        """
-    )
+    """
 
 
 def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -795,60 +822,58 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape (adapted to available columns): correlated EXISTS,
     decorrelated by Catalyst into a left-semi join — never a per-row probe."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_exists_subquery"])
+
+
+ORACLE_SQL["q_exists_subquery"] = """
         SELECT o_orderpriority, count(o_orderkey) AS n_orders
-        FROM orders_v
-        WHERE EXISTS (SELECT 1 FROM lineitem_v
+        FROM orders
+        WHERE EXISTS (SELECT 1 FROM lineitem
                       WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
         GROUP BY o_orderpriority
-        """
-    )
+    """
 
 
 def q_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN (subquery) → left-semi join against the (tiny, broadcast) keyset —
     never a driver-side collect()ed literal list."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("nation_v")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name FROM customer_v
-        WHERE c_nationkey IN (SELECT n_nationkey FROM nation_v WHERE n_regionkey = 0)
-        """
-    )
+    return _sql(spark, sf_dir, ORACLE_SQL["q_in_subquery"])
+
+
+ORACLE_SQL["q_in_subquery"] = """
+        SELECT c_custkey, c_name FROM customer
+        WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 0)
+    """
 
 
 def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery: one aggregate job feeds a filter constant (max is
     exact in double — no FP-threshold ambiguity at the boundary)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_totalprice FROM orders_v
-        WHERE o_totalprice > 0.5 * (SELECT max(o_totalprice) FROM orders_v)
-        """
-    )
+    return _sql(spark, sf_dir, ORACLE_SQL["q_scalar_subquery"])
+
+
+ORACLE_SQL["q_scalar_subquery"] = """
+        SELECT o_orderkey, o_totalprice FROM orders
+        WHERE o_totalprice > 0.5 * (SELECT max(o_totalprice) FROM orders)
+    """
 
 
 def q_sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape (forecasting revenue change): pure scan-filter-agg;
     every predicate reaches the parquet scan as PushedFilters."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q6"])
+
+
+ORACLE_SQL["q_sql_tpch_q6"] = """
         SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
                         * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
                count(l_orderkey) AS n_items
-        FROM lineitem_v
+        FROM lineitem
         WHERE l_shipdate >= timestamp '1996-01-01 00:00:00'
           AND l_shipdate <  timestamp '1997-01-01 00:00:00'
           AND l_discount BETWEEN 0.04 AND 0.06
           AND l_quantity < 24
-        """
-    )
+    """
 
 
 def q_sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -857,19 +882,18 @@ def q_sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles are rounded to 4dp in BOTH dialects: the exact 8dp decimal sum
     can land on ADJACENT doubles across engines' decimal→double casts,
     and the value hash sees different reprs."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q14"])
+
+
+ORACLE_SQL["q_sql_tpch_q14"] = """
         SELECT round(CAST(sum(CASE WHEN p_type = 'ECONOMY'
                              THEN CAST(l_extendedprice AS DECIMAL(18,4))
                                   * CAST(1 - l_discount AS DECIMAL(18,4))
                              ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE), 4) AS promo_revenue,
                round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
                         * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS total_revenue
-        FROM lineitem_v JOIN part_v ON l_partkey = p_partkey
-        """
-    )
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+    """
 
 
 def q_having(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1081,19 +1105,17 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape (large-volume orders): aggregate subquery in the
     join input, HAVING on an exact decimal sum."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_totalprice,
-               CAST(big.sum_qty AS DOUBLE) AS sum_qty
-        FROM orders_v JOIN (
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q18"])
+
+
+ORACLE_SQL["q_sql_tpch_q18"] = """
+        SELECT o_orderkey, o_totalprice, CAST(big.sum_qty AS DOUBLE) AS sum_qty
+        FROM orders JOIN (
             SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty
-            FROM lineitem_v GROUP BY l_orderkey
+            FROM lineitem GROUP BY l_orderkey
             HAVING sum(CAST(l_quantity AS DECIMAL(18,4))) > 150
         ) big ON o_orderkey = big.l_orderkey
-        """
-    )
+    """
 
 
 def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1308,46 +1330,44 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape (returned-item revenue, top 20 customers): fact⋈fact
     sort-merge + dim broadcasts + decimal revenue + deterministic top-k."""
-    for t in ["customer", "orders", "lineitem", "nation"]:
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q10"])
+
+
+ORACLE_SQL["q_sql_tpch_q10"] = """
         SELECT c_custkey, c_name, n_name,
                round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
                         * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM customer_v
-        JOIN orders_v   ON c_custkey = o_custkey
-        JOIN lineitem_v ON l_orderkey = o_orderkey
-        JOIN nation_v   ON c_nationkey = n_nationkey
+        FROM customer
+        JOIN orders   ON c_custkey = o_custkey
+        JOIN lineitem ON l_orderkey = o_orderkey
+        JOIN nation   ON c_nationkey = n_nationkey
         WHERE l_returnflag = 'R'
           AND o_orderdate >= timestamp '1996-01-01 00:00:00'
           AND o_orderdate <  timestamp '1997-01-01 00:00:00'
         GROUP BY c_custkey, c_name, n_name
         ORDER BY revenue DESC, c_custkey ASC
         LIMIT 20
-        """
-    )
+    """
 
 
 def q_sql_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (global sales opportunity): scalar AVG subquery +
     NOT EXISTS anti join, bucketed by segment (the cntrycode analog)."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q22"])
+
+
+ORACLE_SQL["q_sql_tpch_q22"] = """
         SELECT c_mktsegment,
                count(c_custkey) AS n_custs,
                CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS total_bal
-        FROM customer_v
+        FROM customer
         WHERE c_acctbal > (SELECT avg(CAST(c_acctbal AS DECIMAL(18,4)))
-                           FROM customer_v WHERE c_acctbal > 0.0)
-          AND NOT EXISTS (SELECT 1 FROM orders_v
+                           FROM customer WHERE c_acctbal > 0.0)
+          AND NOT EXISTS (SELECT 1 FROM orders
                           WHERE o_custkey = c_custkey
                             AND o_totalprice > 350000.0)
         GROUP BY c_mktsegment
-        """
-    )
+    """
 
 
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1398,26 +1418,25 @@ def q_sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation) — every dim broadcasts, lineitem shuffles once for the
     orders join; the symmetric nation-pair filter is a pushed-down
     disjunction over broadcast columns."""
-    for t in ["supplier", "orders", "customer", "nation", "lineitem"]:
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q7"])
+
+
+ORACLE_SQL["q_sql_tpch_q7"] = """
         SELECT n1.n_name AS supp_nation,
                n2.n_name AS cust_nation,
                CAST(year(l_shipdate) AS BIGINT) AS l_year,
                round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
                         * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM lineitem_v
-        JOIN supplier_v ON l_suppkey = s_suppkey
-        JOIN orders_v   ON l_orderkey = o_orderkey
-        JOIN customer_v ON o_custkey = c_custkey
-        JOIN nation_v n1 ON s_nationkey = n1.n_nationkey
-        JOIN nation_v n2 ON c_nationkey = n2.n_nationkey
+        FROM lineitem
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN orders   ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        JOIN nation n2 ON c_nationkey = n2.n_nationkey
         WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
            OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
         GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
-        """
-    )
+    """
 
 
 def q_sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1425,21 +1444,20 @@ def q_sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR-of-ANDs across both join sides — Catalyst pushes the common
     `p_brand IN (...)` / quantity bounds below the join and evaluates the
     residual disjunction post-join; part broadcasts."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q19"])
+
+
+ORACLE_SQL["q_sql_tpch_q19"] = """
         SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
                         * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM lineitem_v JOIN part_v ON l_partkey = p_partkey
+        FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
                AND l_quantity BETWEEN 1 AND 11)
            OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
                AND l_quantity BETWEEN 10 AND 20)
            OR (p_brand = 'Brand#3'  AND p_size BETWEEN 1 AND 15
                AND l_quantity BETWEEN 20 AND 30)
-        """
-    )
+    """
 
 
 def q_sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1449,10 +1467,10 @@ def q_sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     the region/part filters prune before the fact shuffle; the share is a
     conditional-sum ratio over exact decimal sums (cast to double and
     rounded only at the surface)."""
-    for t in ["part", "supplier", "orders", "customer", "nation", "region", "lineitem"]:
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"{t}_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q8"])
+
+
+ORACLE_SQL["q_sql_tpch_q8"] = """
         SELECT o_year,
                round(CAST(sum(CASE WHEN nation = 'NATION_5' THEN volume ELSE CAST(0 AS DECIMAL(18,8)) END) AS DOUBLE)
                      / CAST(sum(volume) AS DOUBLE), 4) + 0.0 AS mkt_share
@@ -1461,21 +1479,20 @@ def q_sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(l_extendedprice AS DECIMAL(18,4))
                      * CAST(1 - l_discount AS DECIMAL(18,4)) AS volume,
                    n2.n_name AS nation
-            FROM lineitem_v
-            JOIN part_v     ON p_partkey = l_partkey
-            JOIN supplier_v ON s_suppkey = l_suppkey
-            JOIN orders_v   ON l_orderkey = o_orderkey
-            JOIN customer_v ON o_custkey = c_custkey
-            JOIN nation_v n1 ON c_nationkey = n1.n_nationkey
-            JOIN region_v   ON n1.n_regionkey = r_regionkey
-            JOIN nation_v n2 ON s_nationkey = n2.n_nationkey
+            FROM lineitem
+            JOIN part     ON p_partkey = l_partkey
+            JOIN supplier ON s_suppkey = l_suppkey
+            JOIN orders   ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            JOIN nation n1 ON c_nationkey = n1.n_nationkey
+            JOIN region   ON n1.n_regionkey = r_regionkey
+            JOIN nation n2 ON s_nationkey = n2.n_nationkey
             WHERE r_name = 'ASIA'
               AND o_orderdate BETWEEN DATE '1995-01-01' AND DATE '1996-12-31'
               AND p_type = 'PROMO'
         ) all_nations
         GROUP BY o_year
-        """
-    )
+    """
 
 
 def q_sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1483,20 +1500,19 @@ def q_sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose extra ON-clause predicate must stay in the join (not become a
     WHERE filter, which would turn it inner), then two stacked aggregations
     — per-customer count, then a histogram over those counts."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q13"])
+
+
+ORACLE_SQL["q_sql_tpch_q13"] = """
         SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
         FROM (
             SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-            FROM customer_v LEFT JOIN orders_v
+            FROM customer LEFT JOIN orders
               ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
             GROUP BY c_custkey
         ) c_orders
         GROUP BY c_count
-        """
-    )
+    """
 
 
 def q_sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1504,24 +1520,23 @@ def q_sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice — once joined to supplier, once reduced to its max — with the
     equality comparison done on EXACT decimal sums (no double drift); the
     revenue aggregate computes once and broadcasts its scalar max."""
-    _t(spark, sf_dir, "supplier").createOrReplaceTempView("supplier_v")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q15"])
+
+
+ORACLE_SQL["q_sql_tpch_q15"] = """
         WITH revenue AS (
             SELECT l_suppkey AS supplier_no,
                    sum(CAST(l_extendedprice AS DECIMAL(18,4))
                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS total_revenue
-            FROM lineitem_v
+            FROM lineitem
             WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1996-04-01'
             GROUP BY l_suppkey
         )
         SELECT s_suppkey, s_name,
                round(CAST(total_revenue AS DOUBLE), 4) AS total_revenue
-        FROM supplier_v JOIN revenue ON s_suppkey = supplier_no
+        FROM supplier JOIN revenue ON s_suppkey = supplier_no
         WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-        """
-    )
+    """
 
 
 def q_sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1529,20 +1544,19 @@ def q_sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery per part — Catalyst de-correlates it into a per-partkey
     aggregate joined back to the filtered fact, so the "per-row subquery"
     costs one extra aggregation, not one job per part."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part_v")
-    return spark.sql(
-        """
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q17"])
+
+
+ORACLE_SQL["q_sql_tpch_q17"] = """
         SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0, 4)
                  + 0.0 AS avg_yearly
-        FROM lineitem_v JOIN part_v ON p_partkey = l_partkey
+        FROM lineitem JOIN part ON p_partkey = l_partkey
         WHERE p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
           AND l_quantity < (
-              SELECT 0.2 * avg(l2.l_quantity) FROM lineitem_v l2
+              SELECT 0.2 * avg(l2.l_quantity) FROM lineitem l2
               WHERE l2.l_partkey = p_partkey
           )
-        """
-    )
+    """
 
 
 def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2522,7 +2536,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB oracles
 # ==========================================================================
 
-ORACLE_SQL: dict[str, str] = {
+ORACLE_SQL.update({
     "q_scan_json": "SELECT n_nationkey, n_name, n_regionkey FROM nation",
     "q_scan_csv": "SELECT r_regionkey, r_name FROM region",
     "q_scan_orc": "SELECT n_nationkey, n_name, n_regionkey FROM nation",
@@ -2743,40 +2757,6 @@ ORACLE_SQL: dict[str, str] = {
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         GROUP BY o_orderpriority
     """,
-    "q_grouping_sets": """
-        SELECT o_orderstatus, o_orderpriority, count(o_orderkey) AS n_orders
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """,
-    "q_sql_tpch_q3": """
-        SELECT l_orderkey,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue,
-               CAST(o_orderdate AS TIMESTAMP) AS o_orderdate
-        FROM customer JOIN orders ON c_custkey = o_custkey
-                      JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
-          AND l_shipdate  > TIMESTAMP '1998-06-01 00:00:00'
-        GROUP BY l_orderkey, o_orderdate
-        ORDER BY revenue DESC, l_orderkey ASC
-        LIMIT 10
-    """,
-    "q_sql_tpch_q5": """
-        SELECT n_name,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM customer JOIN orders   ON c_custkey = o_custkey
-                      JOIN lineitem ON l_orderkey = o_orderkey
-                      JOIN supplier ON l_suppkey = s_suppkey
-                                   AND c_nationkey = s_nationkey
-                      JOIN nation   ON s_nationkey = n_nationkey
-                      JOIN region   ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-        GROUP BY n_name
-    """,
     "q_merge_upsert": """
         WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
         upd AS (
@@ -2890,40 +2870,6 @@ ORACLE_SQL: dict[str, str] = {
                               RANGE BETWEEN 10000 PRECEDING AND 10000 FOLLOWING
                              ) AS n_neighbors
         FROM customer
-    """,
-    "q_exists_subquery": """
-        SELECT o_orderpriority, count(o_orderkey) AS n_orders
-        FROM orders
-        WHERE EXISTS (SELECT 1 FROM lineitem
-                      WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        GROUP BY o_orderpriority
-    """,
-    "q_in_subquery": """
-        SELECT c_custkey, c_name FROM customer
-        WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 0)
-    """,
-    "q_scalar_subquery": """
-        SELECT o_orderkey, o_totalprice FROM orders
-        WHERE o_totalprice > 0.5 * (SELECT max(o_totalprice) FROM orders)
-    """,
-    "q_sql_tpch_q6": """
-        SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-               count(l_orderkey) AS n_items
-        FROM lineitem
-        WHERE l_shipdate >= timestamp '1996-01-01 00:00:00'
-          AND l_shipdate <  timestamp '1997-01-01 00:00:00'
-          AND l_discount BETWEEN 0.04 AND 0.06
-          AND l_quantity < 24
-    """,
-    "q_sql_tpch_q14": """
-        SELECT round(CAST(sum(CASE WHEN p_type = 'ECONOMY'
-                             THEN CAST(l_extendedprice AS DECIMAL(18,4))
-                                  * CAST(1 - l_discount AS DECIMAL(18,4))
-                             ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE), 4) AS promo_revenue,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS total_revenue
-        FROM lineitem JOIN part ON l_partkey = p_partkey
     """,
     "q_having": """
         SELECT o_custkey, count(o_orderkey) AS n_orders,
@@ -3222,57 +3168,6 @@ ORACLE_SQL: dict[str, str] = {
         FROM grid g LEFT JOIN slotted s
           ON g.user_id = s.user_id AND g.slot = s.slot
     """,
-    "q_sql_tpch_q18": """
-        SELECT o_orderkey, o_totalprice, CAST(big.sum_qty AS DOUBLE) AS sum_qty
-        FROM orders JOIN (
-            SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty
-            FROM lineitem GROUP BY l_orderkey
-            HAVING sum(CAST(l_quantity AS DECIMAL(18,4))) > 150
-        ) big ON o_orderkey = big.l_orderkey
-    """,
-    "q_sql_tpch_q10": """
-        SELECT c_custkey, c_name, n_name,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM customer
-        JOIN orders   ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN nation   ON c_nationkey = n_nationkey
-        WHERE l_returnflag = 'R'
-          AND o_orderdate >= timestamp '1996-01-01 00:00:00'
-          AND o_orderdate <  timestamp '1997-01-01 00:00:00'
-        GROUP BY c_custkey, c_name, n_name
-        ORDER BY revenue DESC, c_custkey ASC
-        LIMIT 20
-    """,
-    "q_sql_tpch_q22": """
-        SELECT c_mktsegment,
-               count(c_custkey) AS n_custs,
-               CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS total_bal
-        FROM customer
-        WHERE c_acctbal > (SELECT avg(CAST(c_acctbal AS DECIMAL(18,4)))
-                           FROM customer WHERE c_acctbal > 0.0)
-          AND NOT EXISTS (SELECT 1 FROM orders
-                          WHERE o_custkey = c_custkey
-                            AND o_totalprice > 350000.0)
-        GROUP BY c_mktsegment
-    """,
-    "q_sql_tpch_q7": """
-        SELECT n1.n_name AS supp_nation,
-               n2.n_name AS cust_nation,
-               CAST(year(l_shipdate) AS BIGINT) AS l_year,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM lineitem
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-           OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-        GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
-    """,
     "q_snapshot_diff": """
         SELECT s_suppkey, 'delete' AS change_type
         FROM supplier WHERE s_suppkey % 7 = 0
@@ -3290,74 +3185,6 @@ ORACLE_SQL: dict[str, str] = {
         FROM orders
         WHERE o_totalprice >= 100000.0 AND o_totalprice < 120000.0
         GROUP BY o_orderstatus
-    """,
-    "q_sql_tpch_q19": """
-        SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-               AND l_quantity BETWEEN 1 AND 11)
-           OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-               AND l_quantity BETWEEN 10 AND 20)
-           OR (p_brand = 'Brand#3'  AND p_size BETWEEN 1 AND 15
-               AND l_quantity BETWEEN 20 AND 30)
-    """,
-    "q_sql_tpch_q8": """
-        SELECT o_year,
-               round(CAST(sum(CASE WHEN nation = 'NATION_5' THEN volume ELSE CAST(0 AS DECIMAL(18,8)) END) AS DOUBLE)
-                     / CAST(sum(volume) AS DOUBLE), 4) + 0.0 AS mkt_share
-        FROM (
-            SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-                   CAST(l_extendedprice AS DECIMAL(18,4))
-                     * CAST(1 - l_discount AS DECIMAL(18,4)) AS volume,
-                   n2.n_name AS nation
-            FROM lineitem
-            JOIN part     ON p_partkey = l_partkey
-            JOIN supplier ON s_suppkey = l_suppkey
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation n1 ON c_nationkey = n1.n_nationkey
-            JOIN region   ON n1.n_regionkey = r_regionkey
-            JOIN nation n2 ON s_nationkey = n2.n_nationkey
-            WHERE r_name = 'ASIA'
-              AND o_orderdate BETWEEN DATE '1995-01-01' AND DATE '1996-12-31'
-              AND p_type = 'PROMO'
-        ) all_nations
-        GROUP BY o_year
-    """,
-    "q_sql_tpch_q13": """
-        SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        FROM (
-            SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-            FROM customer LEFT JOIN orders
-              ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-            GROUP BY c_custkey
-        ) c_orders
-        GROUP BY c_count
-    """,
-    "q_sql_tpch_q15": """
-        WITH revenue AS (
-            SELECT l_suppkey AS supplier_no,
-                   sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                       * CAST(1 - l_discount AS DECIMAL(18,4))) AS total_revenue
-            FROM lineitem
-            WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1996-04-01'
-            GROUP BY l_suppkey
-        )
-        SELECT s_suppkey, s_name,
-               round(CAST(total_revenue AS DOUBLE), 4) AS total_revenue
-        FROM supplier JOIN revenue ON s_suppkey = supplier_no
-        WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-    """,
-    "q_sql_tpch_q17": """
-        SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0, 4)
-                 + 0.0 AS avg_yearly
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
-          AND l_quantity < (
-              SELECT 0.2 * avg(l2.l_quantity) FROM lineitem l2
-              WHERE l2.l_partkey = p_partkey
-          )
     """,
     "q_hash_split": """
         SELECT doc_id, lang,
@@ -3546,17 +3373,6 @@ ORACLE_SQL: dict[str, str] = {
     "q_explode_tokens": """
         SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
     """,
-    "q_sql_tpch_q1": """
-        SELECT l_returnflag, l_linestatus,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_disc_price,
-               count(l_orderkey) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-    """,
     "q_dedup_exact": """
         SELECT md5(text) AS fingerprint,
                min(doc_id) AS keep_id,
@@ -3730,7 +3546,7 @@ ORACLE_SQL: dict[str, str] = {
                max(ts) AS session_end
         FROM sess GROUP BY user_id, session_seq
     """,
-}
+})
 
 ORACLE_SQL["q_bigram_logprob"] = """
     WITH toks AS (
@@ -4846,18 +4662,17 @@ def q_lateral_topk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k-per-group. Catalyst decorrelates this into the same
     window/rank plan as q_topk_per_group; deterministic (price, line
     number) tie-break. Oracle: identical SQL in DuckDB."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
-    return spark.sql(
-        """
-        SELECT o_orderkey, l.l_linenumber, l.l_extendedprice
-        FROM orders_v, LATERAL (
-            SELECT l_linenumber, l_extendedprice FROM lineitem_v
-            WHERE l_orderkey = o_orderkey
-            ORDER BY l_extendedprice DESC, l_linenumber ASC LIMIT 2
-        ) l
-        """
-    )
+    return _sql(spark, sf_dir, ORACLE_SQL["q_lateral_topk_join"])
+
+
+ORACLE_SQL["q_lateral_topk_join"] = """
+    SELECT o_orderkey, l.l_linenumber, l.l_extendedprice
+    FROM orders, LATERAL (
+        SELECT l_linenumber, l_extendedprice FROM lineitem
+        WHERE l_orderkey = o_orderkey
+        ORDER BY l_extendedprice DESC, l_linenumber ASC LIMIT 2
+    ) l
+"""
 
 
 def q_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4890,15 +4705,6 @@ def q_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("doubled_csv"),
     )
 
-
-ORACLE_SQL["q_lateral_topk_join"] = """
-    SELECT o_orderkey, l.l_linenumber, l.l_extendedprice
-    FROM orders, LATERAL (
-        SELECT l_linenumber, l_extendedprice FROM lineitem
-        WHERE l_orderkey = o_orderkey
-        ORDER BY l_extendedprice DESC, l_linenumber ASC LIMIT 2
-    ) l
-"""
 
 ORACLE_SQL["q_map_ops"] = """
     WITH c AS (
@@ -5792,14 +5598,13 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point joins in operators/graph.py). The recursion bound rides
     along as a carried column so the recursive member stays subquery-free.
     Full oracle: DuckDB runs the identical statement."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    return spark.sql(_RECURSIVE_CTE_SQL.format(table="customer_v"))
+    return _sql(spark, sf_dir, ORACLE_SQL["q_recursive_cte"])
 
 
-_RECURSIVE_CTE_SQL = """
+ORACLE_SQL["q_recursive_cte"] = """
     WITH RECURSIVE chain AS (
         SELECT c_custkey AS root, c_custkey AS cur, 0 AS depth, m.bound AS bound
-        FROM {table} CROSS JOIN (SELECT max(c_custkey) AS bound FROM {table}) m
+        FROM customer CROSS JOIN (SELECT max(c_custkey) AS bound FROM customer) m
         WHERE c_custkey % 30 = 0 AND c_custkey > 0
         UNION ALL
         SELECT root, cur * 2, depth + 1, bound FROM chain WHERE cur * 2 <= bound
@@ -5818,15 +5623,16 @@ def q_collated_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (case-sensitive) DISTINCT keeps apart — collation-aware semantics
     inside codegen'd aggregation, no lower() rewrite in the query. Oracle
     mirrors UTF8_LCASE with lower() (exact for this ASCII domain)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(
+    return _sql(
+        spark,
+        sf_dir,
         """
         WITH v AS (
             SELECT o_orderstatus,
                    CASE WHEN o_orderkey % 2 = 0
                         THEN lower(o_orderpriority)
                         ELSE o_orderpriority END AS prio
-            FROM orders_v
+            FROM orders
         )
         SELECT o_orderstatus,
                count(DISTINCT prio COLLATE UTF8_LCASE) AS n_ci,
@@ -5835,8 +5641,6 @@ def q_collated_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
 
-
-ORACLE_SQL["q_recursive_cte"] = _RECURSIVE_CTE_SQL.format(table="customer")
 
 ORACLE_SQL["q_collated_distinct"] = """
     WITH v AS (
@@ -6555,15 +6359,15 @@ def q_offset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself paginates its source API by page number
     (``plugins/brewery_operators.py:33-56``) — this is that surface on the
     query side."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_custkey, o_totalprice
-        FROM orders_v
-        ORDER BY o_totalprice DESC, o_orderkey
-        LIMIT 50 OFFSET 100
-        """
-    )
+    return _sql(spark, sf_dir, ORACLE_SQL["q_offset_pagination"])
+
+
+ORACLE_SQL["q_offset_pagination"] = """
+    SELECT o_orderkey, o_custkey, o_totalprice
+    FROM orders
+    ORDER BY o_totalprice DESC, o_orderkey
+    LIMIT 50 OFFSET 100
+"""
 
 
 def q_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6574,43 +6378,8 @@ def q_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     nullable via nullif, with a key tie-break; the picked row SET (which
     is what the order-insensitive hash checks) differs from the default
     Spark ordering, so the pin is load-bearing."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(
-        """
-        SELECT o_orderkey,
-               nullif(o_orderpriority, '4-NOT SPECIFIED') AS pri
-        FROM orders_v
-        ORDER BY pri ASC NULLS LAST, o_orderkey
-        LIMIT 30
-        """
-    )
+    return _sql(spark, sf_dir, ORACLE_SQL["q_nulls_ordering"])
 
-
-def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ALL (Spark 4 / modern-SQL sugar): every non-aggregate
-    select item becomes a grouping key — compiles to the identical
-    partial/final HashAggregate as the explicit form (the plan-budget test
-    pins it at one exchange), so the sugar costs nothing at scale."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(
-        """
-        SELECT o_orderstatus,
-               o_orderpriority,
-               count(*) AS n_orders,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-                   AS total_value
-        FROM orders_v
-        GROUP BY ALL
-        """
-    )
-
-
-ORACLE_SQL["q_offset_pagination"] = """
-    SELECT o_orderkey, o_custkey, o_totalprice
-    FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey
-    LIMIT 50 OFFSET 100
-"""
 
 ORACLE_SQL["q_nulls_ordering"] = """
     SELECT o_orderkey,
@@ -6619,6 +6388,15 @@ ORACLE_SQL["q_nulls_ordering"] = """
     ORDER BY pri ASC NULLS LAST, o_orderkey
     LIMIT 30
 """
+
+
+def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GROUP BY ALL (Spark 4 / modern-SQL sugar): every non-aggregate
+    select item becomes a grouping key — compiles to the identical
+    partial/final HashAggregate as the explicit form (the plan-budget test
+    pins it at one exchange), so the sugar costs nothing at scale."""
+    return _sql(spark, sf_dir, ORACLE_SQL["q_group_by_all"])
+
 
 ORACLE_SQL["q_group_by_all"] = """
     SELECT o_orderstatus,
@@ -7053,8 +6831,9 @@ def q_window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     (anchor), with priorities deterministically nulled to create gaps.
     Engines agree on IGNORE NULLS semantics; the frame is rows-based so
     ties are pinned by the (date, key) ordering."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(
+    return _sql(
+        spark,
+        sf_dir,
         """
         SELECT o_orderkey,
                o_custkey,
@@ -7069,7 +6848,7 @@ def q_window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (
             SELECT o_orderkey, o_custkey, o_orderdate,
                    nullif(o_orderpriority, '4-NOT SPECIFIED') AS pri
-            FROM orders_v
+            FROM orders
             WHERE o_custkey % 10 = 0
         )
         """
@@ -7118,8 +6897,8 @@ ORACLE_SQL["q_window_ignore_nulls"] = """
 
 
 # --------------------------------------------------------------------------
-# r4: the five TPC-H queries needing a partsupp table (Q2/Q9/Q11/Q16/Q20),
-# over a DERIVED partsupp — the testdata ships none, so the pair relation
+# The five TPC-H queries needing a partsupp table (Q2/Q9/Q11/Q16/Q20), over
+# a DERIVED partsupp — the testdata ships none, so the pair relation
 # implied by the fact table (DISTINCT (l_partkey, l_suppkey)) is extended
 # with md5-derived supplycost/availqty. The derivation is a pure integer
 # function of the keys (hex digits -> integer -> /100), so both engines
@@ -7136,7 +6915,7 @@ _PARTSUPP_CTE = """
                1.0 + CAST({costhex} % 99900 AS DOUBLE) / 100.0 AS ps_supplycost
         FROM (SELECT DISTINCT l_partkey AS ps_partkey,
                               l_suppkey AS ps_suppkey
-              FROM {lineitem}{pair_filter})
+              FROM lineitem{pair_filter})
     )
 """
 
@@ -7150,19 +6929,18 @@ _DUCK_HEX = (
 )
 
 
-def _partsupp_cte(engine: str, lineitem: str, pair_filter: str = "") -> str:
-    """``pair_filter`` (r17, guide §2.3 — filter before the exchange): an
-    optional WHERE clause on the raw pair stream, for query bodies whose
-    own joins provably discard every pair the filter drops. The derived
-    cost/qty columns are pure per-pair functions of the keys, so
-    restricting the pair set never changes a surviving row."""
+def _tpch_ps_sql(engine: str, body: str, pair_filter: str = "") -> str:
+    """``body`` under the derived partsupp CTE, in ``engine``'s md5-hex
+    spelling. ``pair_filter`` is an optional WHERE clause on the raw pair
+    stream, for a body whose own joins provably discard every pair it
+    drops: the derived cost/qty columns are pure per-pair functions of the
+    keys, so restricting the pair set never changes a surviving row."""
     hexes = _SPARK_HEX if engine == "spark" else _DUCK_HEX
-    return _PARTSUPP_CTE.format(
+    return "WITH " + _PARTSUPP_CTE.format(
         availhex=hexes.format(seed="availqty-v1"),
         costhex=hexes.format(seed="cost-v1"),
-        lineitem=lineitem,
         pair_filter=pair_filter,
-    )
+    ) + body
 
 
 _TPCH_Q2_BODY = """
@@ -7170,10 +6948,10 @@ _TPCH_Q2_BODY = """
         SELECT p_partkey, p_brand, s_suppkey, s_name, s_acctbal,
                n_name, ps_supplycost
         FROM partsupp
-        JOIN {part} ON ps_partkey = p_partkey
-        JOIN {supplier} ON ps_suppkey = s_suppkey
-        JOIN {nation} ON s_nationkey = n_nationkey
-        JOIN {region} ON n_regionkey = r_regionkey
+        JOIN part ON ps_partkey = p_partkey
+        JOIN supplier ON ps_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
         WHERE p_size = 15 AND p_type = 'ECONOMY' AND r_name = 'EUROPE'
     ),
     best AS (
@@ -7188,6 +6966,18 @@ _TPCH_Q2_BODY = """
     LIMIT 20
 """
 
+
+def q_sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q2 (minimum-cost supplier): region-scoped part/supplier chain,
+    per-part min supplycost via ONE window over the eligible relation (the
+    textbook correlated-min subquery decorrelated), deterministic top-20.
+    Equality on ps_supplycost is safe: the derived cost is the identical
+    pure-integer function of the keys on both engines."""
+    return _sql(spark, sf_dir, _tpch_ps_sql("spark", _TPCH_Q2_BODY))
+
+
+ORACLE_SQL["q_sql_tpch_q2"] = _tpch_ps_sql("duck", _TPCH_Q2_BODY)
+
 _TPCH_Q9_BODY = """
     SELECT n_name AS nation,
            CAST(year(o_orderdate) AS BIGINT) AS o_year,
@@ -7196,15 +6986,42 @@ _TPCH_Q9_BODY = """
                           - CAST(ps_supplycost AS DECIMAL(18,4))
                             * CAST(l_quantity AS DECIMAL(18,4)))
                       AS DOUBLE), 2) AS sum_profit
-    FROM {lineitem}
+    FROM lineitem
     JOIN partsupp ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey
-    JOIN {part} ON p_partkey = l_partkey
-    JOIN {supplier} ON s_suppkey = l_suppkey
-    JOIN {orders} ON o_orderkey = l_orderkey
-    JOIN {nation} ON s_nationkey = n_nationkey
+    JOIN part ON p_partkey = l_partkey
+    JOIN supplier ON s_suppkey = l_suppkey
+    JOIN orders ON o_orderkey = l_orderkey
+    JOIN nation ON s_nationkey = n_nationkey
     WHERE p_name LIKE '%red%'
     GROUP BY n_name, year(o_orderdate)
 """
+
+# Q9's partsupp pair build, pre-filtered to '%red%' parts to cut the widest
+# exchange's input before it shuffles: Q9 inner-joins lineitem to part with
+# p_name LIKE '%red%', so a pair whose partkey is not a red part can only
+# match lineitem rows the part join discards. Restricting the pair-distinct
+# (the plan's only non-broadcast exchange besides the final agg) is
+# result-invariant; applied to BOTH engines, measured 1.41 -> 0.64 s
+# min-of-4 at sf0.1 and verified row-equal.
+_TPCH_Q9_PAIR_FILTER = (
+    " WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE '%red%')"
+)
+
+
+def q_sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q9 (product-type profit): five-way join of the fact to the
+    derived partsupp (BOTH keys — pairs exist by construction), decimal-
+    exact profit expression, (nation, year) rollup. The partsupp pair
+    build is pre-filtered to '%red%' parts (result-invariant under Q9's
+    own part join; see ``_TPCH_Q9_PAIR_FILTER``)."""
+    return _sql(
+        spark, sf_dir, _tpch_ps_sql("spark", _TPCH_Q9_BODY, _TPCH_Q9_PAIR_FILTER)
+    )
+
+
+ORACLE_SQL["q_sql_tpch_q9"] = _tpch_ps_sql(
+    "duck", _TPCH_Q9_BODY, _TPCH_Q9_PAIR_FILTER
+)
 
 _TPCH_Q11_BODY = """
     , scoped AS (
@@ -7212,8 +7029,8 @@ _TPCH_Q11_BODY = """
                CAST(ps_supplycost AS DECIMAL(18,4))
                    * CAST(ps_availqty AS DECIMAL(18,4)) AS value_dec
         FROM partsupp
-        JOIN {supplier} ON ps_suppkey = s_suppkey
-        JOIN {nation} ON s_nationkey = n_nationkey
+        JOIN supplier ON ps_suppkey = s_suppkey
+        JOIN nation ON s_nationkey = n_nationkey
         WHERE n_name = 'NATION_1'
     )
     SELECT ps_partkey, CAST(sum(value_dec) AS DOUBLE) AS part_value
@@ -7222,138 +7039,45 @@ _TPCH_Q11_BODY = """
     HAVING sum(value_dec) * 1000 > (SELECT sum(value_dec) FROM scoped)
 """
 
-_TPCH_Q16_BODY = """
-    SELECT p_brand, p_type, p_size,
-           count(DISTINCT ps_suppkey) AS supplier_cnt
-    FROM partsupp
-    JOIN {part} ON p_partkey = ps_partkey
-    WHERE p_brand <> 'Brand#9'
-      AND p_type NOT LIKE 'PROMO%'
-      AND p_size IN (5, 11, 15, 20, 28, 31, 44, 49)
-      AND ps_suppkey NOT IN
-          (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0)
-    GROUP BY p_brand, p_type, p_size
-"""
-
-_TPCH_Q20_BODY = """
-    SELECT s_name, s_acctbal
-    FROM {supplier}
-    JOIN {nation} ON s_nationkey = n_nationkey
-    WHERE n_name = 'NATION_2'
-      AND s_suppkey IN (
-          SELECT ps_suppkey FROM partsupp
-          WHERE ps_partkey IN
-                (SELECT p_partkey FROM {part} WHERE p_name LIKE 'small%')
-            AND ps_availqty > (
-                SELECT 0.5 * sum(l_quantity) FROM {lineitem}
-                WHERE l_partkey = ps_partkey AND l_suppkey = ps_suppkey
-                  AND l_shipdate >= TIMESTAMP '1996-01-01'
-                  AND l_shipdate <  TIMESTAMP '1997-01-01'))
-    ORDER BY s_name
-"""
-
-_SPARK_T = {
-    "lineitem": "lineitem_v", "part": "part_v", "supplier": "supplier_v",
-    "nation": "nation_v", "region": "region_v", "orders": "orders_v",
-}
-_DUCK_T = {
-    "lineitem": "lineitem", "part": "part", "supplier": "supplier",
-    "nation": "nation", "region": "region", "orders": "orders",
-}
-
-
-def _tpch_ps_sql(engine: str, body: str) -> str:
-    t = _SPARK_T if engine == "spark" else _DUCK_T
-    return "WITH " + _partsupp_cte(engine, t["lineitem"]) + body.format(**t)
-
-
-# Q16-only partsupp: the raw (l_partkey, l_suppkey) pair stream WITHOUT
-# the DISTINCT or the derived cost/qty columns (r17, guide §2.4 "a
-# distinct on data that is already unique" — generalized to a distinct
-# whose CONSUMER is duplicate-insensitive). Q16 is the one partsupp
-# query where pair multiplicity provably cannot reach the result: its
-# only aggregate is count(DISTINCT ps_suppkey), its filters (part
-# attributes, the NOT IN suppkey probe) are row-wise, and it never
-# touches ps_availqty/ps_supplycost — so deduping 600k fact rows into
-# pairs (a full extra exchange + aggregate pair over the widest
-# relation in the plan) buys nothing. Q2/Q9/Q11/Q20 keep the real CTE:
-# they aggregate per-pair cost/qty, where multiplicity would corrupt
-# sums. Applied to BOTH engines (the oracle recomputes the same SQL),
-# so the result rows are bit-identical to the r16 shape — measured
-# 1.53 -> 0.81 s min-of-4 at sf0.1 and verified row-equal.
-_TPCH_PAIRS_CTE = """
-    partsupp AS (
-        SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey
-        FROM {lineitem}
-    )
-"""
-
-
-def _tpch_pairs_sql(engine: str, body: str) -> str:
-    t = _SPARK_T if engine == "spark" else _DUCK_T
-    return (
-        "WITH " + _TPCH_PAIRS_CTE.format(lineitem=t["lineitem"]) + body.format(**t)
-    )
-
-
-def _tpch_q9_sql(engine: str) -> str:
-    """Q9 with the partsupp pair build PRE-FILTERED to '%red%' parts
-    (r17, guide §2.3 — cut the widest exchange's input before it
-    shuffles): Q9 inner-joins lineitem to part with p_name LIKE '%red%',
-    so any partsupp pair whose partkey is not a red part can only match
-    lineitem rows the part join discards — restricting the pair-distinct
-    (the plan's only non-broadcast exchange besides the final agg) to
-    red-part pairs is result-invariant. Applied to BOTH engines; measured
-    1.41 -> 0.64 s min-of-4 at sf0.1 and verified row-equal."""
-    t = _SPARK_T if engine == "spark" else _DUCK_T
-    pair_filter = (
-        " WHERE l_partkey IN (SELECT p_partkey FROM {part}"
-        " WHERE p_name LIKE '%red%')"
-    ).format(**t)
-    return (
-        "WITH "
-        + _partsupp_cte(engine, t["lineitem"], pair_filter)
-        + _TPCH_Q9_BODY.format(**t)
-    )
-
-
-def _run_tpch_ps(spark: SparkSession, sf_dir: str, body: str) -> DataFrame:
-    for name, view in _SPARK_T.items():
-        _t(spark, sf_dir, name).createOrReplaceTempView(view)
-    return spark.sql(_tpch_ps_sql("spark", body))
-
-
-def _run_tpch_pairs(spark: SparkSession, sf_dir: str, body: str) -> DataFrame:
-    for name, view in _SPARK_T.items():
-        _t(spark, sf_dir, name).createOrReplaceTempView(view)
-    return spark.sql(_tpch_pairs_sql("spark", body))
-
-
-def q_sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 (minimum-cost supplier): region-scoped part/supplier chain,
-    per-part min supplycost via ONE window over the eligible relation (the
-    textbook correlated-min subquery decorrelated), deterministic top-20.
-    Equality on ps_supplycost is safe: the derived cost is the identical
-    pure-integer function of the keys on both engines."""
-    return _run_tpch_ps(spark, sf_dir, _TPCH_Q2_BODY)
-
-
-def q_sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 (product-type profit): five-way join of the fact to the
-    derived partsupp (BOTH keys — pairs exist by construction), decimal-
-    exact profit expression, (nation, year) rollup. The partsupp pair
-    build is pre-filtered to '%red%' parts (result-invariant under Q9's
-    own part join; see ``_tpch_q9_sql`` for the proof and measurement)."""
-    for name, view in _SPARK_T.items():
-        _t(spark, sf_dir, name).createOrReplaceTempView(view)
-    return spark.sql(_tpch_q9_sql("spark"))
-
 
 def q_sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 (important stock): nation-scoped inventory value per part
     vs a scalar-subquery share threshold — compared in EXACT decimal
     (sum * 1000 > total) so no FP boundary exists at the cutoff."""
-    return _run_tpch_ps(spark, sf_dir, _TPCH_Q11_BODY)
+    return _sql(spark, sf_dir, _tpch_ps_sql("spark", _TPCH_Q11_BODY))
+
+
+ORACLE_SQL["q_sql_tpch_q11"] = _tpch_ps_sql("duck", _TPCH_Q11_BODY)
+
+# Q16-only partsupp: the raw (l_partkey, l_suppkey) pair stream WITHOUT
+# the DISTINCT or the derived cost/qty columns, because Q16 is the one
+# partsupp query where pair multiplicity provably cannot reach the result:
+# its only aggregate is count(DISTINCT ps_suppkey), its filters (part
+# attributes, the NOT IN suppkey probe) are row-wise, and it never touches
+# ps_availqty/ps_supplycost — so deduping 600k fact rows into pairs (a full
+# extra exchange + aggregate pair over the widest relation in the plan)
+# buys nothing. Q2/Q9/Q11/Q20 keep the real CTE: they aggregate per-pair
+# cost/qty, where multiplicity would corrupt sums. Measured 1.53 -> 0.81 s
+# min-of-4 at sf0.1 against the deduped shape and verified row-equal.
+_TPCH_PAIRS_CTE = """
+    partsupp AS (
+        SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey
+        FROM lineitem
+    )
+"""
+
+_TPCH_Q16_BODY = """
+    SELECT p_brand, p_type, p_size,
+           count(DISTINCT ps_suppkey) AS supplier_cnt
+    FROM partsupp
+    JOIN part ON p_partkey = ps_partkey
+    WHERE p_brand <> 'Brand#9'
+      AND p_type NOT LIKE 'PROMO%'
+      AND p_size IN (5, 11, 15, 20, 28, 31, 44, 49)
+      AND ps_suppkey NOT IN
+          (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+    GROUP BY p_brand, p_type, p_size
+"""
 
 
 def q_sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7362,7 +7086,27 @@ def q_sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     + per-group distinct supplier counts. Runs over the pairs-only
     partsupp (no DISTINCT — every Q16 consumer is duplicate-insensitive;
     see ``_TPCH_PAIRS_CTE`` for the proof and measurement)."""
-    return _run_tpch_pairs(spark, sf_dir, _TPCH_Q16_BODY)
+    return _sql(spark, sf_dir, ORACLE_SQL["q_sql_tpch_q16"])
+
+
+ORACLE_SQL["q_sql_tpch_q16"] = "WITH " + _TPCH_PAIRS_CTE + _TPCH_Q16_BODY
+
+_TPCH_Q20_BODY = """
+    SELECT s_name, s_acctbal
+    FROM supplier
+    JOIN nation ON s_nationkey = n_nationkey
+    WHERE n_name = 'NATION_2'
+      AND s_suppkey IN (
+          SELECT ps_suppkey FROM partsupp
+          WHERE ps_partkey IN
+                (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
+            AND ps_availqty > (
+                SELECT 0.5 * sum(l_quantity) FROM lineitem
+                WHERE l_partkey = ps_partkey AND l_suppkey = ps_suppkey
+                  AND l_shipdate >= TIMESTAMP '1996-01-01'
+                  AND l_shipdate <  TIMESTAMP '1997-01-01'))
+    ORDER BY s_name
+"""
 
 
 def q_sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7370,13 +7114,9 @@ def q_sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlated scalar aggregate (availqty > half the year's shipped
     quantity for that exact pair) — integer-valued doubles, so the 0.5x
     comparison is exact."""
-    return _run_tpch_ps(spark, sf_dir, _TPCH_Q20_BODY)
+    return _sql(spark, sf_dir, _tpch_ps_sql("spark", _TPCH_Q20_BODY))
 
 
-ORACLE_SQL["q_sql_tpch_q2"] = _tpch_ps_sql("duck", _TPCH_Q2_BODY)
-ORACLE_SQL["q_sql_tpch_q9"] = _tpch_q9_sql("duck")
-ORACLE_SQL["q_sql_tpch_q11"] = _tpch_ps_sql("duck", _TPCH_Q11_BODY)
-ORACLE_SQL["q_sql_tpch_q16"] = _tpch_pairs_sql("duck", _TPCH_Q16_BODY)
 ORACLE_SQL["q_sql_tpch_q20"] = _tpch_ps_sql("duck", _TPCH_Q20_BODY)
 
 
@@ -8051,19 +7791,16 @@ def q_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP order is total (segment names are distinct per group after
     the DISTINCT), so the string is reproducible across partitionings
     and engines."""
-    cust = _t(spark, sf_dir, "customer").select("c_nationkey", "c_mktsegment")
-    nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    j = cust.join(
-        F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey")
-    ).select("n_name", "c_mktsegment").distinct()
-    j.createOrReplaceTempView("nation_segments_v")
-    return spark.sql(
+    return _sql(
+        spark,
+        sf_dir,
         """
         SELECT n_name,
                listagg(c_mktsegment, ',')
                    WITHIN GROUP (ORDER BY c_mktsegment) AS segments,
                count(*) AS n_segments
-        FROM nation_segments_v
+        FROM (SELECT DISTINCT n_name, c_mktsegment
+              FROM customer JOIN nation ON c_nationkey = n_nationkey)
         GROUP BY n_name
         """
     )
@@ -9909,361 +9646,194 @@ def q_streaming_hll_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SQL["q_streaming_hll_upsert"] = ORACLE_SQL["q_hll_rollup_merge"]
 
 
-def _bmp_corpus_spec(n: int = 24) -> list[tuple]:
-    """Deterministic analytic BMP corpus spec, shared by the Spark query
-    and (re-derived arithmetically) the DuckDB oracle: per media_id —
-    width 3..7 (odd widths force the 4-byte BMP row padding), even height
-    4..10 (so the 2×2 luminance grid splits exactly on the color
-    boundary), constant-color vs top/bottom two-tone, with channel values
-    from fixed modular ramps."""
+class _ImageCorpus(NamedTuple):
+    """Ramps of a deterministic analytic image corpus. Image ``i`` is
+    ``width[0] + i % width[1]`` pixels wide and ``height[0] + 2 * (i %
+    height[1])`` tall; the height is even, so the 2×2 luminance grid splits
+    exactly on the colour boundary. Its top half has channel ``c`` equal to
+    ``(a*i + b) % 256`` for ``(a, b) = top[c]``, its bottom half likewise
+    from ``bottom``, unless ``i % const_every == 0`` paints the whole image
+    in the top colour."""
+
+    width: tuple[int, int]
+    height: tuple[int, int]
+    const_every: int
+    top: tuple[tuple[int, int], ...]
+    bottom: tuple[tuple[int, int], ...]
+
+
+# Distinct ramps per codec, so the three image queries never hash-collide.
+# BMP: odd widths force the 4-byte row padding. GIF: a two-tone image has a
+# ≤2-colour palette (LZW minimum code size floor = 2), the densest
+# compression case the codec supports.
+_BMP_CORPUS = _ImageCorpus(
+    (3, 5), (4, 4), 3, ((17, 5), (29, 40), (53, 90)), ((23, 11), (41, 3), (7, 200))
+)
+_PNG_CORPUS = _ImageCorpus(
+    (2, 6), (4, 4), 4, ((19, 7), (31, 50), (59, 80)), ((13, 21), (37, 9), (11, 180))
+)
+_GIF_CORPUS = _ImageCorpus(
+    (4, 4), (6, 3), 5, ((23, 13), (43, 60), (61, 70)), ((17, 31), (29, 17), (13, 160))
+)
+
+
+def _image_corpus_spec(corpus: _ImageCorpus, n: int = 24) -> list[tuple]:
+    """``(media_id, width, height, top_rgb, bottom_rgb)`` per image, shared
+    by the Spark query and (re-derived arithmetically) the DuckDB oracle."""
     specs = []
     for i in range(n):
-        w = 3 + (i % 5)
-        h = 4 + 2 * (i % 4)
-        top = ((17 * i + 5) % 256, (29 * i + 40) % 256, (53 * i + 90) % 256)
-        bot = (
-            top
-            if i % 3 == 0
-            else ((23 * i + 11) % 256, (41 * i + 3) % 256, (7 * i + 200) % 256)
+        w = corpus.width[0] + i % corpus.width[1]
+        h = corpus.height[0] + 2 * (i % corpus.height[1])
+        top = tuple((a * i + b) % 256 for a, b in corpus.top)
+        bot = top if i % corpus.const_every == 0 else tuple(
+            (a * i + b) % 256 for a, b in corpus.bottom
         )
         specs.append((i, w, h, top, bot))
     return specs
+
+
+def _image_decode_query(
+    spark: SparkSession,
+    corpus: _ImageCorpus,
+    encode: Callable[[list], bytes],
+    extract: Callable[..., DataFrame],
+) -> DataFrame:
+    """REAL-codec image decode as a declared query: a bounded corpus of
+    genuine payloads minted by the codec's ``encode`` twin flows through
+    the standard Arrow-batched mapInPandas plumbing (``extract``), and the
+    decoded features come out ANALYTICALLY checkable: images are constant
+    or exact top/bottom two-tone with even heights, so per-channel means
+    are half-sums of integers, Rec. 601 luma is a 3-decimal rational, and
+    every 2×2 grid tile mean equals its half's luma exactly. The oracle
+    recomputes all of it from the corpus ramps (the reference has no media
+    path at all).
+
+    Corpus minting is driver-side by design: 24 payloads of a few hundred
+    bytes at most (the bounded-golden-set class); the DISTRIBUTED part
+    under test is the mapInPandas decode plumbing."""
+    rows = []
+    for i, w, h, top, bot in _image_corpus_spec(corpus):
+        pixels = [[list(top)] * w for _ in range(h // 2)] + [
+            [list(bot)] * w for _ in range(h // 2)
+        ]
+        rows.append((i, "image", bytearray(encode(pixels))))
+    media = spark.createDataFrame(
+        rows, "media_id long, media_type string, payload binary"
+    )
+    feats = extract(media, grid=2)
+    tiles = [
+        F.round(F.element_at("feature", k + 1).cast("double"), 4).alias(f"tile{k}")
+        for k in range(4)
+    ]
+    return feats.select(
+        "media_id",
+        "width",
+        "height",
+        F.round("mean_r", 4).alias("mean_r"),
+        F.round("mean_g", 4).alias("mean_g"),
+        F.round("mean_b", 4).alias("mean_b"),
+        F.round("brightness", 4).alias("brightness"),
+        *tiles,
+    )
+
+
+def _image_oracle_sql(corpus: _ImageCorpus, n: int = 24) -> str:
+    """Computed golden: channel means are integer half-sums, luma is the
+    Rec. 601 dot product of integers (exactly 3 decimals — never at a 4dp
+    rounding boundary, so the float eval order and the feature array's
+    float32 truncation, error ≤ ~1.5e-5, both round away), brightness is
+    the 4-decimal half-sum of the two half lumas, and each grid tile is its
+    half's luma verbatim."""
+    (w0, w_mod), (h0, h_mod) = corpus.width, corpus.height
+    (r1, g1, b1), (r2, g2, b2) = (
+        [f"({a}*i + {b}) % 256" for a, b in ramps]
+        for ramps in (corpus.top, corpus.bottom)
+    )
+    return f"""
+    WITH spec AS (
+        SELECT i AS media_id,
+               CAST({w0} + (i % {w_mod}) AS INT) AS w,
+               CAST({h0} + 2 * (i % {h_mod}) AS INT) AS h,
+               (i % {corpus.const_every} = 0) AS is_const,
+               CAST({r1} AS DOUBLE) AS r1,
+               CAST({g1} AS DOUBLE) AS g1,
+               CAST({b1} AS DOUBLE) AS b1,
+               CAST({r2} AS DOUBLE) AS r2x,
+               CAST({g2} AS DOUBLE) AS g2x,
+               CAST({b2} AS DOUBLE) AS b2x
+        FROM generate_series(0, {n - 1}) t(i)
+    ),
+    c AS (
+        SELECT media_id, w, h, r1, g1, b1,
+               CASE WHEN is_const THEN r1 ELSE r2x END AS r2,
+               CASE WHEN is_const THEN g1 ELSE g2x END AS g2,
+               CASE WHEN is_const THEN b1 ELSE b2x END AS b2
+        FROM spec
+    ),
+    l AS (
+        SELECT media_id, w, h, r1, g1, b1, r2, g2, b2,
+               0.299*r1 + 0.587*g1 + 0.114*b1 AS luma1,
+               0.299*r2 + 0.587*g2 + 0.114*b2 AS luma2
+        FROM c
+    )
+    SELECT media_id,
+           w AS width,
+           h AS height,
+           round((r1 + r2) / 2, 4) AS mean_r,
+           round((g1 + g2) / 2, 4) AS mean_g,
+           round((b1 + b2) / 2, 4) AS mean_b,
+           round((luma1 + luma2) / 2, 4) AS brightness,
+           round(luma1, 4) AS tile0,
+           round(luma1, 4) AS tile1,
+           round(luma2, 4) AS tile2,
+           round(luma2, 4) AS tile3
+    FROM l
+"""
 
 
 def q_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL-codec image decode as a declared query (r15 growth — the r14
-    plan's own candidate, copying q_wav_decode's computed-golden
-    construction onto the BMP codec): a bounded corpus of genuine
-    uncompressed 24-bit BI_RGB BMP payloads (minted by the encode_bmp
-    twin — real container bytes with bottom-up rows and 4-byte padding,
-    not digest fakes) flows through the standard Arrow-batched
-    mapInPandas plumbing (multimodal.extract_bmp_features) and the
-    decoded features come out ANALYTICALLY checkable: images are
-    constant-color or exact top/bottom two-tone with even heights, so
-    per-channel means are half-sums of integers, Rec. 601 luma is a
-    3-decimal rational, and every 2×2 grid tile mean equals its half's
-    luma exactly. The oracle recomputes all of it from the spec's modular
-    ramps — a regression in header parsing, BGR→RGB ordering, row-order
-    flip, padding arithmetic, or the luma constants breaks the hash
-    (reference: the reference has no media path at all; this completes
-    SURVEY §2.2's multimodal tier alongside q_wav_decode).
-
-    Corpus minting is driver-side by design: 24 payloads of ≤ ~300 bytes
-    (the bounded-golden-set class); the DISTRIBUTED part under test is
-    the mapInPandas decode plumbing."""
-    rows = []
-    for i, w, h, top, bot in _bmp_corpus_spec():
-        pixels = [[list(top)] * w for _ in range(h // 2)] + [
-            [list(bot)] * w for _ in range(h // 2)
-        ]
-        rows.append((i, "image", bytearray(multimodal.encode_bmp(pixels))))
-    media = spark.createDataFrame(
-        rows, "media_id long, media_type string, payload binary"
-    )
-    feats = multimodal.extract_bmp_features(media, grid=2)
-    tiles = [
-        F.round(F.element_at("feature", k + 1).cast("double"), 4).alias(f"tile{k}")
-        for k in range(4)
-    ]
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("brightness", 4).alias("brightness"),
-        *tiles,
+    """Uncompressed 24-bit BI_RGB BMP decode (bottom-up rows, 4-byte row
+    padding) through :func:`_image_decode_query`: a regression in header
+    parsing, BGR→RGB ordering, the row-order flip, padding arithmetic or
+    the luma constants breaks the hash."""
+    return _image_decode_query(
+        spark, _BMP_CORPUS, multimodal.encode_bmp, multimodal.extract_bmp_features
     )
 
 
-# Computed golden: channel means are integer half-sums, luma is the
-# Rec. 601 dot product of integers (exactly 3 decimals — never at a 4dp
-# rounding boundary, so the float eval order and the feature array's
-# float32 truncation, error ≤ ~1.5e-5, both round away), brightness is
-# the 4-decimal half-sum of the two half lumas, and each grid tile is
-# its half's luma verbatim.
-ORACLE_SQL["q_bmp_decode"] = """
-    WITH spec AS (
-        SELECT i AS media_id,
-               CAST(3 + (i % 5) AS INT) AS w,
-               CAST(4 + 2 * (i % 4) AS INT) AS h,
-               (i % 3 = 0) AS is_const,
-               CAST((17*i + 5) % 256 AS DOUBLE) AS r1,
-               CAST((29*i + 40) % 256 AS DOUBLE) AS g1,
-               CAST((53*i + 90) % 256 AS DOUBLE) AS b1,
-               CAST((23*i + 11) % 256 AS DOUBLE) AS r2x,
-               CAST((41*i + 3) % 256 AS DOUBLE) AS g2x,
-               CAST((7*i + 200) % 256 AS DOUBLE) AS b2x
-        FROM generate_series(0, 23) t(i)
-    ),
-    c AS (
-        SELECT media_id, w, h, r1, g1, b1,
-               CASE WHEN is_const THEN r1 ELSE r2x END AS r2,
-               CASE WHEN is_const THEN g1 ELSE g2x END AS g2,
-               CASE WHEN is_const THEN b1 ELSE b2x END AS b2
-        FROM spec
-    ),
-    l AS (
-        SELECT media_id, w, h, r1, g1, b1, r2, g2, b2,
-               0.299*r1 + 0.587*g1 + 0.114*b1 AS luma1,
-               0.299*r2 + 0.587*g2 + 0.114*b2 AS luma2
-        FROM c
-    )
-    SELECT media_id,
-           w AS width,
-           h AS height,
-           round((r1 + r2) / 2, 4) AS mean_r,
-           round((g1 + g2) / 2, 4) AS mean_g,
-           round((b1 + b2) / 2, 4) AS mean_b,
-           round((luma1 + luma2) / 2, 4) AS brightness,
-           round(luma1, 4) AS tile0,
-           round(luma1, 4) AS tile1,
-           round(luma2, 4) AS tile2,
-           round(luma2, 4) AS tile3
-    FROM l
-"""
-
-
-def _png_corpus_spec(n: int = 24) -> list[tuple]:
-    """Deterministic analytic PNG corpus spec, shared by the Spark query
-    and (re-derived arithmetically) the DuckDB oracle: per media_id —
-    width 2..7, even height 4..10 (so the 2×2 luminance grid splits
-    exactly on the color boundary), constant-color vs top/bottom
-    two-tone, with channel values from fixed modular ramps DISTINCT from
-    the BMP corpus's so the two image queries never hash-collide."""
-    specs = []
-    for i in range(n):
-        w = 2 + (i % 6)
-        h = 4 + 2 * (i % 4)
-        top = ((19 * i + 7) % 256, (31 * i + 50) % 256, (59 * i + 80) % 256)
-        bot = (
-            top
-            if i % 4 == 0
-            else ((13 * i + 21) % 256, (37 * i + 9) % 256, (11 * i + 180) % 256)
-        )
-        specs.append((i, w, h, top, bot))
-    return specs
+ORACLE_SQL["q_bmp_decode"] = _image_oracle_sql(_BMP_CORPUS)
 
 
 def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL-codec COMPRESSED image decode as a declared query (r16 growth
-    — the r15 verdict's named candidate, copying q_bmp_decode's
-    computed-golden construction onto the first container with an actual
-    compression stage): a bounded corpus of genuine 8-bit truecolor PNG
-    payloads (minted by the encode_png twin — CRC-checked chunks, one
-    zlib-deflated IDAT, per-row filter types cycling 0-4 so ALL FIVE
-    scanline reconstructions — None/Sub/Up/Average/Paeth — sit under the
-    oracle hash, not just the trivial one) flows through the standard
-    Arrow-batched mapInPandas plumbing (multimodal.extract_png_features)
-    and the decoded features come out ANALYTICALLY checkable: images are
-    constant-color or exact top/bottom two-tone with even heights, so
-    per-channel means are half-sums of integers, Rec. 601 luma is a
-    3-decimal rational, and every 2×2 grid tile mean equals its half's
-    luma exactly. The oracle recomputes all of it from the spec's modular
-    ramps — a regression in chunk walking, CRC verification, inflate,
-    any filter reconstruction, or the luma constants breaks the hash
-    (reference: the reference has no media path at all; this completes
-    SURVEY §2.2's multimodal tier with a compressed image container
-    alongside the uncompressed BMP).
-
-    Corpus minting is driver-side by design: 24 payloads of ≤ ~200 bytes
-    (the bounded-golden-set class); the DISTRIBUTED part under test is
-    the mapInPandas decode plumbing."""
-    rows = []
-    for i, w, h, top, bot in _png_corpus_spec():
-        pixels = [[list(top)] * w for _ in range(h // 2)] + [
-            [list(bot)] * w for _ in range(h // 2)
-        ]
-        rows.append((i, "image", bytearray(multimodal.encode_png(pixels))))
-    media = spark.createDataFrame(
-        rows, "media_id long, media_type string, payload binary"
-    )
-    feats = multimodal.extract_png_features(media, grid=2)
-    tiles = [
-        F.round(F.element_at("feature", k + 1).cast("double"), 4).alias(f"tile{k}")
-        for k in range(4)
-    ]
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("brightness", 4).alias("brightness"),
-        *tiles,
+    """8-bit truecolor PNG decode (CRC-checked chunks, one zlib-deflated
+    IDAT, per-row filter types cycling 0-4 so all five scanline
+    reconstructions sit under the hash) through
+    :func:`_image_decode_query`: a regression in chunk walking, CRC
+    verification, inflate, any filter reconstruction or the luma constants
+    breaks the hash."""
+    return _image_decode_query(
+        spark, _PNG_CORPUS, multimodal.encode_png, multimodal.extract_png_features
     )
 
 
-# Computed golden, same arithmetic argument as q_bmp_decode's oracle:
-# channel means are integer half-sums, luma is the Rec. 601 dot product
-# of integers (exactly 3 decimals — never at a 4dp rounding boundary, so
-# float eval order and the feature array's float32 truncation, error
-# <= ~1.5e-5, both round away), brightness is the 4-decimal half-sum of
-# the two half lumas, and each grid tile is its half's luma verbatim.
-# Only the modular ramps differ from the BMP spec (see _png_corpus_spec).
-ORACLE_SQL["q_png_decode"] = """
-    WITH spec AS (
-        SELECT i AS media_id,
-               CAST(2 + (i % 6) AS INT) AS w,
-               CAST(4 + 2 * (i % 4) AS INT) AS h,
-               (i % 4 = 0) AS is_const,
-               CAST((19*i + 7) % 256 AS DOUBLE) AS r1,
-               CAST((31*i + 50) % 256 AS DOUBLE) AS g1,
-               CAST((59*i + 80) % 256 AS DOUBLE) AS b1,
-               CAST((13*i + 21) % 256 AS DOUBLE) AS r2x,
-               CAST((37*i + 9) % 256 AS DOUBLE) AS g2x,
-               CAST((11*i + 180) % 256 AS DOUBLE) AS b2x
-        FROM generate_series(0, 23) t(i)
-    ),
-    c AS (
-        SELECT media_id, w, h, r1, g1, b1,
-               CASE WHEN is_const THEN r1 ELSE r2x END AS r2,
-               CASE WHEN is_const THEN g1 ELSE g2x END AS g2,
-               CASE WHEN is_const THEN b1 ELSE b2x END AS b2
-        FROM spec
-    ),
-    l AS (
-        SELECT media_id, w, h, r1, g1, b1, r2, g2, b2,
-               0.299*r1 + 0.587*g1 + 0.114*b1 AS luma1,
-               0.299*r2 + 0.587*g2 + 0.114*b2 AS luma2
-        FROM c
-    )
-    SELECT media_id,
-           w AS width,
-           h AS height,
-           round((r1 + r2) / 2, 4) AS mean_r,
-           round((g1 + g2) / 2, 4) AS mean_g,
-           round((b1 + b2) / 2, 4) AS mean_b,
-           round((luma1 + luma2) / 2, 4) AS brightness,
-           round(luma1, 4) AS tile0,
-           round(luma1, 4) AS tile1,
-           round(luma2, 4) AS tile2,
-           round(luma2, 4) AS tile3
-    FROM l
-"""
-
-
-def _gif_corpus_spec(n: int = 24) -> list[tuple]:
-    """Deterministic analytic GIF corpus spec, shared by the Spark query
-    and (re-derived arithmetically) the DuckDB oracle: per media_id —
-    width 4..7, even height 6..10 (the 2×2 luminance grid splits exactly
-    on the color boundary), constant-color vs top/bottom two-tone, with
-    channel values from fixed modular ramps DISTINCT from the BMP and
-    PNG corpora so the three image queries never hash-collide. Two-tone
-    images have a ≤2-color palette (LZW minimum code size floor = 2),
-    the densest compression case the codec supports."""
-    specs = []
-    for i in range(n):
-        w = 4 + (i % 4)
-        h = 6 + 2 * (i % 3)
-        top = ((23 * i + 13) % 256, (43 * i + 60) % 256, (61 * i + 70) % 256)
-        bot = (
-            top
-            if i % 5 == 0
-            else ((17 * i + 31) % 256, (29 * i + 17) % 256, (13 * i + 160) % 256)
-        )
-        specs.append((i, w, h, top, bot))
-    return specs
+ORACLE_SQL["q_png_decode"] = _image_oracle_sql(_PNG_CORPUS)
 
 
 def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL-codec palette-indexed image decode as a declared query (r16
-    growth #2, completing the stdlib-feasible image-container triple
-    BMP/PNG/GIF): a bounded corpus of genuine GIF89a payloads (minted by
-    the encode_gif twin — global color table built from the image's
-    distinct colors, a REAL greedy-longest-match LZW stream with
-    variable-width codes, clear/end handling and the KwKwK edge; the
-    decoder is additionally pinned against a canonical third-party GIF
-    in tests so a matched encoder/decoder off-by-one cannot hide) flows
-    through the standard Arrow-batched mapInPandas plumbing
-    (multimodal.extract_gif_features) and the decoded features come out
-    ANALYTICALLY checkable, same construction as q_bmp_decode /
-    q_png_decode: constant or exact top/bottom two-tone images with even
-    heights, so per-channel means are half-sums of integers, Rec. 601
-    luma is a 3-decimal rational, and every 2×2 grid tile mean equals
-    its half's luma exactly. The oracle recomputes it all from the
-    spec's modular ramps — a regression in header/palette parsing, LZW
-    reconstruction, width growth, or index→RGB mapping breaks the hash
-    (reference: the reference has no media path at all).
-
-    Corpus minting is driver-side by design: 24 payloads of ≤ ~120 bytes
-    (the bounded-golden-set class); the DISTRIBUTED part under test is
-    the mapInPandas decode plumbing."""
-    rows = []
-    for i, w, h, top, bot in _gif_corpus_spec():
-        pixels = [[list(top)] * w for _ in range(h // 2)] + [
-            [list(bot)] * w for _ in range(h // 2)
-        ]
-        rows.append((i, "image", bytearray(multimodal.encode_gif(pixels))))
-    media = spark.createDataFrame(
-        rows, "media_id long, media_type string, payload binary"
-    )
-    feats = multimodal.extract_gif_features(media, grid=2)
-    tiles = [
-        F.round(F.element_at("feature", k + 1).cast("double"), 4).alias(f"tile{k}")
-        for k in range(4)
-    ]
-    return feats.select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("brightness", 4).alias("brightness"),
-        *tiles,
+    """GIF89a palette-indexed decode (a global colour table of the image's
+    distinct colours, a greedy-longest-match LZW stream with variable-width
+    codes, clear/end handling and the KwKwK edge; the decoder is also
+    pinned against a third-party GIF in the tests, so a matched
+    encoder/decoder off-by-one cannot hide) through
+    :func:`_image_decode_query`: a regression in header/palette parsing,
+    LZW reconstruction, code-width growth or index→RGB mapping breaks the
+    hash."""
+    return _image_decode_query(
+        spark, _GIF_CORPUS, multimodal.encode_gif, multimodal.extract_gif_features
     )
 
 
-# Computed golden, same arithmetic argument as the BMP/PNG oracles:
-# channel means are integer half-sums, luma is the Rec. 601 dot product
-# of integers (exactly 3 decimals — never at a 4dp rounding boundary, so
-# float eval order and the feature array's float32 truncation both round
-# away), brightness is the 4-decimal half-sum of the two half lumas, and
-# each grid tile is its half's luma verbatim. Only the modular ramps and
-# dimension ramps differ (see _gif_corpus_spec).
-ORACLE_SQL["q_gif_decode"] = """
-    WITH spec AS (
-        SELECT i AS media_id,
-               CAST(4 + (i % 4) AS INT) AS w,
-               CAST(6 + 2 * (i % 3) AS INT) AS h,
-               (i % 5 = 0) AS is_const,
-               CAST((23*i + 13) % 256 AS DOUBLE) AS r1,
-               CAST((43*i + 60) % 256 AS DOUBLE) AS g1,
-               CAST((61*i + 70) % 256 AS DOUBLE) AS b1,
-               CAST((17*i + 31) % 256 AS DOUBLE) AS r2x,
-               CAST((29*i + 17) % 256 AS DOUBLE) AS g2x,
-               CAST((13*i + 160) % 256 AS DOUBLE) AS b2x
-        FROM generate_series(0, 23) t(i)
-    ),
-    c AS (
-        SELECT media_id, w, h, r1, g1, b1,
-               CASE WHEN is_const THEN r1 ELSE r2x END AS r2,
-               CASE WHEN is_const THEN g1 ELSE g2x END AS g2,
-               CASE WHEN is_const THEN b1 ELSE b2x END AS b2
-        FROM spec
-    ),
-    l AS (
-        SELECT media_id, w, h, r1, g1, b1, r2, g2, b2,
-               0.299*r1 + 0.587*g1 + 0.114*b1 AS luma1,
-               0.299*r2 + 0.587*g2 + 0.114*b2 AS luma2
-        FROM c
-    )
-    SELECT media_id,
-           w AS width,
-           h AS height,
-           round((r1 + r2) / 2, 4) AS mean_r,
-           round((g1 + g2) / 2, 4) AS mean_g,
-           round((b1 + b2) / 2, 4) AS mean_b,
-           round((luma1 + luma2) / 2, 4) AS brightness,
-           round(luma1, 4) AS tile0,
-           round(luma1, 4) AS tile1,
-           round(luma2, 4) AS tile2,
-           round(luma2, 4) AS tile3
-    FROM l
-"""
+ORACLE_SQL["q_gif_decode"] = _image_oracle_sql(_GIF_CORPUS)
 
 
 # Every module-level ``q_*`` function is a registered query.

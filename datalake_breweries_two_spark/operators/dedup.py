@@ -58,30 +58,27 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 # Intermediate materialization (shared by the LSH / Jaccard tiers)
 # --------------------------------------------------------------------------
 
-# Session conf consulted when a dedup entry point's ``stage_dir=None``:
-# point it at a scratch directory (HDFS/S3/local) to switch EVERY
-# multi-consumer intermediate in this module from in-memory
-# localCheckpoint blocks to durable parquet stages without touching
-# call sites.
+# Session conf naming a scratch directory (HDFS/S3/local): when set, EVERY
+# multi-consumer intermediate in this module is a durable parquet stage
+# under it instead of in-memory localCheckpoint blocks.
 STAGE_DIR_CONF = "spark.sparkGraft.dedup.stageDir"
 
 _stage_counter = 0
 
 
-def _stage(df: DataFrame, tag: str, stage_dir: str | None) -> DataFrame:
+def _stage(df: DataFrame, tag: str) -> DataFrame:
     """Materialize a multi-consumer intermediate relation exactly once.
 
     Two media, one contract (lineage truncated, accurate post-
     materialization stats for AQE, nothing registered in the session
     CacheManager):
 
-    * ``stage_dir`` unset (and ``STAGE_DIR_CONF`` unset): eager
-      ``localCheckpoint`` — zero-copy reuse, but the blocks live in
-      EXECUTOR MEMORY, where storage contends with execution. Fine at
-      test scale; the r14 sf10 study (500k docs) needed a 24 GiB heap
-      because the shingle/signature/candidate checkpoints fought the
-      shuffle for the same heap.
-    * ``stage_dir`` set: write/read a parquet stage under it — the
+    * ``STAGE_DIR_CONF`` unset: eager ``localCheckpoint`` — zero-copy
+      reuse, but the blocks live in EXECUTOR MEMORY, where storage
+      contends with execution. Fine at test scale; an sf10 study (500k
+      docs) needed a 24 GiB heap because the shingle/signature/candidate
+      checkpoints fought the shuffle for the same heap.
+    * ``STAGE_DIR_CONF`` set: write/read a parquet stage under it — the
       100 TB medium. Durable, columnar-compressed, read back with file-
       size stats Catalyst trusts, and ZERO heap residency; the shuffle
       gets the whole execution region. The caller owns the directory
@@ -89,8 +86,7 @@ def _stage(df: DataFrame, tag: str, stage_dir: str | None) -> DataFrame:
       queries sharing one scratch root; wipe the root when the query's
       consumers are done).
     """
-    if stage_dir is None:
-        stage_dir = df.sparkSession.conf.get(STAGE_DIR_CONF, None)
+    stage_dir = df.sparkSession.conf.get(STAGE_DIR_CONF, None)
     if not stage_dir:
         return df.localCheckpoint(eager=True)
     global _stage_counter
@@ -578,7 +574,6 @@ def minhash_near_duplicates(
     bands: int = 16,
     threshold: float = 0.5,
     tokenizer: str = "whitespace",
-    stage_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end near-dup pairs: shingle → minhash → LSH candidates →
     verify with estimated Jaccard (signature agreement fraction).
@@ -596,10 +591,9 @@ def minhash_near_duplicates(
     rows). Declared registry queries pass explicit widths so their
     DuckDB oracles recompute identical signatures.
 
-    ``stage_dir`` (or session conf ``STAGE_DIR_CONF``) switches the
-    signature/candidate intermediates from in-memory localCheckpoint
-    blocks to durable parquet stages — the 100 TB medium; see
-    :func:`_stage`.
+    Session conf ``STAGE_DIR_CONF`` switches the signature/candidate
+    intermediates from in-memory localCheckpoint blocks to durable parquet
+    stages — the 100 TB medium; see :func:`_stage`.
     """
     if num_hashes is None:
         num_hashes = bands * auto_band_rows(docs.count(), threshold)
@@ -609,16 +603,16 @@ def minhash_near_duplicates(
     # WITHOUT registering a CacheManager entry — a leaked .persist() here
     # survives the query and silently substitutes into later queries'
     # plans (order-dependent timings; blocks never freed in a long-lived
-    # session). At 100 TB pass stage_dir (or set STAGE_DIR_CONF) so the
+    # session). At 100 TB set STAGE_DIR_CONF so the
     # signature/candidate intermediates live in a parquet stage instead of
     # executor heap — same contract, durable, zero heap residency.
     sigs = _stage(
         minhash_signatures(shingled, num_hashes, id_col),
-        "minhash_sigs", stage_dir,
+        "minhash_sigs",
     )
     cands = _stage(
         lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col),
-        "lsh_cands", stage_dir,
+        "lsh_cands",
     )
     # same candidate-id pruning as near_duplicates_verified: the
     # signature table is num_hashes×8 bytes per DOC — broadcast-fatal at
@@ -813,7 +807,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     tokenizer: str = "whitespace",
-    stage_dir: str | None = None,
 ) -> DataFrame:
     """Exact Jaccard over word n-gram sets: explode shingles → self-join on
     shingle → |∩| per pair → |∪| from per-doc set sizes.
@@ -822,8 +815,8 @@ def ngram_jaccard_pairs(
     candidates. At 100 TB run it ONLY on candidate pairs (join against the
     candidate set before the explode), never corpus-wide; corpus-wide here
     is for the oracle-checkable declared query on the small test table.
-    ``stage_dir`` (or session conf ``STAGE_DIR_CONF``) puts the exploded
-    shingle table in a parquet stage instead of executor heap.
+    Session conf ``STAGE_DIR_CONF`` puts the exploded shingle table in a
+    parquet stage instead of executor heap.
     """
     # _stage: both sides of the self-join re-derive the shingling
     # otherwise; checkpoint/parquet-stage (not persist) so nothing leaks
@@ -834,7 +827,7 @@ def ngram_jaccard_pairs(
     # docstring; −13% measured on this pipeline at sf0.1).
     exploded = _stage(
         shingle_sets_with_size(docs, text_col, id_col, n, tokenizer),
-        "jaccard_shingles", stage_dir,
+        "jaccard_shingles",
     )
     a = exploded.select(
         F.col(id_col).alias("id_a"), F.col("set_size").alias("sz_a"), "shingle"
@@ -867,7 +860,6 @@ def near_duplicates_verified(
     bands: int = 8,
     threshold: float = 0.5,
     tokenizer: str = "whitespace",
-    stage_dir: str | None = None,
 ) -> DataFrame:
     """The full tiered near-dup pipeline as it runs at 100 TB:
     MinHash+LSH proposes candidate pairs (sub-quadratic), then EXACT n-gram
@@ -886,9 +878,8 @@ def near_duplicates_verified(
     :func:`minhash_near_duplicates`; corpora ≤ 256 docs at t=0.5 resolve
     to 32 (8 bands × 4 rows).
 
-    ``stage_dir`` (or session conf ``STAGE_DIR_CONF``) switches the
-    shingle/candidate intermediates — the tier's biggest heap residents —
-    from in-memory localCheckpoint blocks to durable parquet stages; the
+    Session conf ``STAGE_DIR_CONF`` switches the shingle/candidate
+    intermediates — the tier's biggest heap residents — from in-memory localCheckpoint blocks to durable parquet stages; the
     sf10 run at the DEFAULT 8 GiB heap (SCALING.md) is the measured proof
     this is the 100 TB medium.
     """
@@ -912,7 +903,7 @@ def near_duplicates_verified(
             F.collect_set(F.col("shingle")).alias("shingles"),
             *_minhash_min_exprs(num_hashes),
         ),
-        "verified_doc_sigs", stage_dir,
+        "verified_doc_sigs",
     )
     # (id, shingle-set array) — the array form lets the verify tier be a
     # per-pair array_intersect instead of a shingle self-join
@@ -924,7 +915,7 @@ def near_duplicates_verified(
     # joins on the candidate side.
     cands = _stage(
         lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col),
-        "verified_cands", stage_dir,
+        "verified_cands",
     )
     # Found in the sf1→sf10 study: without the pruning below,
     # the second verify join's build side is the FULL (id, shingle-set)
@@ -1058,7 +1049,6 @@ def decontaminate(
     threshold: float = 0.1,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stage_dir: str | None = None,
 ) -> DataFrame:
     """Flag training documents whose word-``n``-gram overlap with a held-out
     benchmark set exceeds ``threshold`` — the standard eval-contamination
@@ -1075,10 +1065,10 @@ def decontaminate(
     """
     # codegen'd exploded shingler (~7x the interpreted array-lambda form at
     # sf0.1), materialized once for its two consumers (per-doc size +
-    # probe); corpus-scale, so stage_dir applies here too
+    # probe); corpus-scale, so STAGE_DIR_CONF applies here too
     corpus_sh = _stage(
         shingle_docs_exploded(corpus, text_col=text_col, id_col=id_col, n=n),
-        "decontam_shingles", stage_dir,
+        "decontam_shingles",
     )
     n_shingles = corpus_sh.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_shingles")

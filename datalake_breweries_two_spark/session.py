@@ -149,6 +149,11 @@ def build_session(
         # reads as a timestamp.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        # Keep the whole-stage codegen stage id out of the generated class
+        # name: the ids of one plan shift between runs, and a class whose
+        # source differs only in its name misses the cache above and is
+        # compiled again on every run.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Python workers import the package from the checkout whatever the
         # driver's cwd. This reaches local-mode workers and executors that
         # share the checkout's path; shipping the package to other hosts

@@ -1363,55 +1363,43 @@ def test_near_duplicates_verified_subset_of_exact(spark):
 
 
 def test_dedup_stage_dir_parquet_medium(spark, tmp_path):
-    """The r15 parquet-stage medium (VERDICT r14 item 1): with stage_dir
-    set — per-call or via the STAGE_DIR_CONF session conf — every dedup
-    entry point must (a) return byte-identical results to the default
-    localCheckpoint medium, (b) actually write its intermediates as
+    """The parquet-stage medium: with the STAGE_DIR_CONF session conf set,
+    every dedup entry point must (a) return byte-identical results to the
+    default localCheckpoint medium, (b) actually write its intermediates as
     parquet stages under the dir (heap-free at 100 TB), and (c) register
     nothing in the session CacheManager."""
+    import os
+
     from datalake_breweries_two_spark.operators import dedup
 
     docs = load_table(spark, "documents", SF_SMOKE)
+    bench = docs.limit(3)
     stage_root = str(tmp_path / "stages")
 
-    def canon(rows):
-        return sorted(tuple(r) for r in rows)
+    def run_all():
+        return [
+            sorted(tuple(r) for r in df.collect())
+            for df in (
+                dedup.near_duplicates_verified(docs, threshold=0.2),
+                dedup.minhash_near_duplicates(docs, num_hashes=32),
+                dedup.ngram_jaccard_pairs(docs, threshold=0.2),
+                dedup.decontaminate(docs, bench),
+            )
+        ]
 
     # (a) result parity on all three entry points + decontaminate
-    base_ver = canon(dedup.near_duplicates_verified(docs, threshold=0.2).collect())
-    staged_ver = canon(
-        dedup.near_duplicates_verified(
-            docs, threshold=0.2, stage_dir=stage_root
-        ).collect()
-    )
-    assert staged_ver == base_ver and len(staged_ver) > 0
-    base_est = canon(dedup.minhash_near_duplicates(docs, num_hashes=32).collect())
-    staged_est = canon(
-        dedup.minhash_near_duplicates(
-            docs, num_hashes=32, stage_dir=stage_root
-        ).collect()
-    )
-    assert staged_est == base_est
-    base_jac = canon(dedup.ngram_jaccard_pairs(docs, threshold=0.2).collect())
-    staged_jac = canon(
-        dedup.ngram_jaccard_pairs(docs, threshold=0.2, stage_dir=stage_root).collect()
-    )
-    assert staged_jac == base_jac
-    bench = docs.limit(3)
-    base_dec = canon(dedup.decontaminate(docs, bench).collect())
-    staged_dec = canon(dedup.decontaminate(docs, bench, stage_dir=stage_root).collect())
-    assert staged_dec == base_dec
+    base = run_all()
+    spark.conf.set(dedup.STAGE_DIR_CONF, stage_root)
+    try:
+        staged = run_all()
+    finally:
+        spark.conf.unset(dedup.STAGE_DIR_CONF)
+    assert staged == base and len(base[0]) > 0
 
     # (b) stages are real parquet directories with the expected tags
-    import os
-
     stages = sorted(os.listdir(stage_root))
     tags = {s.split("_", 2)[2].rsplit("_", 1)[0] for s in stages}
     assert {
-        # r16: near_duplicates_verified fused its shingle-set and
-        # signature aggregates into ONE doc-grain staged relation
-        # (verified_doc_sigs replaced the per-shingle verified_shingles
-        # stage + the separate sig pass)
         "verified_doc_sigs",
         "verified_cands",
         "minhash_sigs",
@@ -1424,18 +1412,6 @@ def test_dedup_stage_dir_parquet_medium(spark, tmp_path):
 
     # (c) nothing leaked into the CacheManager
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-    # session-conf route: stage_dir=None + conf set → same medium
-    conf_root = str(tmp_path / "conf_stages")
-    spark.conf.set(dedup.STAGE_DIR_CONF, conf_root)
-    try:
-        conf_ver = canon(
-            dedup.near_duplicates_verified(docs, threshold=0.2).collect()
-        )
-    finally:
-        spark.conf.unset(dedup.STAGE_DIR_CONF)
-    assert conf_ver == base_ver
-    assert len(os.listdir(conf_root)) >= 2
 
 
 def test_portable_minhash_near_dup_family(spark):
@@ -6138,83 +6114,34 @@ def test_streaming_hll_upsert_matches_reference_randomized(spark, tmp_path):
         assert abs(got[et]["hll_estimate"] - ref[et][1]) < 1e-3, et
 
 
-# ------------------------------------------------------ r15 growth: BMP query
+# ------------------------------------------------------ image decode queries
 
-def test_bmp_decode_query_analytic_pins(spark):
-    """q_bmp_decode (r15 growth): every row of the declared query must
-    equal the analytic expectation computed HERE from the spec with
-    exact rational arithmetic (Fraction — independent of both numpy's
-    decode math and the DuckDB oracle): channel means are integer
-    half-sums, luma is the exact (299r+587g+114b)/1000 rational, grid
-    tiles equal their half's luma. Covers odd-width padding, both
-    storage patterns (const / two-tone), and the BGR→RGB + bottom-up
-    row-order decode."""
+@pytest.mark.parametrize(
+    "query, corpus",
+    [
+        ("q_bmp_decode", "_BMP_CORPUS"),
+        ("q_png_decode", "_PNG_CORPUS"),
+        ("q_gif_decode", "_GIF_CORPUS"),
+    ],
+    ids=["q_bmp_decode", "q_png_decode", "q_gif_decode"],
+)
+def test_image_decode_query_analytic_pins(spark, query, corpus):
+    """Every row of an image decode query must equal the analytic
+    expectation computed HERE from its corpus spec with exact rational
+    arithmetic (Fraction — independent of both the decode math and the
+    DuckDB oracle): channel means are integer half-sums, luma is the exact
+    (299r+587g+114b)/1000 rational, grid tiles equal their half's luma.
+    The corpora cover odd-width BMP row padding and the BGR→RGB +
+    bottom-up row order, all five PNG scanline filters (cycled per row),
+    and the GIF palette build, LZW code reconstruction and width growth;
+    a regression in any of them shifts pixels and breaks these pins."""
     from fractions import Fraction
 
     from datalake_breweries_two_spark import entry_queries as eq
 
-    got = {r["media_id"]: r for r in eq.QUERIES["q_bmp_decode"](spark, None).collect()}
+    got = {r["media_id"]: r for r in eq.QUERIES[query](spark, None).collect()}
     assert len(got) == 24
-    for i, w, h, top, bot in eq._bmp_corpus_spec():
-        luma1 = Fraction(299 * top[0] + 587 * top[1] + 114 * top[2], 1000)
-        luma2 = Fraction(299 * bot[0] + 587 * bot[1] + 114 * bot[2], 1000)
-        r = got[i]
-        assert (r["width"], r["height"]) == (w, h), i
-        for col, a, b in (("mean_r", top[0], bot[0]),
-                          ("mean_g", top[1], bot[1]),
-                          ("mean_b", top[2], bot[2])):
-            assert abs(r[col] - float(Fraction(a + b, 2))) < 1e-9, (i, col)
-        assert abs(r["brightness"] - float((luma1 + luma2) / 2)) < 1e-9, i
-        for col, want in (("tile0", luma1), ("tile1", luma1),
-                          ("tile2", luma2), ("tile3", luma2)):
-            assert abs(r[col] - float(want)) < 1e-9, (i, col)
-
-
-def test_png_decode_query_analytic_pins(spark):
-    """q_png_decode (r16 growth): every row of the declared query must
-    equal the analytic expectation computed HERE from the spec with
-    exact rational arithmetic (Fraction — independent of both the
-    decode math and the DuckDB oracle): channel means are integer
-    half-sums, luma is the exact (299r+587g+114b)/1000 rational, grid
-    tiles equal their half's luma. The corpus encodes with cycling
-    per-row filters, so a regression in ANY of the five scanline
-    reconstructions shifts pixels and breaks these pins."""
-    from fractions import Fraction
-
-    from datalake_breweries_two_spark import entry_queries as eq
-
-    got = {r["media_id"]: r for r in eq.QUERIES["q_png_decode"](spark, None).collect()}
-    assert len(got) == 24
-    for i, w, h, top, bot in eq._png_corpus_spec():
-        luma1 = Fraction(299 * top[0] + 587 * top[1] + 114 * top[2], 1000)
-        luma2 = Fraction(299 * bot[0] + 587 * bot[1] + 114 * bot[2], 1000)
-        r = got[i]
-        assert (r["width"], r["height"]) == (w, h), i
-        for col, a, b in (("mean_r", top[0], bot[0]),
-                          ("mean_g", top[1], bot[1]),
-                          ("mean_b", top[2], bot[2])):
-            assert abs(r[col] - float(Fraction(a + b, 2))) < 1e-9, (i, col)
-        assert abs(r["brightness"] - float((luma1 + luma2) / 2)) < 1e-9, i
-        for col, want in (("tile0", luma1), ("tile1", luma1),
-                          ("tile2", luma2), ("tile3", luma2)):
-            assert abs(r[col] - float(want)) < 1e-9, (i, col)
-
-
-def test_gif_decode_query_analytic_pins(spark):
-    """q_gif_decode (r16 growth #2): every row of the declared query must
-    equal the analytic expectation computed HERE from the spec with
-    exact rational arithmetic (Fraction — independent of both the
-    decode math and the DuckDB oracle). The two-tone corpus compresses
-    through the real LZW path, so a regression in palette build, code
-    reconstruction, or width growth shifts pixels and breaks these
-    pins."""
-    from fractions import Fraction
-
-    from datalake_breweries_two_spark import entry_queries as eq
-
-    got = {r["media_id"]: r for r in eq.QUERIES["q_gif_decode"](spark, None).collect()}
-    assert len(got) == 24
-    for i, w, h, top, bot in eq._gif_corpus_spec():
+    for i, w, h, top, bot in eq._image_corpus_spec(getattr(eq, corpus)):
         luma1 = Fraction(299 * top[0] + 587 * top[1] + 114 * top[2], 1000)
         luma2 = Fraction(299 * bot[0] + 587 * bot[1] + 114 * bot[2], 1000)
         r = got[i]

@@ -16,7 +16,7 @@ import pytest
 
 from datalake_breweries_two_spark.entry_queries import ORACLE_SQL, QUERIES
 
-from .conftest import SF_ORACLE
+from .conftest import SF_ORACLE, SF_SMOKE
 
 TABLE_NAMES = [
     "region", "nation", "customer", "supplier", "part",
@@ -263,3 +263,67 @@ def test_oracle_sql_avoids_divergent_regex_classes():
                 f"{name}: oracle SQL contains {banned!r} — spell the "
                 "class explicitly (see operators/text.py WS_RE)"
             )
+
+
+def _sql_surface() -> list[str]:
+    """The registry queries that run SQL text: their ``q_*`` body calls
+    ``entry_queries._sql``."""
+    import ast
+    import inspect
+
+    from datalake_breweries_two_spark import entry_queries
+
+    tree = ast.parse(inspect.getsource(entry_queries))
+    return [
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        and fn.name in QUERIES
+        and any(
+            isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_sql"
+            for n in ast.walk(fn)
+        )
+    ]
+
+
+SQL_SURFACE = _sql_surface()
+
+_PHYSICAL_VARIANTS = {
+    "shuffle_partitions_1": {"spark.sql.shuffle.partitions": "1"},
+    "shuffle_partitions_7": {"spark.sql.shuffle.partitions": "7"},
+    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+    "no_broadcast": {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+}
+
+
+def _surface_hash(spark, name):
+    sdf = QUERIES[name](spark, SF_SMOKE)
+    return _row_multiset([tuple(r) for r in sdf.collect()], sdf.columns)
+
+
+@pytest.fixture(scope="module")
+def surface_baseline(spark):
+    return {name: _surface_hash(spark, name) for name in SQL_SURFACE}
+
+
+@pytest.mark.parametrize("variant", sorted(_PHYSICAL_VARIANTS))
+def test_sql_surface_invariant_under_physical_confs(spark, surface_baseline, variant):
+    """Every SQL-surface query keeps its value hash at sf0.001 when a
+    physical choice changes: shuffle partitions 1 or 7, AQE off, or no
+    broadcast joins. Each conf set here is restored, also when a query
+    raises."""
+    assert len(SQL_SURFACE) == 31, SQL_SURFACE
+    confs = _PHYSICAL_VARIANTS[variant]
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        changed = [
+            name
+            for name in SQL_SURFACE
+            if _surface_hash(spark, name) != surface_baseline[name]
+        ]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert not changed, f"value hash changed under {confs}: {changed}"

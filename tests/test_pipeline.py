@@ -387,6 +387,35 @@ def test_tools_scripts_compile_and_resolve_package_imports():
     assert not unresolved, unresolved
 
 
+def test_no_spark_sql_literal_copies_an_oracle():
+    """A query whose SQL runs unchanged in Spark and DuckDB passes its
+    ``ORACLE_SQL`` entry to Spark instead of a second copy of the text. No
+    string literal passed to a call in ``entry_queries.py`` may equal an
+    oracle once whitespace, case and a ``_v`` view-name suffix are
+    normalised. Parses only; no query runs."""
+    import ast
+    import re
+
+    from datalake_breweries_two_spark import entry_queries
+
+    def norm(sql):
+        return " ".join(re.sub(r"\b(\w+)_v\b", r"\1", sql).lower().split())
+
+    oracles = {norm(sql): name for name, sql in entry_queries.ORACLE_SQL.items()}
+    with open(entry_queries.__file__, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    copies = [
+        (node.lineno, oracles[norm(arg.value)])
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        for arg in node.args
+        if isinstance(arg, ast.Constant)
+        and isinstance(arg.value, str)
+        and norm(arg.value) in oracles
+    ]
+    assert not copies, f"SQL literals that copy an oracle (line, oracle): {copies}"
+
+
 def test_cli_audit_accounting_matches_artifacts(capsys):
     """The `audit` verb must enumerate the registry exactly once, derive
     statuses only from CORRECTNESS_r*.json evidence, and exit 0 while no
