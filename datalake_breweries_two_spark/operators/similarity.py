@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from datalake_breweries_two_spark.operators.sampling import md5_60
 from datalake_breweries_two_spark.operators.semistructured import dot_product, vector_norm
+from datalake_breweries_two_spark.sources import lake
 
 
 def _cosine(a: Column, b: Column) -> Column:
@@ -410,17 +411,13 @@ def ivf_build_index(
       * ``{index_dir}/corpus`` — every vector with its nearest centroid,
         written ``partitionBy("centroid_id")`` so probe queries become
         partition-PRUNED scans (only n_probe/n_centroids of the files are
-        even listed);
+        even listed). It is a full-refresh write (:func:`lake.write_parquet`),
+        so a rebuild also drops the cells the new assignment left empty;
       * ``{index_dir}/centroids`` — the n_centroids seed vectors, read and
         ranked driver-side at query time (bounded).
     """
     assigned = ivf_assign(embeddings, n_centroids, id_col, vec_col)
-    (
-        assigned.repartition("centroid_id")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(f"{index_dir}/corpus")
-    )
+    lake.write_parquet(assigned, f"{index_dir}/corpus", partition_by=["centroid_id"])
     seeds = _seeds_df(embeddings, centroid_seeds(embeddings, n_centroids, id_col, vec_col))
     seeds.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
 

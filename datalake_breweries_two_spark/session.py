@@ -33,6 +33,15 @@ from datalake_breweries_two_spark import CHECKOUT_DIR
 # class on every run (one llm_corpus benchmark pass needs ~208).
 _CODEGEN_CACHE_ENTRIES = 8192
 
+# Stream checkpoints and state-store deltas go through Hadoop's FileContext
+# API, whose ``file`` scheme defaults to the checksummed local FS: it writes a
+# ``.crc`` sidecar beside every file and, without libhadoop, forks
+# ``/bin/chmod`` for each file it creates, sidecars included. The raw local FS
+# writes none. ``fs.file.impl`` (the FileSystem API, which lake writes use)
+# must stay the checksummed class: ``FileSystem.getLocal`` casts it to
+# ``LocalFileSystem``, and the RocksDB state store calls that.
+_LOCAL_ABSTRACT_FS_IMPL = "org.apache.hadoop.fs.local.RawLocalFs"
+
 _DEFAULT_APP = "datalake_breweries_two_spark"
 
 
@@ -154,6 +163,7 @@ def build_session(
         # source differs only in its name misses the cache above and is
         # compiled again on every run.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", _LOCAL_ABSTRACT_FS_IMPL)
         # Python workers import the package from the checkout whatever the
         # driver's cwd. This reaches local-mode workers and executors that
         # share the checkout's path; shipping the package to other hosts

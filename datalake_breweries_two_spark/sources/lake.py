@@ -6,8 +6,9 @@ Parity targets (SURVEY.md §2.1 S2/S3/S4, K1/K2/K3):
     schema inference (an extra full scan); here schemas are explicit.
   * Parquet scan — reference ``:323-324``.
   * Partitioned parquet write — reference ``:194-196`` (hive-partition by
-    state, full overwrite). Here ``partitionOverwriteMode=dynamic`` (set in
-    the session factory) makes re-runs replace only touched partitions.
+    state, full overwrite). Here one file per partition value, and
+    :func:`write_partitioned_dynamic` re-runs replace only touched
+    partitions.
   * Latest-object resolution — reference ``:202-225`` lists a bucket and
     takes max(last_modified); here the same driver-side listing against any
     Hadoop-compatible FS, with the caveat that a transaction log (Delta) is
@@ -48,6 +49,12 @@ def write_parquet(
     partition keys with bounded cardinality (state, date), never high-
     cardinality ids — millions of tiny dirs kill the FS at 100 TB.
 
+    A partitioned write first rebalances the rows by the partition columns
+    (:func:`_write_partitioned`), so each partition value lands in one file
+    (AQE splits only a skewed value into several) instead of one file per
+    input task per value: 4 input tasks over 40 states write 40 files, not
+    up to 160.
+
     Overwrite is pinned to STATIC partition-overwrite per write: this is
     the FULL-REFRESH path, so a partition absent from ``df`` must be
     dropped, not silently preserved — the session-level dynamic default
@@ -56,12 +63,10 @@ def write_parquet(
     value (exactly how a regenerated corpus once left a ghost partition
     in the medallion silver layer). Incremental writers use
     :func:`write_partitioned_dynamic` explicitly."""
-    writer = df.write.mode(mode)
     if partition_by:
-        writer = writer.option("partitionOverwriteMode", "static").partitionBy(
-            *partition_by
-        )
-    writer.parquet(path)
+        _write_partitioned(df, path, partition_by, mode, overwrite_mode="static")
+    else:
+        df.write.mode(mode).parquet(path)
 
 
 def write_partitioned_dynamic(df: DataFrame, path: str, partition_by: list[str]) -> None:
@@ -79,12 +84,28 @@ def write_partitioned_dynamic(df: DataFrame, path: str, partition_by: list[str])
     session) so concurrent full-overwrite writes keep their static
     semantics.
     """
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
+    _write_partitioned(df, path, partition_by, "overwrite", overwrite_mode="dynamic")
+
+
+def _write_partitioned(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str],
+    mode: str,
+    overwrite_mode: str | None = None,
+) -> None:
+    """The one hive-partitioned parquet write. The ``rebalance`` hint
+    shuffles rows by the partition columns before the writer splits them
+    into dirs, so a value's rows meet in one task and become one file;
+    with AQE on, small shuffle partitions coalesce and a skewed one splits
+    (Delta's "optimized write" shape). Without it every input task writes
+    its own file into every value dir it holds — tasks × values small
+    files, which at 100 TB is the small-files problem by construction.
+    ``overwrite_mode`` pins ``partitionOverwriteMode`` for this write."""
+    writer = df.hint("rebalance", *partition_by).write.mode(mode)
+    if overwrite_mode is not None:
+        writer = writer.option("partitionOverwriteMode", overwrite_mode)
+    writer.partitionBy(*partition_by).parquet(path)
 
 
 def write_bucketed(
@@ -440,10 +461,11 @@ def write_versioned(
     os.makedirs(root, exist_ok=True)
     cur = latest_table_version(root)
     nxt = f"v{(int(cur[1:]) if cur else 0) + 1:05d}"
-    writer = df.write.mode("error")
+    out = os.path.join(root, nxt)
     if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(os.path.join(root, nxt))
+        _write_partitioned(df, out, partition_by, "error")
+    else:
+        df.write.mode("error").parquet(out)
     _publish_version(root, nxt)
     return nxt
 
@@ -470,6 +492,8 @@ def compact_versioned(
     version are undisturbed; run :func:`vacuum_versions` once they drain."""
     import math
 
+    if target_rows_per_file < 1:
+        raise ValueError(f"target_rows_per_file must be >= 1, got {target_rows_per_file}")
     df = read_versioned(spark, root)
     n_rows = df.count()
     n_parts = max(1, math.ceil(n_rows / target_rows_per_file))
@@ -483,16 +507,19 @@ def compact_versioned(
 def vacuum_versions(root: str, keep: int = 2) -> list[str]:
     """Drop all but the ``keep`` newest version dirs (never the published
     one); returns the removed names. The retention window is the reader
-    drain time — Delta's VACUUM with the same contract."""
+    drain time — Delta's VACUUM with the same contract. ``keep`` < 1
+    raises ``ValueError``: a vacuum never removes the published version."""
     import re
     import shutil
 
+    if keep < 1:
+        raise ValueError(f"keep must be >= 1, got {keep}")
     current = latest_table_version(root)
     versions = sorted(
         d for d in os.listdir(root)
         if re.fullmatch(r"v\d{5}", d) and os.path.isdir(os.path.join(root, d))
     )
-    doomed = [v for v in versions[:-keep] if v != current] if keep else list(versions)
+    doomed = [v for v in versions[:-keep] if v != current]
     for v in doomed:
         shutil.rmtree(os.path.join(root, v))
     return doomed

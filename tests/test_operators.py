@@ -1903,6 +1903,22 @@ def test_ivf_search_recall_vs_bruteforce(spark, tmp_path):
     assert len(truth & got) >= 5
 
 
+def test_ivf_rebuild_drops_stale_centroid_partitions(spark, tmp_path):
+    """An index rebuild is a full refresh: rebuilding with fewer centroids
+    leaves only the new cells' partition dirs, each one file, and the
+    corpus holds every indexed vector once."""
+    emb = load_table(spark, "embeddings", SF_SMOKE)
+    index_dir = str(tmp_path / "ivf")
+    similarity.ivf_build_index(emb, index_dir, n_centroids=16)
+    similarity.ivf_build_index(emb, index_dir, n_centroids=4)
+    corpus = os.path.join(index_dir, "corpus")
+    cells = sorted(d for d in os.listdir(corpus) if d.startswith("centroid_id="))
+    assert 1 < len(cells) <= 4, cells
+    for d in cells:
+        assert len([f for f in os.listdir(os.path.join(corpus, d)) if f.endswith(".parquet")]) == 1
+    assert spark.read.parquet(corpus).count() == emb.filter(F.col("embedding").isNotNull()).count()
+
+
 def test_versioned_table_atomic_swap(spark, tmp_path):
     """Versioned writes publish atomically via the pointer file: old
     versions stay readable (time travel) until vacuumed, and compaction
@@ -1936,6 +1952,95 @@ def test_versioned_table_atomic_swap(spark, tmp_path):
     removed = vacuum_versions(root, keep=1)
     assert removed == ["v00001", "v00002"]
     assert read_versioned(spark, root).count() == 200
+
+
+@pytest.mark.parametrize("keep", [0, -1])
+def test_vacuum_versions_rejects_keep_below_one(spark, tmp_path, keep):
+    """``keep`` < 1 would drop the published version (``keep=0``) or slice
+    from the wrong end (negative): both raise, no version dir is removed,
+    and the table stays readable."""
+    root = str(tmp_path / "tbl")
+    lake.write_versioned(spark.range(10), root)
+    lake.write_versioned(spark.range(20), root)
+    with pytest.raises(ValueError, match="keep"):
+        lake.vacuum_versions(root, keep=keep)
+    assert sorted(d for d in os.listdir(root) if d.startswith("v")) == ["v00001", "v00002"]
+    assert lake.latest_table_version(root) == "v00002"
+    assert lake.read_versioned(spark, root).count() == 20
+
+
+@pytest.mark.parametrize("target", [0, -5])
+def test_compact_versioned_rejects_target_below_one(spark, tmp_path, target):
+    """A target of 0 rows per file used to raise ZeroDivisionError and a
+    negative one silently compacted to a single file; both are rejected
+    before any version is written."""
+    root = str(tmp_path / "tbl")
+    lake.write_versioned(spark.range(10), root)
+    with pytest.raises(ValueError, match="target_rows_per_file"):
+        lake.compact_versioned(spark, root, target_rows_per_file=target)
+    assert lake.latest_table_version(root) == "v00001"
+
+
+_PARTITIONED_WRITERS = {
+    "write_parquet": lambda df, path: lake.write_parquet(df, path, partition_by=["c_mktsegment"]),
+    "write_partitioned_dynamic": lambda df, path: lake.write_partitioned_dynamic(
+        df, path, ["c_mktsegment"]
+    ),
+    "write_versioned": lambda df, path: lake.write_versioned(
+        df, path, partition_by=["c_mktsegment"]
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_PARTITIONED_WRITERS))
+def test_partitioned_writers_one_file_per_value(spark, tmp_path, writer):
+    """Every partitioned lake writer writes one file per partition value,
+    not one per input task per value: a 4-partition frame whose tasks each
+    hold every segment still leaves exactly one parquet file in each
+    segment dir, with every row kept."""
+    df = load_table(spark, "customer", SF_SMOKE).repartition(4)
+    assert df.rdd.getNumPartitions() == 4
+    path = str(tmp_path / "t")
+    _PARTITIONED_WRITERS[writer](df, path)
+    out = os.path.join(path, lake.latest_table_version(path) or "")
+    dirs = sorted(d for d in os.listdir(out) if d.startswith("c_mktsegment="))
+    assert len(dirs) == df.select("c_mktsegment").distinct().count() > 1
+    for d in dirs:
+        files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    assert spark.read.parquet(out).count() == df.count()
+
+
+def test_stream_checkpoint_leaves_no_crc_sidecars(spark, tmp_path):
+    """Stream checkpoints and state-store deltas go through the raw local FS
+    of the FileContext API: a ``stream_upsert_versioned`` drive leaves no
+    Hadoop ``.<name>.crc`` sidecar in its checkpoint. Spark's own
+    state-file checksums (``1.delta.crc``,
+    ``spark.sql.streaming.checkpoint.fileChecksum.enabled``) are not FS
+    sidecars and stay."""
+    from datalake_breweries_two_spark.streaming.sinks import stream_upsert_versioned
+
+    df = spark.range(40).select((F.col("id") % 4).alias("k"), F.col("id").alias("v"))
+    src = str(tmp_path / "src")
+    df.write.parquet(src)
+    agg = spark.readStream.schema("k long, v long").parquet(src).groupBy("k").agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    ckpt_key = "spark.sql.streaming.checkpointLocation"
+    prev = spark.conf.get(ckpt_key, None)
+    spark.conf.set(ckpt_key, str(tmp_path / "ckpt"))
+    try:
+        stream_upsert_versioned(spark, agg, str(tmp_path / "upsert"), ["k"], "no_crc_upsert")
+    finally:
+        if prev is None:
+            spark.conf.unset(ckpt_key)
+        else:
+            spark.conf.set(ckpt_key, prev)
+    assert lake.read_versioned(spark, str(tmp_path / "upsert")).count() == 4
+
+    ckpt = tmp_path / "ckpt" / "no_crc_upsert"
+    assert (ckpt / "offsets").is_dir() and (ckpt / "state").is_dir()
+    assert [str(p) for p in ckpt.rglob(".*.crc")] == []
 
 
 @pytest.mark.parametrize("raises", [False, True], ids=["clean", "raising"])
