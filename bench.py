@@ -26,200 +26,14 @@ from datalake_breweries_two_spark.session import build_session
 # Hard budget for the final stdout JSON line (driver tail buffer is 2000).
 _MAX_LINE = 1800
 
-# Headline queries in run order, each with its quiet-host reference time:
-# the best time observed per query on a quiet host (sf0.1/local[32]),
-# read inside a full bench session rather than from a cold standalone run.
-# Used only as the stall-detection threshold in the timing loop below,
-# never as a reported number. Re-bases are ledgered in BASELINE.md.
+# Headline queries in registry order, each with its quiet-host reference
+# time (``ref_s`` on its ``@query``): the best time observed per query on a
+# quiet host (sf0.1/local[32]), read inside a full bench session rather
+# than from a cold standalone run. Used only as the stall-detection
+# threshold in the timing loop below, never as a reported number.
+# Re-bases are ledgered in BASELINE.md.
 HEADLINE = {
-    "q_gold_agg": 0.22,
-    "q_scan_parquet": 0.15,
-    "q_silver_projection": 0.14,
-    "q_quality_summary": 0.18,
-    "q_join_inner": 0.23,
-    "q_star_join": 0.83,
-    "q_topk": 0.15,
-    "q_window_rank": 0.13,
-    "q_window_running_sum": 0.14,
-    "q_rollup": 0.24,
-    "q_date_trunc_agg": 0.23,
-    "q_tumbling_window": 0.21,
-    "q_json_extract": 0.15,
-    "q_array_ops": 0.15,
-    "q_sql_tpch_q1": 0.25,
-    "q_sql_tpch_q3": 0.64,
-    "q_sql_tpch_q5": 0.78,
-    "q_sql_tpch_q6": 0.16,
-    "q_sql_tpch_q14": 0.23,
-    "q_sql_tpch_q18": 0.85,
-    "q_sql_tpch_q10": 0.6,
-    "q_sql_tpch_q22": 0.35,
-    "q_sql_tpch_q7": 0.57,
-    "q_sql_tpch_q19": 0.26,
-    "q_sql_tpch_q8": 0.51,
-    "q_sql_tpch_q13": 0.42,
-    "q_sql_tpch_q15": 0.53,
-    "q_sql_tpch_q17": 0.45,
-    "q_resample_ffill": 0.28,
-    "q_exists_subquery": 0.4,
-    "q_join_full": 0.33,
-    "q_window_lead_ntile": 0.16,
-    "q_asof_join": 0.2,
-    "q_range_join": 0.49,
-    "q_interval_join": 0.61,
-    "q_skew_join_salted": 1.51,
-    "q_grouping_sets": 0.26,
-    "q_sliding_window": 0.27,
-    "q_stats_agg": 0.26,
-    "q_percentiles": 0.14,
-    "q_merge_upsert": 0.43,
-    "q_versioned_compact_e2e": 0.73,
-    "q_dedup_exact": 0.22,
-    "q_dedup_clusters": 4.05,
-    "q_scd2": 0.12,
-    "q_dedup_near_verified": 3.10,
-    "q_dedup_near": 2.25,
-    "q_ngram_jaccard": 0.71,
-    "q_token_jaccard": 1.0,
-    "q_token_dedup_near": 3.19,
-    "q_token_dup_clusters": 1.0,
-    "q_quality_funnel": 0.55,
-    "q_bigram_logprob": 1.3,
-    "q_dedup_rate_report": 1.0,
-    "q_corpus_mix": 0.37,
-    "q_class_weights": 0.32,
-    "q_token_shards": 0.99,
-    "q_dup_ngram_fraction": 1.04,
-    "q_pmi_collocations": 0.86,
-    "q_asof_join_nearest": 0.39,
-    "q_incremental_ingest_dedup": 0.18,
-    "q_shared_span_pairs": 1.9,
-    "q_knn_join": 0.7,
-    "q_label_centroids": 0.5,
-    "q_ann_recall": 3.7,
-    "q_cosine_topk": 0.34,
-    "q_cosine_pairs": 0.28,
-    "q_ivf_search": 0.45,
-    "q_embedding_near_dup": 2.4,
-    "q_data_profile": 0.18,
-    "q_outliers_zscore": 0.46,
-    "q_incremental_agg": 0.37,
-    "q_text_stats": 0.19,
-    "q_text_quality": 0.17,
-    "q_tfidf": 0.98,
-    "q_word_count": 0.23,
-    "q_sessionize": 0.56,
-    "q_hash_split": 0.11,
-    "q_stratified_sample": 0.14,
-    "q_decontaminate": 1.46,
-    "q_pack_sequences": 0.32,
-    "q_repetition_stats": 0.35,
-    "q_boilerplate_ngrams": 0.92,
-    "q_pii_redact": 0.15,
-    "q_temperature_mix": 0.36,
-    "q_shard_order": 0.18,
-    "q_funnel": 0.25,
-    "q_cohort_retention": 0.43,
-    "q_pagerank": 3.75,
-    "q_moving_avg_time": 0.27,
-    "q_zorder_scan": 1.47,
-    "q_quantize_embeddings": 0.35,
-    "q_kmeans_1d": 1.17,
-    "q_chunk_documents": 0.21,
-    "q_hll_partitioned": 0.34,
-    "q_hll_union_portable": 0.57,
-    "q_kmv_overlap": 0.6,
-    "q_vocab_coverage": 1.04,
-    "q_rerank_topk": 0.90,
-    "q_contamination_by_source": 1.22,
-    "q_data_card": 0.43,
-    "q_shard_data_card": 1.70,
-    "q_streaming_contamination": 3.90,
-    "q_streaming_dq_gate": 3.05,
-    "q_kll_rollup_merge": 1.60,
-    "q_hll_rollup_merge": 1.88,
-    "q_wav_decode": 0.90,
-    "q_streaming_shard_progress": 3.60,
-    "q_bm25": 0.94,
-    "q_token_entropy": 0.25,
-    "q_weighted_sample": 0.19,
-    "q_partition_overwrite_dynamic": 0.9,
-    "q_streaming_upsert": 4.01,
-    "q_streaming_hll_upsert": 4.15,
-    "q_bmp_decode": 0.90,
-    "q_wav_decode_float": 0.90,
-    "q_png_decode": 0.85,
-    "q_gif_decode": 0.85,
-    "q_media_checksum": 0.3,
-    "q_media_features": 0.5,
-    "q_media_frame_sample": 0.45,
-    "q_bloom_filter": 0.65,
-    "q_minhash_signature": 0.36,
-    "q_equi_depth_bins": 0.22,
-    "q_winsorize": 0.26,
-    "q_impute_group_mean": 0.19,
-    "q_fuzzy_pairs": 0.29,
-    "q_training_pipeline_e2e": 0.4,
-    "q_lateral_topk_join": 1.15,
-    "q_map_ops": 0.33,
-    "q_weighted_sample_per_group": 0.24,
-    "q_gdpr_delete": 0.82,
-    "q_cdc_apply": 1.21,
-    "q_shuffle_hash_join": 0.64,
-    "q_time_travel": 0.74,
-    "q_exchange_reuse": 0.22,
-    "q_python_datasource": 0.73,
-    "q_python_datasource_stream": 2.81,
-    "q_nested_rollup": 0.42,
-    "q_interval_coalesce": 0.6,
-    "q_mode_agg": 0.33,
-    "q_variant_extract": 0.16,
-    "q_udtf_chunk": 1.20,
-    "q_mergeschema_scan": 0.59,
-    "q_session_window": 0.64,
-    "q_recursive_cte": 0.67,
-    "q_collated_distinct": 0.11,
-    "q_scan_xml": 0.5,
-    "q_pandas_api": 0.22,
-    "q_pit_lookup": 0.23,
-    "q_sql_tpch_q4": 0.9,
-    "q_sql_tpch_q12": 0.56,
-    "q_sql_tpch_q21": 1.56,
-    "q_corr_matrix": 0.21,
-    "q_linreg_by_group": 0.36,
-    "q_dq_audit": 1.18,
-    "q_spearman_corr": 0.52,
-    "q_event_transitions": 0.75,
-    "q_percent_of_total": 0.65,
-    "q_offset_pagination": 0.11,
-    "q_nulls_ordering": 0.11,
-    "q_group_by_all": 0.17,
-    "q_group_split": 0.18,
-    "q_balanced_sample": 0.3,
-    "q_rolling_active_users": 0.59,
-    "q_geo_radius_pairs": 0.79,
-    "q_skew_report": 0.28,
-    "q_partition_plan": 0.48,
-    "q_asof_join_forward": 0.16,
-    "q_window_ignore_nulls": 0.1,
-    "q_sql_tpch_q2": 1.05,
-    "q_sql_tpch_q9": 1.65,
-    "q_sql_tpch_q11": 1.26,
-    "q_sql_tpch_q16": 0.9,
-    "q_sql_tpch_q20": 0.65,
-    "q_mad": 0.67,
-    "q_gini": 0.5,
-    "q_benford": 0.38,
-    "q_zipf_slope": 0.93,
-    "q_ks_test": 1.29,
-    "q_chi_square": 0.3,
-    "q_psi": 1.72,
-    "q_incremental_join": 0.4,
-    "q_dedup_keep_latest": 0.32,
-    "q_top_percent": 0.75,
-    "q_sequence_gaps": 1.05,
-    "q_listagg": 0.23,
-    "q_histogram_2d": 0.32,
+    name: q.ref_s for name, q in entry_queries.REGISTRY.items() if q.ref_s is not None
 }
 
 # Quiet-host references for the noise canary below, measured r16 with the
@@ -308,8 +122,8 @@ def main() -> None:
     entry_queries.q_ivf_search(spark, sf_dir).count()
 
     # Iterative/multi-job queries have the widest inherent single-run
-    # variance (BASELINE.md measured ±30% run-to-run); they always get 3
-    # runs. Everything else is single-run UNLESS the first run looks
+    # variance (BASELINE.md measured ±30% run-to-run); their ``@query``
+    # tags them ``always_3`` and they always get 3 runs. Everything else is single-run UNLESS the first run looks
     # STALLED — cross-run diffing this round showed the host injects
     # random 1-5 s pauses into arbitrary queries (a 0.2 s query reading
     # 11 s in one run and 0.3 s in the next), which single-run timing
@@ -321,12 +135,6 @@ def main() -> None:
     # nothing trips the threshold and the loop stays single-pass; the
     # global retry budget bounds worst-case wall time on a pathological
     # host.
-    ALWAYS_3 = {
-        "q_dedup_clusters",
-        "q_pagerank",
-        "q_streaming_upsert",
-        "q_streaming_hll_upsert",
-    }
     STALL_RETRIES = 2
     retry_budget = 90  # total extra runs allowed across the suite
 
@@ -344,18 +152,18 @@ def main() -> None:
     timings: dict[str, float] = {}
     multi_runs: dict[str, list[float]] = {}
     for name in HEADLINE:
-        fn = entry_queries.QUERIES[name]
+        q = entry_queries.REGISTRY[name]
         runs: list[float] = []
-        max_runs = 3 if name in ALWAYS_3 else 1 + STALL_RETRIES
+        max_runs = 3 if q.always_3 else 1 + STALL_RETRIES
         while len(runs) < max_runs:
             # isolation: no cached plan from an earlier query may substitute
             # into this one (CacheManager matches canonicalized subplans,
             # which makes timings order-dependent)
             spark.catalog.clearCache()
             t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
+            q.fn(spark, sf_dir).count()
             runs.append(time.perf_counter() - t0)
-            if name in ALWAYS_3:
+            if q.always_3:
                 continue
             if not _stalled(name, min(runs)) or retry_budget <= 0:
                 break
@@ -380,18 +188,20 @@ def main() -> None:
         "sf": float(sf),
         "noise_canary": {"start": canary_start, "end": canary_end},
         "retry_budget_left": retry_budget,
-        # raw run lists for every query that ran more than once (ALWAYS_3
+        # raw run lists for every query that ran more than once (always_3
         # or stall-retried): min-of-runs alone cannot distinguish a caught
         # spike (20.4/4.1/4.0) from a sustained pause streak
         # (20.4/21.1/20.9) — the r16-s7 contamination forensic needed this
         "retried_runs": multi_runs,
     }
+    detail_path = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+    )
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json"), "w") as f:
+        with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
-    except OSError:
-        pass
+    except OSError as exc:
+        print(f"{detail_path}: detail write failed: {exc!r}", file=sys.stderr)
 
     # The driver records only the LAST ~2000 chars of stdout and parses the
     # final line as JSON — a line longer than that buffer gets its head

@@ -129,17 +129,23 @@ def cmd_audit(args: argparse.Namespace) -> int:
 
     # Waivers: a driver FAIL whose fix already landed but awaits its
     # re-check round stays visible in the table yet does not flip the
-    # exit code — ONLY when WAIVERS.json documents it with a reason.
-    waivers: dict[str, str] = {}
+    # exit code — ONLY when WAIVERS.json documents it with a reason. A
+    # missing file waives nothing; a file that cannot be read as a JSON
+    # object fails the audit rather than silently waiving nothing.
+    waivers_path = os.path.join(args.repo_dir, "WAIVERS.json")
     try:
-        with open(os.path.join(args.repo_dir, "WAIVERS.json")) as f:
+        with open(waivers_path) as f:
             raw = json.load(f)
-        if isinstance(raw, dict):
-            waivers = {
-                k: v for k, v in raw.items() if isinstance(v, str) and v.strip()
-            }
-    except (OSError, ValueError):
-        pass
+    except FileNotFoundError:
+        raw = {}
+    except (OSError, ValueError) as exc:
+        print(f"{waivers_path}: unreadable waivers: {exc!r}", file=sys.stderr)
+        return 2
+    if not isinstance(raw, dict):
+        print(f"{waivers_path}: waivers must be a JSON object, not "
+              f"{type(raw).__name__}", file=sys.stderr)
+        return 2
+    waivers = {k: v for k, v in raw.items() if isinstance(v, str) and v.strip()}
 
     oracles = set(entry_queries.ORACLE_SQL)
     label = {evidence.PASS: "pass", evidence.RAN: "ran", evidence.FAIL: "FAIL"}

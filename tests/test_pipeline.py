@@ -416,6 +416,83 @@ def test_no_spark_sql_literal_copies_an_oracle():
     assert not copies, f"SQL literals that copy an oracle (line, oracle): {copies}"
 
 
+def test_no_per_query_name_table_outside_the_registry():
+    """A query's facts live on its ``@query`` in ``entry_queries.py``. No
+    dict or set literal elsewhere in the package, ``bench.py``,
+    ``__spark_entry__.py``, ``tools/`` or ``tests/`` may name three or more
+    registered queries as keys or elements; lists (test parametrizations,
+    workload lists) stay allowed. Parses only; no query runs."""
+    import ast
+    import glob
+
+    from datalake_breweries_two_spark import entry_queries
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = set(entry_queries.QUERIES)
+    paths = [os.path.join(root, f) for f in ("bench.py", "__spark_entry__.py")]
+    for pattern in ("datalake_breweries_two_spark/**/*.py", "tools/*.py", "tests/*.py"):
+        paths += glob.glob(os.path.join(root, pattern), recursive=True)
+    tables = []
+    for path in paths:
+        if os.path.samefile(path, entry_queries.__file__):
+            continue
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        targets = {
+            id(node.value): ast.unparse(getattr(node, "target", None) or node.targets[0])
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Assign, ast.AnnAssign))
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Dict):
+                elts = node.keys
+            elif isinstance(node, ast.Set):
+                elts = node.elts
+            else:
+                continue
+            named = [e for e in elts if isinstance(e, ast.Constant) and e.value in names]
+            if len(named) >= 3:
+                where = f"{os.path.relpath(path, root)}:{node.lineno}"
+                tables.append(f"{where} {targets.get(id(node), '<literal>')}")
+    assert not tables, f"per-query name tables outside the registry: {tables}"
+
+
+def test_registry_import_deletes_no_scratch_dir():
+    """Importing the registry deletes nothing: a dead process's scratch dir
+    survives a reload of ``entry_queries``, and this process's first
+    scratch path sweeps it."""
+    import importlib
+    import shutil
+    import subprocess
+    import sys
+
+    from datalake_breweries_two_spark import entry_queries
+
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait()
+    planted = os.path.join(entry_queries._SCRATCH_ROOT, f"pid{dead.pid}")
+    os.makedirs(planted, exist_ok=True)
+    try:
+        reloaded = importlib.reload(entry_queries)
+        assert os.path.isdir(planted), "importing the registry swept scratch"
+        reloaded._scratch("probe")
+        assert not os.path.exists(planted), "the first scratch path did not sweep"
+    finally:
+        shutil.rmtree(planted, ignore_errors=True)
+
+
+@pytest.mark.parametrize("text", ["{not json", "[]"], ids=["malformed", "list"])
+def test_cli_audit_rejects_a_bad_waivers_file(tmp_path, capsys, text):
+    """A WAIVERS.json that is not a readable JSON object fails the audit
+    with a message naming the file, instead of silently waiving nothing."""
+    from datalake_breweries_two_spark.__main__ import main
+
+    path = tmp_path / "WAIVERS.json"
+    path.write_text(text)
+    assert main(["audit", "--repo-dir", str(tmp_path)]) == 2
+    assert str(path) in capsys.readouterr().err
+
+
 def test_cli_audit_accounting_matches_artifacts(capsys):
     """The `audit` verb must enumerate the registry exactly once, derive
     statuses only from CORRECTNESS_r*.json evidence, and exit 0 while no
