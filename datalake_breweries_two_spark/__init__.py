@@ -23,9 +23,9 @@ import os
 # the submodule imports, which read it.
 CHECKOUT_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-from datalake_breweries_two_spark.session import build_session, stop_session  # noqa: E402
+from datalake_breweries_two_spark.session import build_session  # noqa: E402
 from datalake_breweries_two_spark.catalog import TABLES, load_table, register_views  # noqa: E402
 
-__all__ = ["build_session", "stop_session", "TABLES", "load_table", "register_views"]
+__all__ = ["build_session", "TABLES", "load_table", "register_views"]
 
 __version__ = "0.1.0"

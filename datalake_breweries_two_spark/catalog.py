@@ -250,16 +250,13 @@ def _ts_layout_of_file(f: str) -> str:
     )
 
 
-def events_ts_layout(path: str, sample: int | None = None) -> str:
+def events_ts_layout(path: str) -> str:
     """Footer sniff over an events parquet file or directory: returns the
-    shared ts layout tag (see ``_ts_layout_of_file``). By DEFAULT every
-    part file is sniffed (footer reads are millisecond-cheap and a
-    directory can mix parts staged by different sessions — a sampled sniff
-    would silently misdecode an interleaved minority layout) and the sniff
-    raises on disagreement. Pass ``sample`` to bound the footer reads on
-    directories with thousands of parts — that trades the homogeneity
-    GUARANTEE for a spot check, so only do it for layouts a single writer
-    produced. Called once per query definition, not per partition."""
+    shared ts layout tag (see ``_ts_layout_of_file``). Every part file is
+    sniffed (footer reads are millisecond-cheap and a directory can mix
+    parts staged by different sessions — a sampled sniff would silently
+    misdecode an interleaved minority layout) and the sniff raises on
+    disagreement. Called once per query definition, not per partition."""
     import glob as _glob
 
     files = [path]
@@ -271,9 +268,6 @@ def events_ts_layout(path: str, sample: int | None = None) -> str:
         )
         if not files:
             return "native"
-    if sample is not None and len(files) > sample:
-        step = (len(files) - 1) / max(1, sample - 1)
-        files = [files[i] for i in sorted({round(k * step) for k in range(sample)})]
     layouts = {f: _ts_layout_of_file(f) for f in files}
     distinct = set(layouts.values())
     if len(distinct) > 1:

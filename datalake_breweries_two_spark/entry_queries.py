@@ -318,8 +318,7 @@ def q_filter_null_or_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 def q_exists_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 re-expressed deterministically: existence as a 1-row aggregate
-    (the imperative ``limit(1).count() > 0`` probe lives in
-    operators.quality.has_violations)."""
+    (the reference's imperative probe is ``limit(1).count() > 0``)."""
     return _t(spark, sf_dir, "customer").agg(
         (F.count(F.when(F.col("c_acctbal") < 0, 1)) > 0).cast("int").alias("exists_flag")
     )
@@ -3102,7 +3101,6 @@ def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum), and the rounded cosine rescore are all bit-deterministic, so
     DuckDB recomputes the whole index + probe inline."""
     import hashlib
-    import os
     import tempfile
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -5092,8 +5090,6 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals; after the stream drains, the published table state must equal
     a batch recompute — which is exactly what the oracle checks, making
     this the rare STREAMING query with a full SQL oracle."""
-    import shutil
-
     from datalake_breweries_two_spark.catalog import read_events
     from datalake_breweries_two_spark.streaming.sinks import stream_upsert_versioned
 
@@ -5423,8 +5419,6 @@ def q_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete pass (new atomic version; prior version intact for audit),
     then aggregate the published table. Full oracle = declarative
     recompute over the surviving users."""
-    import shutil
-
     root = _scratch("gdpr_table")
     shutil.rmtree(root, ignore_errors=True)
     per_user = (
@@ -5547,8 +5541,6 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     PIN while v2 is current — the audit/reproducibility read Delta calls
     time travel, on plain parquet + atomic pointer. Full oracle = v1's
     declarative recompute (proving v2's publish never mutated v1)."""
-    import shutil
-
     root = _scratch("time_travel_table")
     shutil.rmtree(root, ignore_errors=True)
     per_status = (
@@ -9572,8 +9564,6 @@ def q_streaming_hll_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-on-read, estimate, and both physical-coverage integers —
     hash-checks end to end. Streaming state is bounded by
     |types| × |days| × 256 registers, never by key cardinality."""
-    import shutil
-
     from datalake_breweries_two_spark.catalog import read_events
 
     root = _scratch("stream_hll_register_table")

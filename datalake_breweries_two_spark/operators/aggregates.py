@@ -123,13 +123,13 @@ def tumbling_window_agg(
     )
 
 
-def two_level_agg(df: DataFrame, key: str, value_col: str, salt_buckets: int = 32) -> DataFrame:
+def two_level_agg(df: DataFrame, key: str, value_col: str) -> DataFrame:
     """Skew-resistant aggregation: salt the key, partial-agg on (key, salt),
     then final-agg on key. Use when one key holds >~1% of 100 TB and AQE's
     skew split is not enough (e.g. a null-heavy join key). Two shuffles, but
     the first moves salted partials, never the raw hot partition.
     """
-    salted = df.withColumn("_salt", (F.rand(seed=42) * salt_buckets).cast("int"))
+    salted = df.withColumn("_salt", (F.rand(seed=42) * 32).cast("int"))
     partial = salted.groupBy(F.col(key), F.col("_salt")).agg(
         F.count(F.lit(1)).alias("_cnt"),
         F.sum(F.col(value_col).cast("decimal(18,4)")).alias("_sum"),
@@ -174,9 +174,7 @@ def group_mode(
     )
 
 
-def zscore_outliers(
-    df: DataFrame, group_col: str, value_col: str, id_col: str, z_threshold: float = 3.0
-) -> DataFrame:
+def zscore_outliers(df: DataFrame, group_col: str, value_col: str, id_col: str) -> DataFrame:
     """Per-group z-score outliers. Group stats are ROUNDED before the
     z computation so the z-scores (and the threshold filter) are a
     deterministic function of exact inputs — the cross-engine-stable way
@@ -200,7 +198,7 @@ def zscore_outliers(
     )
     return (
         joined.select(F.col(id_col), F.col(group_col), z.alias("z"))
-        .filter(F.abs(F.col("z")) >= z_threshold)
+        .filter(F.abs(F.col("z")) >= 3.0)
     )
 
 

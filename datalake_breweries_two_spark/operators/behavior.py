@@ -16,14 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_USER_ID = "user_id"
+_TS = "ts"
+_EVENT_TYPE = "event_type"
+
 
 def funnel_stages(
     events: DataFrame,
     steps: tuple[str, ...] = ("view", "click", "purchase"),
     within_minutes: int = 60,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Anchored funnel: per user, the FIRST ``steps[0]`` event, then for
     each later step the earliest matching event strictly after the previous
@@ -37,27 +38,27 @@ def funnel_stages(
     """
     interval = F.expr(f"INTERVAL {int(within_minutes)} MINUTES")
     cur = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias(f"t_{steps[0]}"))
+        events.filter(F.col(_EVENT_TYPE) == steps[0])
+        .groupBy(_USER_ID)
+        .agg(F.min(_TS).alias(f"t_{steps[0]}"))
     )
     prev_cols = [f"t_{steps[0]}"]
     for step in steps[1:]:
         # both sides descend from the same events scan — rename the probe
         # side's columns so the join condition relates distinct attributes
-        nxt = events.filter(F.col(type_col) == step).select(
-            F.col(user_col).alias("_uid"), F.col(ts_col).alias("_ts")
+        nxt = events.filter(F.col(_EVENT_TYPE) == step).select(
+            F.col(_USER_ID).alias("_uid"), F.col(_TS).alias("_ts")
         )
         prev_t = F.col(prev_cols[-1])
         cur = (
             cur.join(
                 nxt,
-                (F.col(user_col) == F.col("_uid"))
+                (F.col(_USER_ID) == F.col("_uid"))
                 & (F.col("_ts") > prev_t)
                 & (F.col("_ts") <= prev_t + interval),
                 "left",
             )
-            .groupBy(user_col, *prev_cols)
+            .groupBy(_USER_ID, *prev_cols)
             .agg(F.min("_ts").alias(f"t_{step}"))
         )
         prev_cols.append(f"t_{step}")
@@ -66,15 +67,11 @@ def funnel_stages(
         F.lit(1),
     )
     return cur.select(
-        F.col(user_col), *prev_cols, depth.cast("long").alias("stage_depth")
+        F.col(_USER_ID), *prev_cols, depth.cast("long").alias("stage_depth")
     )
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Daily cohort retention triangle: users grouped by first-seen day,
     counted per day-offset of later activity.
 
@@ -94,10 +91,10 @@ def cohort_retention(
     ``collect_set`` silently drops NULL elements, so the NULL day rides
     a separate has-null flag and is re-appended before the explode.
     """
-    day = F.to_date(F.col(ts_col))
+    day = F.to_date(F.col(_TS))
     per_user = (
-        events.filter(F.col(user_col).isNotNull())
-        .groupBy(user_col)
+        events.filter(F.col(_USER_ID).isNotNull())
+        .groupBy(_USER_ID)
         .agg(
             F.collect_set(day).alias("days"),
             F.max(F.when(day.isNull(), 1).otherwise(0)).alias("has_null_day"),

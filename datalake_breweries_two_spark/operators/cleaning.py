@@ -64,16 +64,9 @@ def equi_depth_bins(
     )
 
 
-def winsorize(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    id_col: str,
-    p_lo: float = 0.05,
-    p_hi: float = 0.95,
-) -> DataFrame:
+def winsorize(df: DataFrame, group_col: str, value_col: str, id_col: str) -> DataFrame:
     """Per-group winsorization: clamp values outside the group's
-    [p_lo, p_hi] exact quantiles — outlier damping that preserves row
+    [0.05, 0.95] exact quantiles — outlier damping that preserves row
     count (unlike the z-score FILTER in aggregates.zscore_outliers).
 
     One groupBy aggregate produces (lo, hi) per group — discrete
@@ -84,10 +77,10 @@ def winsorize(
     """
     bounds = df.groupBy(group_col).agg(
         F.expr(
-            f"percentile_disc({p_lo!r}) WITHIN GROUP (ORDER BY {value_col})"
+            f"percentile_disc(0.05) WITHIN GROUP (ORDER BY {value_col})"
         ).alias("_lo"),
         F.expr(
-            f"percentile_disc({p_hi!r}) WITHIN GROUP (ORDER BY {value_col})"
+            f"percentile_disc(0.95) WITHIN GROUP (ORDER BY {value_col})"
         ).alias("_hi"),
     )
     clamped = F.least(F.greatest(F.col(value_col), F.col("_lo")), F.col("_hi"))

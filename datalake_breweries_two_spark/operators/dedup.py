@@ -32,12 +32,17 @@ from pyspark.sql import functions as F
 from datalake_breweries_two_spark.operators.sampling import md5_60
 from datalake_breweries_two_spark.operators.text import WS_RE
 
+_TEXT = "text"
+_DOC_ID = "doc_id"
+_BAND_OCCUPANCY = 16  # auto_band_rows' expected threshold collisions per doc
+_BAND_ROWS_LO = 4  # auto_band_rows' narrowest band
+_CC_MAX_ITER = 25  # connected_components' label-propagation rounds
 
 # --------------------------------------------------------------------------
 # 1. Exact dedup
 # --------------------------------------------------------------------------
 
-def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact dedup: keep the min-id representative per distinct text.
 
     GroupBy on md5(text) so the shuffle key is a 32-char hash, not the
@@ -45,11 +50,11 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     document size. Returns (fingerprint, keep_id, dup_count).
     """
     return (
-        docs.select(F.md5(F.col(text_col)).alias("fingerprint"), F.col(id_col))
+        docs.select(F.md5(F.col(_TEXT)).alias("fingerprint"), F.col(_DOC_ID))
         .groupBy("fingerprint")
         .agg(
-            F.min(F.col(id_col)).alias("keep_id"),
-            F.count(F.col(id_col)).alias("dup_count"),
+            F.min(F.col(_DOC_ID)).alias("keep_id"),
+            F.count(F.col(_DOC_ID)).alias("dup_count"),
         )
     )
 
@@ -353,9 +358,7 @@ def _minhash_signature_expr(num_hashes: int) -> Column:
     return F.expr(f"array({sig_list}) AS signature")
 
 
-def minhash_signatures_portable(
-    shingled: DataFrame, num_hashes: int = 8, id_col: str = "doc_id"
-) -> DataFrame:
+def minhash_signatures_portable(shingled: DataFrame, num_hashes: int = 8) -> DataFrame:
     """MinHash signature ROWS (id, seed, minhash) from exploded
     ``(id, shingle)`` rows, one md5 per (shingle, seed).
 
@@ -371,31 +374,14 @@ def minhash_signatures_portable(
     then a partial-aggregated min keyed on (id, seed) — the shuffle
     carries docs × num_hashes rows, never per-shingle rows."""
     seeded = shingled.select(
-        F.col(id_col),
+        F.col(_DOC_ID),
         F.col("shingle"),
         F.explode(
             F.array(*[F.lit(s) for s in range(num_hashes)])
         ).alias("seed"),
     )
     h = md5_60(F.concat_ws(":", F.col("shingle"), F.col("seed")))
-    return seeded.groupBy(id_col, "seed").agg(F.min(h).alias("minhash"))
-
-
-def observed_metrics(obs: Observation, *names: str) -> dict:
-    """Fetch an ``Observation``'s metrics robustly.
-
-    ``Observation.get`` deserializes the metrics row via ``toPyRow``, which
-    asserts a schema-carrying row — but when AQE re-plans an aggregate
-    DOWNSTREAM of the CollectMetrics node (e.g. the ``distinct()`` tail of
-    ``lsh_candidate_pairs``), Spark 4.1 hands back a schema-less
-    GenericRow and the assert trips. Fall back to positional access in
-    observe-expression order (CollectMetrics preserves it).
-    """
-    try:
-        return dict(obs.get)
-    except Exception:
-        jrow = obs._jo.getRow()
-        return {n: jrow.get(i) for i, n in enumerate(names)}
+    return seeded.groupBy(_DOC_ID, "seed").agg(F.min(h).alias("minhash"))
 
 
 def _observe_dropped_sentinels(
@@ -430,13 +416,7 @@ def _observe_dropped_sentinels(
     return observed.filter(F.col(size_col).isNull()).drop(size_col)
 
 
-def auto_band_rows(
-    n_docs: int,
-    threshold: float = 0.5,
-    target_occupancy: int = 16,
-    lo: int = 4,
-    hi: int = 12,
-) -> int:
+def auto_band_rows(n_docs: int, threshold: float = 0.5) -> int:
     """Corpus-sized LSH band width (rows per band) — the minhash twin of
     :func:`similarity.auto_signature_planes`.
 
@@ -444,16 +424,16 @@ def auto_band_rows(
     in a band with probability j^r, so with r constant the candidate
     volume from the sub-threshold similarity tail grows quadratically
     with corpus size while true output grows linearly. Sizing r so that
-    ``n · threshold^r ≤ target_occupancy`` — i.e.
-    ``r = ceil(ln(n/occupancy) / ln(1/threshold))`` — bounds the
-    EXPECTED threshold-level collisions per document to ~occupancy even
-    in the worst case where every other document sits exactly at the
-    threshold. Clamped to [lo, hi]: below lo the S-curve is too flat to
-    discriminate, above hi signature-build cost (num_hashes = bands·r
-    min columns per shingle) dominates while the j≤threshold tail is
-    already suppressed ≥ 2^hi/2^lo ≈ 256x, and the ``max_bucket`` cap +
-    dropped-bucket Observation remain the backstop for adversarial
-    buckets. The hi clamp also keeps bands·r within the minhash family's
+    ``n · threshold^r ≤ 16`` — i.e.
+    ``r = ceil(ln(n/16) / ln(1/threshold))`` — bounds the EXPECTED
+    threshold-level collisions per document to ~16 even in the worst
+    case where every other document sits exactly at the threshold.
+    Clamped to [4, 12]: below 4 the S-curve is too flat to discriminate,
+    above 12 signature-build cost (num_hashes = bands·r min columns per
+    shingle) dominates while the j≤threshold tail is already suppressed
+    ≥ 2^12/2^4 = 256x, and the ``max_bucket`` cap + dropped-bucket
+    Observation remain the backstop for adversarial buckets. The upper
+    clamp also keeps bands·r within the minhash family's
     224-seed bound for both entry points' default ``bands``.
 
     The honest trade (inherent to banded LSH, not this sizing): with
@@ -466,11 +446,11 @@ def auto_band_rows(
     import math
 
     if threshold <= 0.0 or threshold >= 1.0:
-        return lo
-    if n_docs <= target_occupancy:
-        return lo
-    r = math.ceil(math.log(n_docs / target_occupancy) / math.log(1.0 / threshold))
-    return max(lo, min(hi, r))
+        return _BAND_ROWS_LO
+    if n_docs <= _BAND_OCCUPANCY:
+        return _BAND_ROWS_LO
+    r = math.ceil(math.log(n_docs / _BAND_OCCUPANCY) / math.log(1.0 / threshold))
+    return max(_BAND_ROWS_LO, min(12, r))
 
 
 def lsh_candidate_pairs(
@@ -498,10 +478,10 @@ def lsh_candidate_pairs(
     Recall accounting: dropped buckets silently erode recall.
     Pass a ``pyspark.sql.Observation`` as ``dropped_obs`` and, after the
     query's action runs, read ``dropped_buckets`` (over-cap bucket count)
-    and ``dropped_ids`` (their total member rows) via
-    :func:`observed_metrics` — the metrics ride the same job (the bucket
-    aggregate's exchange is reused for the sentinel branch), so a
-    production run can alert on recall erosion at zero extra passes.
+    and ``dropped_ids`` (their total member rows) from it — the metrics
+    ride the same job (the bucket aggregate's exchange is reused for the
+    sentinel branch), so a production run can alert on recall erosion at
+    zero extra passes.
     """
     # One F.expr string for the whole banded explode (same py4j-chatter
     # economics as the minhash min columns above)
@@ -567,9 +547,6 @@ def lsh_candidate_pairs(
 
 def minhash_near_duplicates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     num_hashes: int | None = None,
     bands: int = 16,
     threshold: float = 0.5,
@@ -597,7 +574,7 @@ def minhash_near_duplicates(
     """
     if num_hashes is None:
         num_hashes = bands * auto_band_rows(docs.count(), threshold)
-    shingled = shingle_docs_exploded(docs, text_col, id_col, shingle_n, tokenizer)
+    shingled = shingle_docs_exploded(docs, _TEXT, _DOC_ID, 3, tokenizer)
     # The signature table feeds THREE consumers (banding + both sides of the
     # verify join). _stage materializes it ONCE and truncates lineage
     # WITHOUT registering a CacheManager entry — a leaked .persist() here
@@ -607,11 +584,11 @@ def minhash_near_duplicates(
     # signature/candidate intermediates live in a parquet stage instead of
     # executor heap — same contract, durable, zero heap residency.
     sigs = _stage(
-        minhash_signatures(shingled, num_hashes, id_col),
+        minhash_signatures(shingled, num_hashes, _DOC_ID),
         "minhash_sigs",
     )
     cands = _stage(
-        lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col),
+        lsh_candidate_pairs(sigs, bands, num_hashes // bands, _DOC_ID),
         "lsh_cands",
     )
     # same candidate-id pruning as near_duplicates_verified: the
@@ -619,14 +596,14 @@ def minhash_near_duplicates(
     # corpus scale; prune it to candidate ids (bare-long lists) before
     # the verify attach so only candidate signatures ever move
     sa = (
-        sigs.join(cands.select(F.col("id_a").alias(id_col)).distinct(),
-                  id_col, "leftsemi")
-        .select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a"))
+        sigs.join(cands.select(F.col("id_a").alias(_DOC_ID)).distinct(),
+                  _DOC_ID, "leftsemi")
+        .select(F.col(_DOC_ID).alias("id_a"), F.col("signature").alias("sig_a"))
     )
     sb = (
-        sigs.join(cands.select(F.col("id_b").alias(id_col)).distinct(),
-                  id_col, "leftsemi")
-        .select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
+        sigs.join(cands.select(F.col("id_b").alias(_DOC_ID)).distinct(),
+                  _DOC_ID, "leftsemi")
+        .select(F.col(_DOC_ID).alias("id_b"), F.col("signature").alias("sig_b"))
     )
     # signature agreement unrolled to num_hashes codegen'd positional
     # comparisons — zip_with/filter lambdas are interpreted per-row, the
@@ -711,10 +688,7 @@ def simhash(
 
 def simhash_near_duplicates(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
-    bucket_cap: int = 256,
     tokenizer: str = "whitespace",
 ) -> DataFrame:
     """Candidate pairs by disjoint-block bucketing, verified by exact
@@ -725,17 +699,17 @@ def simhash_near_duplicates(
     EXACTLY on at least one whole block — full recall at the requested
     radius (a fixed 4×16-bit split only guarantees distance ≤ 3). The cost
     trade: larger ``max_hamming`` → narrower blocks → more bucket
-    collisions → more candidates to verify; buckets above ``bucket_cap``
-    ids are dropped (degenerate-content guard, same policy as
+    collisions → more candidates to verify; buckets above 256 ids are
+    dropped (degenerate-content guard, same policy as
     :func:`lsh_candidate_pairs`). At 100 TB keep the radius small or use
     multi-block probe combinations. Shuffle on (block_idx, block_value);
     quadratic expansion happens only inside capped buckets.
     """
     n_blocks = max_hamming + 1
     offsets, widths = simhash_block_layout(SIMHASH_BITS, n_blocks)
-    sh = simhash(docs, text_col, id_col, tokenizer=tokenizer)
+    sh = simhash(docs, _TEXT, _DOC_ID, tokenizer=tokenizer)
     blocks = sh.select(
-        F.col(id_col),
+        F.col(_DOC_ID),
         F.col("simhash"),
         F.explode(
             F.array(
@@ -750,19 +724,19 @@ def simhash_near_duplicates(
                 ]
             )
         ).alias("b"),
-    ).select(F.col(id_col), F.col("simhash"), F.col("b.blk"), F.col("b.val"))
+    ).select(F.col(_DOC_ID), F.col("simhash"), F.col("b.blk"), F.col("b.val"))
     # Same hot-bucket safety as lsh_candidate_pairs: count block sizes on
     # the (blk, val) window and drop over-cap blocks BEFORE collect_set,
     # so a degenerate block never materializes its full member array.
     w_blk = Window.partitionBy("blk", "val")
     sized = blocks.withColumn("_n", F.count(F.lit(1)).over(w_blk))
     grouped = (
-        sized.filter(F.col("_n") <= bucket_cap)
+        sized.filter(F.col("_n") <= 256)
         .groupBy("blk", "val")
         .agg(
             F.sort_array(
                 F.collect_set(
-                    F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh"))
+                    F.struct(F.col(_DOC_ID).alias("id"), F.col("simhash").alias("sh"))
                 )
             ).alias("members")
         )
@@ -802,8 +776,6 @@ def simhash_near_duplicates(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
     tokenizer: str = "whitespace",
@@ -826,14 +798,14 @@ def ngram_jaccard_pairs(
     # distinct-aggregate pair plus a second Sort+Window pass (see its
     # docstring; −13% measured on this pipeline at sf0.1).
     exploded = _stage(
-        shingle_sets_with_size(docs, text_col, id_col, n, tokenizer),
+        shingle_sets_with_size(docs, _TEXT, _DOC_ID, n, tokenizer),
         "jaccard_shingles",
     )
     a = exploded.select(
-        F.col(id_col).alias("id_a"), F.col("set_size").alias("sz_a"), "shingle"
+        F.col(_DOC_ID).alias("id_a"), F.col("set_size").alias("sz_a"), "shingle"
     )
     b = exploded.select(
-        F.col(id_col).alias("id_b"), F.col("set_size").alias("sz_b"), "shingle"
+        F.col(_DOC_ID).alias("id_b"), F.col("set_size").alias("sz_b"), "shingle"
     )
     inter = (
         a.join(b, "shingle")
@@ -853,8 +825,6 @@ def ngram_jaccard_pairs(
 
 def near_duplicates_verified(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 3,
     num_hashes: int | None = None,
     bands: int = 8,
@@ -897,8 +867,8 @@ def near_duplicates_verified(
     # plans/r16/q_dedup_near_verified_{arrs,sigs}_before vs
     # _combined_after.txt.
     combined = _stage(
-        _shingled_rows(docs, text_col, id_col, shingle_n, tokenizer)
-        .groupBy(id_col)
+        _shingled_rows(docs, _TEXT, _DOC_ID, shingle_n, tokenizer)
+        .groupBy(_DOC_ID)
         .agg(
             F.collect_set(F.col("shingle")).alias("shingles"),
             *_minhash_min_exprs(num_hashes),
@@ -907,14 +877,14 @@ def near_duplicates_verified(
     )
     # (id, shingle-set array) — the array form lets the verify tier be a
     # per-pair array_intersect instead of a shingle self-join
-    arrs = combined.select(F.col(id_col), F.col("shingles"))
-    sigs = combined.select(F.col(id_col), _minhash_signature_expr(num_hashes))
+    arrs = combined.select(F.col(_DOC_ID), F.col("shingles"))
+    sigs = combined.select(F.col(_DOC_ID), _minhash_signature_expr(num_hashes))
     # _stage: the candidate set feeds THREE consumers below (two id-list
     # prunes + the verify chain); it is candidate-bounded (small), and the
     # accurate post-materialization stats keep AQE building the verify
     # joins on the candidate side.
     cands = _stage(
-        lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col),
+        lsh_candidate_pairs(sigs, bands, num_hashes // bands, _DOC_ID),
         "verified_cands",
     )
     # Found in the sf1→sf10 study: without the pruning below,
@@ -927,14 +897,14 @@ def near_duplicates_verified(
     # the point arrays are; AQE falls back to SMJ beyond that), and the
     # attach joins then move candidate-bounded relations at any scale.
     a = (
-        arrs.join(cands.select(F.col("id_a").alias(id_col)).distinct(),
-                  id_col, "leftsemi")
-        .select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
+        arrs.join(cands.select(F.col("id_a").alias(_DOC_ID)).distinct(),
+                  _DOC_ID, "leftsemi")
+        .select(F.col(_DOC_ID).alias("id_a"), F.col("shingles").alias("sh_a"))
     )
     b = (
-        arrs.join(cands.select(F.col("id_b").alias(id_col)).distinct(),
-                  id_col, "leftsemi")
-        .select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+        arrs.join(cands.select(F.col("id_b").alias(_DOC_ID)).distinct(),
+                  _DOC_ID, "leftsemi")
+        .select(F.col(_DOC_ID).alias("id_b"), F.col("shingles").alias("sh_b"))
     )
     # hint("shuffle_hash"): the attach joins must NEVER broadcast the array
     # side — post-semi-join size estimates are unreliable (the sf10 study
@@ -961,7 +931,7 @@ def near_duplicates_verified(
 
 
 def connected_components(
-    edges: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 25
+    edges: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
     """Connected components over an undirected edge list — the near-dup
     pair graph → duplicate clusters (each doc labeled with its cluster's
@@ -1003,7 +973,7 @@ def connected_components(
         nodes.select(F.col("id").alias("s"), F.col("id").alias("d"))
     ).localCheckpoint(eager=True)
     n_changed = 0
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ITER):
         updated = (
             sym.join(nodes, sym["d"] == nodes["id"])
             .groupBy("s")
@@ -1031,9 +1001,9 @@ def connected_components(
         # labels are still propagating — returning now would silently
         # mislabel long-path components
         raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            f"iterations ({n_changed} labels still changing); raise max_iter "
-            "(iterations ~ longest path in a component)"
+            f"connected_components did not converge within {_CC_MAX_ITER} "
+            f"iterations ({n_changed} labels still changing; iterations ~ "
+            "longest path in a component)"
         )
     return nodes
 
@@ -1100,7 +1070,6 @@ def fuzzy_blocked_pairs(
     df: DataFrame,
     name_col: str,
     id_col: str,
-    block_expr: Column | None = None,
     max_distance: int = 4,
     block_cap: int = 256,
     dropped_obs: "Observation | None" = None,
@@ -1108,8 +1077,8 @@ def fuzzy_blocked_pairs(
     """Entity-resolution candidate pairs: names within ``max_distance``
     Levenshtein edits, found WITHOUT a quadratic corpus self-join.
 
-    Rows are blocked (default: last whitespace token of the name — the
-    head noun for product-style names); only within-block pairs are
+    Rows are blocked on the last whitespace token of the name (the head
+    noun for product-style names); only within-block pairs are
     scored, so the join is a plain equi-join on the block key and the
     pairwise Levenshtein runs on candidate pairs only. Blocks larger than
     ``block_cap`` are dropped (degenerate-key guard, same policy as
@@ -1121,12 +1090,8 @@ def fuzzy_blocked_pairs(
     soundex) when the match rules require it. Levenshtein is evaluated
     JVM-side (Catalyst expression, codegen) — no Python.
     """
-    block = block_expr if block_expr is not None else F.element_at(
-        F.split(F.col(name_col), WS_RE), -1
-    )
-    keyed = df.select(
-        F.col(id_col), F.col(name_col), block.alias("_blk")
-    )
+    block = F.element_at(F.split(F.col(name_col), WS_RE), -1)
+    keyed = df.select(F.col(id_col), F.col(name_col), block.alias("_blk"))
     sizes = keyed.groupBy("_blk").agg(F.count(F.lit(1)).alias("_n"))
     bounded = keyed.join(
         F.broadcast(sizes.filter(F.col("_n") <= block_cap).select("_blk")), "_blk"
@@ -1169,9 +1134,6 @@ def shared_span_pairs(
     docs: DataFrame,
     span_tokens: int = 8,
     max_span_docs: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    tokenizer: str = "bpe",
 ) -> DataFrame:
     """Document pairs sharing at least one EXACT ``span_tokens``-token
     span, with the count of distinct shared spans — the pairwise form of
@@ -1202,30 +1164,30 @@ def shared_span_pairs(
 
     Reference parity: no dedup surface in the reference (LLM-pipeline
     extension, SURVEY.md §2.2)."""
-    tokens = _tokens_expr(text_col, tokenizer)
-    ex = docs.select(F.col(id_col), F.posexplode(tokens).alias("pos", "token"))
-    w = Window.partitionBy(id_col).orderBy("pos")
+    tokens = _tokens_expr(_TEXT, "bpe")
+    ex = docs.select(F.col(_DOC_ID), F.posexplode(tokens).alias("pos", "token"))
+    w = Window.partitionBy(_DOC_ID).orderBy("pos")
     leads = [F.col("token")] + [
         F.lead("token", i).over(w) for i in range(1, span_tokens)
     ]
     spans = (
         ex.select(
-            F.col(id_col),
+            F.col(_DOC_ID),
             F.concat_ws(" ", *leads).alias("span"),
             leads[-1].isNotNull().alias("_full"),
         )
         .filter(F.col("_full"))
-        .select(F.col(id_col), "span")
+        .select(F.col(_DOC_ID), "span")
         .distinct()
     )
     w_span = Window.partitionBy("span")
     kept = (
         spans.withColumn("_ndocs", F.count(F.lit(1)).over(w_span))
         .filter(F.col("_ndocs") <= max_span_docs)
-        .select(F.col(id_col), "span")
+        .select(F.col(_DOC_ID), "span")
     )
-    a = kept.select(F.col(id_col).alias("id_a"), "span")
-    b = kept.select(F.col(id_col).alias("id_b"), "span")
+    a = kept.select(F.col(_DOC_ID).alias("id_a"), "span")
+    b = kept.select(F.col(_DOC_ID).alias("id_b"), "span")
     return (
         a.join(b, "span")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1240,8 +1202,6 @@ def contamination_by_group(
     group_col: str = "source",
     n: int = 3,
     threshold: float = 0.1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-domain contamination-rate report: for each value of
     ``group_col`` (source/domain/crawl), the fraction of its corpus
@@ -1253,7 +1213,7 @@ def contamination_by_group(
 
     Scale shape: composes ``decontaminate`` (benchmark shingles
     broadcast; corpus text never shuffles) with one doc-level LEFT join
-    keyed on ``id_col`` — the flagged relation is tiny relative to the
+    keyed on ``doc_id`` — the flagged relation is tiny relative to the
     corpus (AQE broadcasts it at runtime), and the join payload is
     (id, group) pairs, never text — then one group-keyed aggregate with
     map-side partials.
@@ -1264,7 +1224,7 @@ def contamination_by_group(
     (partition-order independent) and is NULL for clean groups on both
     engines (NULL sum / 0 does not throw — Spark's null-intolerant
     shortcut — and DuckDB yields NULL). A NULL ``group_col`` is a real
-    group on both engines (groupBy keeps NULLs); NULL ``id_col`` rows
+    group on both engines (groupBy keeps NULLs); NULL ``doc_id`` rows
     count as unflagged docs symmetrically (join keys never match).
 
     Reference parity: no dedup/contamination surface in the reference
@@ -1274,11 +1234,11 @@ def contamination_by_group(
         benchmark,
         n=n,
         threshold=threshold,
-        id_col=id_col,
-        text_col=text_col,
-    ).select(id_col, "overlap_ratio")
-    base = corpus.select(F.col(id_col), F.col(group_col))
-    j = base.join(flagged, id_col, "left")
+        id_col=_DOC_ID,
+        text_col=_TEXT,
+    ).select(_DOC_ID, "overlap_ratio")
+    base = corpus.select(F.col(_DOC_ID), F.col(group_col))
+    j = base.join(flagged, _DOC_ID, "left")
     return j.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.count("overlap_ratio").cast("long").alias("n_contaminated"),

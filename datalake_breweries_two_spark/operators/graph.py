@@ -22,21 +22,18 @@ from pyspark.sql import functions as F
 
 from datalake_breweries_two_spark.operators.similarity import _cosine
 
+_VEC_ID = "vec_id"
+_EMBEDDING = "embedding"
 
-def knn_edges(
-    embeddings: DataFrame,
-    max_id: int = 200,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Directed k-NN graph over a bounded id subset: for every node the
-    top-``k`` neighbors by cosine (rounded to 4dp before ranking, ties
+
+def knn_edges(embeddings: DataFrame) -> DataFrame:
+    """Directed k-NN graph over the ids below 200: for every node the
+    top-3 neighbors by cosine (rounded to 4dp before ranking, ties
     broken by neighbor id — the rounding makes the edge set identical
     across engines, which the PageRank oracle depends on)."""
-    sub = embeddings.filter(F.col(id_col) < max_id).select(id_col, vec_col)
-    a = sub.select(F.col(id_col).alias("src"), F.col(vec_col).alias("v_a"))
-    b = sub.select(F.col(id_col).alias("dst"), F.col(vec_col).alias("v_b"))
+    sub = embeddings.filter(F.col(_VEC_ID) < 200).select(_VEC_ID, _EMBEDDING)
+    a = sub.select(F.col(_VEC_ID).alias("src"), F.col(_EMBEDDING).alias("v_a"))
+    b = sub.select(F.col(_VEC_ID).alias("dst"), F.col(_EMBEDDING).alias("v_b"))
     pairs = a.join(F.broadcast(b), F.col("src") != F.col("dst"))
     scored = pairs.select(
         "src", "dst", F.round(_cosine(F.col("v_a"), F.col("v_b")), 4).alias("cos")
@@ -44,7 +41,7 @@ def knn_edges(
     w = Window.partitionBy("src").orderBy(F.desc("cos"), F.asc("dst"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 3)
         .select("src", "dst")
     )
 
@@ -52,12 +49,7 @@ def knn_edges(
 UNIT = 100_000_000  # fixed-point scale: 1.0 rank == 1e8 units
 
 
-def pagerank(
-    edges: DataFrame,
-    num_iter: int = 10,
-    damping: float = 0.85,
-    checkpoint_every: int = 3,
-) -> DataFrame:
+def pagerank(edges: DataFrame, num_iter: int = 10) -> DataFrame:
     """Fixed-iteration power-method PageRank: r' = (1-d)/N + d·Σ r_in/deg.
 
     Ranks are carried as FIXED-POINT int64 units (1e-8): integer sums are
@@ -78,7 +70,7 @@ def pagerank(
     (detected by one up-front anti-join probe) skip the correction
     entirely, so the common k-NN path pays nothing.
     """
-    d_pct = int(round(damping * 100))
+    d_pct = 85  # the damping factor d = 0.85, in percent
     # materialize the edge relation ONCE: it is consumed in every iteration,
     # and without this the (possibly expensive) edge-construction plan —
     # e.g. the k-NN cosine scoring — re-executes per iteration (measured
@@ -141,11 +133,11 @@ def pagerank(
         # the dangling branch consumes `ranks` TWICE per iteration
         # (contribs + dmass): without per-iteration lineage truncation the
         # doubly-referenced subtree doubles the plan every iteration
-        # (2^checkpoint_every growth between checkpoints), so dangling
+        # (2^3 growth between checkpoints), so dangling
         # graphs checkpoint every step; the k-NN path keeps the cheaper
         # periodic cadence
         if i + 1 < num_iter and (
-            has_dangling or (i + 1) % checkpoint_every == 0
+            has_dangling or (i + 1) % 3 == 0
         ):
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(

@@ -198,13 +198,7 @@ def asof_join_nearest(
     )
 
 
-def range_join_bands(
-    facts: DataFrame,
-    bands: DataFrame,
-    value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
-) -> DataFrame:
+def range_join_bands(facts: DataFrame, bands: DataFrame, value_col: str) -> DataFrame:
     """Range (band) join: each fact row matched to the band whose
     ``[lo, hi)`` interval contains ``value_col``.
 
@@ -216,7 +210,7 @@ def range_join_bands(
     overlaps, turning the range predicate into an equi-join plus a residual
     filter.)
     """
-    cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
+    cond = (F.col(value_col) >= F.col("lo")) & (F.col(value_col) < F.col("hi"))
     return facts.join(F.broadcast(bands), cond, "inner")
 
 

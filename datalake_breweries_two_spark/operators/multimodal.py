@@ -972,15 +972,6 @@ def extract_gif_features(media: DataFrame, grid: int = 2) -> DataFrame:
     return _extract_image_features(media, gif_features, grid)
 
 
-def media_metadata_summary(media: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — reads zero payload bytes thanks to parquet
-    column pruning (the reason metadata lives outside the blob)."""
-    return media.groupBy("media_type").agg(
-        F.count(F.col("media_id")).alias("n"),
-        F.sum(F.length(F.col("payload"))).cast("long").alias("total_bytes"),
-    )
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -990,7 +981,7 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def frame_sample(media: DataFrame, n_frames: int = 4, dim: int = 8) -> DataFrame:
+def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:
     """Video frame sampling: one video row → ``n_frames`` feature rows —
     the cardinality-CHANGING Python stage (vs extract_features' 1:1 map).
     ``mapInPandas`` lets a batch emit any number of output rows, which is
@@ -1008,7 +999,7 @@ def frame_sample(media: DataFrame, n_frames: int = 4, dim: int = 8) -> DataFrame
                     out["media_id"].append(mid)
                     out["frame_idx"].append(f)
                     out["feature"].append(
-                        _decode_payload(bytes(payload) + bytes([f]), "video", dim)
+                        _decode_payload(bytes(payload) + bytes([f]), "video", 8)
                     )
             # empty pandas frames infer float64 columns, which Arrow can't
             # coerce to list<float> — emit nothing for video-free batches

@@ -40,26 +40,21 @@ PACKED_SCHEMA = T.StructType(
 )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    budget: int = 256,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int = 256) -> DataFrame:
     """(doc_id, lang, n_tokens, pack_id, pack_pos): greedy first-fit
-    packing in id order per group; `pack_id` is unique only within the
+    packing in id order per ``lang``; `pack_id` is unique only within the
     group, `pack_pos` is the document's 0-based slot in its pack.
 
     Token counts are whitespace tokens computed JVM-side BEFORE the
     Arrow hop, so only (id, group, count) crosses into Python — the
     document text itself never leaves the JVM.
     """
+    text = F.trim(F.col("text"))
     counted = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(group_col).alias("lang"),
-        F.when(F.trim(F.col(text_col)) == "", F.lit(0))
-        .otherwise(F.size(F.split(F.trim(F.col(text_col)), WS_RE)))
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("lang"),
+        F.when(text == "", F.lit(0))
+        .otherwise(F.size(F.split(text, WS_RE)))
         .cast("long")
         .alias("n_tokens"),
     )

@@ -8,9 +8,9 @@ point 3). At 100 TB that is 2+K full-or-partial scans of the dataset.
 
 This engine computes the same contract in ONE aggregation job:
 ``agg(count(*), sum(when(violation,1)) per column)`` — a single scan,
-partial-aggregated map-side, one row out. The early-out ``limit`` probes are
-kept as separate cheap operators because they genuinely scan less when you
-only need existence (Catalyst CollectLimit short-circuits the scan).
+partial-aggregated map-side, one row out. The registry's ``q_is_empty`` and
+``q_exists_probe`` express the reference's early-out probes as 1-row
+aggregates.
 
 Scale profile: one full scan, partial+final HashAggregate on zero grouping
 keys → single-row exchange (bytes, not rows, dominate; no skew possible).
@@ -40,23 +40,6 @@ def quality_summary(df: DataFrame, critical_columns: list[str]) -> DataFrame:
             .alias(f"viol_{c}")
         )
     return df.agg(*aggs)
-
-
-def is_empty_probe(df: DataFrame) -> bool:
-    """Reference's empty check (``plugins/data_quality_operator.py:60-62``):
-    ``take(1)`` under the hood — scans at most one row-group."""
-    return df.isEmpty()
-
-
-def bounded_count(df: DataFrame, n: int) -> int:
-    """Reference's threshold check (``:64-66``): counts at most ``n`` rows via
-    CollectLimit — never a full scan."""
-    return df.limit(n).count()
-
-
-def has_violations(df: DataFrame, column: str) -> bool:
-    """Reference's per-column existence probe (``:69-70``): bounded anti-scan."""
-    return df.filter(null_or_empty(column)).limit(1).count() > 0
 
 
 @dataclass
@@ -167,25 +150,6 @@ def predicate_violation_count(df: DataFrame, violation: "F.Column") -> DataFrame
     )
 
 
-def non_finite_count(df: DataFrame, numeric_col: str) -> DataFrame:
-    """Single-row count of NaN / ±Infinity values in a double column.
-
-    Exact-money aggregation (the engine's decimal-sum discipline) RAISES
-    on non-finite input by design — and so does DuckDB, Postgres's
-    numeric, and every decimal type — so a pipeline must gate on this
-    check BEFORE the aggregate, not try_cast the corruption into silent
-    NULLs downstream. NULLs are not counted here (they have their own
-    null-count check); only genuinely non-finite doubles.
-    """
-    c = F.col(numeric_col)
-    non_finite = F.isnan(c) | (F.abs(c) == F.lit(float("inf")))
-    return df.agg(
-        F.coalesce(
-            F.sum(F.when(non_finite, 1).otherwise(0)), F.lit(0)
-        ).cast("long").alias("n_violations")
-    )
-
-
 def violation_flag(violation: "F.Column") -> "F.Column":
     """Per-row 0/1 flag with :func:`predicate_violation_count`'s NULL
     stance: a NULL predicate result (NULL operands) counts as a
@@ -194,9 +158,14 @@ def violation_flag(violation: "F.Column") -> "F.Column":
 
 
 def non_finite_flag(numeric_col: str) -> "F.Column":
-    """Per-row 0/1 flag with :func:`non_finite_count`'s NULL stance:
-    NULLs are NOT counted (they have their own null-count check) — only
-    genuinely non-finite doubles."""
+    """Per-row 0/1 flag for a NaN or ±Infinity double.
+
+    Exact-money aggregation (the engine's decimal-sum discipline) RAISES
+    on non-finite input by design — and so does DuckDB, Postgres's
+    numeric, and every decimal type — so a pipeline must gate on this
+    check BEFORE the aggregate, not try_cast the corruption into silent
+    NULLs downstream. NULLs are NOT flagged (they have their own
+    null-count check); only genuinely non-finite doubles."""
     c = F.col(numeric_col)
     non_finite = F.isnan(c) | (F.abs(c) == F.lit(float("inf")))
     return F.when(non_finite, 1).otherwise(0)

@@ -27,6 +27,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+_DOC_ID = "doc_id"
+_TEXT = "text"
+_LANG = "lang"
+_SPLIT_TRAIN = 0.8
+_SPLIT_VAL = 0.1
+
 
 def _hash_bucket_hex(id_col: str, seed: str) -> Column:
     """First 8 hex chars of md5(id || ':' || seed) — a uniform draw in
@@ -54,39 +60,29 @@ def fraction_to_hex_threshold(frac: float) -> str:
     return format(int(frac * 0x100000000), "08x")
 
 
-def hash_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    seed: str = "split-v1",
-    train: float = 0.8,
-    val: float = 0.1,
-) -> DataFrame:
-    """Assign every row a deterministic train/val/test split label.
-
-    train/val/test fractions are (train, val, 1-train-val); the label is
-    a pure function of (id, seed) — append-only ingestion never
-    reshuffles old rows between splits, and bumping `seed` re-rolls the
-    whole assignment reproducibly.
-    """
-    bucket = _hash_bucket_hex(id_col, seed)
-    t_train = fraction_to_hex_threshold(train)
-    t_val = fraction_to_hex_threshold(train + val)
-    return df.withColumn(
-        "split",
+def _split_label(bucket: Column) -> Column:
+    """train/val/test label of a hash bucket: the first 80 % of the bucket
+    range is train, the next 10 % val, the rest test."""
+    t_train = fraction_to_hex_threshold(_SPLIT_TRAIN)
+    t_val = fraction_to_hex_threshold(_SPLIT_TRAIN + _SPLIT_VAL)
+    return (
         F.when(bucket < F.lit(t_train), F.lit("train"))
         .when(bucket < F.lit(t_val), F.lit("val"))
-        .otherwise(F.lit("test")),
+        .otherwise(F.lit("test"))
     )
 
 
-def stratified_hash_sample(
-    df: DataFrame,
-    rates: dict[str, float],
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
-    seed: str = "sample-v1",
-    default_rate: float = 0.0,
-) -> DataFrame:
+def hash_split(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Assign every row a deterministic train/val/test split label.
+
+    train/val/test fractions are 0.8/0.1/0.1; the label is a pure
+    function of the id — append-only ingestion never reshuffles old rows
+    between splits.
+    """
+    return df.withColumn("split", _split_label(_hash_bucket_hex(id_col, "split-v1")))
+
+
+def stratified_hash_sample(df: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Keep a per-stratum deterministic fraction of rows (e.g. downsample
     dominant languages, keep all of rare ones).
 
@@ -94,27 +90,18 @@ def stratified_hash_sample(
     the whole operator is one projection + filter — no shuffle, no
     `sampleBy` RNG, and an exact SQL oracle exists for it.
     """
-    bucket = _hash_bucket_hex(id_col, seed)
+    bucket = _hash_bucket_hex(_DOC_ID, "sample-v1")
     expr = None
     for stratum, rate in sorted(rates.items()):
-        cond = F.col(strata_col) == stratum
+        cond = F.col(_LANG) == stratum
         thr = F.lit(fraction_to_hex_threshold(rate))
         expr = F.when(cond, thr) if expr is None else expr.when(cond, thr)
-    threshold = (
-        expr.otherwise(F.lit(fraction_to_hex_threshold(default_rate)))
-        if expr is not None
-        else F.lit(fraction_to_hex_threshold(default_rate))
-    )
+    absent = F.lit(fraction_to_hex_threshold(0.0))  # strata not in rates
+    threshold = expr.otherwise(absent) if expr is not None else absent
     return df.filter(bucket < threshold)
 
 
-def temperature_sample(
-    df: DataFrame,
-    alpha: float = 0.5,
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
-    seed: str = "mix-v1",
-) -> DataFrame:
+def temperature_sample(df: DataFrame, alpha: float = 0.5) -> DataFrame:
     """Temperature-flattened corpus mixing: keep stratum ``l`` with
     probability proportional to ``n_l^(alpha-1)`` (normalized so the rarest
     stratum keeps everything) — the standard multilingual rebalancing that
@@ -127,10 +114,10 @@ def temperature_sample(
     one partial-agg count over strata (rows = #strata) + one broadcast
     join; the corpus itself never shuffles.
     """
-    counts = df.groupBy(strata_col).agg(F.count(F.lit(1)).alias("n"))
+    counts = df.groupBy(_LANG).agg(F.count(F.lit(1)).alias("n"))
     min_n = counts.agg(F.min("n").alias("min_n"))
     rates = counts.crossJoin(F.broadcast(min_n)).select(
-        F.col(strata_col),
+        F.col(_LANG),
         F.round(F.pow(F.col("n") / F.col("min_n"), F.lit(alpha - 1.0)), 4).alias("rate"),
     )
     threshold = F.when(F.col("rate") >= 1.0, F.lit("g")).otherwise(
@@ -140,20 +127,15 @@ def temperature_sample(
             "0",
         )
     )
-    bucket = _hash_bucket_hex(id_col, seed)
+    bucket = _hash_bucket_hex(_DOC_ID, "mix-v1")
     return (
-        df.join(F.broadcast(rates.withColumn("threshold", threshold)), strata_col)
+        df.join(F.broadcast(rates.withColumn("threshold", threshold)), _LANG)
         .filter(bucket < F.col("threshold"))
-        .select(F.col(id_col), F.col(strata_col), F.col("rate"))
+        .select(F.col(_DOC_ID), F.col(_LANG), F.col("rate"))
     )
 
 
-def shard_order(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    seed: str = "shard-v1",
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def shard_order(df: DataFrame) -> DataFrame:
     """Deterministic global shuffle for training shards: every row gets a
     (shard, position) from the first hex nibble of md5(id || seed) — 16
     shards, position = rank of the full digest within the shard.
@@ -166,26 +148,20 @@ def shard_order(
     """
     from pyspark.sql import Window
 
-    h = F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed)))
+    h = F.md5(F.concat_ws(":", F.col(_DOC_ID).cast("string"), F.lit("shard-v1")))
     shard = (
         F.expr("instr('0123456789abcdef', substring(_shard_hash, 1, 1))") - 1
     ).cast("long")
-    w = Window.partitionBy("shard").orderBy("_shard_hash", id_col)
+    w = Window.partitionBy("shard").orderBy("_shard_hash", _DOC_ID)
     return (
         df.withColumn("_shard_hash", h)
         .withColumn("shard", shard)
         .withColumn("pos", F.row_number().over(w).cast("long"))
-        .select(F.col(id_col), *keep_cols, "shard", "pos")
+        .select(F.col(_DOC_ID), "shard", "pos")
     )
 
 
-def weighted_hash_sample(
-    df: DataFrame,
-    weight_col: str,
-    k: int,
-    id_col: str = "doc_id",
-    seed: str = "wsample-v1",
-) -> DataFrame:
+def weighted_hash_sample(df: DataFrame, weight_col: str, k: int) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (Efraimidis-
     Spirakis A-ES): each row draws u ~ U(0,1] from md5(id || seed) and is
     ranked by key = ln(u) / w — the k largest keys are a weighted sample
@@ -205,15 +181,15 @@ def weighted_hash_sample(
     Rows with weight <= 0 are excluded (they have zero inclusion
     probability in the A-ES scheme; ln(u)/w would flip sign).
     """
-    digest = F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed)))
+    digest = F.md5(F.concat_ws(":", F.col(_DOC_ID).cast("string"), F.lit("wsample-v1")))
     # 52-bit integer from 13 hex chars; +1 shifts the draw to (0, 2^52]
     u_int = F.conv(F.substring(digest, 1, 13), 16, 10).cast("double") + 1.0
     u = u_int / float(1 << 52)
     key = F.round(F.log(u) / F.col(weight_col).cast("double"), 8)
     return (
         df.filter(F.col(weight_col) > 0)
-        .select(F.col(id_col), F.col(weight_col).alias("weight"), key.alias("es_key"))
-        .orderBy(F.col("es_key").desc(), F.col(id_col).asc())
+        .select(F.col(_DOC_ID), F.col(weight_col).alias("weight"), key.alias("es_key"))
+        .orderBy(F.col("es_key").desc(), F.col(_DOC_ID).asc())
         .limit(k)
     )
 
@@ -223,8 +199,6 @@ def weighted_hash_sample_per_group(
     group_col: str,
     weight_col: str,
     k_per_group: int,
-    id_col: str = "doc_id",
-    seed: str = "wsample-v1",
 ) -> DataFrame:
     """Per-stratum Efraimidis-Spirakis sampling: the k heaviest-keyed rows
     within EACH group (e.g. k docs per language, weighted by quality
@@ -238,34 +212,28 @@ def weighted_hash_sample_per_group(
     """
     from pyspark.sql import Window
 
-    digest = F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed)))
+    digest = F.md5(F.concat_ws(":", F.col(_DOC_ID).cast("string"), F.lit("wsample-v1")))
     u_int = F.conv(F.substring(digest, 1, 13), 16, 10).cast("double") + 1.0
     u = u_int / float(1 << 52)
     key = F.round(F.log(u) / F.col(weight_col).cast("double"), 8)
     w = Window.partitionBy(group_col).orderBy(
-        F.col("es_key").desc(), F.col(id_col).asc()
+        F.col("es_key").desc(), F.col(_DOC_ID).asc()
     )
     return (
         df.filter(F.col(weight_col) > 0)
         .select(
-            F.col(id_col),
+            F.col(_DOC_ID),
             F.col(group_col),
             F.col(weight_col).alias("weight"),
             key.alias("es_key"),
         )
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k_per_group)
-        .select(id_col, group_col, "weight", "es_key")
+        .select(_DOC_ID, group_col, "weight", "es_key")
     )
 
 
-def group_split(
-    df: DataFrame,
-    group_col: str,
-    seed: str = "groupsplit-v1",
-    train: float = 0.8,
-    val: float = 0.1,
-) -> DataFrame:
+def group_split(df: DataFrame, group_col: str) -> DataFrame:
     """Leakage-safe train/val/test split: the assignment hashes the GROUP
     key (source / domain / author), not the row id, so every row of a
     group lands in the same split — near-duplicate documents from one
@@ -274,23 +242,10 @@ def group_split(
     :func:`hash_split` (pure projection, zero shuffle, append-stable);
     the split-fraction guarantee holds over GROUPS, not rows, which is
     the property a leakage-safe split must trade away."""
-    bucket = _hash_bucket_hex(group_col, seed)
-    t_train = fraction_to_hex_threshold(train)
-    t_val = fraction_to_hex_threshold(train + val)
-    return df.withColumn(
-        "split",
-        F.when(bucket < F.lit(t_train), F.lit("train"))
-        .when(bucket < F.lit(t_val), F.lit("val"))
-        .otherwise(F.lit("test")),
-    )
+    return df.withColumn("split", _split_label(_hash_bucket_hex(group_col, "groupsplit-v1")))
 
 
-def balanced_downsample(
-    df: DataFrame,
-    label_col: str,
-    id_col: str,
-    seed: str = "balance-v1",
-) -> DataFrame:
+def balanced_downsample(df: DataFrame, label_col: str, id_col: str) -> DataFrame:
     """Class-balanced downsampling: keep exactly min-class-count rows per
     label, chosen by deterministic md5 order (portable across engines and
     partitionings). One tiny count aggregate finds the floor, broadcast
@@ -302,7 +257,7 @@ def balanced_downsample(
     from pyspark.sql import Window
 
     digest = F.md5(
-        F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed))
+        F.concat_ws(":", F.col(id_col).cast("string"), F.lit("balance-v1"))
     )
     floor = df.groupBy(label_col).agg(F.count(F.lit(1)).alias("_n")).agg(
         F.min("_n").alias("_floor")
@@ -351,12 +306,7 @@ def class_balance_weights(
     )
 
 
-def token_shard_assignment(
-    docs: DataFrame,
-    budget_tokens: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def token_shard_assignment(docs: DataFrame, budget_tokens: int) -> DataFrame:
     """Per-document shard assignment — the (id, n_tokens, shard_id)
     relation behind :func:`token_budget_shards`, exposed on its own
     (r13) so downstream composites (the streaming shard-progress card)
@@ -366,15 +316,15 @@ def token_shard_assignment(
     from datalake_breweries_two_spark.operators.dedup import _tokens_expr
     from datalake_breweries_two_spark.operators.windows import range_prefix_sums
 
-    per_doc = docs.filter(F.col(id_col).isNotNull()).select(
-        F.col(id_col),
-        F.coalesce(F.size(_tokens_expr(text_col, "bpe")), F.lit(0))
+    per_doc = docs.filter(F.col(_DOC_ID).isNotNull()).select(
+        F.col(_DOC_ID),
+        F.coalesce(F.size(_tokens_expr(_TEXT, "bpe")), F.lit(0))
         .cast("long")
         .alias("n_tokens"),
     )
-    cum = range_prefix_sums(per_doc, id_col, ["n_tokens"])
+    cum = range_prefix_sums(per_doc, _DOC_ID, ["n_tokens"])
     return cum.select(
-        F.col(id_col),
+        F.col(_DOC_ID),
         "n_tokens",
         F.expr(f"(cum_n_tokens - n_tokens) div {int(budget_tokens)}").alias(
             "shard_id"
@@ -382,13 +332,8 @@ def token_shard_assignment(
     )
 
 
-def token_budget_shards(
-    docs: DataFrame,
-    budget_tokens: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Token-budget shard plan: assign documents (in stable ``id_col``
+def token_budget_shards(docs: DataFrame, budget_tokens: int) -> DataFrame:
+    """Token-budget shard plan: assign documents (in stable ``doc_id``
     order) to contiguous shards of ~``budget_tokens`` BPE-ish tokens
     each — the packing plan a training pipeline computes before writing
     fixed-token-budget input shards.
@@ -402,12 +347,12 @@ def token_budget_shards(
     aggregate at any corpus size. Rows with a NULL id are excluded (a
     shard plan needs stable ids; mirrored in the oracle), and the
     ordering is total because ids are unique."""
-    sharded = token_shard_assignment(docs, budget_tokens, id_col, text_col)
+    sharded = token_shard_assignment(docs, budget_tokens)
     return sharded.groupBy("shard_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("shard_tokens"),
-        F.min(id_col).alias("first_id"),
-        F.max(id_col).alias("last_id"),
+        F.min(_DOC_ID).alias("first_id"),
+        F.max(_DOC_ID).alias("last_id"),
     )
 
 
@@ -416,8 +361,6 @@ def shard_data_card(
     budget_tokens: int,
     min_tokens: int = 16,
     max_punct_ratio: float = 0.3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-SHARD "data card": what actually landed in each ~token-budget
     training shard — the report a data lead reads next to the shard plan
@@ -456,9 +399,9 @@ def shard_data_card(
     from .text import c4_low_quality_expr
     from .windows import range_prefix_sums
 
-    t = F.col(text_col)
+    t = F.col(_TEXT)
     n_tokens = (
-        F.coalesce(F.size(_tokens_expr(text_col, "bpe")), F.lit(0))
+        F.coalesce(F.size(_tokens_expr(_TEXT, "bpe")), F.lit(0))
         .cast("long")
     )
     # the SHARED C4-style bar (operators/text.py — one definition for
@@ -466,27 +409,27 @@ def shard_data_card(
     # (the null_text flag keeps the NULL punct_ratio branch from
     # nulling the whole predicate)
     low_q = c4_low_quality_expr(
-        text_col,
+        _TEXT,
         n_tokens,
         min_tokens,
         max_punct_ratio,
         null_text_is_low_quality=True,
     )
-    per_doc = docs.filter(F.col(id_col).isNotNull()).select(
-        F.col(id_col),
+    per_doc = docs.filter(F.col(_DOC_ID).isNotNull()).select(
+        F.col(_DOC_ID),
         F.col("source"),
         n_tokens.alias("n_tokens"),
         F.md5(t).alias("_fp"),
         low_q.alias("_low_q"),
     )
-    cum = range_prefix_sums(per_doc, id_col, ["n_tokens"])
+    cum = range_prefix_sums(per_doc, _DOC_ID, ["n_tokens"])
     # EAGER checkpoint: the shard assignment feeds TWO aggregates (the
     # shard battery and the source-mix cells); without it each branch
     # replays the prefix-sum offset subtree — distinct + P-row window +
     # broadcast join — doubling four exchanges (the q_vocab_coverage
     # precedent, r9). ~50 bytes/doc materialized, corpus text excluded.
     sharded = cum.select(
-        F.col(id_col),
+        F.col(_DOC_ID),
         "source",
         "n_tokens",
         "_fp",
@@ -498,8 +441,8 @@ def shard_data_card(
     shard_agg = sharded.groupBy("shard_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("shard_tokens"),
-        F.min(id_col).alias("first_id"),
-        F.max(id_col).alias("last_id"),
+        F.min(_DOC_ID).alias("first_id"),
+        F.max(_DOC_ID).alias("last_id"),
         F.count("_fp").alias("_n_texts"),
         F.countDistinct("_fp").alias("_n_distinct"),
         F.sum(F.when(F.col("_low_q"), 1).otherwise(0))

@@ -15,15 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-EVENT_PROPS_SCHEMA = T.StructType([T.StructField("k", T.IntegerType())])
-
-
-def parse_event_props(events: DataFrame) -> DataFrame:
-    """Typed struct column from the events.props JSON string (explicit
-    schema — schema-on-read without an inference pass)."""
-    return events.withColumn("props_struct", F.from_json(F.col("props"), EVENT_PROPS_SCHEMA))
 
 
 def json_get_int(col: str, path: str) -> Column:
@@ -80,8 +71,8 @@ def variant_props_rollup(events: DataFrame) -> DataFrame:
     variant column → typed ``variant_get`` extraction, aggregated per
     event type.
 
-    This is the OPEN-schema twin of ``parse_event_props`` (``from_json``
-    with a declared struct): variant defers the schema to read time, which
+    This is the OPEN-schema twin of ``from_json`` with a declared struct:
+    variant defers the schema to read time, which
     is what a 100 TB bronze layer with drifting payloads actually needs —
     new keys land without a schema migration, and the binary variant
     encoding shuffles/aggregates without re-parsing JSON text per access

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 
 from datalake_breweries_two_spark.operators.sampling import md5_60
 
+_KLL_PROBS = (0.5, 0.9, 0.99)  # the quantiles the KLL rollups extract
+
 
 def distinct_rows(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.select(*cols).distinct()
@@ -39,9 +41,9 @@ def count_distinct_exact(df: DataFrame, col: str, alias: str) -> DataFrame:
     return df.agg(F.countDistinct(F.col(col)).alias(alias))
 
 
-def count_distinct_approx(df: DataFrame, col: str, alias: str, rsd: float = 0.02) -> DataFrame:
+def count_distinct_approx(df: DataFrame, col: str, alias: str) -> DataFrame:
     """HLL++ sketch count — the 100 TB path for cardinality estimation."""
-    return df.agg(F.approx_count_distinct(F.col(col), rsd).alias(alias))
+    return df.agg(F.approx_count_distinct(F.col(col), 0.02).alias(alias))
 
 
 def hll_partitioned_distinct(
@@ -75,12 +77,7 @@ def hll_partitioned_distinct(
     )
 
 
-def kll_quantile_rollup(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    probs: tuple[float, ...] = (0.5, 0.9, 0.99),
-) -> DataFrame:
+def kll_quantile_rollup(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Mergeable quantile sketches (Apache DataSketches KLL): one sketch
     per group built with partition-local updates + merges, quantiles
     extracted from the merged sketch.
@@ -108,7 +105,7 @@ def kll_quantile_rollup(
                 F.col("_n") > 0,
                 F.kll_sketch_get_quantile_double("sk", F.lit(p)),
             ).alias(f"p{str(p).replace('0.', '')}")
-            for p in probs
+            for p in _KLL_PROBS
         ],
     )
 
@@ -120,7 +117,6 @@ def kll_merge_on_read(
     part_expr,
     value_col: str,
     gold_path: str,
-    probs: tuple[float, ...] = (0.5, 0.9, 0.99),
 ) -> DataFrame:
     """Sketch-once / merge-forever, made PHYSICAL (r13 growth — the r12
     plan's own candidate): per-(group, partition) KLL sketches are built
@@ -175,7 +171,7 @@ def kll_merge_on_read(
             F.kll_sketch_get_quantile_double("sk", F.lit(p)).alias(
                 f"p{str(p).replace('0.', '')}"
             )
-            for p in probs
+            for p in _KLL_PROBS
         ],
     )
 
@@ -358,11 +354,11 @@ def kmv_set_overlap(
     type_a: str,
     type_b: str,
     key_col: str = "user_id",
-    k: int = KMV_K,
 ) -> DataFrame:
     """Audience overlap (|A|, |B|, |A∪B|, inclusion-exclusion |A∩B|) from
     K-minimum-values sketches over the portable md5 60-bit hash — every
-    sketch ELEMENT (the k smallest distinct hash values per set), the
+    sketch ELEMENT (the k = ``KMV_K`` smallest distinct hash values per
+    set), the
     union sketch (min-k of the two sketches' union — identical to
     sketching A∪B directly, which is what the oracle does), and the
     single-division estimates ((k−1)·2^60 / kth-min when full, exact
@@ -383,7 +379,7 @@ def kmv_set_overlap(
     dh = base.distinct()
 
     def _kmv(rel: DataFrame) -> DataFrame:
-        return rel.orderBy(F.col("h").asc()).limit(k)
+        return rel.orderBy(F.col("h").asc()).limit(KMV_K)
 
     kmv_a = _kmv(dh.filter(F.col("_t") == type_a).select("h"))
     kmv_b = _kmv(dh.filter(F.col("_t") == type_b).select("h"))
@@ -391,7 +387,7 @@ def kmv_set_overlap(
 
     def _est(kmv_df: DataFrame, name: str) -> DataFrame:
         return kmv_df.agg(
-            F.when(F.count("h") < k, F.count("h").cast("double"))
+            F.when(F.count("h") < KMV_K, F.count("h").cast("double"))
             .otherwise(
                 F.round(F.lit(KMV_NUMERATOR) / F.max("h").cast("double"), 4)
             )

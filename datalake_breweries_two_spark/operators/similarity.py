@@ -25,9 +25,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datalake_breweries_two_spark.operators.sampling import md5_60
-from datalake_breweries_two_spark.operators.semistructured import dot_product, vector_norm
+from datalake_breweries_two_spark.operators.semistructured import dot_product
 from datalake_breweries_two_spark.sources import lake
 
+_VEC_ID = "vec_id"
+_EMBEDDING = "embedding"
+_ANN_PLANES = 48  # ann_recall_curves' LSH signature width
+_PLANE_OCCUPANCY = 2  # auto_signature_planes' target vectors per bucket
+_PLANES_LO = 8  # auto_signature_planes' narrowest signature
 
 def _cosine(a: Column, b: Column) -> Column:
     # try_divide: an all-zero vector has no direction, so its cosine with
@@ -42,32 +47,6 @@ def _cosine(a: Column, b: Column) -> Column:
             F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
         ),
     )
-
-
-def cosine_topk_bruteforce(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Exact top-k by cosine to a literal query vector.
-
-    The query vector is embedded as an array literal in the plan (same
-    effect as a broadcast variable at this size); scoring is a narrow
-    codegen'd projection; ``orderBy().limit(k)`` compiles to
-    TakeOrderedAndProject — per-task k-row heaps, no global sort. Ties
-    broken by id for determinism.
-    """
-    q = _vec_literal(query_vec)
-    scored = embeddings.select(
-        F.col(id_col),
-        F.round(_cosine(F.col(vec_col), q), 4).alias("cosine"),
-    )
-    if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
 def _vec_literal(values) -> Column:
@@ -147,11 +126,10 @@ def random_hyperplane_signature(
     n_planes: int = 16,
     vec_col: str = "embedding",
     dim: int = 64,
-    plane_offset: int = 0,
 ) -> DataFrame:
     """DataFrame form of :func:`_signature_expr` — a narrow projection."""
     return embeddings.withColumn(
-        "lsh_sig", _signature_expr(vec_col, n_planes, dim, plane_offset)
+        "lsh_sig", _signature_expr(vec_col, n_planes, dim)
     )
 
 
@@ -160,8 +138,6 @@ def cosine_topk_lsh(
     query_vec: list[float],
     k: int = 10,
     n_planes: int = 48,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     candidate_budget: int | None = None,
 ) -> DataFrame:
     """ANN top-k with a candidate-budget multi-probe.
@@ -182,7 +158,7 @@ def cosine_topk_lsh(
     simply correlates better with cosine rank (SCALING.md)."""
     dim = len(query_vec)
     budget = candidate_budget if candidate_budget is not None else max(8 * k, 64)
-    signed = random_hyperplane_signature(embeddings, n_planes, vec_col, dim)
+    signed = random_hyperplane_signature(embeddings, n_planes, _EMBEDDING, dim)
     qsig = 0
     for b in range(n_planes):
         plane = _hyperplane(dim, b)
@@ -194,53 +170,46 @@ def cosine_topk_lsh(
         signed.withColumn(
             "hamm", F.bit_count(F.col("lsh_sig").bitwiseXOR(F.lit(qsig)))
         )
-        .orderBy(F.col("hamm").asc(), F.col(id_col).asc())
+        .orderBy(F.col("hamm").asc(), F.col(_VEC_ID).asc())
         .limit(budget)
     )
     return (
-        cand.select(F.col(id_col), F.round(_cosine(F.col(vec_col), q), 4).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        cand.select(F.col(_VEC_ID), F.round(_cosine(F.col(_EMBEDDING), q), 4).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col(_VEC_ID).asc())
         .limit(k)
     )
 
 
-def auto_signature_planes(
-    n_vectors: int, target_occupancy: int = 2, lo: int = 8, hi: int = 32
-) -> int:
+def auto_signature_planes(n_vectors: int) -> int:
     """Signature width that keeps LSH bucket occupancy ~constant as the
-    corpus grows: ``ceil(log2(n / target_occupancy))`` clamped to
-    [lo, hi] (the r13 SCALING.md decade finding — a FIXED width makes
-    candidate-verify work grow quadratically with corpus size, because
-    occupancy per bucket grows linearly and pairs per bucket
-    quadratically; measured 6.2 s → 2.0 s at 10x data by widening
-    8 → 14 planes/band with identical output).
+    corpus grows: ``ceil(log2(n / 2))`` clamped to [8, 32] (SCALING.md
+    decade finding — a FIXED width makes candidate-verify work grow
+    quadratically with corpus size, because occupancy per bucket grows
+    linearly and pairs per bucket quadratically; measured 6.2 s → 2.0 s
+    at 10x data by widening 8 → 14 planes/band with identical output).
 
-    ``target_occupancy=2`` (r14, was 16): the default-path decade re-run
-    showed occupancy-16 widths leave ~n·8 candidate pairs for the exact
-    verify, whose higher-order-function cosine is interpreted per
-    element — at the sf1 tile corpus the 11-plane auto width read 3.55 s
-    vs 1.28 s at 14 planes for identical output. Occupancy ~2 makes
-    expected false-pair volume ~n (one extra signature bit halves it)
-    while exact-duplicate recall is width-invariant; near-dup recall at
-    the threshold boundary is the ``n_bands`` knob's job, not width's.
-    ``hi=32`` (was 24): a 10⁹-vector corpus needs 29 planes to hold
+    Occupancy 2, not 16: occupancy-16 widths leave ~n·8 candidate pairs
+    for the exact verify, whose higher-order-function cosine is
+    interpreted per element — at the sf1 tile corpus the 11-plane width
+    read 3.55 s vs 1.28 s at 14 planes for identical output. Occupancy ~2
+    makes expected false-pair volume ~n (one extra signature bit halves
+    it) while exact-duplicate recall is width-invariant; near-dup recall
+    at the threshold boundary is the ``n_bands`` knob's job, not width's.
+    The 32-plane ceiling: a 10⁹-vector corpus needs 29 planes to hold
     occupancy 2, and the per-plane signature cost is one codegen'd
     64-mult dot per row — linear, amortized at any scale where the
-    clamp would bind (the old 24 existed for test-scale JIT cost, which
-    the lo clamp already bounds)."""
+    clamp would bind."""
     import math
 
-    if n_vectors <= target_occupancy:
-        return lo
-    return max(lo, min(hi, math.ceil(math.log2(n_vectors / target_occupancy))))
+    if n_vectors <= _PLANE_OCCUPANCY:
+        return _PLANES_LO
+    return max(_PLANES_LO, min(32, math.ceil(math.log2(n_vectors / _PLANE_OCCUPANCY))))
 
 
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
     n_planes: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     n_bands: int = 1,
 ) -> DataFrame:
@@ -281,28 +250,28 @@ def embedding_near_dup_pairs(
         # registry queries pass an explicit width and keep their exact
         # pre-r14 plan.
         embeddings = embeddings.select(
-            F.col(id_col), F.col(vec_col)
+            F.col(_VEC_ID), F.col(_EMBEDDING)
         ).localCheckpoint(eager=True)
         n_planes = auto_signature_planes(embeddings.count())
     sig_cols = [
-        _signature_expr(vec_col, n_planes, dim, plane_offset=band * n_planes)
+        _signature_expr(_EMBEDDING, n_planes, dim, plane_offset=band * n_planes)
         for band in range(n_bands)
     ]
     # one narrow row per (id, band): posexplode over the per-band sigs
     banded = embeddings.select(
-        F.col(id_col),
+        F.col(_VEC_ID),
         F.posexplode(F.array(*sig_cols)).alias("band", "sig"),
     )
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "sig")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "sig")
+    a = banded.select(F.col(_VEC_ID).alias("id_a"), "band", "sig")
+    b = banded.select(F.col(_VEC_ID).alias("id_b"), "band", "sig")
     cand_ids = (
         a.join(b, ["band", "sig"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    va = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    vb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
+    va = embeddings.select(F.col(_VEC_ID).alias("id_a"), F.col(_EMBEDDING).alias("v_a"))
+    vb = embeddings.select(F.col(_VEC_ID).alias("id_b"), F.col(_EMBEDDING).alias("v_b"))
     scored = (
         cand_ids.join(va, "id_a")
         .join(vb, "id_b")
@@ -402,8 +371,6 @@ def ivf_build_index(
     embeddings: DataFrame,
     index_dir: str,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """One-time IVF index build — the staging step a 100 TB deployment runs
     once per corpus version, NOT per query:
@@ -416,9 +383,9 @@ def ivf_build_index(
       * ``{index_dir}/centroids`` — the n_centroids seed vectors, read and
         ranked driver-side at query time (bounded).
     """
-    assigned = ivf_assign(embeddings, n_centroids, id_col, vec_col)
+    assigned = ivf_assign(embeddings, n_centroids, _VEC_ID, _EMBEDDING)
     lake.write_parquet(assigned, f"{index_dir}/corpus", partition_by=["centroid_id"])
-    seeds = _seeds_df(embeddings, centroid_seeds(embeddings, n_centroids, id_col, vec_col))
+    seeds = _seeds_df(embeddings, centroid_seeds(embeddings, n_centroids, _VEC_ID, _EMBEDDING))
     seeds.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
 
 
@@ -428,8 +395,6 @@ def ivf_search(
     query_vec: list[float],
     k: int = 10,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF probe search over a PRECOMPUTED index (:func:`ivf_build_index`):
     rank centroids by distance to the query, exact-score ONLY the vectors in
@@ -459,24 +424,19 @@ def ivf_search(
     q = _vec_literal(query_vec)
     return (
         corpus.filter(F.col("centroid_id").isin(probe_ids))
-        .select(F.col(id_col), F.round(_cosine(F.col(vec_col), q), 4).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .select(F.col(_VEC_ID), F.round(_cosine(F.col(_EMBEDDING), q), 4).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col(_VEC_ID).asc())
         .limit(k)
     )
 
 
-def cosine_pairs_exact(
-    embeddings: DataFrame,
-    max_id: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_pairs_exact(embeddings: DataFrame, max_id: int = 50) -> DataFrame:
     """Exact pairwise cosine over a bounded id range — the oracle-checkable
     ground-truth twin of the LSH/IVF approximate paths (full quadratic
     scoring is only ever run on bounded subsets or verified candidates)."""
-    sub = embeddings.filter(F.col(id_col) < max_id).select(id_col, vec_col)
-    a = sub.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    b = sub.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
+    sub = embeddings.filter(F.col(_VEC_ID) < max_id).select(_VEC_ID, _EMBEDDING)
+    a = sub.select(F.col(_VEC_ID).alias("id_a"), F.col(_EMBEDDING).alias("v_a"))
+    b = sub.select(F.col(_VEC_ID).alias("id_b"), F.col(_EMBEDDING).alias("v_b"))
     pairs = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
     # + 0.0 normalizes IEEE negative zero: near-orthogonal pairs round to
     # -0.0 in one engine and +0.0 in the other, which the oracle's value
@@ -495,9 +455,6 @@ def ann_recall_curves(
     lsh_budgets: tuple = (16, 64),
     ivf_probes: tuple = (1, 4),
     n_centroids: int = 8,
-    n_planes: int = 48,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Quantified-recall harness: recall@k of each approximate ANN tier
     against the exact brute-force top-k, averaged over ``n_queries``
@@ -520,22 +477,22 @@ def ann_recall_curves(
 
     spark = embeddings.sparkSession
     qrows = (
-        embeddings.select(F.col(id_col), F.col(vec_col))
-        .filter(F.col(vec_col).isNotNull())
-        .orderBy(md5_60(F.col(id_col).cast("string")).asc(), F.col(id_col).asc())
+        embeddings.select(F.col(_VEC_ID), F.col(_EMBEDDING))
+        .filter(F.col(_EMBEDDING).isNotNull())
+        .orderBy(md5_60(F.col(_VEC_ID).cast("string")).asc(), F.col(_VEC_ID).asc())
         .limit(n_queries)
         .collect()
     )
     queries = sorted(
-        ((int(r[id_col]), [float(x) for x in r[vec_col]]) for r in qrows),
+        ((int(r[_VEC_ID]), [float(x) for x in r[_EMBEDDING]]) for r in qrows),
         key=lambda t: t[0],
     )
     dim = len(queries[0][1]) if queries else 64
 
     # query-side LSH signatures + per-query centroid probe ranks are
     # driver-side math over already-collected bounded rows
-    planes = [_hyperplane(dim, b) for b in range(n_planes)]
-    seeds = centroid_seeds(embeddings, n_centroids, id_col, vec_col)
+    planes = [_hyperplane(dim, b) for b in range(_ANN_PLANES)]
+    seeds = centroid_seeds(embeddings, n_centroids, _VEC_ID, _EMBEDDING)
 
     def _qsig(qv: list) -> int:
         s = 0
@@ -574,19 +531,19 @@ def ann_recall_curves(
         )
     )
 
-    cos = F.round(_cosine(F.col(vec_col), F.col("qv")), 6)
+    cos = F.round(_cosine(F.col(_EMBEDDING), F.col("qv")), 6)
     w_truth = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
+        F.col("cosine").desc(), F.col(_VEC_ID).asc()
     )
     # exact ground truth: one corpus scan scores ALL queries (broadcast);
     # checkpoint because every tier's recall joins back against it
     truth = (
         embeddings.crossJoin(qdf)
-        .filter(F.col(id_col) != F.col("qid"))
-        .select("qid", F.col(id_col), cos.alias("cosine"))
+        .filter(F.col(_VEC_ID) != F.col("qid"))
+        .select("qid", F.col(_VEC_ID), cos.alias("cosine"))
         .withColumn("rn", F.row_number().over(w_truth))
         .filter(F.col("rn") <= k)
-        .select("qid", id_col)
+        .select("qid", _VEC_ID)
         .localCheckpoint(eager=True)
     )
     denom = truth.groupBy("qid").agg(F.count(F.lit(1)).alias("n_truth"))
@@ -594,7 +551,7 @@ def ann_recall_curves(
     def _avg_recall(hits: DataFrame, method: str, params_df: DataFrame) -> DataFrame:
         """hits: (qid, param, id) candidate top-k rows → (method, param,
         recall) averaged over queries."""
-        matched = hits.join(truth, ["qid", id_col]).groupBy("qid", "param").agg(
+        matched = hits.join(truth, ["qid", _VEC_ID]).groupBy("qid", "param").agg(
             F.count(F.lit(1)).alias("n_hit")
         )
         # left join from the full (qid × param) grid so zero-hit configs
@@ -624,44 +581,44 @@ def ann_recall_curves(
     # ---- LSH tier: hamming-rank once, every budget filters the same frame
     max_budget = max(lsh_budgets)
     signed = embeddings.withColumn(
-        "lsh_sig", _signature_expr(vec_col, n_planes, dim)
+        "lsh_sig", _signature_expr(_EMBEDDING, _ANN_PLANES, dim)
     )
-    w_h = Window.partitionBy("qid").orderBy(F.col("hamm").asc(), F.col(id_col).asc())
+    w_h = Window.partitionBy("qid").orderBy(F.col("hamm").asc(), F.col(_VEC_ID).asc())
     lsh_cand = (
         signed.crossJoin(qdf)
-        .filter(F.col(id_col) != F.col("qid"))
+        .filter(F.col(_VEC_ID) != F.col("qid"))
         .select(
             "qid",
-            F.col(id_col),
-            F.col(vec_col),
+            F.col(_VEC_ID),
+            F.col(_EMBEDDING),
             F.col("qv"),
             F.bit_count(F.col("lsh_sig").bitwiseXOR(F.col("qsig"))).alias("hamm"),
         )
         .withColumn("rn_h", F.row_number().over(w_h))
         .filter(F.col("rn_h") <= max_budget)
-        .select("qid", id_col, cos.alias("cosine"), "rn_h")
+        .select("qid", _VEC_ID, cos.alias("cosine"), "rn_h")
     )
     budgets_df = F.broadcast(
         spark.createDataFrame([(int(b),) for b in lsh_budgets], "param int")
     )
     w_lsh = Window.partitionBy("qid", "param").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
+        F.col("cosine").desc(), F.col(_VEC_ID).asc()
     )
     lsh_hits = (
         lsh_cand.join(budgets_df, F.col("rn_h") <= F.col("param"))
         .withColumn("rn", F.row_number().over(w_lsh))
         .filter(F.col("rn") <= k)
-        .select("qid", "param", id_col)
+        .select("qid", "param", _VEC_ID)
     )
 
     # ---- IVF tier: assign once, every n_probe filters the centroid rank
     max_probe = max(ivf_probes)
-    assigned = ivf_assign(embeddings, n_centroids, id_col, vec_col)
+    assigned = ivf_assign(embeddings, n_centroids, _VEC_ID, _EMBEDDING)
     ivf_cand = (
         assigned.join(probe_df, "centroid_id")
-        .filter((F.col("crank") <= max_probe) & (F.col(id_col) != F.col("qid")))
+        .filter((F.col("crank") <= max_probe) & (F.col(_VEC_ID) != F.col("qid")))
         .join(qdf.drop("qsig"), "qid")
-        .select("qid", F.col(id_col), cos.alias("cosine"), "crank")
+        .select("qid", F.col(_VEC_ID), cos.alias("cosine"), "crank")
     )
     probes_df = F.broadcast(
         spark.createDataFrame([(int(p),) for p in ivf_probes], "param int")
@@ -670,7 +627,7 @@ def ann_recall_curves(
         ivf_cand.join(probes_df, F.col("crank") <= F.col("param"))
         .withColumn("rn", F.row_number().over(w_lsh))
         .filter(F.col("rn") <= k)
-        .select("qid", "param", id_col)
+        .select("qid", "param", _VEC_ID)
     )
 
     brute = spark.createDataFrame(
@@ -688,11 +645,7 @@ def ann_recall_curves(
     )
 
 
-def quantize_embeddings(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     """Per-vector max-abs int8 quantization — the 4x storage/bandwidth
     compression applied to embedding tables before ANN serving.
 
@@ -704,16 +657,16 @@ def quantize_embeddings(
     per-row projections: no shuffle at any scale; codes are surfaced as a
     CSV string + checksum so the oracle hash stays array-free.
     """
-    xd = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    with_scale = embeddings.select(F.col(id_col), xd.alias("xd")).select(
-        id_col,
+    xd = F.transform(F.col(_EMBEDDING), lambda v: v.cast("double"))
+    with_scale = embeddings.select(F.col(_VEC_ID), xd.alias("xd")).select(
+        _VEC_ID,
         "xd",
         F.aggregate(
             F.col("xd"), F.lit(0.0), lambda acc, v: F.greatest(acc, F.abs(v))
         ).alias("raw_scale"),
     )
     guarded = with_scale.select(
-        id_col,
+        _VEC_ID,
         "xd",
         F.when(F.col("raw_scale") == 0.0, F.lit(1.0))
         .otherwise(F.col("raw_scale"))
@@ -724,21 +677,14 @@ def quantize_embeddings(
         lambda v: F.floor(v * F.lit(127.0) / F.col("scale")).cast("int"),
     )
     return guarded.select(
-        F.col(id_col),
+        F.col(_VEC_ID),
         F.col("scale"),
         F.array_join(F.transform(qv, lambda q: q.cast("string")), ",").alias("q_csv"),
         F.aggregate(qv, F.lit(0).cast("long"), lambda acc, q: acc + q).alias("q_sum"),
     )
 
 
-def knn_join(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    buckets: int = 32,
-) -> DataFrame:
+def knn_join(embeddings: DataFrame, n_queries: int = 8, k: int = 5) -> DataFrame:
     """Batch exact k-NN join: each of the first ``n_queries`` vectors gets
     its ``k`` nearest corpus neighbors by cosine (self excluded) — the
     batch evaluation / retrieval pattern behind embedding-dedup audits
@@ -749,7 +695,7 @@ def knn_join(
     no task ever sorts a whole query's candidate list: scored pairs are
     bucketed by a deterministic hash of the neighbor id, a first window
     ranks within (query, bucket) — parallel slices — and only the
-    surviving ``buckets * k`` rows per query reach the tiny final
+    surviving ``32 * k`` rows per query reach the tiny final
     ranking window. One wide exchange of the scored pairs total; the
     single-level alternative (window partitioned by query alone) would
     funnel the full corpus through ``n_queries`` tasks at 100 TB.
@@ -760,19 +706,19 @@ def knn_join(
 
     Reference parity: no similarity surface in the reference
     (LLM-pipeline extension, SURVEY.md §2.2)."""
-    q = embeddings.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("_qv")
+    q = embeddings.filter(F.col(_VEC_ID) < n_queries).select(
+        F.col(_VEC_ID).alias("q_id"), F.col(_EMBEDDING).alias("_qv")
     )
     scored = (
-        embeddings.join(F.broadcast(q), F.col(id_col) != F.col("q_id"))
+        embeddings.join(F.broadcast(q), F.col(_VEC_ID) != F.col("q_id"))
         .select(
             "q_id",
-            F.col(id_col).alias("neighbor_id"),
-            (F.round(_cosine(F.col(vec_col), F.col("_qv")), 4) + F.lit(0.0)).alias(
+            F.col(_VEC_ID).alias("neighbor_id"),
+            (F.round(_cosine(F.col(_EMBEDDING), F.col("_qv")), 4) + F.lit(0.0)).alias(
                 "cosine"
             ),
         )
-        .withColumn("_b", F.pmod(F.hash("neighbor_id"), F.lit(buckets)))
+        .withColumn("_b", F.pmod(F.hash("neighbor_id"), F.lit(32)))
     )
     order = [F.col("cosine").desc_nulls_last(), F.col("neighbor_id").asc()]
     w_local = Window.partitionBy("q_id", "_b").orderBy(*order)
@@ -787,11 +733,7 @@ def knn_join(
     )
 
 
-def label_centroid_profile(
-    embeddings: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def label_centroid_profile(embeddings: DataFrame) -> DataFrame:
     """Per-label embedding-space profile: member count, centroid L2 norm,
     and the member→centroid cosine distribution (mean / discrete median /
     min) — the class-cohesion audit run before training on labeled
@@ -816,8 +758,8 @@ def label_centroid_profile(
     Reference parity: no embedding surface in the reference
     (LLM-pipeline extension, SURVEY.md §2.2)."""
     ex = embeddings.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(F.col(vec_col)).alias("dim", "x"),
+        F.col("label"),
+        F.posexplode(F.col(_EMBEDDING)).alias("dim", "x"),
     )
     cent = ex.groupBy("label", "dim").agg(
         (F.round(F.avg(F.col("x").cast("double")), 6) + F.lit(0.0)).alias("c")
@@ -828,7 +770,7 @@ def label_centroid_profile(
         ).alias("_cv")
     )
     member = (
-        embeddings.select(F.col(label_col).alias("label"), F.col(vec_col).alias("_v"))
+        embeddings.select(F.col("label"), F.col(_EMBEDDING).alias("_v"))
         .join(F.broadcast(cent_arr), "label")
         .select(
             "label",
@@ -871,11 +813,6 @@ def rerank_topk(
     k_retrieve: int = 20,
     k_final: int = 5,
     alpha: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 32,
 ) -> DataFrame:
     """Two-stage retrieval: cheap embedding-cosine retrieval of
     ``k_retrieve`` candidates per query, then a cross-encoder-style
@@ -905,14 +842,7 @@ def rerank_topk(
     (LLM-pipeline extension, SURVEY.md §2.2)."""
     from datalake_breweries_two_spark.operators.text import WS_RE
 
-    cand = knn_join(
-        embeddings,
-        n_queries=n_queries,
-        k=k_retrieve,
-        id_col=id_col,
-        vec_col=vec_col,
-        buckets=buckets,
-    ).select(
+    cand = knn_join(embeddings, n_queries=n_queries, k=k_retrieve).select(
         "q_id",
         "neighbor_id",
         F.col("rank").alias("retrieval_rank"),
@@ -920,11 +850,11 @@ def rerank_topk(
     )
     toks = F.array_distinct(
         F.split(
-            F.lower(F.translate(F.trim(F.col(text_col)), "İ", "i")), WS_RE
+            F.lower(F.translate(F.trim(F.col("text")), "İ", "i")), WS_RE
         )
     )
     docs_tok = documents.select(
-        F.col(doc_id_col).alias("_tid"), toks.alias("_toks")
+        F.col("doc_id").alias("_tid"), toks.alias("_toks")
     )
     with_q = (
         docs_tok.join(F.broadcast(cand), F.col("_tid") == F.col("q_id"))

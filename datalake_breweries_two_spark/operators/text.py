@@ -19,6 +19,11 @@ from datalake_breweries_two_spark.operators.sampling import md5_60
 # pins the Java behavior; every oracle SQL mirrors the same class.
 WS_RE = r"[ \t\n\r\f\x0b]+"
 
+_TEXT = "text"
+_DOC_ID = "doc_id"
+_BM25_K1 = 1.2  # term-frequency saturation
+_BM25_B = 0.75  # document-length normalization
+
 # Tiny per-language stopword marker lists for the n-gram/stopword heuristic
 # language ID. Deliberately small: the point is the Spark-side scoring
 # pattern (score per language = marker hit count, argmax via greatest), not
@@ -47,7 +52,7 @@ def bpe_ish_token_count(col: str) -> Column:
     )
 
 
-def quality_filter_funnel(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_filter_funnel(docs: DataFrame) -> DataFrame:
     """Stage-by-stage survivor counts of a sequential quality-filter
     pipeline — the acceptance-funnel report a training-data pipeline
     emits after every corpus refresh. Stages (each implies the previous):
@@ -67,13 +72,13 @@ def quality_filter_funnel(docs: DataFrame, text_col: str = "text") -> DataFrame:
     including its Turkish-İ case-folding normalization)."""
     from datalake_breweries_two_spark.operators.dedup import _tokens_expr
 
-    toks = _tokens_expr(text_col, "bpe")
+    toks = _tokens_expr(_TEXT, "bpe")
     nt = F.size(toks)
     sum_len = F.aggregate(
         F.transform(toks, lambda x: F.length(x)), F.lit(0), lambda a, x: a + x
     )
     n_punct = F.size(F.filter(toks, lambda x: ~x.rlike("^[a-z0-9]")))
-    p1 = F.length(F.trim(F.col(text_col))) > 0
+    p1 = F.length(F.trim(F.col(_TEXT))) > 0
     p2 = p1 & (nt >= 5)
     p3 = p2 & (sum_len <= nt * 12)
     p4 = p3 & (n_punct * 2 <= nt)
@@ -98,16 +103,16 @@ def quality_filter_funnel(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def text_quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def text_quality_features(docs: DataFrame) -> DataFrame:
     """Quality-scoring features per document: length, token count, mean token
     length, punctuation ratio, stopword ratio, uppercase ratio.
 
     These are the standard cheap filters (C4/Gopher-style) used to drop
     boilerplate and garbage before expensive dedup at 100 TB.
     """
-    t = F.col(text_col)
+    t = F.col(_TEXT)
     n_chars = F.length(t)
-    n_tokens = whitespace_token_count(text_col)
+    n_tokens = whitespace_token_count(_TEXT)
     n_punct = F.length(F.regexp_replace(t, r"[^.,;:!?]", ""))
     n_upper = F.length(F.regexp_replace(t, r"[^A-Z]", ""))
     # whitespace-token MEMBERSHIP, not a \b regex: \b's notion of a word
@@ -134,13 +139,13 @@ def text_quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_id_heuristic(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id_heuristic(docs: DataFrame) -> DataFrame:
     """Marker-based language ID: score = stopword-marker hits per language,
     argmax with deterministic tie-break on language code; 'und' when no
     marker hits (a NULL text scores 0 -> 'und', never a NULL score).
     Pure expression tree → codegen, no UDF."""
     padded = F.concat(
-        F.lit(" "), F.lower(F.coalesce(F.col(text_col), F.lit(""))), F.lit(" ")
+        F.lit(" "), F.lower(F.coalesce(F.col(_TEXT), F.lit(""))), F.lit(" ")
     )
     scores = [
         F.struct(
@@ -163,10 +168,10 @@ def language_id_heuristic(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint_md5(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint_md5(docs: DataFrame) -> DataFrame:
     """Content fingerprint: md5 hex of the text + a 16-bucket shard key from
     the fingerprint prefix (layout key for fingerprint-partitioned storage)."""
-    fp = F.md5(F.col(text_col))
+    fp = F.md5(F.col(_TEXT))
     return docs.select(
         "*",
         fp.alias("fingerprint"),
@@ -174,17 +179,13 @@ def fingerprint_md5(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def rolling_hash_fingerprint(
-    docs: DataFrame,
-    text_col: str = "text",
-    window: int = 16,
-) -> DataFrame:
+def rolling_hash_fingerprint(docs: DataFrame, window: int = 16) -> DataFrame:
     """Winnowing-style robust fingerprint: min :func:`md5_60` hash over
     character shingles of length ``window`` — stable under small edits,
     unlike md5 of the whole text, and recomputable by a DuckDB oracle.
     JVM-side: sequence → transform(substring) → array_min — one narrow
     projection, no shuffle; at 100 TB the cost is the scan plus the hash."""
-    t = F.col(text_col)
+    t = F.col(_TEXT)
     idx = F.sequence(F.lit(1), F.greatest(F.length(t) - window + 1, F.lit(1)))
     return docs.select(
         "*",
@@ -242,7 +243,6 @@ def source_data_card(
     docs: DataFrame,
     min_tokens: int = 16,
     max_punct_ratio: float = 0.3,
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-source "data card" — the one-page quality × dedup × mix summary
     a training team publishes for every ingested source before choosing
@@ -266,11 +266,11 @@ def source_data_card(
     dup-rate denominator (the md5 fingerprint is NULL iff the text is,
     so ``count(_fp)`` matches SQL COUNT(text)).
     """
-    t = F.col(text_col)
-    n_tokens = whitespace_token_count(text_col)
+    t = F.col(_TEXT)
+    n_tokens = whitespace_token_count(_TEXT)
     # NULL text → NULL comparison → otherwise(0): counted as NOT low
     # quality, mirroring SQL's CASE WHEN ... THEN 1 ELSE 0 END
-    low_q = c4_low_quality_expr(text_col, n_tokens, min_tokens, max_punct_ratio)
+    low_q = c4_low_quality_expr(_TEXT, n_tokens, min_tokens, max_punct_ratio)
     # no raw text survives the projection: the md5 fingerprint is NULL
     # iff the text is NULL, so count(_fp) serves as the non-NULL-text
     # count and the aggregate input stays 16-bytes-per-doc wide
@@ -370,9 +370,7 @@ def corpus_mix_report(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """TF-IDF scoring with top-k terms per document.
 
     Plan shape: explode(split) → (doc,term) count agg (map-side partial
@@ -394,12 +392,12 @@ def tfidf_top_terms(
     from datalake_breweries_two_spark.operators.windows import top_k_per_group
 
     tokens = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
+        F.col(_DOC_ID),
+        F.explode(F.split(F.col(_TEXT), " ")).alias("term"),
     ).filter(F.length("term") > 0)
     tf = tokens.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = F.count(F.lit(1)).over(Window.partitionBy("term"))
-    n_docs = docs.select(F.count_distinct(F.col(id_col)).alias("n_docs"))
+    n_docs = docs.select(F.count_distinct(F.col(_DOC_ID)).alias("n_docs"))
     scored = (
         tf.withColumn("df", dfreq)
         .crossJoin(F.broadcast(n_docs))
@@ -412,7 +410,7 @@ def tfidf_top_terms(
     return top_k_per_group(scored, "doc_id", "tfidf", "term", k)
 
 
-def word_count_top(docs: DataFrame, k: int = 20, text_col: str = "text") -> DataFrame:
+def word_count_top(docs: DataFrame, k: int = 20) -> DataFrame:
     """Global token frequency top-k — the canonical corpus-vocabulary query.
     explode → partial-count agg → TakeOrderedAndProject: the full token
     stream is combined map-side; only per-partition (token,count) pairs
@@ -420,7 +418,7 @@ def word_count_top(docs: DataFrame, k: int = 20, text_col: str = "text") -> Data
     from datalake_breweries_two_spark.operators.windows import global_top_k
 
     tokens = docs.select(
-        F.explode(F.split(F.col(text_col), " ")).alias("token")
+        F.explode(F.split(F.col(_TEXT), " ")).alias("token")
     ).filter(F.length("token") > 0)
     counts = tokens.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     return global_top_k(counts, "n", "token", k)
@@ -428,10 +426,8 @@ def word_count_top(docs: DataFrame, k: int = 20, text_col: str = "text") -> Data
 
 def vocab_coverage(
     docs: DataFrame,
-    text_col: str = "text",
     vocab_sizes: tuple = (100, 1000, 10000),
     coverage_pcts: tuple = (90, 95, 99),
-    n_parts: int = 32,
 ) -> DataFrame:
     """Vocabulary-coverage profile of a corpus — the tokenizer-design
     question every training pipeline asks before fixing a vocab: what
@@ -466,7 +462,7 @@ def vocab_coverage(
     tokens = docs.select(
         F.explode(
             F.split(
-                F.lower(F.translate(F.trim(F.col(text_col)), "İ", "i")), WS_RE
+                F.lower(F.translate(F.trim(F.col(_TEXT)), "İ", "i")), WS_RE
             )
         ).alias("token")
     ).filter(F.length("token") > 0)
@@ -477,7 +473,7 @@ def vocab_coverage(
         counts.withColumn("one", F.lit(1).cast("long")),
         [F.col("n").desc(), F.col("token").asc_nulls_last()],
         ["n", "one"],
-        n_parts=n_parts,
+        n_parts=32,
     ).localCheckpoint(eager=True)
     total = ranked.agg(
         F.max("cum_n").alias("total"),
@@ -522,9 +518,7 @@ def vocab_coverage(
 # Corpus-quality filters (Gopher/C4-style)
 # --------------------------------------------------------------------------
 
-def repetition_stats(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Per-document repetition signals used by Gopher-style quality filters:
     distinct-token ratio, most-common-token fraction, and most-common-bigram
     fraction (high values of the latter two flag degenerate/spammy docs).
@@ -539,30 +533,30 @@ def repetition_stats(
     from pyspark.sql import Window
 
     tokens = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.lower(F.trim(F.col(text_col))), WS_RE)).alias(
+        F.col(_DOC_ID),
+        F.posexplode(F.split(F.lower(F.trim(F.col(_TEXT))), WS_RE)).alias(
             "pos", "token"
         ),
     )
-    uni = tokens.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("c"))
-    uni_stats = uni.groupBy(id_col).agg(
+    uni = tokens.groupBy(_DOC_ID, "token").agg(F.count(F.lit(1)).alias("c"))
+    uni_stats = uni.groupBy(_DOC_ID).agg(
         F.sum("c").alias("n_tokens"),
         F.count(F.lit(1)).alias("n_distinct"),
         F.max("c").alias("top_c"),
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy(_DOC_ID).orderBy("pos")
     nxt = F.lead("token", 1).over(w)
     bigrams = tokens.select(
-        F.col(id_col), F.concat_ws(" ", F.col("token"), nxt).alias("bigram"), nxt.isNotNull().alias("_full")
+        F.col(_DOC_ID), F.concat_ws(" ", F.col("token"), nxt).alias("bigram"), nxt.isNotNull().alias("_full")
     ).filter(F.col("_full"))
-    bi = bigrams.groupBy(id_col, "bigram").agg(F.count(F.lit(1)).alias("c"))
-    bi_stats = bi.groupBy(id_col).agg(
+    bi = bigrams.groupBy(_DOC_ID, "bigram").agg(F.count(F.lit(1)).alias("c"))
+    bi_stats = bi.groupBy(_DOC_ID).agg(
         F.sum("c").alias("n_bigrams"), F.max("c").alias("top_bi_c")
     )
     return (
-        uni_stats.join(bi_stats, id_col, "left")
+        uni_stats.join(bi_stats, _DOC_ID, "left")
         .select(
-            F.col(id_col),
+            F.col(_DOC_ID),
             F.col("n_tokens").cast("long").alias("n_tokens"),
             F.round(F.col("n_distinct") / F.col("n_tokens"), 4).alias("distinct_ratio"),
             F.round(F.col("top_c") / F.col("n_tokens"), 4).alias("top_token_frac"),
@@ -571,13 +565,7 @@ def repetition_stats(
     )
 
 
-def boilerplate_fraction(
-    docs: DataFrame,
-    n: int = 3,
-    min_docs: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def boilerplate_fraction(docs: DataFrame, n: int = 3, min_docs: int = 4) -> DataFrame:
     """Per-document fraction of distinct word-``n``-grams that are corpus
     boilerplate (shingles occurring in >= ``min_docs`` distinct documents) —
     the C4-style repeated-template detector.
@@ -589,22 +577,22 @@ def boilerplate_fraction(
     """
     from datalake_breweries_two_spark.operators.dedup import shingle_docs_exploded
 
-    sh = shingle_docs_exploded(docs, text_col=text_col, id_col=id_col, n=n)
+    sh = shingle_docs_exploded(docs, text_col=_TEXT, id_col=_DOC_ID, n=n)
     sh = sh.localCheckpoint(eager=True)  # two consumers; avoid rescan + reshingle
     df_counts = sh.groupBy("shingle").agg(
-        F.countDistinct(id_col).alias("n_docs")
+        F.countDistinct(_DOC_ID).alias("n_docs")
     )
     flagged = sh.join(
         df_counts.filter(F.col("n_docs") >= min_docs).select("shingle"),
         "shingle",
         "left_semi",
     )
-    n_boiler = flagged.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_boiler"))
-    n_all = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
+    n_boiler = flagged.groupBy(_DOC_ID).agg(F.count(F.lit(1)).alias("n_boiler"))
+    n_all = sh.groupBy(_DOC_ID).agg(F.count(F.lit(1)).alias("n_shingles"))
     return (
-        n_all.join(n_boiler, id_col, "left")
+        n_all.join(n_boiler, _DOC_ID, "left")
         .select(
-            F.col(id_col),
+            F.col(_DOC_ID),
             F.col("n_shingles").cast("long").alias("n_shingles"),
             F.coalesce(F.col("n_boiler"), F.lit(0)).cast("long").alias("n_boiler"),
             F.round(
@@ -618,9 +606,7 @@ _EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 
 
-def pii_redact(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_redact(docs: DataFrame) -> DataFrame:
     """Scrub emails and IPv4 addresses from text, reporting per-doc
     redaction counts — the pre-training PII pass.
 
@@ -629,13 +615,13 @@ def pii_redact(
     the RE2-compatible subset so the same regex runs in Spark (Java regex)
     and the DuckDB oracle (RE2) identically.
     """
-    n_emails = F.regexp_count(F.col(text_col), F.lit(_EMAIL_RE))
-    n_ips = F.regexp_count(F.col(text_col), F.lit(_IPV4_RE))
+    n_emails = F.regexp_count(F.col(_TEXT), F.lit(_EMAIL_RE))
+    n_ips = F.regexp_count(F.col(_TEXT), F.lit(_IPV4_RE))
     redacted = F.regexp_replace(
-        F.regexp_replace(F.col(text_col), _EMAIL_RE, "<EMAIL>"), _IPV4_RE, "<IP>"
+        F.regexp_replace(F.col(_TEXT), _EMAIL_RE, "<EMAIL>"), _IPV4_RE, "<IP>"
     )
     return docs.select(
-        F.col(id_col),
+        F.col(_DOC_ID),
         n_emails.cast("long").alias("n_emails"),
         n_ips.cast("long").alias("n_ips"),
         redacted.alias("redacted"),
@@ -646,8 +632,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_size: int = 64,
     overlap: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Split each document into overlapping token-window chunks — the
     context-window preparation step before tokenization/packing (RAG
@@ -666,15 +650,15 @@ def chunk_documents(
             f"need 0 <= overlap < chunk_size; got chunk_size={chunk_size}, overlap={overlap}"
         )
     stride = chunk_size - overlap
-    trimmed = F.trim(F.col(text_col))
+    trimmed = F.trim(F.col(_TEXT))
     toks = F.when(
         F.length(trimmed) == 0, F.array().cast("array<string>")
     ).otherwise(F.split(trimmed, WS_RE))
     with_starts = docs.select(
-        F.col(id_col),
+        F.col(_DOC_ID),
         toks.alias("toks"),
     ).select(
-        id_col,
+        _DOC_ID,
         "toks",
         F.explode(
             F.sequence(
@@ -687,7 +671,7 @@ def chunk_documents(
     chunk = F.slice(F.col("toks"), F.col("start") + 1, chunk_size)
     return (
         with_starts.select(
-            F.col(id_col),
+            F.col(_DOC_ID),
             (F.col("start") / stride).cast("long").alias("chunk_id"),
             F.size(chunk).cast("long").alias("n_tokens"),
             F.array_join(chunk, " ").alias("chunk_text"),
@@ -696,11 +680,7 @@ def chunk_documents(
     )
 
 
-def bigram_logprob(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean bigram log-probability under the corpus's own
     add-one-smoothed bigram LM — the classic statistical-LM quality
     signal a training pipeline uses to rank/filter documents (gibberish
@@ -722,12 +702,12 @@ def bigram_logprob(
     from datalake_breweries_two_spark.operators.dedup import _tokens_expr
 
     tokens = docs.select(
-        F.col(id_col), F.posexplode(_tokens_expr(text_col, "bpe")).alias("pos", "w1")
+        F.col(_DOC_ID), F.posexplode(_tokens_expr(_TEXT, "bpe")).alias("pos", "w1")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy(_DOC_ID).orderBy("pos")
     big = (
         tokens.select(
-            F.col(id_col), "w1", F.lead("w1").over(w).alias("w2")
+            F.col(_DOC_ID), "w1", F.lead("w1").over(w).alias("w2")
         )
         .filter(F.col("w2").isNotNull())
         .localCheckpoint(eager=True)
@@ -740,27 +720,20 @@ def bigram_logprob(
         .join(cstat, "w1")
         .crossJoin(F.broadcast(vocab))
         .select(
-            F.col(id_col),
+            F.col(_DOC_ID),
             F.log(
                 (F.col("cb") + F.lit(1)).cast("double")
                 / (F.col("cc") + F.col("v")).cast("double")
             ).alias("lp"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy(_DOC_ID).agg(
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
         F.round(F.avg("lp"), 4).alias("avg_logprob"),
     )
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     """BM25 relevance of every document against a fixed query-term set —
     the retrieval-scoring twin of :func:`tfidf_top_terms` (reference has no
     text surface; LLM-pipeline tier, SURVEY.md §2.2).
@@ -780,8 +753,8 @@ def bm25_scores(
     tfidf).
     """
     tokens = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("term"),
+        F.col(_DOC_ID),
+        F.explode(F.split(F.col(_TEXT), " ")).alias("term"),
     ).filter(F.length("term") > 0)
     counts = (
         tokens.groupBy("doc_id", "term")
@@ -814,8 +787,11 @@ def bm25_scores(
     )
     component = F.round(
         F.col("idf")
-        * (F.col("tf") * (k1 + 1))
-        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
+        * (F.col("tf") * (_BM25_K1 + 1))
+        / (
+            F.col("tf")
+            + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
+        ),
         6,
     )
     return (
@@ -832,9 +808,7 @@ def bm25_scores(
     )
 
 
-def token_entropy(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """Per-document Shannon entropy (nats) of the token distribution — the
     repetition/diversity quality signal that length ratios miss (a doc
     repeating one token 500 times scores ~0; uniformly diverse text scores
@@ -847,8 +821,8 @@ def token_entropy(
     (no tokens) are dropped (entropy undefined).
     """
     tokens = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("token"),
+        F.col(_DOC_ID),
+        F.explode(F.split(F.col(_TEXT), " ")).alias("token"),
     ).filter(F.length("token") > 0)
     counts = tokens.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("c"))
     per_doc = counts.groupBy("doc_id").agg(
@@ -873,11 +847,7 @@ def token_entropy(
     )
 
 
-def dup_ngram_fraction(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dup_ngram_fraction(docs: DataFrame) -> DataFrame:
     """Per-document fraction of its distinct BPE-ish token bigrams that
     also occur in at least one OTHER document — the cross-document
     duplicated-ngram signal (ExactSubstr-lite): boilerplate and templated
@@ -911,7 +881,7 @@ def dup_ngram_fraction(
     concat_ws))[0]."""
     from datalake_breweries_two_spark.operators.dedup import _tokens_expr
 
-    toks = _tokens_expr(text_col, "bpe")
+    toks = _tokens_expr(_TEXT, "bpe")
     pairs_once = F.transform(
         F.array(toks),
         lambda t: F.when(
@@ -926,13 +896,13 @@ def dup_ngram_fraction(
     # explode drops NULL/empty bigram arrays, so <2-token and NULL-text
     # docs are absent from the output exactly as the oracle mirrors
     big = docs.select(
-        F.col(id_col),
+        F.col(_DOC_ID),
         F.explode(F.array_distinct(F.get(pairs_once, 0))).alias("sh"),
     )
     dfreq = big.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     return (
         big.join(dfreq, "sh")
-        .groupBy(id_col)
+        .groupBy(_DOC_ID)
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.round(
@@ -944,13 +914,7 @@ def dup_ngram_fraction(
     )
 
 
-def pmi_collocations(
-    docs: DataFrame,
-    min_count: int = 5,
-    k: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pmi_collocations(docs: DataFrame, min_count: int = 5, k: int = 20) -> DataFrame:
     """Top-k bigram collocations by pointwise mutual information:
     ``pmi = ln(N * c(w1,w2) / (c(w1,·) * c(·,w2)))`` over corpus BPE-ish
     token bigrams, restricted to bigrams seen at least ``min_count``
@@ -966,11 +930,11 @@ def pmi_collocations(
     from datalake_breweries_two_spark.operators.dedup import _tokens_expr
 
     tokens = docs.select(
-        F.col(id_col), F.posexplode(_tokens_expr(text_col, "bpe")).alias("pos", "w1")
+        F.col(_DOC_ID), F.posexplode(_tokens_expr(_TEXT, "bpe")).alias("pos", "w1")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy(_DOC_ID).orderBy("pos")
     big = (
-        tokens.select(F.col(id_col), "w1", F.lead("w1").over(w).alias("w2"))
+        tokens.select(F.col(_DOC_ID), "w1", F.lead("w1").over(w).alias("w2"))
         .filter(F.col("w2").isNotNull())
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("cb"))

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+_EVENT_TYPE = "event_type"
+
 
 def resample_ffill(
     events: DataFrame,
@@ -155,17 +157,11 @@ def coalesce_intervals(
     )
 
 
-def moving_avg_time(
-    events: DataFrame,
-    days: int = 7,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Trailing ``days``-day moving average of the daily total per group —
-    the canonical time-RANGE window frame (``rangeBetween`` over a day
-    number, NOT rowsBetween: gap days must widen the frame, and rows-frames
-    silently miscount when days are missing).
+def moving_avg_time(events: DataFrame, days: int = 7) -> DataFrame:
+    """Trailing ``days``-day moving average of the daily ``value`` total per
+    ``event_type`` — the canonical time-RANGE window frame (``rangeBetween``
+    over a day number, NOT rowsBetween: gap days must widen the frame, and
+    rows-frames silently miscount when days are missing).
 
     Daily totals are summed as decimal (exact, partition-order-independent)
     and the frame average is decimal-sum / count, so the result is
@@ -177,18 +173,18 @@ def moving_avg_time(
     epoch = F.lit("1970-01-01").cast("date")
     daily = (
         events.groupBy(
-            F.col(group_col), F.to_date(F.col(ts_col)).alias("day")
+            F.col(_EVENT_TYPE), F.to_date(F.col("ts")).alias("day")
         )
-        .agg(F.sum(F.col(value_col).cast("decimal(18,4)")).alias("dec_total"))
+        .agg(F.sum(F.col("value").cast("decimal(18,4)")).alias("dec_total"))
         .withColumn("day_num", F.datediff(F.col("day"), epoch).cast("long"))
     )
     w = (
-        Window.partitionBy(group_col)
+        Window.partitionBy(_EVENT_TYPE)
         .orderBy("day_num")
         .rangeBetween(-(days - 1), 0)
     )
     return daily.select(
-        F.col(group_col),
+        F.col(_EVENT_TYPE),
         F.col("day"),
         (F.round(F.col("dec_total").cast("double"), 4) + F.lit(0.0)).alias("daily_total"),
         (

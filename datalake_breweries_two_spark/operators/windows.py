@@ -24,12 +24,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def rank_in_group(
-    df: DataFrame, part_key: str, order_col: str, tiebreak: str, desc: bool = True
-) -> DataFrame:
-    """row_number + rank + dense_rank per group, deterministic via tiebreak."""
-    oc = F.col(order_col).desc() if desc else F.col(order_col).asc_nulls_last()
-    w = Window.partitionBy(part_key).orderBy(oc, F.col(tiebreak).asc_nulls_last())
+def rank_in_group(df: DataFrame, part_key: str, order_col: str, tiebreak: str) -> DataFrame:
+    """row_number + rank + dense_rank per group by descending ``order_col``,
+    deterministic via tiebreak."""
+    w = Window.partitionBy(part_key).orderBy(
+        F.col(order_col).desc(), F.col(tiebreak).asc_nulls_last()
+    )
     return df.select(
         "*",
         F.row_number().over(w).alias("rn"),

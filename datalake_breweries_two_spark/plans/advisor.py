@@ -18,7 +18,6 @@ invisible at test row counts but dominant at volume:
 Usage::
 
     findings = audit_plan(df, max_wide_exchanges=2)
-    assert_plan_clean(df)          # raises PlanAuditError with findings
 
 Heuristics read the EXECUTED plan string (AQE's final layout when
 materialized, its initial layout otherwise) — the same surface the frozen
@@ -46,7 +45,7 @@ class Finding:
 
 
 class PlanAuditError(AssertionError):
-    """Raised by :func:`assert_plan_clean` when error-level findings exist."""
+    """Raised with the error-level findings of a plan that must not run."""
 
     def __init__(self, findings: list[Finding]):
         self.findings = findings
@@ -321,11 +320,3 @@ def audit_plan(
             break
 
     return findings
-
-
-def assert_plan_clean(df: DataFrame, **kwargs) -> None:
-    """Raise :class:`PlanAuditError` if the audit yields ANY finding.
-    Intended as a pipeline pre-flight gate right before a large action."""
-    findings = audit_plan(df, **kwargs)
-    if findings:
-        raise PlanAuditError(findings)

@@ -206,18 +206,8 @@ def _silence_bounded_window_warning(spark: SparkSession) -> None:
     100 TB operator reading bench logs sees a clean tail instead of a
     cry-wolf warning about a provably bounded 32-row frame.
     """
-    try:
-        jvm = spark.sparkContext._jvm
-        level = jvm.org.apache.logging.log4j.Level.ERROR
-        configurator = jvm.org.apache.logging.log4j.core.config.Configurator
-        for cls in ("WindowExec", "WindowGroupLimitExec"):
-            configurator.setLevel(
-                f"org.apache.spark.sql.execution.window.{cls}", level
-            )
-    except Exception:  # pragma: no cover - non-log4j2 logging backends
-        pass  # purely cosmetic: the advisor gate is the real guard
-
-
-def stop_session(spark: SparkSession) -> None:
-    """Explicit teardown (tests / end of pipeline run)."""
-    spark.stop()
+    jvm = spark.sparkContext._jvm
+    level = jvm.org.apache.logging.log4j.Level.ERROR
+    configurator = jvm.org.apache.logging.log4j.core.config.Configurator
+    for cls in ("WindowExec", "WindowGroupLimitExec"):
+        configurator.setLevel(f"org.apache.spark.sql.execution.window.{cls}", level)

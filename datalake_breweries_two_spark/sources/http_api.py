@@ -5,12 +5,10 @@ the accumulated list through Airflow XCom (reference
 ``plugins/brewery_operators.py:25-58``; the XCom handoff is the scalability
 anti-pattern flagged in SURVEY.md §3). Here:
 
-  * small APIs (the reference's ~9k-row case): driver-side fetch →
-    ``spark.createDataFrame(rows, schema)`` — correct and simplest;
-  * scale path: ``fetch_paginated_distributed`` partitions the page range
-    across executors with ``mapInPandas`` over ``spark.range`` so N
-    executors fetch N pages concurrently and rows land directly in
-    executors — the driver never holds the payload.
+driver-side fetch → ``spark.createDataFrame(rows, schema)``, correct and
+simplest at the reference's ~9k-row size. A paged source whose pages are
+fetched by executors, so the driver never holds the payload, is the Python
+DataSource in ``paged_api.py``.
 
 ``requests`` is imported lazily and the fetch function is injectable so
 tests run without network.
@@ -18,9 +16,8 @@ tests run without network.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -38,14 +35,13 @@ def fetch_paginated_driver(
     url: str,
     schema: T.StructType,
     per_page: int = 50,
-    max_pages: int = 10_000,
     fetch: Callable[[str, int, int], list[dict]] = _default_fetch,
 ) -> DataFrame:
     """Reference-parity ingest: loop pages until a short page, accumulate,
     one ``createDataFrame`` (reference ``plugins/brewery_operators.py:36-56``
     semantics: stop when a page returns < per_page rows)."""
     rows: list[dict] = []
-    for page in range(1, max_pages + 1):
+    for page in range(1, 10_000 + 1):
         batch = fetch(url, page, per_page)
         rows.extend(batch)
         if len(batch) < per_page:
@@ -55,38 +51,7 @@ def fetch_paginated_driver(
     return spark.createDataFrame(data, schema)
 
 
-def fetch_paginated_distributed(
-    spark: SparkSession,
-    url: str,
-    schema: T.StructType,
-    n_pages: int,
-    per_page: int = 50,
-    fetch: Callable[[str, int, int], list[dict]] = _default_fetch,
-) -> DataFrame:
-    """Scale path: page ranges fan out across executors.
-
-    ``spark.range(n_pages)`` → ``mapInPandas`` where each batch fetches its
-    pages and yields rows. Requires a known page count (HEAD request or a
-    count endpoint); per-task retries come free from Spark task retry.
-    """
-    field_names = [f.name for f in schema.fields]
-
-    def fetch_pages(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: list[dict] = []
-            for page in pdf["id"].tolist():
-                for r in fetch(url, int(page) + 1, per_page):
-                    out.append({k: r.get(k) for k in field_names})
-            yield pd.DataFrame(out, columns=field_names)
-
-    return spark.range(n_pages).mapInPandas(fetch_pages, schema)
-
-
-def check_api_health(
-    url: str,
-    timeout: float = 30.0,
-    get: Callable[[str, float], int] | None = None,
-) -> bool:
+def check_api_health(url: str, get: Callable[[str, float], int] | None = None) -> bool:
     """API health probe (reference O1): one GET, healthy iff HTTP 200 —
     the reference's ``HttpSensor`` ``response_check`` (reference
     ``dags/dag-brewery_pipeline.py:52-62``). Run it as the pipeline
@@ -100,6 +65,6 @@ def check_api_health(
             return requests.get(u, timeout=t).status_code
 
     try:
-        return get(url, timeout) == 200
+        return get(url, 30.0) == 200
     except Exception:
         return False

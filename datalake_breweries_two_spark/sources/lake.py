@@ -23,13 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """Parquet scan. Explicit schema skips footer-merge sampling on huge
-    datasets; Catalyst still gets row-group min/max stats for pushdown."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan; Catalyst gets row-group min/max stats for pushdown."""
+    return spark.read.parquet(path)
 
 
 def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -38,16 +34,12 @@ def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
     return spark.read.schema(schema).json(path)
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Partitioned parquet write (reference K2/K3 shape). Partition columns
-    become hive-style dirs → free partition pruning for readers. Choose
-    partition keys with bounded cardinality (state, date), never high-
-    cardinality ids — millions of tiny dirs kill the FS at 100 TB.
+def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+    """Full-refresh (overwrite) parquet write, optionally partitioned
+    (reference K2/K3 shape). Partition columns become hive-style dirs →
+    free partition pruning for readers. Choose partition keys with bounded
+    cardinality (state, date), never high-cardinality ids — millions of
+    tiny dirs kill the FS at 100 TB.
 
     A partitioned write first rebalances the rows by the partition columns
     (:func:`_write_partitioned`), so each partition value lands in one file
@@ -64,9 +56,9 @@ def write_parquet(
     in the medallion silver layer). Incremental writers use
     :func:`write_partitioned_dynamic` explicitly."""
     if partition_by:
-        _write_partitioned(df, path, partition_by, mode, overwrite_mode="static")
+        _write_partitioned(df, path, partition_by, "overwrite", overwrite_mode="static")
     else:
-        df.write.mode(mode).parquet(path)
+        df.write.mode("overwrite").parquet(path)
 
 
 def write_partitioned_dynamic(df: DataFrame, path: str, partition_by: list[str]) -> None:
@@ -312,30 +304,6 @@ def diff_snapshots(
     )
 
 
-def read_parquet_incremental(
-    spark: SparkSession,
-    path: str,
-    modified_after: str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Incremental scan: only files modified strictly after the watermark
-    (ISO-8601 ``YYYY-MM-DDTHH:MM:SS``). This is the scale answer to the
-    reference's driver-side max-by-last_modified listing
-    (``plugins/brewery_operators.py:202-225``): the filter runs in the
-    file-index listing, so a daily incremental run over a 100 TB lake reads
-    only the new files. Pair with a persisted high-watermark (the max file
-    mtime of the previous run); a Delta/Iceberg transaction log is the
-    fully-transactional version of the same idea.
-
-    Pass ``schema`` in production: when NO file is newer than the watermark
-    (the common steady-state!), a schema-less read fails with
-    UNABLE_TO_INFER_SCHEMA instead of returning an empty DataFrame."""
-    reader = spark.read.option("modifiedAfter", modified_after)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 def latest_snapshot_dir(base_dir: str) -> str:
     """Resolve the most recent snapshot subdirectory by mtime (reference
     S4: max-by-last_modified object listing,
@@ -383,38 +351,6 @@ def build_scd2(
     )
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int = 1_000_000,
-) -> int:
-    """Small-file compaction: rewrite a parquet dataset into
-    ceil(rows / target_rows_per_file) files; returns the new file count.
-
-    The small-files problem is the silent killer of large scans — per-file
-    open/footer/seek overhead and starved vectorized readers. Compaction
-    restores large row groups. ``coalesce`` (no shuffle) is used when
-    reducing the partition count, a hash ``repartition`` only when growing.
-    Locally the swap is a directory rename; on a real lake this operation
-    belongs to the table format's transaction log (Delta OPTIMIZE) so
-    readers never observe a half-swapped directory.
-    """
-    import math
-    import shutil
-
-    df = spark.read.parquet(path)
-    n_rows = df.count()
-    n_parts = max(1, math.ceil(n_rows / target_rows_per_file))
-    tmp = path.rstrip("/") + "__compact_tmp"
-    src_parts = df.rdd.getNumPartitions()
-    sized = df.coalesce(n_parts) if n_parts < src_parts else df.repartition(n_parts)
-    sized.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    out = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    return len(out)
-
-
 # --------------------------------------------------------------------------
 # Versioned tables — atomic swaps via a pointer file (minimal
 # transaction-log layout; the Parquet/Delta north star without delta-spark)
@@ -429,7 +365,7 @@ def compact_parquet(
 # the pointer file (POSIX rename; one object PUT on S3-like stores). Old
 # versions stay on disk until vacuumed, so an in-flight reader that already
 # resolved its directory never observes a half-swapped table — the property
-# compact_parquet's rmtree+rename swap cannot give.
+# an in-place rmtree+rename swap cannot give.
 
 _POINTER = "_latest"
 
@@ -470,17 +406,12 @@ def write_versioned(
     return nxt
 
 
-def read_versioned(
-    spark: SparkSession,
-    root: str,
-    version: str | None = None,
-    schema: T.StructType | None = None,
-) -> DataFrame:
+def read_versioned(spark: SparkSession, root: str, version: str | None = None) -> DataFrame:
     """Read the published (or an explicitly pinned — time travel) version."""
     v = version or latest_table_version(root)
     if v is None:
         raise FileNotFoundError(f"no published version under {root}")
-    return read_parquet(spark, os.path.join(root, v), schema)
+    return read_parquet(spark, os.path.join(root, v))
 
 
 def compact_versioned(

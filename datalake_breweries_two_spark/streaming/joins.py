@@ -59,7 +59,6 @@ def view_click_attribution(
     views: DataFrame,
     clicks: DataFrame,
     max_lag_minutes: int = 30,
-    watermark: str = "3650 days",
 ) -> DataFrame:
     """Attribute each click to the user's views in the preceding
     ``max_lag_minutes``: inner join on user with
@@ -67,14 +66,13 @@ def view_click_attribution(
 
     Works identically on two streaming frames (the state-bounded
     stream-stream join; append output mode only) and on two batch frames
-    (the oracle-checkable twin — tests assert stream == batch). The
-    ``watermark`` is only applied to streaming inputs; tests replaying a
-    finite file stream pass a span wider than the data so nothing is
-    dropped as late (late-drop semantics are covered by the windowed-agg
-    tests).
+    (the oracle-checkable twin — tests assert stream == batch). Streaming
+    inputs get a 3650-day watermark, wider than any replayed finite file
+    stream, so nothing is dropped as late (late-drop semantics are covered
+    by the windowed-agg tests).
     """
     return _attribution_join(
-        views, clicks, max_lag_minutes, watermark, "inner", always_watermark=False
+        views, clicks, max_lag_minutes, "3650 days", "inner", always_watermark=False
     )
 
 

@@ -15,6 +15,7 @@ from datalake_breweries_two_spark.sources import http_api, lake
 from datalake_breweries_two_spark.streaming import windows as stream_windows
 
 from .conftest import SF_SMOKE
+from .helpers import cosine_topk_bruteforce, observed_metrics
 
 
 # ---------------------------------------------------------------- quality
@@ -23,10 +24,6 @@ def test_quality_probes(spark):
     df = spark.createDataFrame(
         [("a", "x"), ("b", ""), ("c", None)], ["k", "v"]
     )
-    assert not quality.is_empty_probe(df)
-    assert quality.bounded_count(df, 2) == 2
-    assert quality.has_violations(df, "v")
-    assert not quality.has_violations(df, "k")
     report = quality.run_quality_gate(df, ["k", "v"], min_rows=2)
     assert not report.passed
     assert report.violations == {"k": 0, "v": 2}
@@ -52,20 +49,6 @@ def test_paginated_driver_fetch_stops_on_short_page(spark):
     )
     assert df.count() == 9  # 4 + 4 + 1 (short page terminates)
     assert calls == [1, 2, 3]
-
-
-def test_paginated_distributed_fetch(spark):
-    def fetch(url, page, per_page):
-        return [{"id": str(page), "name": f"page{page}"}]
-
-    schema = T.StructType(
-        [T.StructField("id", T.StringType()), T.StructField("name", T.StringType())]
-    )
-    df = http_api.fetch_paginated_distributed(
-        spark, "offline://x", schema, n_pages=6, per_page=1, fetch=fetch
-    )
-    rows = {r["id"] for r in df.collect()}
-    assert rows == {str(p) for p in range(1, 7)}
 
 
 def test_check_api_health(spark):
@@ -211,15 +194,6 @@ def test_media_feature_extraction(spark):
     # determinism: same payload → same feature
     again = {r["media_id"]: r["feature"] for r in feats.collect()}
     assert {r["media_id"]: r["feature"] for r in rows} == again
-
-
-def test_media_metadata_prunes_payload(spark):
-    media = multimodal.synthetic_media(spark, n=9)
-    summary = multimodal.media_metadata_summary(media)
-    rows = {r["media_type"]: r for r in summary.collect()}
-    assert set(rows) == {"image", "audio", "video"}
-    assert rows["image"]["n"] == 3
-    assert rows["image"]["total_bytes"] == 3 * 1024
 
 
 def test_decode_stub_rejects_unknown_type():
@@ -1168,7 +1142,7 @@ def test_cosine_topk_lsh_overlaps_bruteforce(spark):
     emb = load_table(spark, "embeddings", SF_SMOKE)
     exact = {
         r["vec_id"]
-        for r in similarity.cosine_topk_bruteforce(emb, qv, k=10, exclude_id=0).collect()
+        for r in cosine_topk_bruteforce(emb, qv, k=10, exclude_id=0).collect()
     }
     approx = {
         r["vec_id"] for r in similarity.cosine_topk_lsh(emb, qv, k=10).collect()
@@ -1320,25 +1294,6 @@ def test_bucketed_join_has_no_exchange(spark):
 
 
 # ---------------------------------------------------------------- incremental read
-
-def test_read_parquet_incremental_watermark(spark, tmp_path):
-    """Only files written after the watermark are read on the next pass."""
-    import datetime as dt
-    import time
-
-    out = str(tmp_path / "inc")
-    df1 = spark.createDataFrame([(1, "old")], "id long, v string")
-    df1.coalesce(1).write.mode("overwrite").parquet(out)
-    time.sleep(1.1)
-    watermark = dt.datetime.now(dt.timezone.utc).strftime("%Y-%m-%dT%H:%M:%S")
-    time.sleep(1.1)
-    df2 = spark.createDataFrame([(2, "new")], "id long, v string")
-    df2.coalesce(1).write.mode("append").parquet(out)
-
-    rows = lake.read_parquet_incremental(spark, out, watermark).collect()
-    assert [(r["id"], r["v"]) for r in rows] == [(2, "new")]
-    # full read still sees both
-    assert spark.read.parquet(out).count() == 2
 
 
 # ---------------------------------------------------------------- tiered dedup
@@ -1736,7 +1691,7 @@ def test_lsh_and_fuzzy_report_dropped_buckets(spark):
     assert pairs.count() == 0
     # observed_metrics, not obs.get: the distinct() tail makes AQE re-emit
     # the metrics row schema-less (see the helper's docstring)
-    got_m = dedup.observed_metrics(obs, "dropped_buckets", "dropped_ids")
+    got_m = observed_metrics(obs, "dropped_buckets", "dropped_ids")
     assert got_m == {"dropped_buckets": 2, "dropped_ids": 20}
 
     # degenerate block: one shared head noun over the cap
@@ -1747,7 +1702,7 @@ def test_lsh_and_fuzzy_report_dropped_buckets(spark):
         df, "name", "pid", block_cap=3, dropped_obs=obs2
     )
     assert fpairs.count() == 0
-    assert dedup.observed_metrics(obs2, "dropped_blocks", "dropped_rows") == {
+    assert observed_metrics(obs2, "dropped_blocks", "dropped_rows") == {
         "dropped_blocks": 1,
         "dropped_rows": 6,
     }
@@ -1762,7 +1717,7 @@ def test_lsh_and_fuzzy_report_dropped_buckets(spark):
         ok, "name", "pid", block_cap=3, dropped_obs=obs3
     ).collect()
     assert {(r["id_a"], r["id_b"]) for r in got} == {(1, 2)}
-    assert dedup.observed_metrics(obs3, "dropped_blocks", "dropped_rows") == {
+    assert observed_metrics(obs3, "dropped_blocks", "dropped_rows") == {
         "dropped_blocks": 0,
         "dropped_rows": 0,
     }
@@ -1777,7 +1732,7 @@ def test_lsh_and_fuzzy_report_dropped_buckets(spark):
     assert dedup.fuzzy_blocked_pairs(
         lonely, "name", "pid", block_cap=3, dropped_obs=obs4
     ).count() == 0
-    assert dedup.observed_metrics(obs4, "dropped_blocks", "dropped_rows") == {
+    assert observed_metrics(obs4, "dropped_blocks", "dropped_rows") == {
         "dropped_blocks": 0,
         "dropped_rows": 0,
     }
@@ -1790,7 +1745,7 @@ def test_lsh_and_fuzzy_report_dropped_buckets(spark):
     assert dedup.lsh_candidate_pairs(
         distinct_sigs, bands=2, rows_per_band=2, max_bucket=4, dropped_obs=obs5
     ).count() == 0
-    assert dedup.observed_metrics(obs5, "dropped_buckets", "dropped_ids") == {
+    assert observed_metrics(obs5, "dropped_buckets", "dropped_ids") == {
         "dropped_buckets": 0,
         "dropped_ids": 0,
     }
@@ -1859,34 +1814,12 @@ def test_connected_components_long_chain(spark):
     assert len(comps) == 12
 
 
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    """20 tiny files compact to ceil(n/target) files with identical data."""
-    from datalake_breweries_two_spark.sources.lake import compact_parquet
-
-    path = str(tmp_path / "frag")
-    df = spark.range(0, 2000).withColumn("v", F.col("id") * 2)
-    df.repartition(20).write.mode("overwrite").parquet(path)
-    import os as _os
-
-    n_before = len([f for f in _os.listdir(path) if f.endswith(".parquet")])
-    assert n_before == 20
-    n_after = compact_parquet(spark, path, target_rows_per_file=1000)
-    assert n_after == 2
-    back = spark.read.parquet(path)
-    assert back.count() == 2000
-    assert back.agg(F.sum("v")).collect()[0][0] == sum(2 * i for i in range(2000))
-
-
 def test_ivf_search_recall_vs_bruteforce(spark, tmp_path):
     """IVF probe search over the precomputed partitioned index must find
     most of the true top-10 (recall is the probe-count tradeoff; at
     n_probe=8/16 it should be high on sf0.001) — and the probe scan must be
     partition-pruned, not a full-corpus read."""
-    from datalake_breweries_two_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        ivf_build_index,
-        ivf_search,
-    )
+    from datalake_breweries_two_spark.operators.similarity import ivf_build_index, ivf_search
 
     emb = load_table(spark, "embeddings", SF_SMOKE)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
@@ -2169,89 +2102,6 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
     b_pairs = {(r["view_id"], r["click_id"]) for r in batch.collect()}
     assert len(b_pairs) > 0
     assert s_pairs == b_pairs
-
-
-def test_running_totals_processor_logic():
-    """The TWS processor's per-batch math, driven directly with a fake
-    ValueState (the TWS runtime itself needs google.protobuf, absent in
-    minimal environments — e2e covered by test_running_totals_stream_e2e
-    where available)."""
-    import pandas as pd
-
-    from datalake_breweries_two_spark.streaming.state import RunningTotalsProcessor
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    class FakeHandle:
-        def getValueState(self, name, schema):
-            return FakeState()
-
-    p = RunningTotalsProcessor()
-    p.init(FakeHandle())
-    out1 = list(
-        p.handleInputRows((7,), iter([pd.DataFrame({"value": [1.0, 2.0]})]), None)
-    )
-    out2 = list(
-        p.handleInputRows((7,), iter([pd.DataFrame({"value": [4.0]})]), None)
-    )
-    assert out1[0].iloc[0].tolist() == [7, 2, 3.0]
-    assert out2[0].iloc[0].tolist() == [7, 3, 7.0]
-
-
-def test_running_totals_stream_e2e(spark, tmp_path):
-    """Drained arbitrary-stateful stream's final per-user totals == batch
-    groupBy agg. Uses the TWS path where its protobuf runtime exists, the
-    applyInPandasWithState twin otherwise — the capability is e2e-tested
-    either way (no environment skip)."""
-    from datalake_breweries_two_spark.catalog import read_events
-    from datalake_breweries_two_spark.streaming import state as st
-    from datalake_breweries_two_spark.streaming import windows as sw
-
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        stateful = st.running_totals_stream
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    except ImportError:
-        stateful = st.running_totals_stream_gs
-
-    stage = str(tmp_path / "tws_in")
-    (
-        read_events(spark, os.path.join(SF_SMOKE, "events.parquet"))
-        .repartition(3)
-        .write.mode("overwrite")
-        .parquet(stage)
-    )
-    stream = sw.read_events_stream(spark, stage)
-    out = sw.run_stream_to_memory(
-        spark, stateful(stream), "t_tws_sink", output_mode="update"
-    )
-    final = out.groupBy("user_id").agg(
-        F.max("n_events").alias("n"), F.max("total_value").alias("tv")
-    )
-    batch = (
-        read_events(spark, os.path.join(SF_SMOKE, "events.parquet"))
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("tv"))
-    )
-    s = {(r["user_id"], r["n"], round(r["tv"], 6)) for r in final.collect()}
-    b = {(r["user_id"], r["n"], round(r["tv"], 6)) for r in batch.collect()}
-    assert s == b
 
 
 def test_range_sorted_layout_skips_files(spark, tmp_path):
@@ -3659,11 +3509,9 @@ def test_plan_advisor_flags_and_passes(spark, tmp_path):
     from pyspark.sql.functions import udf
 
     from datalake_breweries_two_spark.entry_queries import q_gold_agg, q_topk
-    from datalake_breweries_two_spark.plans.advisor import (
-        PlanAuditError,
-        assert_plan_clean,
-        audit_plan,
-    )
+    from datalake_breweries_two_spark.plans.advisor import PlanAuditError, audit_plan
+
+    from .helpers import assert_plan_clean
 
     a = spark.range(100).selectExpr("id", "id % 5 AS k")
     b = spark.range(50).selectExpr("id AS id2")
@@ -3976,10 +3824,6 @@ def test_cosine_zero_vector_is_null_not_crash(spark):
     """An all-zero embedding has no direction: its cosine must be NULL
     (DuckDB's x/0 semantics) and sink below every real score in the
     top-k, not throw ANSI DIVIDE_BY_ZERO."""
-    from datalake_breweries_two_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-    )
-
     rows = [
         (1, [1.0, 0.0]),
         (2, [0.0, 0.0]),   # zero vector
@@ -4077,19 +3921,21 @@ def test_merge_upsert_null_key(spark):
 
 
 def test_non_finite_count_detects_nan_inf(spark):
-    """The DQ gate for non-finite doubles: NaN and +-Inf count, NULLs do
-    not (they belong to the null-count check) — this is the check a
-    pipeline runs BEFORE decimal-exact aggregation, which (like DuckDB
-    and Postgres numeric) RAISES on non-finite input by design."""
-    from datalake_breweries_two_spark.operators.quality import non_finite_count
+    """The DQ gate for non-finite doubles (``q_dq_audit``'s
+    ``orders_totalprice_finite`` rule counts ``non_finite_flag``): NaN and
+    +-Inf count, NULLs do not (they belong to the null-count check) — this
+    is the check a pipeline runs BEFORE decimal-exact aggregation, which
+    (like DuckDB and Postgres numeric) RAISES on non-finite input by
+    design."""
+    from datalake_breweries_two_spark.operators.quality import non_finite_flag
 
     df = spark.createDataFrame(
         [(1.0,), (float("nan"),), (float("inf"),), (float("-inf"),), (None,)],
         "x double",
     )
-    assert non_finite_count(df, "x").collect()[0]["n_violations"] == 3
-    empty = spark.createDataFrame([], "x double")
-    assert non_finite_count(empty, "x").collect()[0]["n_violations"] == 0
+    flags = df.select(non_finite_flag("x").alias("f"))
+    assert [r["f"] for r in flags.collect()] == [0, 1, 1, 1, 0]
+    assert flags.agg(F.sum("f")).collect()[0][0] == 3
 
 
 def test_stream_stager_refuses_pre_epoch_events(spark, tmp_path):
@@ -4290,10 +4136,7 @@ def test_pmi_collocations_closed_form(spark):
 def test_knn_join_matches_single_query_bruteforce(spark):
     """The two-level distributed top-k must equal the single-query
     brute-force ranking for every query id, including tie order."""
-    from datalake_breweries_two_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        knn_join,
-    )
+    from datalake_breweries_two_spark.operators.similarity import knn_join
 
     emb = load_table(spark, "embeddings", SF_SMOKE)
     got = {}
@@ -4475,11 +4318,7 @@ def test_lsh_full_width_signature_and_signed_bit63(spark):
     GUARANTEES its dot with plane 63 is positive (sum of squares) and so
     the query signature has bit 63 set. With the budget covering the
     whole corpus, LSH must equal exact brute force."""
-    from datalake_breweries_two_spark.operators.similarity import (
-        _hyperplane,
-        cosine_topk_bruteforce,
-        cosine_topk_lsh,
-    )
+    from datalake_breweries_two_spark.operators.similarity import _hyperplane, cosine_topk_lsh
 
     emb = load_table(spark, "embeddings", SF_SMOKE)
     dim = len(emb.first()["embedding"])

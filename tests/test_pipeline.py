@@ -302,14 +302,10 @@ def test_bench_noise_canary_shape(spark):
 
 
 def test_bench_reference_covers_headline():
-    """Every bench headline query is a registered query with a positive
-    quiet-host reference time (the stall detector's threshold)."""
+    """Every bench headline query has a positive quiet-host reference time
+    (the stall detector's threshold)."""
     import bench
 
-    from datalake_breweries_two_spark.entry_queries import QUERIES
-
-    unknown = [n for n in bench.HEADLINE if n not in QUERIES]
-    assert not unknown, f"headline queries not in the registry: {unknown}"
     unsized = [n for n, ref in bench.HEADLINE.items() if not ref > 0]
     assert not unsized, f"headline queries without a positive ref: {unsized}"
 

@@ -58,7 +58,7 @@ put non-finite values into the monetary columns:
 BOTH engines raise throughout (Spark ANSI decimal/bigint casts, DuckDB
 decimal conversions and moment aggregates alike) — non-finite money is
 ill-formed input everywhere, so the engine's answer is the DQ layer's
-`non_finite_count` gate (q_dq_audit `orders_totalprice_finite`), run
+`non_finite_flag` gate (q_dq_audit `orders_totalprice_finite`), run
 BEFORE decimal aggregation, never a try_cast that would launder the
 corruption into silent NULLs.
 """
